@@ -1,41 +1,197 @@
 """Graph analytics over graph exports: degrees, connected components,
-PageRank.
+PageRank, paths, communities, cores, SCCs and DAG levels.
 
 The reference has no analytics layer (it is an OLTP traversal framework);
 the north-star plan (BASELINE.json "GraphX for analytics over graph
 exports") calls for one.  GraphX itself is Scala/RDD-side; these are
 DataFrame-native implementations of the same algorithms, which keeps them
-in Catalyst/Tungsten and works from PySpark:
+in Catalyst/Tungsten and works from PySpark.
 
-* every iteration is a hash join + aggregate on (src, dst) — the classic
-  Pregel superstep expressed relationally;
-* lineage is cut with ``localCheckpoint`` every few supersteps (iterative
-  plans otherwise grow exponentially and re-execute from the scan);
-* convergence checks are cheap counts on the changed set.
+Every iterative operator runs on one superstep engine, :class:`_Supersteps`
+— the only code here that caches, cuts lineage or releases.  It follows
+GraphX (OSDI'14) and Pregelix (VLDB'14):
 
-Scale: each superstep shuffles the frontier by vertex id — the same
-communication pattern GraphX/Pregel uses; AQE handles skewed hubs.
+* **partition-stable edges** — the loop-invariant graph is cached once, one
+  row per vertex holding its out-edges, hash-partitioned on the vertex id.
+  A superstep's aggregate is partitioned on the same key, so the join that
+  hands the new vertex values their out-edges never moves the graph;
+* **one shuffle per superstep** — every vertex emits its own state row and
+  one message per out-edge from a single generator, and one aggregate per
+  vertex combines the messages (the map-side partial aggregate is the
+  Pregel combiner) and applies the update;
+* **active-set messages** — only vertices whose value changed in the last
+  superstep get their out-edges attached, so only they send;
+* **observed convergence** — each lineage cut is one materializing action
+  (``localCheckpoint``, or a reliable ``checkpoint`` into
+  ``checkpoint_dir``), and the convergence statistic rides on it through
+  ``DataFrame.observe``: no separate count or collect probe;
+* **release** — on return every cache and cut the call made is released
+  except the one the result reads.
+
+With AQE every shuffle stage is its own Spark job, so a superstep costs two
+jobs (its shuffle and its cut) whatever the graph size, and job count is
+what a small graph pays for.
 """
 
 from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+_OUT = "__out"  # a vertex's out-edges: array<struct<dst, *attrs>>
+_ACTIVE = "__active"  # the vertex changed in the last superstep: it sends next
+_UNBOUNDED = 1 << 31  # max_iter of the inner fixpoints that always terminate
 
-def _cut_lineage(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Cut iterative lineage: ``localCheckpoint`` (executor-local, fast) by
-    default, or a RELIABLE ``checkpoint`` to ``checkpoint_dir`` when given —
-    localCheckpoint blocks are lost with the executor, so a real cluster run
-    of a long iteration should pass a durable dir (HDFS/S3)."""
-    if checkpoint_dir is not None:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() != checkpoint_dir:
-            sc.setCheckpointDir(checkpoint_dir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+
+def _release(cut: DataFrame) -> None:
+    """Free a lineage cut: a ``LogicalRDD`` over a checkpointed RDD, whose
+    blocks (a local checkpoint's; a reliable one holds none) go with it."""
+    cut._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+class _Supersteps:
+    """The lifecycle of one iterative operator call: the graph it caches,
+    the supersteps it runs, the lineage cuts it makes and their release.
+
+    Each cut supersedes the ones before it, which are released as soon as
+    it is materialized.  Use it as a context manager: on exit the caches
+    are released, and so is the newest cut if the block raised — otherwise
+    that cut is what the returned result reads, and it stays."""
+
+    def __init__(self, checkpoint_dir: str | None = None):
+        self.checkpoint_dir = checkpoint_dir
+        self._caches: list[DataFrame] = []
+        self._cut: DataFrame | None = None
+
+    def __enter__(self) -> _Supersteps:
+        return self
+
+    def __exit__(self, exc_type, *exc) -> None:
+        for df in self._caches:
+            df.unpersist()
+        if exc_type is not None and self._cut is not None:
+            _release(self._cut)
+
+    def graph(self, edges: DataFrame, *attrs: str, distinct: bool = False) -> DataFrame:
+        """Cache ``(vertex, __out)`` over ``edges`` (src, dst, *attrs): one
+        row per endpoint with its out-edges as ``struct(dst, *attrs)`` (an
+        empty array for a pure sink), hash-partitioned on ``vertex``.
+        ``distinct`` drops parallel edges."""
+        rows = edges.select(F.inline(F.array(
+            F.struct(F.col("src").alias("vertex"), F.struct("dst", *attrs).alias("__e")),
+            F.struct(F.col("dst").alias("vertex"), F.lit(None).alias("__e")),
+        )))
+        collect = F.collect_set if distinct else F.collect_list
+        g = rows.groupBy("vertex").agg(collect("__e").alias(_OUT)).persist()
+        self._caches.append(g)
+        # fill the cache now: a superstep chain scans it several times, and
+        # under AQE every scan of an unfilled cache launches its own build
+        g.write.format("noop").mode("overwrite").save()
+        return g
+
+    def cut(self, df: DataFrame, **stats: Column) -> tuple[DataFrame, dict]:
+        """Materialize ``df`` with ONE action that cuts its lineage and
+        observes ``stats`` (aggregate columns) on the way, then release the
+        previous cut.  Returns the cut and the observed values."""
+        obs = None
+        if stats:
+            obs = Observation()
+            df = df.observe(obs, *[c.alias(k) for k, c in stats.items()])
+        if self.checkpoint_dir is None:
+            out = df.localCheckpoint(eager=True)
+        else:
+            sc = df.sparkSession.sparkContext
+            if sc.getCheckpointDir() != self.checkpoint_dir:
+                sc.setCheckpointDir(self.checkpoint_dir)
+            out = df.checkpoint(eager=True)
+        if self._cut is not None:
+            _release(self._cut)
+        self._cut = out
+        return out, (obs.get if obs is not None else {})
+
+    def loop(self, state, step, *, max_iter: int, quiet: Column, every: int = 1,
+             stats: dict | None = None) -> tuple[DataFrame, dict]:
+        """Run ``state = step(state, i)`` for ``i < max_iter``, cutting after
+        every ``every``-th superstep and after the last.  ``quiet`` and
+        ``stats`` are observed on each cut; the loop stops at the first cut
+        where ``quiet`` is 0.  Returns the last cut and what was observed
+        on it."""
+        if max_iter <= 0:
+            return self.cut(state)
+        for i in range(max_iter):
+            state = step(state, i)
+            if (i + 1) % every and i + 1 < max_iter:
+                continue
+            state, seen = self.cut(state, quiet=quiet, **(stats or {}))
+            if seen["quiet"] == 0:
+                break
+        return state, seen
+
+    def pregel(self, graph: DataFrame, state: DataFrame, send, combine, apply: dict, *,
+               max_iter: int, every: int = 1, active_only: bool = True, keys: tuple[str, ...] = (),
+               stats: dict | None = None) -> tuple[DataFrame, dict]:
+        """Vertex-centric supersteps over ``graph`` (from :meth:`graph`).
+
+        ``state`` holds one row per ``(vertex, *keys)``: value columns and
+        ``__active``, the rows that send in the first superstep (all when
+        absent).  In a superstep each active row — every row unless
+        ``active_only`` — sends ``send(e)`` along each out-edge ``e``: a
+        column over ``e`` (struct dst, *attrs) and the sender's values,
+        delivered to ``(e.dst, *keys)``.  ``combine`` (an aggregate
+        function) folds the messages a row receives into ``__m``, null when
+        none arrived; ``apply`` maps value columns (and ``__active``) to
+        their new values from the old ones and ``__m``; unnamed columns
+        carry over.  A message to a row that does not exist creates it with
+        null old values.
+
+        The statistic ``quiet`` is the number of active rows; the loop stops
+        when it is 0 (never, when ``apply`` leaves every row active).
+        Returns the last cut and what was observed on it."""
+        key = ["vertex", *keys]
+        if _ACTIVE not in state.columns:
+            state = state.withColumn(_ACTIVE, F.lit(True))
+        cols = [c for c in state.columns if c not in (*key, _ACTIVE, _OUT)]
+        new_values = [apply.get(c, F.col(c)).alias(c) for c in cols] + [apply.get(_ACTIVE, F.lit(True)).alias(_ACTIVE)]
+        n = int(state.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+        def attach(s: DataFrame) -> DataFrame:
+            out = F.when(F.col(_ACTIVE), F.col(_OUT)) if active_only else F.col(_OUT)
+            return s.drop(_OUT).join(graph.hint("shuffle_hash"), "vertex", "left").select(
+                *key, *cols, _ACTIVE, out.alias(_OUT)
+            )
+
+        def step(s: DataFrame, i: int) -> DataFrame:
+            me = F.struct(*key, F.struct(*cols).alias("__s"), F.lit(None).alias("__m"))
+            msgs = F.transform(_OUT, lambda e: F.struct(
+                e["dst"].alias("vertex"), *keys, F.lit(None).alias("__s"), send(e).alias("__m")
+            ))
+            rows = s.select(F.inline(F.concat(F.array(me), F.coalesce(msgs, F.array()))))
+            if keys:  # keep the aggregate partitioned on vertex alone, as the graph is
+                rows = rows.repartition(n, "vertex")
+            new = (
+                rows.groupBy(*key)
+                .agg(F.first("__s", ignorenulls=True).alias("__s"), combine(F.col("__m")).alias("__m"))
+                .select(*key, "__s.*", "__m")
+                .select(*key, *new_values)
+            )
+            return new if i + 1 == max_iter else attach(new)  # the last superstep sends nothing
+
+        return self.loop(attach(state), step, max_iter=max_iter, every=every,
+                         quiet=F.count_if(F.col(_ACTIVE)), stats=stats)
+
+
+def _undirected(e: DataFrame) -> DataFrame:
+    """Both orientations of every (src, dst) edge, reading ``e`` once."""
+    return e.select(F.inline(F.array(
+        F.struct(F.col("src"), F.col("dst")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+    )))
+
+
+def _quiet(seen: dict) -> bool:
+    return seen.get("quiet") == 0
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -70,16 +226,16 @@ def connected_components(
 
     * ``two_phase`` (default) — alternating large-star/small-star
       (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14): each round is two join+agg passes over the edge set and the
-      edge set contracts toward star graphs in **O(log n) rounds regardless
-      of graph diameter**.  This is the 100 TB path: a path-shaped
-      100 TB component converges in ~2·log₂(n) rounds where min-label
-      needs `diameter` rounds.
-    * ``min_label`` — classic HashToMin label propagation, one join+agg per
-      superstep, O(diameter) supersteps.  Kept as the differential oracle
-      for the two-phase implementation (simple enough to trust by
-      inspection) and for tiny/star-shaped graphs where its per-round cost
-      is lower.
+      SoCC'14): the edge set contracts toward star graphs in **O(log n)
+      rounds regardless of graph diameter**, two shuffles per round.  A
+      path-shaped component converges in ~2·log₂(n) rounds where min-label
+      needs `diameter` supersteps.
+    * ``min_label`` — HashToMin label propagation on the superstep engine,
+      one shuffle per superstep, O(diameter) supersteps; only vertices whose
+      label dropped send.  Kept as the differential oracle for two-phase
+      and for bounded-diameter graphs, where its supersteps are cheaper.
+      Convergence is observed every ``checkpoint_every`` supersteps, at the
+      lineage cuts.
 
     ``checkpoint_dir``: when set, lineage cuts use a RELIABLE
     ``df.checkpoint`` into that directory (fault-tolerant on a cluster);
@@ -89,182 +245,88 @@ def connected_components(
     Raises a warning if ``max_iter`` is exhausted before the fixpoint —
     silently-unconverged labels would poison downstream dedup decisions.
     """
-    if algorithm == "two_phase":
-        return _cc_two_phase(edges, src, dst, max_iter, checkpoint_dir)
-    if algorithm != "min_label":
+    if algorithm not in ("two_phase", "min_label"):
         raise ValueError(f"unknown algorithm {algorithm!r}: two_phase | min_label")
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    )
-    both = both.dropDuplicates(["a", "b"]).persist()
-    comp = (
-        both.select(F.col("a").alias("vertex"))
-        .dropDuplicates(["vertex"])
-        .withColumn("component", F.col("vertex"))
-        .persist()
-    )
-    prev_cached = comp  # handle to the PERSISTED plan of the previous superstep
-    converged = False
-    for i in range(max_iter):
-        # neighbor minimum: for each vertex, min of its neighbors' labels
-        nbr_min = (
-            both.join(comp.withColumnRenamed("vertex", "b"), "b")
-            .groupBy(F.col("a").alias("vertex"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        updated = (
-            comp.join(nbr_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(F.col("component"), F.coalesce("nbr_component", F.col("component"))).alias("component"),
-                (F.coalesce("nbr_component", F.col("component")) < F.col("component")).alias("__changed"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            updated = _cut_lineage(updated, checkpoint_dir)  # cut iterative lineage
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    with _Supersteps(checkpoint_dir) as ss:
+        if algorithm == "two_phase":
+            comp, converged = _cc_two_phase(ss, e, max_iter)
         else:
-            # persist each superstep: the convergence probe below
-            # materializes it, so the next iteration (and the final
-            # result) reads the cache instead of replaying the whole
-            # superstep chain
-            updated = updated.persist()
-        comp = updated.drop("__changed")
-        changed = updated.where(F.col("__changed")).limit(1).count()
-        # unpersist the PERSISTED handle from last iteration (unpersisting
-        # the derived `.drop()` plan would not release the cached blocks)
-        prev_cached.unpersist()
-        prev_cached = updated
-        if changed == 0:
-            converged = True
-            break
+            g = ss.graph(_undirected(e), distinct=True)
+            state, seen = ss.pregel(
+                g,
+                g.select("vertex", F.col("vertex").alias("component")),
+                send=lambda _: F.col("component"),
+                combine=F.min,
+                apply={"component": F.least("component", "__m"), _ACTIVE: F.col("__m") < F.col("component")},
+                max_iter=max_iter,
+                every=checkpoint_every,
+            )
+            comp, converged = state.select("vertex", "component"), _quiet(seen)
     if not converged:
         warnings.warn(
-            f"connected_components(min_label) hit max_iter={max_iter} before the "
-            "fixpoint — labels may span unmerged components (min-label needs "
-            "`diameter` supersteps; use algorithm='two_phase' for O(log n))",
+            f"connected_components({algorithm}) hit max_iter={max_iter} before the fixpoint — "
+            + ("component labels may be incomplete" if algorithm == "two_phase" else
+               "labels may span unmerged components (min-label needs `diameter` supersteps; "
+               "use algorithm='two_phase' for O(log n))"),
             RuntimeWarning,
             stacklevel=2,
         )
-    # materialize, then release the edge cache and the terminal superstep —
-    # caches must not outlive the call
-    comp = _cut_lineage(comp, checkpoint_dir)
-    both.unpersist()
-    if prev_cached is not None:
-        prev_cached.unpersist()
     return comp
 
 
-def _cc_two_phase(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
-    checkpoint_dir: str | None,
-) -> DataFrame:
+def _cc_two_phase(ss: _Supersteps, e: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
     """Large-star/small-star alternation (Kiveris et al. SoCC'14 §3).
 
-    State = an edge set that contracts toward star graphs:
+    State = an undirected edge set that contracts toward star graphs:
 
     * **large-star**: every vertex `u` connects each strictly-LARGER
       neighbor to `m(u) = min(Γ(u) ∪ {u})` — long chains hook high ids
-      directly onto low ids.
-    * **small-star**: orient edges so `u > v`; every `u` connects each
-      smaller-or-equal neighbor (and itself) to the minimum — flattens
-      partial trees into stars.
+      directly onto low ids.  Every output pair (x, y) has x > y.
+    * **small-star**: every `x` connects each smaller neighbor (and itself)
+      to the minimum of its smaller neighbors — flattens partial trees into
+      stars.
 
-    Both steps are one groupBy(min) + one equi-join on the vertex id —
-    the same shuffle pattern as a superstep, but the round count is
-    O(log n).  Fixpoint when the edge multiset stops changing (checked via
-    count + order-independent xxhash signature — two scalars per round, no
-    extra shuffle beyond the agg).  At the fixpoint every non-root points
-    straight at its component min.
+    Each minimum is ``min(v) over (partition by u)``: one shuffle per star
+    step, no groupBy and join back.  The round's input is deduplicated
+    inside the large-star's partitions, so no shuffle is spent on it.  A
+    vertex with no smaller neighbor (a local minimum, or a vertex with
+    only self-loops) keeps one self-row ``(u, u)``, so every vertex stays
+    in the state.
+
+    Fixpoint: a round that re-hooks no edge (every large-star minimum is
+    the vertex itself and every small-star vertex has one smaller
+    neighbor) returns its input set: stars rooted at the component minima,
+    one row per vertex — ``(leaf, root)`` or ``(root, root)`` — which is
+    the result as it stands.  The count of re-hooked edges is observed on
+    the round's cut.
     """
-    verts = (
-        edges.select(F.col(src).alias("vertex"))
-        .unionByName(edges.select(F.col(dst).alias("vertex")))
-        .dropDuplicates(["vertex"])
-        .persist()
-    )
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .persist()
-    )
-    prev_cached = e
 
-    def _signature(df: DataFrame):
-        # bit_xor: order-independent and overflow-free under ANSI mode
-        # (sum(xxhash64) overflows long); edge set is deduped so xor
-        # cancellation of repeated rows cannot occur
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
+    def star_round(s: DataFrame, i: int) -> DataFrame:
+        by_u = Window.partitionBy("src")
+        nbrs = _undirected(s.select("src", "dst")).repartition("src").dropDuplicates(["src", "dst"])
+        large = nbrs.select(
+            "src", "dst",
+            F.least("src", F.min("dst").over(by_u)).alias("m"),
+            (F.row_number().over(by_u.orderBy("dst")) == 1).alias("first"),
+        ).select(F.inline(F.array(
+            F.when(F.col("dst") > F.col("src"), F.struct(
+                F.col("dst").alias("x"), F.col("m").alias("y"), (F.col("m") != F.col("src")).alias("f"))),
+            F.when(F.col("first") & (F.col("m") == F.col("src")), F.struct(
+                F.col("src").alias("x"), F.col("src").alias("y"), F.lit(False).alias("f"))),
+        ))).where(F.col("x").isNotNull())
+        m2 = F.col("m2")
+        return large.withColumn("m2", F.min("y").over(Window.partitionBy("x"))).select(F.inline(F.array(
+            F.struct(F.col("x").alias("src"), m2.alias("dst"), (F.col("f") | (F.col("y") != m2)).alias("f")),
+            F.when(F.col("y") != m2, F.struct(F.col("y").alias("src"), m2.alias("dst"), F.lit(True).alias("f"))),
+        ))).where(F.col("src").isNotNull())
 
-    sig = _signature(e)
-    converged = False
-    for i in range(max_iter):
-        # -- large-star ---------------------------------------------------
-        nbrs = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = nbrs.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        # no dropDuplicates here: large's rows feed straight into a MAP
-        # (the orientation) and then the oriented dedup below — a dedup at
-        # this level would add a full exchange without reducing the bytes
-        # entering the next one (dropDuplicates' map-side partial
-        # aggregation already collapses local duplicates either way)
-        large = (
-            nbrs.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        # -- small-star ---------------------------------------------------
-        # no dropDuplicates on the oriented stream either (same argument as
-        # large above, one full (u,v) exchange + aggregate per round saved):
-        # min(v) per u is multiplicity-blind, duplicate join-back rows
-        # collapse in the final dedup below, and the DISTINCT small-star
-        # output is identical — dedup(f(multiset)) == dedup(f(set)) because
-        # every emitted row depends only on its own (u,v) value and m(u)
-        oriented = large.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        smins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            oriented.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(smins.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .dropDuplicates(["u", "v"])
-        )
-        if (i + 1) % 2 == 0:
-            small = _cut_lineage(small, checkpoint_dir)
-        else:
-            small = small.persist()
-        new_sig = _signature(small)
-        prev_cached.unpersist()
-        prev_cached, e = small, small
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        warnings.warn(
-            f"connected_components(two_phase) hit max_iter={max_iter} before the "
-            "edge-set fixpoint — component labels may be incomplete",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    # fixpoint edges are (vertex → component-min) stars; roots map to themselves
-    comp = verts.join(
-        e.select(F.col("u").alias("vertex"), F.col("v").alias("__ptr")), "vertex", "left"
-    ).select("vertex", F.coalesce("__ptr", F.col("vertex")).alias("component"))
-    # materialize the result, then free EVERY cache this call created —
-    # without this the terminal superstep + vertex caches outlive the call
-    # (executor memory leak across repeated invocations)
-    comp = _cut_lineage(comp, checkpoint_dir)
-    verts.unpersist()
-    prev_cached.unpersist()
-    return comp
+    stars, seen = ss.loop(e, star_round, max_iter=max_iter, quiet=F.count_if("f"))
+    if _quiet(seen):
+        return stars.select(F.col("src").alias("vertex"), F.col("dst").alias("component")), True
+    # unconverged: a vertex may still hold several pointers; keep the least
+    comp, _ = ss.cut(stars.groupBy(F.col("src").alias("vertex")).agg(F.min("dst").alias("component")))
+    return comp, False
 
 
 def pagerank(
@@ -302,60 +364,40 @@ def pagerank(
     GraphX-equivalent recurrence; bench slopes recorded before round 13
     measured that path (the bench key switched semantics in r13 — see
     PERF.md)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # verts: dropDuplicates leaves the cache hash-partitioned on vertex, so
-    # the per-iteration left join below reuses that partitioning instead of
-    # re-exchanging the vertex set every round
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .dropDuplicates(["vertex"])
-        .persist()
-    )
-    # LOOP-INVARIANT hoist: (src, dst, outdeg) never changes across
-    # iterations, yet the old shape re-joined edges with the out-degree
-    # aggregate inside every superstep — one aggregation + one join per
-    # round for a relation that is constant.  Build it once, partitioned
-    # on src, so each iteration's ranks⋈edges join finds both sides
-    # already hash-partitioned on the join key (ranks inherits vertex
-    # partitioning from the previous round's groupBy/left join): the only
-    # exchange left per superstep is the groupBy(dst) rank-mass move —
-    # the one shuffle the algorithm fundamentally requires.
-    out_deg = e.groupBy(F.col("src")).agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = e.join(out_deg, "src").repartition("src").persist()
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    for i in range(iterations):
-        contribs = (
-            ranks.join(ed, F.col("vertex") == F.col("src"))
-            .select(F.col("dst").alias("vertex"), (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy("vertex")
-            .agg(
-                (
-                    # round-12 after the exact decimal sum: engines convert
-                    # decimal->double with up to 1 ulp of divergence (DuckDB's
-                    # int128/10^18 two-step vs BigDecimal.doubleValue); the
-                    # repo's standard 1e-12 quantization erases it while the
-                    # sum itself stays order-independent
-                    F.round(F.sum(F.col("contrib").cast("decimal(28,18)")).cast("double"), 12)
-                    if exact_sums
-                    else F.sum("contrib")
-                ).alias("recv")
-            )
+    # round-12 after the exact decimal sum: engines convert decimal->double
+    # with up to 1 ulp of divergence (DuckDB's int128/10^18 two-step vs
+    # BigDecimal.doubleValue); the repo's standard 1e-12 quantization erases
+    # it while the sum itself stays order-independent
+    recv = (lambda m: F.round(F.sum(m.cast("decimal(28,18)")).cast("double"), 12)) if exact_sums else F.sum
+    return _ranks(edges, None, src, dst, iterations, damping, checkpoint_every, checkpoint_dir, recv)
+
+
+def _ranks(edges: DataFrame, seeds: DataFrame | None, src: str, dst: str, iterations: int, damping: float,
+           checkpoint_every: int, checkpoint_dir: str | None, combine) -> DataFrame:
+    """The PageRank supersteps: every vertex sends rank/outdeg along its
+    out-edges and takes ``teleport + d·Σ received``, where the walk restarts
+    with mass (1-d) at every vertex, or at the ``seeds`` (a ``vertex``
+    column) only.  A sum has no active set: every vertex sends every
+    superstep, and lineage is cut every ``checkpoint_every`` of them."""
+    with _Supersteps(checkpoint_dir) as ss:
+        g = ss.graph(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+        if seeds is None:
+            init, teleport = g.select("vertex", F.lit(1.0).alias("rank")), F.lit(1.0 - damping)
+        else:
+            seed = F.coalesce("__seed", F.lit(False))
+            init = g.join(seeds.distinct().withColumn("__seed", F.lit(True)), "vertex", "left").select(
+                "vertex", seed.alias("__seed"), F.when(seed, F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank"))
+            teleport = F.when(F.col("__seed"), F.lit(1.0 - damping)).otherwise(F.lit(0.0))
+        ranks, _ = ss.pregel(
+            g,
+            init,
+            send=lambda _: F.col("rank") / F.size(_OUT),
+            combine=combine,
+            apply={"rank": teleport + F.lit(damping) * F.coalesce("__m", F.lit(0.0))},
+            max_iter=iterations,
+            every=checkpoint_every,
         )
-        ranks = (
-            verts.join(contribs, "vertex", "left")
-            .select(
-                "vertex",
-                (F.lit(1.0 - damping) + F.lit(damping) * F.coalesce("recv", F.lit(0.0))).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = _cut_lineage(ranks, checkpoint_dir)
-    # materialize, then release this call's caches (see connected_components)
-    ranks = _cut_lineage(ranks, checkpoint_dir)
-    ed.unpersist()
-    verts.unpersist()
-    return ranks
+        return ranks.select("vertex", "rank")
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -415,51 +457,34 @@ def k_core(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every vertex has
-    degree ≥ k (undirected), found by deterministic iterative peeling —
-    drop all vertices below k, recompute degrees on the induced subgraph,
-    repeat to fixpoint.  Returns ``(vertex, degree)`` with each survivor's
-    degree inside the core.
+    degree ≥ k (undirected), found by deterministic synchronous peeling.
+    Returns ``(vertex, degree)`` with each survivor's degree inside the
+    core.
 
-    Scale shape: every round is one narrow degree aggregate over
-    (a, b) pairs plus two semi-joins to induce the subgraph — the edge
-    payload never widens, lineage is cut per round
-    (:func:`_cut_lineage`), and peeling converges in at most the
-    degeneracy-ordering depth (typically ≪ rounds on real graphs; the
-    loop also stops the moment no vertex was dropped).  Raises if
-    ``max_iter`` rounds pass without convergence, never returning a
-    silently-unpeeled core.
+    On the superstep engine: every vertex starts with its degree, those
+    below k die, and each superstep the vertices that died in the last one
+    tell their neighbours, who subtract the count and die in turn when
+    they drop below k.  One shuffle per peeling round, carrying only the
+    fresh deaths' messages; the loop stops the moment no vertex died.
+    Raises if ``max_iter`` rounds pass without convergence, never
+    returning a silently-unpeeled core.
     """
-    e = (
-        edges.select(F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e = _cut_lineage(e, checkpoint_dir)
-    for _ in range(max_iter):
-        deg = (
-            e.select(F.col("a").alias("v"))
-            .unionAll(e.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("d"))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(F.col("src") != F.col("dst"))
+    with _Supersteps(checkpoint_dir) as ss:
+        g = ss.graph(_undirected(e), distinct=True)
+        deg = F.size(_OUT).cast("long")
+        left = F.col("degree") - F.coalesce("__m", F.lit(0))
+        core, seen = ss.pregel(
+            g,
+            g.select("vertex", deg.alias("degree"), (deg >= k).alias("__alive"), (deg < k).alias(_ACTIVE)),
+            send=lambda _: F.lit(1),
+            combine=F.sum,
+            apply={"degree": left, "__alive": F.col("__alive") & (left >= k), _ACTIVE: F.col("__alive") & (left < k)},
+            max_iter=max_iter,
         )
-        keep = deg.where(F.col("d") >= k).select("v")
-        # one job for both convergence counters (deg re-derives from the
-        # checkpointed edge set, so no lazy-cache double-compute race)
-        row = deg.agg(
-            F.count(F.lit(1)).alias("n"), F.count(F.when(F.col("d") >= k, 1)).alias("nk")
-        ).collect()[0]
-        n_vertices, n_keep = row["n"], row["nk"]
-        if n_keep == n_vertices:
-            return deg.where(F.col("d") >= k).select(F.col("v").alias("vertex"), F.col("d").alias("degree"))
-        if n_keep == 0:
-            return deg.where(F.lit(False)).select(F.col("v").alias("vertex"), F.col("d").alias("degree"))
-        e2 = (
-            e.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
-            .select("a", "b")
-        )
-        e = _cut_lineage(e2, checkpoint_dir)
-    raise RuntimeError(f"k_core did not converge in {max_iter} rounds (k={k})")
+        if not _quiet(seen):
+            raise RuntimeError(f"k_core did not converge in {max_iter} rounds (k={k})")
+        return core.where("__alive").select("vertex", "degree")
 
 
 def label_propagation(
@@ -479,62 +504,54 @@ def label_propagation(
 
     Like every synchronous LPA it can oscillate on bipartite-ish
     structures, so the loop runs at most ``max_iter`` rounds (GraphX
-    semantics) but stops early at a fixpoint.
+    semantics) but stops early at a fixpoint, observed every
+    ``checkpoint_every`` rounds at the lineage cuts.
 
-    Scale shape per round: ONE message join (labels to neighbors) + a
-    two-level aggregate — groupBy (vertex, label) count, then
-    ``max_by(label, (count, -label))`` per vertex, which rides the same
-    hash partitioning as the first groupBy's key prefix.  No window
-    function, no self-join; lineage cut every ``checkpoint_every`` rounds
-    exactly like connected_components/pagerank.
+    Scale shape per round: one shuffle on the superstep engine; the
+    neighbour-label vote is ``mode(label, deterministic)`` per vertex, a
+    partial-aggregable combiner.  Every vertex sends every round: a vote
+    needs all neighbours' labels, not only the changed ones.
     """
-    both = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .dropDuplicates(["a", "b"])
-        .persist()
-    )
-    labels = (
-        both.select(F.col("a").alias("vertex"))
-        .dropDuplicates(["vertex"])
-        .withColumn("community", F.col("vertex"))
-        .persist()
-    )
-    init_labels = labels
-    prev_cached = labels
-    for i in range(max_iter):
-        msgs = both.join(labels.withColumnRenamed("vertex", "b"), "b").select(
-            F.col("a").alias("vertex"), F.col("community").alias("lbl")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    with _Supersteps(checkpoint_dir) as ss:
+        g = ss.graph(_undirected(e), distinct=True)
+        labels, _ = ss.pregel(
+            g,
+            g.select("vertex", F.col("vertex").alias("community")),
+            send=lambda _: F.col("community"),
+            combine=lambda m: F.mode(m, True),  # most frequent; ties → smallest
+            apply={"community": F.coalesce("__m", "community"), _ACTIVE: F.col("__m") != F.col("community")},
+            max_iter=max_iter,
+            every=checkpoint_every,
+            active_only=False,
         )
-        counts = msgs.groupBy("vertex", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        # min_by over (−count, label): highest count wins, ties take the
-        # SMALLEST label — works for ANY orderable id type (string vertex
-        # ids included; a unary minus on the label itself would require
-        # numeric ids, which the rest of this module never assumes)
-        best = counts.groupBy("vertex").agg(
-            F.min_by("lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl").alias("l"))).alias("new_community")
+        return labels.select("vertex", "community")
+
+
+def _shortest_paths(edges: DataFrame, seeds: DataFrame, max_hops: int, value: str, *, src: str, dst: str,
+                    seed_col: str, checkpoint_dir: str | None, weight: str | None = None,
+                    per_source: bool = False) -> DataFrame:
+    """Bounded-hop multi-source shortest paths on the superstep engine
+    (the GraphX/Pregel ShortestPaths formulation): seeds start at 0, a
+    vertex whose ``value`` improved sends ``value + weight`` (``+ 1``
+    without a weight) along its out-edges, and each vertex keeps the
+    minimum.  Stops when no vertex improved, so supersteps = the longest
+    useful hop count, not ``max_hops``.  ``per_source`` keys the state by
+    ``(source, vertex)``: every seed's distances in the same supersteps."""
+    keys = ("source",) if per_source else ()
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), *([F.col(weight).alias("w")] if weight else []))
+    s = seeds.select(F.col(seed_col).alias("vertex")).distinct()
+    init = s.select("vertex", *([F.col("vertex").alias("source")] if per_source else []),
+                    F.lit(0).cast("long").alias(value))
+    step = (lambda el: F.col(value) + el["w"]) if weight else (lambda el: F.col(value) + 1)
+    better = F.col("__m").isNotNull() & (F.col(value).isNull() | (F.col("__m") < F.col(value)))
+    with _Supersteps(checkpoint_dir) as ss:
+        g = ss.graph(e, *(["w"] if weight else []))
+        state, _ = ss.pregel(
+            g, init, send=step, combine=F.min, apply={value: F.least(value, "__m"), _ACTIVE: better},
+            max_iter=max_hops, keys=keys,
         )
-        updated = labels.join(best, "vertex", "left").select(
-            "vertex",
-            F.coalesce("new_community", F.col("community")).alias("community"),
-            (F.coalesce("new_community", F.col("community")) != F.col("community")).alias("__changed"),
-        )
-        if (i + 1) % checkpoint_every == 0:
-            updated = _cut_lineage(updated, checkpoint_dir)
-        else:
-            updated = updated.persist()
-        n_changed = updated.where(F.col("__changed")).count()
-        if prev_cached is not labels:
-            prev_cached.unpersist()
-        prev_cached = updated
-        labels = updated.drop("__changed")
-        if n_changed == 0:
-            break
-    labels = _cut_lineage(labels, checkpoint_dir)
-    prev_cached.unpersist()
-    init_labels.unpersist()
-    both.unpersist()
-    return labels
+        return state.select(*keys, "vertex", value)
 
 
 def bfs_distances(
@@ -552,54 +569,15 @@ def bfs_distances(
     The relational Pregel frontier loop (the `repeat(out()).until(...)`
     family of reference traversals, `core/.../traversal/TraversalOps.scala`
     repeat/emit steps, computed set-at-a-time instead of per-traverser):
-
-    * ``dist``      — settled (vertex, dist) pairs; a vertex enters at its
-                      FIRST (minimal) depth and is never revisited;
-    * ``frontier``  — vertices settled in the previous round only;
-    * one superstep = frontier ⋈ edges (shuffle hash join on src) →
-      left-anti join against settled (drops revisits — this is what keeps
-      the loop linear in |E| instead of exploding on cycles).
-
-    Settled vertices accumulate as a list of per-round frontier blocks —
-    disjoint by construction, each checkpointed once and NEVER rewritten
-    (re-materializing the full settled set per round would write O(V) per
-    superstep; here total checkpoint writes are O(V) across the whole
-    run).  The raw edge table is not pre-deduplicated: duplicate edges
-    only duplicate candidate rows, which the per-round ``distinct``
-    removes anyway, so a global edge dedup shuffle would be pure waste.
-    The loop stops as soon as the frontier empties, so supersteps =
-    eccentricity(seeds), not ``max_depth``.  An external oracle replays
-    this as a recursive CTE with UNION-dedup + min().
+    only the vertices reached in the last superstep — the frontier — send,
+    so each edge carries a message at most once, and a vertex enters at
+    its FIRST (minimal) depth.  The loop stops as soon as the frontier
+    empties, so supersteps = eccentricity(seeds), not ``max_depth``.  An
+    external oracle replays this as a recursive CTE with UNION-dedup +
+    min().
     """
-    from functools import reduce
-
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    frontier = _cut_lineage(
-        seeds.select(F.col(seed_col).alias("vertex"))
-        .distinct()
-        .select("vertex", F.lit(0).cast("long").alias("dist")),
-        checkpoint_dir,
-    ).persist()
-    frontier.count()
-    settled = [frontier]
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        settled_union = reduce(DataFrame.unionByName, settled)
-        nxt = (
-            frontier.join(e, frontier["vertex"] == e["__s"])
-            .select(F.col("__d").alias("vertex"))
-            .distinct()
-            .join(settled_union, "vertex", "left_anti")
-            .select("vertex", F.lit(depth).cast("long").alias("dist"))
-        )
-        nxt = _cut_lineage(nxt, checkpoint_dir).persist()
-        if nxt.count() == 0:
-            nxt.unpersist()
-            break
-        settled.append(nxt)
-        frontier = nxt
-    return reduce(DataFrame.unionByName, settled)
+    return _shortest_paths(edges, seeds, max_depth, "dist", src=src, dst=dst, seed_col=seed_col,
+                           checkpoint_dir=checkpoint_dir)
 
 
 def sssp_weighted(
@@ -616,55 +594,17 @@ def sssp_weighted(
     seed over paths of at most ``max_hops`` edges (Bellman-Ford relaxation
     supersteps — the GraphX/Pregel ShortestPaths formulation).
 
-    Per round: messages = CHANGED vertices ⋈ edges → per-target min
-    (partial-aggregated before the shuffle) → full-outer merge with the
-    running distances → the changed set is vertices whose cost improved.
-    The loop stops when no vertex improves, so rounds = longest useful
-    hop count, not ``max_hops``.  Unlike BFS the settled set cannot
-    accumulate as immutable blocks — relaxation REVISES costs — so the
-    distance table is re-checkpointed per round; that O(V)-per-round write
-    is inherent to Bellman-Ford on any Pregel system.
+    Per superstep only the vertices whose cost improved send; messages are
+    min-combined before the shuffle.  The loop stops when no vertex
+    improves, so rounds = longest useful hop count, not ``max_hops``.
 
     Non-negative weights assumed (standard SSSP contract; negative edges
     would need max_hops full rounds without early exit to be correct).
     Integer weights relax exactly; an external oracle replays bounded-hop
     relaxation as a recursive CTE over path enumeration + min().
     """
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"), F.col(weight).alias("__w"))
-    prev = _cut_lineage(
-        seeds.select(F.col(seed_col).alias("vertex")).distinct().select("vertex", F.lit(0).cast("long").alias("cost")),
-        checkpoint_dir,
-    ).persist()
-    prev.count()
-    dist, changed = prev, prev
-    rounds = 0
-    while rounds < max_hops:
-        rounds += 1
-        best = (
-            changed.join(e, changed["vertex"] == e["__s"])
-            .groupBy(F.col("__d").alias("vertex"))
-            .agg(F.min(F.col("cost") + F.col("__w")).alias("cand"))
-        )
-        merged = (
-            dist.join(best, "vertex", "full_outer")
-            .select(
-                "vertex",
-                F.least(F.col("cost"), F.col("cand")).alias("cost"),  # least() skips nulls
-                (F.col("cand").isNotNull() & (F.col("cost").isNull() | (F.col("cand") < F.col("cost")))).alias("__improved"),
-            )
-        )
-        merged = _cut_lineage(merged, checkpoint_dir).persist()
-        n_changed = merged.where(F.col("__improved")).limit(1).count()
-        # unpersist the PERSISTED handle from the previous round — dist is a
-        # derived Project over it, and unpersisting a derived plan would not
-        # release the cached blocks (the min_label CC leak class)
-        prev.unpersist()
-        prev = merged
-        dist = merged.select("vertex", "cost")
-        changed = merged.where(F.col("__improved")).select("vertex", "cost")
-        if n_changed == 0:
-            break
-    return dist
+    return _shortest_paths(edges, seeds, max_hops, "cost", src=src, dst=dst, seed_col=seed_col,
+                           checkpoint_dir=checkpoint_dir, weight=weight)
 
 
 def personalized_pagerank(
@@ -682,48 +622,12 @@ def personalized_pagerank(
     of uniformly (GraphX ``personalizedPageRank``) — "importance relative
     to these vertices", the standard recommendation/expansion primitive.
 
-    Same superstep shape as :func:`pagerank` (contribution join + sum per
-    target), but the teleport term ``(1-d)`` lands only on seeds; every
-    other vertex keeps pure propagated mass.  Seeds are a broadcast-sized
-    flag column on the vertex table — no extra shuffle vs static PageRank.
+    Same supersteps as :func:`pagerank`, but the teleport term ``(1-d)``
+    lands only on seeds; every other vertex keeps pure propagated mass.
+    The seed flag is a vertex value carried through the supersteps.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .dropDuplicates(["vertex"])
-        .join(
-            seeds.select(F.col(seed_col).alias("vertex")).distinct().withColumn("__seed", F.lit(True)),
-            "vertex",
-            "left",
-        )
-        .select("vertex", F.coalesce("__seed", F.lit(False)).alias("__seed"))
-        .persist()
-    )
-    out_deg = e.groupBy(F.col("src").alias("vertex")).agg(F.count(F.lit(1)).alias("outdeg"))
-    teleport = F.when(F.col("__seed"), F.lit(1.0 - damping)).otherwise(F.lit(0.0))
-    ranks = verts.select("vertex", F.when(F.col("__seed"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank"))
-    for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "vertex")
-            .join(e, F.col("vertex") == F.col("src"))
-            .select(F.col("dst").alias("vertex"), (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy("vertex")
-            .agg(F.sum("contrib").alias("recv"))
-        )
-        ranks = (
-            verts.join(contribs, "vertex", "left")
-            .select(
-                "vertex",
-                (teleport + F.lit(damping) * F.coalesce("recv", F.lit(0.0))).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = _cut_lineage(ranks, checkpoint_dir)
-    ranks = _cut_lineage(ranks, checkpoint_dir)
-    e.unpersist()
-    verts.unpersist()
-    return ranks
+    return _ranks(edges, seeds.select(F.col(seed_col).alias("vertex")), src, dst, iterations, damping,
+                  checkpoint_every, checkpoint_dir, F.sum)
 
 
 def strongly_connected_components(
@@ -737,20 +641,23 @@ def strongly_connected_components(
     scc)`` with ``scc`` = the component's minimum vertex id.
 
     The forward-backward coloring algorithm (the standard distributed SCC
-    — GraphX's implementation has the same skeleton), all relational:
+    — GraphX's implementation has the same skeleton), as three fixpoints
+    on the superstep engine over one cached graph that stores each edge in
+    both directions; resolved vertices neither send nor accept:
 
-    1. **trim** — vertices with no in-edge or no out-edge in the active
-       subgraph are singleton SCCs; peel repeatedly (kills DAG tails fast,
-       the common mass of real graphs).
-    2. **color** — propagate min vertex id along FORWARD edges to
-       fixpoint: ``color(v)`` = min id among vertices that reach ``v``.
-       Roots are vertices with ``color(v) == v``.
+    1. **trim** — an open vertex with no open in-neighbour or no open
+       out-neighbour is a singleton SCC; peel repeatedly (kills DAG tails
+       fast, the common mass of real graphs).
+    2. **color** — propagate the min vertex id along FORWARD edges to
+       fixpoint: ``color(v)`` = min id among open vertices that reach
+       ``v``.  Roots are vertices with ``color(v) == v``.
     3. **backward reach** — from each root, walk REVERSED edges staying
-       inside the root's color class.  A vertex that got the root's color
-       forward (root reaches it) and reaches the root backward is in the
-       root's SCC — every color class resolves its root's SCC in the same
-       round, in parallel.
-    4. peel the found SCCs, repeat.
+       inside the root's color class (a successor's color is never above
+       its predecessor's, so the max incoming color equals the receiver's
+       own exactly when a reached successor shares its class).  The reached
+       vertices are the root's SCC — every color class resolves its root's
+       SCC in the same round, in parallel.
+    4. repeat on the open vertices.
 
     Each inner fixpoint is O(active diameter) supersteps; outer rounds are
     bounded by the longest chain of SCCs not removed by trimming
@@ -758,110 +665,51 @@ def strongly_connected_components(
     vertices unresolved, never returns wrong labels).  Differentially
     tested against an in-memory Tarjan on random graphs.
     """
-    from functools import reduce
-
-    e = edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")).distinct()
-    e = _cut_lineage(e, checkpoint_dir).persist()
-    verts = e.select(F.col("s").alias("vertex")).union(e.select(F.col("d").alias("vertex"))).distinct()
-    verts = _cut_lineage(verts, checkpoint_dir).persist()
-    done_blocks: list[DataFrame] = []
-
-    for _ in range(max_rounds):
-        if verts.count() == 0:
-            break
-        # -- 1. trim singleton SCCs ------------------------------------
-        while True:
-            outs = e.select(F.col("s").alias("vertex")).distinct()
-            ins = e.select(F.col("d").alias("vertex")).distinct()
-            both = outs.join(ins, "vertex", "inner")
-            trivial = verts.join(both, "vertex", "left_anti")
-            trivial = _cut_lineage(trivial, checkpoint_dir).persist()
-            if trivial.count() == 0:
-                trivial.unpersist()
-                break
-            done_blocks.append(trivial.select("vertex", F.col("vertex").alias("scc")))
-            new_verts = _cut_lineage(verts.join(trivial, "vertex", "left_anti"), checkpoint_dir).persist()
-            new_verts.count()
-            verts.unpersist()
-            verts = new_verts
-            new_e = e.join(verts.select(F.col("vertex").alias("s")), "s", "left_semi").join(
-                verts.select(F.col("vertex").alias("d")), "d", "left_semi"
+    e = edges.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst"))
+    both = e.select(F.inline(F.array(
+        F.struct("src", "dst", F.lit(True).alias("fwd")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), F.lit(False).alias("fwd")),
+    )))
+    is_open = F.col("scc").isNull()
+    # trim messages: bit 1 = "you have an open in-neighbour", bit 2 = "... out-neighbour"
+    trivial = is_open & (F.coalesce("__m", F.lit(0)) != 3)
+    joins = is_open & F.coalesce(F.col("__m") == F.col("color"), F.lit(False))
+    with _Supersteps(checkpoint_dir) as ss:
+        g = ss.graph(both, "fwd", distinct=True)
+        state = g.select("vertex", F.lit(None).cast("long").alias("scc"))
+        for rnd in range(max_rounds + 1):
+            # -- 1. trim ------------------------------------------------------
+            state, seen = ss.pregel(
+                g, state.withColumn(_ACTIVE, is_open),
+                send=lambda el: F.when(is_open, F.when(el["fwd"], F.lit(1)).otherwise(F.lit(2))),
+                combine=F.bit_or,
+                apply={"scc": F.when(trivial, F.col("vertex")).otherwise(F.col("scc")), _ACTIVE: trivial},
+                max_iter=_UNBOUNDED, active_only=False, stats={"open": F.count_if(is_open)},
             )
-            new_e = _cut_lineage(new_e.select("s", "d"), checkpoint_dir).persist()
-            new_e.count()
-            e.unpersist()
-            e = new_e
-        if verts.count() == 0:
-            break
-        # -- 2. forward min-id coloring to fixpoint --------------------
-        color = verts.select("vertex", F.col("vertex").alias("color")).persist()
-        color.count()
-        while True:
-            inc = (
-                e.join(color.select(F.col("vertex").alias("s"), F.col("color").alias("c_src")), "s")
-                .groupBy(F.col("d").alias("vertex"))
-                .agg(F.min("c_src").alias("c_in"))
+            if seen["open"] == 0:
+                return state.select("vertex", "scc")
+            if rnd == max_rounds:
+                raise RuntimeError(f"SCC did not resolve within max_rounds={max_rounds}; raise the cap")
+            # -- 2. forward min-id coloring to fixpoint -----------------------
+            state, _ = ss.pregel(
+                g, state.select("vertex", "scc", F.col("vertex").alias("color"), is_open.alias(_ACTIVE)),
+                send=lambda el: F.when(el["fwd"], F.col("color")),
+                combine=F.min,
+                apply={"color": F.when(is_open, F.least("color", "__m")).otherwise(F.col("color")),
+                       _ACTIVE: is_open & (F.col("__m") < F.col("color"))},
+                max_iter=_UNBOUNDED,
             )
-            new_color = (
-                color.join(inc, "vertex", "left")
-                .select("vertex", F.least(F.col("color"), F.coalesce(F.col("c_in"), F.col("color"))).alias("color"))
+            # -- 3. backward reach from roots within each color class ---------
+            root = is_open & (F.col("color") == F.col("vertex"))
+            state, _ = ss.pregel(
+                g, state.select("vertex", "scc", "color", root.alias("hit"), root.alias(_ACTIVE)),
+                send=lambda el: F.when(~el["fwd"], F.col("color")),
+                combine=F.max,
+                apply={"hit": F.col("hit") | joins, _ACTIVE: ~F.col("hit") & joins},
+                max_iter=_UNBOUNDED,
             )
-            new_color = _cut_lineage(new_color, checkpoint_dir).persist()
-            changed = (
-                new_color.join(color.select("vertex", F.col("color").alias("old")), "vertex")
-                .where(F.col("color") != F.col("old"))
-                .count()
-            )
-            color.unpersist()
-            color = new_color
-            if changed == 0:
-                break
-        # -- 3. backward reach from roots within each color class ------
-        reached = color.where(F.col("color") == F.col("vertex")).persist()
-        reached.count()
-        blocks = [reached]
-        frontier = reached
-        while True:
-            step = (
-                e.join(frontier.select(F.col("vertex").alias("d"), "color"), "d")
-                .select(F.col("s").alias("vertex"), "color")
-                .distinct()
-                .join(color, ["vertex", "color"], "left_semi")  # stay inside the color class
-                .join(reduce(DataFrame.unionByName, blocks), "vertex", "left_anti")
-            )
-            step = _cut_lineage(step, checkpoint_dir).persist()
-            if step.count() == 0:
-                step.unpersist()
-                break
-            blocks.append(step)
-            frontier = step
-        found = reduce(DataFrame.unionByName, blocks).select("vertex", F.col("color").alias("scc"))
-        found = _cut_lineage(found, checkpoint_dir).persist()
-        found.count()
-        done_blocks.append(found)
-        color.unpersist()
-        # -- 4. peel ---------------------------------------------------
-        new_verts = _cut_lineage(verts.join(found, "vertex", "left_anti"), checkpoint_dir).persist()
-        new_verts.count()
-        verts.unpersist()
-        verts = new_verts
-        new_e = e.join(verts.select(F.col("vertex").alias("s")), "s", "left_semi").join(
-            verts.select(F.col("vertex").alias("d")), "d", "left_semi"
-        )
-        new_e = _cut_lineage(new_e.select("s", "d"), checkpoint_dir).persist()
-        new_e.count()
-        e.unpersist()
-        e = new_e
-    else:
-        if verts.count() > 0:
-            raise RuntimeError(
-                f"SCC did not resolve within max_rounds={max_rounds}; raise the cap"
-            )
-    e.unpersist()
-    verts.unpersist()
-    from functools import reduce as _r
-
-    return _r(DataFrame.unionByName, done_blocks)
+            # -- 4. the reached vertices form their root's SCC ----------------
+            state = state.select("vertex", F.when(F.col("hit"), F.col("color")).otherwise(F.col("scc")).alias("scc"))
 
 
 def topological_levels(
@@ -876,49 +724,30 @@ def topological_levels(
     depth used to batch dependency graphs (migration DAGs, pipeline
     stages) into parallel waves.
 
-    Relational max-propagation fixpoint: ``level(d) ← max(level(d),
-    max over in-edges (level(s) + 1))`` converges in longest-path-length
-    supersteps on a DAG.  On a CYCLE the level keeps climbing — hitting
+    Max-propagation fixpoint on the superstep engine: ``level(d) ←
+    max(level(d), max over in-edges (level(s) + 1))``, sent only by
+    vertices whose level rose, converges in longest-path-length supersteps
+    on a DAG.  On a CYCLE the level keeps climbing — hitting
     ``max_levels`` with changes still flowing raises instead of returning
     wrong layers, so the operator doubles as cycle detection.
     """
-    e = edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")).distinct()
-    e = _cut_lineage(e, checkpoint_dir).persist()
-    lvl = (
-        e.select(F.col("s").alias("vertex"))
-        .union(e.select(F.col("d").alias("vertex")))
-        .distinct()
-        .select("vertex", F.lit(0).cast("long").alias("level"))
-        .persist()
-    )
-    lvl.count()
-    for _ in range(max_levels):
-        inc = (
-            e.join(lvl.select(F.col("vertex").alias("s"), F.col("level").alias("ls")), "s")
-            .groupBy(F.col("d").alias("vertex"))
-            .agg((F.max("ls") + 1).alias("cand"))
+    e = edges.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst"))
+    with _Supersteps(checkpoint_dir) as ss:
+        g = ss.graph(e, distinct=True)
+        lvl, seen = ss.pregel(
+            g,
+            g.select("vertex", F.lit(0).cast("long").alias("level")),
+            send=lambda _: F.col("level") + 1,
+            combine=F.max,
+            apply={"level": F.greatest("level", "__m"), _ACTIVE: F.col("__m") > F.col("level")},
+            max_iter=max_levels,
         )
-        new_lvl = (
-            lvl.join(inc, "vertex", "left")
-            .select("vertex", F.greatest(F.col("level"), F.coalesce(F.col("cand"), F.col("level"))).alias("level"))
-        )
-        new_lvl = _cut_lineage(new_lvl, checkpoint_dir).persist()
-        changed = (
-            new_lvl.join(lvl.select("vertex", F.col("level").alias("old")), "vertex")
-            .where(F.col("level") != F.col("old"))
-            .count()
-        )
-        lvl.unpersist()
-        lvl = new_lvl
-        if changed == 0:
-            e.unpersist()
-            return lvl
-    e.unpersist()
-    lvl.unpersist()
-    raise RuntimeError(
-        f"levels still changing after max_levels={max_levels}: graph has a cycle "
-        "(or raise the cap for a very deep DAG)"
-    )
+        if not _quiet(seen):
+            raise RuntimeError(
+                f"levels still changing after max_levels={max_levels}: graph has a cycle "
+                "(or raise the cap for a very deep DAG)"
+            )
+        return lvl.select("vertex", "level")
 
 
 def random_walks(
@@ -980,40 +809,12 @@ def bfs_distances_per_source(
     """Per-source multi-source BFS: (source, vertex, dist) minimum hop
     distances from EACH seed separately (where :func:`bfs_distances`
     reports the minimum over ALL seeds).  The state key is
-    (source, vertex), so all sources expand in the same superstep joins —
-    one frontier⋈edges per round for the whole seed set, the
+    (source, vertex), so all sources expand in the same supersteps — the
     all-sources-at-once shape centrality needs.  Frontier volume is
     Σ_s |reach_s(round)|; bound the seed set, not the graph.
     """
-    from functools import reduce
-
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    frontier = _cut_lineage(
-        seeds.select(F.col(seed_col).alias("source"))
-        .distinct()
-        .select("source", F.col("source").alias("vertex"), F.lit(0).cast("long").alias("dist")),
-        checkpoint_dir,
-    ).persist()
-    frontier.count()
-    settled = [frontier]
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        settled_union = reduce(DataFrame.unionByName, settled)
-        nxt = (
-            frontier.join(e, frontier["vertex"] == e["__s"])
-            .select("source", F.col("__d").alias("vertex"))
-            .distinct()
-            .join(settled_union, ["source", "vertex"], "left_anti")
-            .select("source", "vertex", F.lit(depth).cast("long").alias("dist"))
-        )
-        nxt = _cut_lineage(nxt, checkpoint_dir).persist()
-        if nxt.count() == 0:
-            nxt.unpersist()
-            break
-        settled.append(nxt)
-        frontier = nxt
-    return reduce(DataFrame.unionByName, settled)
+    return _shortest_paths(edges, seeds, max_depth, "dist", src=src, dst=dst, seed_col=seed_col,
+                           checkpoint_dir=checkpoint_dir, per_source=True)
 
 
 def closeness_centrality(

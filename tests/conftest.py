@@ -250,7 +250,40 @@ SLOW_TESTS = {
 }
 
 def pytest_collection_modifyitems(config, items):
+    """Mark SLOW_TESTS slow, and fail the session when the bookkeeping has
+    drifted: a SLOW_TESTS entry, or a ``stat_of`` marker's producer, that
+    names no test function of its module."""
+    modules = {}
     for item in items:
         rel = item.nodeid.split("tests/")[-1]
         if rel in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+        if getattr(item, "module", None) is not None:
+            modules[os.path.basename(item.module.__file__)] = item.module
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    stale = []
+    for entry in sorted(SLOW_TESTS):
+        fname, func = entry.split("::", 1)
+        if not os.path.exists(os.path.join(tests_dir, fname)):
+            stale.append(entry)
+        elif fname in modules and not callable(getattr(modules[fname], func.split("[")[0], None)):
+            stale.append(entry)
+    for item in items:
+        marker = item.get_closest_marker("stat_of")
+        if marker is not None:
+            stale += [f"{item.nodeid} stat_of {p}" for p in marker.args if not callable(getattr(item.module, p, None))]
+    if stale:
+        raise pytest.UsageError("conftest test-tier bookkeeping names no collected test: " + ", ".join(stale))
+
+
+def pytest_runtest_setup(item):
+    """A ``@pytest.mark.stat_of(producer, ...)`` test asserts on counters
+    its producers fill while they run; it skips when a producer is not in
+    this session (e.g. deselected as slow) instead of failing on zeros."""
+    marker = item.get_closest_marker("stat_of")
+    if marker is None:
+        return
+    selected = {i.originalname for i in item.session.items if getattr(i, "module", None) is item.module}
+    missing = [p for p in marker.args if p not in selected]
+    if missing:
+        pytest.skip(f"producer not run in this session: {', '.join(missing)}")

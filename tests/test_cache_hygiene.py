@@ -66,3 +66,58 @@ def test_incremental_near_dups_probe_leaves_no_cache(spark, tmp_path):
     assert [r["corpus_id"] for r in hits] == [1]
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"probe pinned cache entries: {leaked}"
+
+
+def _graph_operator_calls(spark):
+    from pyspark.sql import functions as F
+
+    from scalligraph_spark.operators import (
+        bfs_distances,
+        bfs_distances_per_source,
+        connected_components,
+        k_core,
+        label_propagation,
+        pagerank,
+        personalized_pagerank,
+        sssp_weighted,
+        strongly_connected_components,
+        topological_levels,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (6, 7), (8, 9)], "src long, dst long"
+    )
+    dag = spark.createDataFrame([(1, 2), (1, 3), (2, 4), (3, 4), (4, 5)], "src long, dst long")
+    seeds = spark.createDataFrame([(1,), (8,)], "vertex long")
+    return {
+        "cc_two_phase": lambda: connected_components(edges),
+        "cc_min_label": lambda: connected_components(edges, algorithm="min_label"),
+        "pagerank": lambda: pagerank(edges, iterations=4),
+        "personalized_pagerank": lambda: personalized_pagerank(edges, seeds, iterations=4),
+        "label_propagation": lambda: label_propagation(edges, max_iter=4),
+        "k_core": lambda: k_core(edges, 2),
+        "bfs_distances": lambda: bfs_distances(edges, seeds, max_depth=4),
+        "bfs_distances_per_source": lambda: bfs_distances_per_source(edges, seeds, max_depth=4),
+        "sssp_weighted": lambda: sssp_weighted(edges.withColumn("weight", F.lit(2).cast("long")), seeds),
+        "strongly_connected_components": lambda: strongly_connected_components(edges),
+        "topological_levels": lambda: topological_levels(dag),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cc_two_phase", "cc_min_label", "pagerank", "personalized_pagerank", "label_propagation", "k_core",
+     "bfs_distances", "bfs_distances_per_source", "sssp_weighted", "strongly_connected_components",
+     "topological_levels"],
+)
+def test_graph_operator_leaves_only_its_result_persisted(spark, name):
+    """Every iterative graph operator releases the graph it cached and every
+    superstep cut but the one its result reads — repeated calls in one
+    session must not pile up executor storage."""
+    call = _graph_operator_calls(spark)[name]
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    result = call()
+    kept = _persistent_rdd_ids(spark) - before
+    assert result.collect(), f"{name} returned nothing"
+    assert len(kept) <= 1, f"{name} left {len(kept)} persistent RDDs; only its result may stay"

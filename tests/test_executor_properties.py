@@ -348,6 +348,7 @@ def test_registered_hop_with_row_policy_matches_naive(hop_executor, chain_auth):
         assert got == sorted((r["software_id"], r["name"], r["lang"]) for r in want)
 
 
+@pytest.mark.stat_of("test_registered_hop_with_row_policy_matches_naive")
 def test_generator_emitted_registered_and_policy_paths():
     """Stat assertion (verdict #10 'provably emits'): the fuzz above ran
     registered hops in every example and exercised both auth postures
@@ -547,6 +548,7 @@ def test_dialogue_chain_matches_naive(spark, modern, case):
     assert sorted(got, key=key) == sorted(want, key=key)
 
 
+@pytest.mark.stat_of("test_having_composition_matches_naive", "test_dialogue_chain_matches_naive")
 def test_generator_emitted_having_and_dialogue_paths():
     """Stat assertion: the round-7 fuzz exercised post-agg filters, the
     post-agg sort branch, both dedup scopes, the dropDups path, and the

@@ -603,6 +603,7 @@ def test_fuzz_concurrent_writers_with_snapshot_readers(spark, tmp_path_factory, 
     event(f"conflict_retries={retries}")
 
 
+@pytest.mark.stat_of("test_fuzz_concurrent_writers_with_snapshot_readers")
 def test_fuzz_concurrency_exercised_real_interleavings():
     """Stat assertion (runs after the fuzz above, same file order): the
     generated schedules must have produced at least one genuine commit

@@ -1,43 +1,27 @@
 """Persisted ANN index artifacts over the versioned LabelStore — train
 once, query many times.
 
-The reference treats indexes as DECLARED, PERSISTED schema artifacts: a
-model lists its indexed properties (core/.../models/Model.scala:16-19) and
-the database builds and maintains the physical structure once
-(JanusDatabase.scala:304-434 ``addIndex``/``reindex``); queries then only
-*consult* it.  The engine's ANN tier previously retrained its coarse
-quantizer on EVERY call (`ivf_ann_topk`/`semantic_dedup` →
-``_train_centroids``: a driver-side sample job + k-means per query) — at
-100 TB that is a whole extra job per lookup that an index build should
-amortize.  This module closes the gap:
+The reference treats indexes as DECLARED, PERSISTED schema artifacts
+built once (Model.scala:16-19, JanusDatabase.scala:304-434
+``addIndex``/``reindex``); queries only *consult* them.  Here:
 
 * :func:`build_ivf_index` / :func:`build_pq_index` / :func:`build_lsh_index`
   run the bounded-deterministic-sample training ONCE and commit the
-  artifacts as a versioned store table (+ commit meta describing the
-  index), exactly like any other label table — versioning, rollback,
-  snapshot reads and vacuum come from :class:`~scalligraph_spark.store.LabelStore`
-  for free, and a rebuild is just a new version (readers pinned to the old
-  version are undisturbed, the ``ReindexData`` discipline).
-* :func:`load_ann_index` reads the artifact back into the broadcastable
-  numpy form the query ops consume (all artifacts are tiny: ≤4096
-  centroids × dim doubles / m·2^nbits codewords / one config row — they
-  ship to executors via UDF closure; the store is their system of record,
-  not their query-time transport).
+  artifact as a versioned store table whose commit meta describes it —
+  a rebuild is a new version, readers pinned to the old one are
+  undisturbed.  ``store_cells=True`` also stores the IVF inverted lists,
+  which run the segmented-index lifecycle (segments.py).
+* :func:`load_ann_index` reads the artifact back into the numpy form the
+  query ops consume (≤4096 centroids × dim doubles / m·2^nbits
+  codewords / one config row — broadcast-sized by construction).
 * the query ops accept the loaded artifact and launch NO training job:
-  ``ivf_ann_topk(..., centroids=ix.centroids)``,
-  ``semantic_dedup(..., centroids=ix.centroids)``,
-  ``pq_topk(..., codebooks=ix.codebooks)``,
-  ``lsh_bucket_candidates(..., num_planes=ix.num_planes, num_tables=ix.num_tables)``
-  (LSH hyperplanes are derived from frozen seeds on each executor, so its
-  artifact is the configuration pin itself).
-  :func:`indexed_ann_topk` dispatches on the stored kind.
+  ``ivf_ann_topk(..., centroids=)``, ``semantic_dedup(..., centroids=)``,
+  ``pq_topk(..., codebooks=)``, ``lsh_bucket_candidates(...,
+  num_planes=, num_tables=)``; :func:`indexed_ann_topk` dispatches on
+  the stored kind.
 
-Index declaration also plugs into the migration tier: register the build
-as a schema operation via
-``Operations.db_operation("build ann index", lambda spark, store: build_ivf_index(...))``
-after an ``add_index(model, IndexType.STANDARD, vec_col)`` hint — the
-replayed-once-per-version semantics of migrations (Operation.scala:117-131)
-then guarantee the training job runs exactly once per schema version.
+Register a build as a migration ``db_operation`` to run the training
+exactly once per schema version (Operation.scala:117-131).
 """
 
 from __future__ import annotations
@@ -47,6 +31,8 @@ from dataclasses import dataclass
 import pandas as pd  # module-level: pandas_udf type hints resolve in module globals
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from scalligraph_spark.operators import segments
 
 
 @dataclass
@@ -66,22 +52,18 @@ class AnnIndex:
 class MissingAnnIndexWarning(UserWarning):
     """An ANN index was DECLARED for a query surface but no usable
     artifact exists — the query falls back to the exact brute-force
-    scan.  Loud by design: at 100 TB the difference is probed-list cost
-    vs a full corpus pass (the text tier's MissingTextIndexWarning
-    twin)."""
+    scan (the text tier's MissingTextIndexWarning twin)."""
 
 
 class StaleAnnIndexWarning(UserWarning):
     """A persisted ANN index was trained on an older corpus version than
-    the one it is being used against — recall silently degrades as the
-    corpus drifts.  Rebuild via :func:`reindex_ann` (the
-    ``JanusDatabase.reindex`` / ``ReindexData`` discipline)."""
+    the one it is used against — recall silently degrades as the corpus
+    drifts.  Rebuild via :func:`reindex_ann`."""
 
 
 def _corpus_meta(corpus_store, corpus_label: str | None) -> dict:
-    """Training-corpus provenance stamped into the artifact meta: which
-    table version the quantizer/codebooks saw.  Empty when the corpus is
-    not store-tracked (plain parquet input)."""
+    """Which corpus table version the quantizer/codebooks saw ({} when
+    the corpus is not store-tracked)."""
     if corpus_store is None or corpus_label is None:
         return {}
     return {
@@ -90,9 +72,11 @@ def _corpus_meta(corpus_store, corpus_label: str | None) -> dict:
     }
 
 
-def _centroids_to_df(spark: SparkSession, C) -> DataFrame:
-    rows = [(int(i), [float(x) for x in C[i]]) for i in range(len(C))]
-    return spark.createDataFrame(rows, "cell int, centroid array<double>")
+def _centroids(spark: SparkSession, store, name: str, version: int | None = None):
+    import numpy as np
+
+    rows = store.read(spark, name, version).orderBy("cell").collect()
+    return np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
 
 
 def build_ivf_index(
@@ -136,7 +120,9 @@ def build_ivf_index(
         n = n_rows if n_rows is not None else embeddings.count()
         n_centroids = max(4, min(4096, int(math.sqrt(max(n, 4)))))
     C = _train_centroids(embeddings, n_centroids, sample_rows, id_col, vec_col)
-    df = _centroids_to_df(embeddings.sparkSession, C)
+    df = embeddings.sparkSession.createDataFrame(
+        [(int(i), [float(x) for x in C[i]]) for i in range(len(C))], "cell int, centroid array<double>"
+    )
     meta = {
         "kind": "ivf",
         "n_centroids": int(len(C)),
@@ -146,26 +132,16 @@ def build_ivf_index(
         "vec_col": str(vec_col),
         **_corpus_meta(corpus_store, corpus_label),
     }
-    if store_cells:
-        # a REBUILD over an existing artifact carries the segment-naming
-        # watermark forward (ADVICE r9: reindex must not reset it) and
-        # subsumes every existing tombstone in the fresh base
-        prior = store.commit_meta(name)
-        seq = max(
-            int(prior.get("cells_seg_seq", 0)), len(prior.get("cells_segments", []))
-        ) if prior else 0
-        assign = _assign_cells(embeddings, C, cells_n_list, id_col, vec_col)
-        store.write(
-            f"{name}__cells",
-            assign,
-            sort_by=(cells_files, ["cell"]),
-            meta={"table_role": "ivf_cells", "n_list": int(cells_n_list),
-                  "base_seq": int(seq)},
-        )
-        meta["cells"] = True
-        meta["cells_n_list"] = int(cells_n_list)
-        meta["cells_seg_seq"] = int(seq)
-    return store.write(name, df, meta=meta)
+    if not store_cells:
+        return store.write(name, df, meta=meta)
+    meta.update(cells=True, cells_n_list=int(cells_n_list), cells_files=int(cells_files))
+
+    def bases(m: dict, write) -> int:
+        write("cells", _assign_cells(embeddings, C, cells_n_list, id_col, vec_col))
+        return store.write(name, df, meta=meta)
+
+    spark = embeddings.sparkSession
+    return segments.build(spark, store, FAMILY, name, meta, corpus_store, corpus_label, bases)
 
 
 def _assign_cells(embeddings: DataFrame, C, n_list: int, id_col: str, vec_col: str) -> DataFrame:
@@ -192,6 +168,14 @@ def _assign_cells(embeddings: DataFrame, C, n_list: int, id_col: str, vec_col: s
     ).select(F.explode("__cells").alias("cell"), "id", "vec")
 
 
+def _require_cells(store, name: str) -> None:
+    if not store.commit_meta(name).get("cells"):
+        raise ValueError(
+            f"index {name!r} has no stored inverted lists; build it with "
+            "build_ivf_index(..., store_cells=True)"
+        )
+
+
 def extend_ann_cells(
     spark: SparkSession,
     store,
@@ -203,100 +187,30 @@ def extend_ann_cells(
     """Incremental (append-only) inverted-list maintenance: assign a batch
     of NEW vectors against the EXISTING centroids (one Arrow matmul over
     the batch — no retraining, no corpus rescan) and land them as a
-    cell-sorted delta segment ``name__cells_seg<k>``; :func:`ivf_search`
-    reads base ∪ segments transparently.  The same Lucene-segment
-    discipline as ``extend_text_index``: cost ∝ batch, and appended
-    vectors are searchable with no staleness window.  The quantizer
-    itself is NOT updated — distribution drift still degrades recall
-    over time, so ``corpus_version`` (quantizer provenance, the
-    staleness-warning and retrain anchor) is deliberately left at the
-    last training run; the lists' own freshness is tracked separately as
-    ``cells_corpus_version``.  The updated segment list rides a new
-    version of the (tiny) centroids table, the artifact's always-cheap
-    meta carrier.  Returns the new segment count."""
-    ix = load_ann_index(spark, store, name)
-    if ix.kind != "ivf" or not ix.meta.get("cells"):
-        raise ValueError(
-            f"index {name!r} has no stored inverted lists; build it with "
-            "build_ivf_index(..., store_cells=True)"
-        )
-    meta = dict(ix.meta)
-    segments = list(meta.get("cells_segments", []))
-    # monotonic naming (cells_seg_seq never resets across compactions):
-    # a label recorded as folded on the base's commit meta must never be
-    # reused, or the crash-safe reader would skip the fresh segment
-    seq = int(meta.get("cells_seg_seq", len(segments))) + 1
-    meta["cells_seg_seq"] = seq
-    seg_label = f"{name}__cells_seg{seq}"
-    assign = _assign_cells(
-        new_embeddings, ix.centroids, int(meta.get("cells_n_list", 1)),
-        str(meta.get("id_col", "vec_id")), str(meta.get("vec_col", "embedding")),
-    )
-    store.write(seg_label, assign, sort_by=(4, ["cell"]), meta={"table_role": "ivf_cells_segment"})
-    segments.append(seg_label)
-    meta["cells_segments"] = segments
-    if as_of_version is not None and "corpus_label" in meta:
-        # CDC catch-up stamps the version whose delta it actually folded
-        meta["cells_corpus_version"] = int(as_of_version)
-    elif corpus_store is not None and "corpus_label" in meta:
-        # the LISTS' freshness — deliberately NOT corpus_version, which is
-        # QUANTIZER provenance: appends keep the lists complete while the
-        # centroids stay trained on the older distribution, so the
-        # staleness warning (recall drift) and the sink's retrain anchor
-        # must keep measuring from the last actual training run
-        meta["cells_corpus_version"] = int(corpus_store.version(meta["corpus_label"]))
-    store.write(name, store.read(spark, name), meta=meta)  # meta carrier rewrite (≤4096 rows)
-    return len(segments)
+    cell-sorted segment ``name__cells_seg<k>``; :func:`ivf_search` reads
+    base ∪ segments, so appended vectors are searchable with no
+    staleness window.  The quantizer is NOT updated — distribution drift
+    still degrades recall — so ``corpus_version`` (quantizer provenance,
+    the staleness-warning and retrain anchor) stays at the last training
+    run; the lists' own freshness is ``cells_corpus_version``.  Returns
+    the new segment count."""
+    _require_cells(store, name)
+    return segments.extend(spark, store, FAMILY, name, new_embeddings, corpus_store, as_of_version)
+
+
+def _extend(spark: SparkSession, store, name: str, meta: dict, batch: DataFrame, write) -> dict:
+    C = _centroids(spark, store, name)
+    n_list = int(meta["cells_n_list"])
+    write("cells", _assign_cells(batch, C, n_list, meta["id_col"], meta["vec_col"]))
+    return {}
 
 
 def compact_ann_cells(spark: SparkSession, store, name: str) -> int:
     """Merge every cell-list delta segment back into the base table (one
     cell-sorted rewrite of existing assignments — no re-assignment, no
-    training): probes go back to one pruned scan.  Old segment labels
-    stay for pinned readers (``store.drop`` them under retention).
-    Returns the new base version of ``name__cells``.
-
-    Crash-safe: the merged base commits first, recording the folded
-    segment labels in its own commit meta; the meta carrier commits
-    second.  A crash between the two leaves the old carrier still listing
-    the folded segments, but :func:`_read_cells` skips any listed segment
-    the current base already folded — probes never see a vector
-    assignment twice (ADVICE r8)."""
-    ix = load_ann_index(spark, store, name)
-    meta = dict(ix.meta)
-    folded = list(meta.get("cells_segments", []))
-    cells = _read_cells(spark, store, name, meta)
-    # stamp the naming watermark even for PRE-cells_seg_seq metas (see
-    # compact_value_index): a folded label must never be reused
-    seq = int(meta.get("cells_seg_seq", len(folded)))
-    # base_seq: tombstones at or below this sequence watermark are
-    # physically applied by the rewrite (tombstones.py strict reader rule)
-    v = store.write(f"{name}__cells", cells, sort_by=(16, ["cell"]),
-                    meta={"table_role": "ivf_cells", "n_list": int(meta.get("cells_n_list", 1)),
-                          "folded_segments": folded, "base_seq": seq})
-    meta["cells_segments"] = []
-    meta["cells_seg_seq"] = seq
-    store.write(name, store.read(spark, name), meta=meta)
-    return v
-
-
-def _read_cells(spark: SparkSession, store, name: str, meta: dict) -> DataFrame:
-    # skip segments the CURRENT base already folded (see compact_ann_cells);
-    # tombstoned vectors (mutation catch-up — tombstones.py) go dark in
-    # every part at or below their watermark
-    from scalligraph_spark.operators.tombstones import anti_tombstone, read_tombstones, seg_no
-
-    base_meta = store.commit_meta(f"{name}__cells")
-    folded = set(base_meta.get("folded_segments", []))
-    tombs = read_tombstones(spark, store, name)
-    cells = anti_tombstone(
-        store.read(spark, f"{name}__cells"), int(base_meta.get("base_seq", 0)), tombs, "id"
-    )
-    for seg in meta.get("cells_segments", []):
-        if seg in folded:
-            continue
-        cells = cells.unionByName(anti_tombstone(store.read(spark, seg), seg_no(seg), tombs, "id"))
-    return cells
+    training): probes go back to one pruned scan.  Returns the new base
+    version of ``name__cells``."""
+    return segments.compact(spark, store, FAMILY, name)
 
 
 def ivf_search(
@@ -309,14 +223,10 @@ def ivf_search(
     corpus_store=None,
 ) -> DataFrame:
     """Single-query nearest-neighbor search through the PERSISTED inverted
-    lists: the probe-cell choice is a driver-side numpy argsort against
-    the broadcast-sized centroids (no job), the scan reads ONLY the
-    probed cells (``cell IN (…)`` pushed into the cell-sorted parquet —
-    check ``PushedFilters`` in the plan), and the exact-cosine re-rank +
-    global top-k run over candidate-list-sized data.  At 100 TB this is
-    the difference between reading ``n_probe/n_centroids`` of the corpus
-    and all of it — the reference consults its declared mixed indexes the
-    same way (JanusDatabase.scala:476-485).
+    lists: the probe cells are a driver-side argsort against the
+    centroids (no job), the scan reads ONLY those cells (``cell IN (…)``
+    pushed into the cell-sorted parquet), and the exact-cosine re-rank +
+    top-k run over candidate-list-sized data.
 
     Requires the index built with ``store_cells=True``.  Output
     ``(vec_id, cosine)`` sorted by cosine desc, id asc, ≤ k rows."""
@@ -338,7 +248,7 @@ def ivf_search(
     probes = np.argsort(-(C @ (q / qn)))[: min(n_probe, len(C))]
     qlit = F.array(*[F.lit(float(x)) for x in q])
     cand = (
-        _read_cells(spark, store, name, ix.meta)  # base ∪ delta segments
+        segments.read_part(spark, store, FAMILY, name, ix.meta, "cells")
         .where(F.col("cell").isin([int(c) for c in probes]))
         .dropDuplicates(["id"])  # multi-assigned vectors appear once
     )
@@ -375,28 +285,16 @@ def build_pq_index(
         embeddings, m=m, nbits=nbits, sample_rows=sample_rows, id_col=id_col, vec_col=vec_col
     )
     mm, kk, dsub = books.shape
-    rows = [
-        (int(j), int(c), [float(x) for x in books[j, c]])
-        for j in range(mm)
-        for c in range(kk)
-    ]
+    rows = [(int(j), int(c), [float(x) for x in books[j, c]]) for j in range(mm) for c in range(kk)]
     df = embeddings.sparkSession.createDataFrame(
         rows, "subspace int, code int, centroid array<double>"
     )
-    return store.write(
-        name,
-        df,
-        meta={
-            "kind": "pq",
-            "m": int(mm),
-            "nbits": int(nbits),
-            "dsub": int(dsub),
-            "sample_rows": int(sample_rows),
-            "id_col": str(id_col),
-            "vec_col": str(vec_col),
-            **_corpus_meta(corpus_store, corpus_label),
-        },
-    )
+    meta = {
+        "kind": "pq", "m": int(mm), "nbits": int(nbits), "dsub": int(dsub),
+        "sample_rows": int(sample_rows), "id_col": str(id_col), "vec_col": str(vec_col),
+        **_corpus_meta(corpus_store, corpus_label),
+    }
+    return store.write(name, df, meta=meta)
 
 
 def build_lsh_index(
@@ -406,21 +304,15 @@ def build_lsh_index(
     num_planes: int,
     num_tables: int = 4,
 ) -> int:
-    """Pin an LSH configuration as a store artifact.  The hyperplanes are
-    derived from frozen ``RandomState`` seeds identically on every executor
-    (see ``similarity._bucket_udf``), so the persisted artifact IS the
-    (num_planes, num_tables) configuration — pinning it stops the per-call
-    auto-sizing ``count()`` scan and keeps bucket assignments stable across
-    queries and corpus growth (an index rebuild, not a query-time drift,
-    changes them)."""
+    """Pin an LSH configuration as a store artifact.  The hyperplanes
+    derive from frozen seeds on every executor, so the artifact IS the
+    (num_planes, num_tables) configuration — pinning it stops the
+    per-call auto-sizing scan and keeps bucket assignments stable."""
     df = spark.createDataFrame(
         [(int(num_planes), int(num_tables))], "num_planes int, num_tables int"
     )
-    return store.write(
-        name,
-        df,
-        meta={"kind": "lsh", "num_planes": int(num_planes), "num_tables": int(num_tables)},
-    )
+    meta = {"kind": "lsh", "num_planes": int(num_planes), "num_tables": int(num_tables)}
+    return store.write(name, df, meta=meta)
 
 
 def load_ann_index(
@@ -430,37 +322,24 @@ def load_ann_index(
     version: int | None = None,
     corpus_store=None,
 ) -> AnnIndex:
-    """Load a persisted index artifact into its queryable numpy form.
-    Artifacts are broadcast-sized by construction (≤4096 × dim doubles),
-    so the collect here is bounded — this is metadata, not data.
-
-    Freshness: when the artifact records its training-corpus version
-    (builders called with ``corpus_store``/``corpus_label``) and
-    ``corpus_store`` is passed here, a corpus that advanced past the
-    trained version raises :class:`StaleAnnIndexWarning` — centroids
-    trained on version N used against version N+k degrade recall
-    silently otherwise.  Refresh with :func:`reindex_ann`."""
-    import warnings
-
+    """Load a persisted index artifact into its queryable numpy form (a
+    bounded collect: artifacts are broadcast-sized).  With
+    ``corpus_store``, a corpus that advanced past the trained version
+    raises :class:`StaleAnnIndexWarning` — recall degrades silently
+    otherwise; refresh with :func:`reindex_ann`."""
     import numpy as np
 
     v = store.version(name) if version is None else version
     meta = store.commit_meta(name, v)
-    if corpus_store is not None and "corpus_version" in meta:
-        cur = corpus_store.version(meta["corpus_label"])
-        if cur != meta["corpus_version"]:
-            warnings.warn(
-                f"ANN index {name!r} v{v} was trained on "
-                f"{meta['corpus_label']!r} v{meta['corpus_version']} but the "
-                f"corpus is now v{cur} — rebuild with reindex_ann()",
-                StaleAnnIndexWarning,
-                stacklevel=2,
-            )
+    if version is None and meta.get("cells"):
+        meta = dict(meta, **segments.read_meta(store, name))  # the lists' record
+    segments.warn_if_stale(
+        FAMILY, name, meta, corpus_store, StaleAnnIndexWarning, "rebuild with reindex_ann()"
+    )
     kind = meta.get("kind")
     df = store.read(spark, name, v)
     if kind == "ivf":
-        rows = df.orderBy("cell").collect()
-        C = np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
+        C = _centroids(spark, store, name, v)
         return AnnIndex(kind="ivf", version=v, meta=meta, centroids=C)
     if kind == "pq":
         m, nbits, dsub = meta["m"], meta["nbits"], meta["dsub"]
@@ -471,13 +350,8 @@ def load_ann_index(
         return AnnIndex(kind="pq", version=v, meta=meta, codebooks=books)
     if kind == "lsh":
         row = df.collect()[0]
-        return AnnIndex(
-            kind="lsh",
-            version=v,
-            meta=meta,
-            num_planes=int(row["num_planes"]),
-            num_tables=int(row["num_tables"]),
-        )
+        return AnnIndex(kind="lsh", version=v, meta=meta,
+                        num_planes=int(row["num_planes"]), num_tables=int(row["num_tables"]))
     raise ValueError(f"label {name!r} v{v} is not an ANN index artifact (meta={meta})")
 
 
@@ -495,28 +369,19 @@ def indexed_ann_topk(
     dispatch to the matching query op with training disabled.  The only
     jobs launched are the query's own (assignment matmul + candidate join
     + re-rank) — no sampling, no k-means, no auto-sizing scan."""
+    from scalligraph_spark.operators.similarity import ivf_ann_topk, lsh_ann_topk, pq_topk
+
     ix = load_ann_index(spark, store, name)
     if ix.kind == "ivf":
-        from scalligraph_spark.operators.similarity import ivf_ann_topk
-
         return ivf_ann_topk(
             embeddings, k=k, id_col=id_col, vec_col=vec_col, centroids=ix.centroids, **kwargs
         )
     if ix.kind == "lsh":
-        from scalligraph_spark.operators.similarity import lsh_ann_topk
-
         return lsh_ann_topk(
-            embeddings,
-            k=k,
-            num_planes=ix.num_planes,
-            num_tables=ix.num_tables,
-            id_col=id_col,
-            vec_col=vec_col,
-            **kwargs,
+            embeddings, k=k, num_planes=ix.num_planes, num_tables=ix.num_tables,
+            id_col=id_col, vec_col=vec_col, **kwargs,
         )
     if ix.kind == "pq":
-        from scalligraph_spark.operators.similarity import pq_topk
-
         if "query_id" not in kwargs:
             raise ValueError(
                 "kind='pq' indexes serve single-query asymmetric-distance "
@@ -537,46 +402,46 @@ def reindex_ann(
     vec_col: str | None = None,
 ) -> int:
     """Rebuild a persisted index against the CURRENT corpus version with
-    the parameters recorded in its own meta — the ``ReindexData`` /
-    ``JanusDatabase.reindex`` analog (JanusDatabase.scala:304-434): the
-    rebuild is a new artifact version, readers pinned to the old version
-    are undisturbed, and the freshness warning clears because the new
-    meta records the current corpus version.  Register it as a migration
-    ``db_operation`` to run exactly once per schema version.
-
-    Column names default to the ones recorded at build time (the builders
-    stamp ``id_col``/``vec_col`` into the commit meta), so automated
-    rebuilds — the streaming index-maintenance sink in particular — work
-    for indexes built over non-default column names without re-supplying
-    them."""
+    the parameters recorded in its own meta (the ``JanusDatabase.reindex``
+    analog): a new artifact version, readers pinned to the old one
+    undisturbed, the freshness warning cleared.  Column names default to
+    the ones recorded at build time, so automated rebuilds (the streaming
+    index-maintenance sink) work for non-default column names."""
     meta = store.commit_meta(name)
     if "corpus_label" not in meta:
         raise ValueError(
             f"index {name!r} records no training corpus; rebuild it with the "
             "matching build_*_index(..., corpus_store=, corpus_label=) instead"
         )
-    id_col = id_col if id_col is not None else meta.get("id_col", "vec_id")
-    vec_col = vec_col if vec_col is not None else meta.get("vec_col", "embedding")
+    common = dict(
+        id_col=id_col if id_col is not None else meta["id_col"],
+        vec_col=vec_col if vec_col is not None else meta["vec_col"],
+        sample_rows=int(meta["sample_rows"]),
+        corpus_store=corpus_store, corpus_label=meta["corpus_label"],
+    )
     emb = corpus_store.read(spark, meta["corpus_label"])
     kind = meta.get("kind")
     if kind == "ivf":
+        # an index built with inverted lists keeps them through rebuilds
+        cells = {k: meta[k] for k in ("cells_n_list", "cells_files") if k in meta}
         return build_ivf_index(
-            store, name, emb,
-            n_centroids=int(meta["n_centroids"]),
-            sample_rows=int(meta["sample_rows"]),
-            id_col=id_col, vec_col=vec_col,
-            corpus_store=corpus_store, corpus_label=meta["corpus_label"],
-            # artifact shape is part of the contract: an index built with
-            # inverted lists keeps them through every rebuild
-            store_cells=bool(meta.get("cells", False)),
-            cells_n_list=int(meta.get("cells_n_list", 1)),
+            store, name, emb, n_centroids=int(meta["n_centroids"]),
+            store_cells=bool(meta.get("cells", False)), **cells, **common,
         )
     if kind == "pq":
         return build_pq_index(
-            store, name, emb,
-            m=int(meta["m"]), nbits=int(meta["nbits"]),
-            sample_rows=int(meta["sample_rows"]),
-            id_col=id_col, vec_col=vec_col,
-            corpus_store=corpus_store, corpus_label=meta["corpus_label"],
+            store, name, emb, m=int(meta["m"]), nbits=int(meta["nbits"]), **common
         )
     raise ValueError(f"index {name!r} has kind {kind!r}; only ivf/pq retrain (lsh is configuration)")
+
+
+FAMILY = segments.Family(
+    what="ANN index",
+    record="ivf",
+    parts={"cells": "id"},
+    sort={"cells": "cell"},
+    files=("cells_files", 16),
+    version_key="cells_corpus_version",
+    extend=_extend,
+    reindex=reindex_ann,
+)

@@ -1,38 +1,24 @@
 """Persisted MinHash/LSH near-duplicate index: sign the corpus once,
 probe every new crawl batch against it for the cost of the batch.
 
-The exact-dedup tier already has this shape (`incremental_dedup`:
-Bloom-pruned md5 probe); near-dup detection lacked it — every
-`minhash_lsh_pairs` call re-signed the WHOLE corpus, so "is this new
-batch a near-duplicate of anything we already hold?" cost a full corpus
-pass per batch.  At 100 TB that is the difference between a
-batch-sized probe and re-reading the lake.
-
-Artifact layout (the text/ANN index lifecycle discipline —
-text_index.py / ann_index.py):
+`minhash_lsh_pairs` re-signs the WHOLE corpus per call; this index
+answers "is this new batch a near-duplicate of anything we hold?" for
+the cost of the batch (the near-dup twin of `incremental_dedup`).
+Three parts run the segmented-index lifecycle (segments.py):
 
 * ``name``          — (id, signature array<long>) MinHash signatures,
   the verification side;
 * ``name__bands``   — (band, bh, id) banded bucket keys, the candidate
   side, sorted on ``bh`` for scan locality;
-* ``name__meta``    — 1-row carrier table whose COMMIT META is the
-  authoritative index record (num_hashes/bands/segments/corpus
-  provenance) — the signature tables are corpus-sized and must never be
-  rewritten just to bump metadata;
-* ``name__seg<k>`` / ``name__bands_seg<k>`` — delta segments appended
-  by :func:`extend_minhash_index` (Lucene discipline: segments are
-  immutable, cost ∝ batch; :func:`compact_minhash_index` merges).
+* ``name__bucket_stats`` — (band, bh, n) per-bucket member counts the
+  probe uses to skip degenerate hot buckets without a corpus scan.
 
-Probe (`incremental_near_dups`): the batch signs map-only (one xxhash64
-per token + one Arrow broadcast — `dedup._minhash_udf`), candidates
-come from an equi-join of the batch's band keys against the stored
-bucket table (batch side broadcast-sized), and the Jaccard estimate
-joins signatures back by id — candidate-sized work throughout.
-
-Reference anchor: the reference maintains declared indexes as
-persistent artifacts consulted by queries (Model.scala:16-19,
-JanusDatabase.scala:304-434); this applies that discipline to the
-corpus-dedup operator family.
+The probe (`incremental_near_dups`) signs the batch map-only, joins its
+band keys against the stored buckets, and estimates Jaccard from the
+signatures of the candidate pairs only — candidate-sized work.  The
+reference maintains declared indexes as persistent artifacts consulted
+by queries (Model.scala:16-19, JanusDatabase.scala:304-434); this
+applies that discipline to corpus dedup.
 """
 
 from __future__ import annotations
@@ -40,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scalligraph_spark.operators import segments
 from scalligraph_spark.operators.dedup import minhash_signature
 
 
@@ -62,15 +49,6 @@ def _banded(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("id", "bk.band", "bk.bh")
 
 
-def _meta(store, name: str) -> dict:
-    m = store.commit_meta(f"{name}__meta")
-    return m if m else store.commit_meta(name)
-
-
-def _write_meta(spark: SparkSession, store, name: str, meta: dict) -> None:
-    store.write(f"{name}__meta", spark.range(1).select(F.lit(name).alias("index")), meta=meta)
-
-
 def build_minhash_index(
     spark: SparkSession,
     store,
@@ -91,28 +69,6 @@ def build_minhash_index(
     sink's batch id for replay idempotence)."""
     if num_hashes % bands:
         raise ValueError(f"bands {bands} must divide num_hashes {num_hashes}")
-    # a REBUILD over an existing artifact carries the segment-id watermark
-    # forward (seg_base never resets — ADVICE r9): the next extend gets a
-    # fresh label, folded labels stay vacuumable, and every existing
-    # tombstone is subsumed by the fresh bases (their folded_through =
-    # the carried watermark makes the strict reader rule ignore them)
-    prior = _meta(store, name)
-    seg_base = _seg_top(prior) if prior else 0
-    base_meta = {"folded_through": seg_base}
-    sigs = minhash_signature(docs, text_col, id_col, num_hashes)
-    v = store.write(name, sigs, meta=base_meta)
-    banded = _banded(store.read(spark, name), num_hashes, bands)
-    store.write(f"{name}__bands", banded, sort_by=(band_files, ["bh"]), meta=base_meta)
-    # per-bucket membership counts, paid ONCE at build time: the probe
-    # uses them to skip degenerate hot buckets (a corpus of millions of
-    # identical docs lands in one bucket) without scanning the corpus
-    store.write(
-        f"{name}__bucket_stats",
-        store.read(spark, f"{name}__bands").groupBy("band", "bh").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        ),
-        meta=base_meta,
-    )
     meta = {
         "kind": "minhash_lsh",
         "num_hashes": int(num_hashes),
@@ -120,84 +76,15 @@ def build_minhash_index(
         "text_col": str(text_col),
         "id_col": str(id_col),
         "band_files": int(band_files),
-        "segments": 0,
-        "seg_base": int(seg_base),
-        "seg_top": int(seg_base),
+        **(extra_meta or {}),
     }
-    if corpus_store is not None and corpus_label is not None:
-        meta["corpus_label"] = str(corpus_label)
-        meta["corpus_version"] = int(corpus_store.version(corpus_label))
-    _write_meta(spark, store, name, dict(meta, **(extra_meta or {})))
-    return v
 
+    def bases(m: dict, write) -> int:
+        v = write("", minhash_signature(docs, text_col, id_col, num_hashes))
+        write("bands", _banded(store.read(spark, name), num_hashes, bands))
+        return v
 
-def _seg_top(meta: dict) -> int:
-    """The family's sequence watermark: the highest id any segment OR
-    tombstone batch has consumed (tombstone batches advance ``seg_top``
-    without minting labels — readers skip the gaps).  Legacy metas fall
-    back to the count-derived top."""
-    return int(meta.get("seg_top", int(meta.get("seg_base", 0)) + int(meta.get("segments", 0))))
-
-
-def _live_seg_ids(store, base_label: str, meta: dict) -> range:
-    """Segment ids this base table still needs unioned in: ids are
-    monotonic (``seg_base`` advances at compaction, never resets), and the
-    base's own commit meta records how far IT has folded
-    (``folded_through``) — so a crash between compaction's base commit and
-    the meta-carrier commit leaves every table individually consistent:
-    the rewritten base skips its folded segments, the not-yet-rewritten
-    ones keep unioning theirs.  An id in the range may have no label
-    (a tombstone batch consumed it) — callers skip those."""
-    folded = max(
-        int(meta.get("seg_base", 0)),
-        int(store.commit_meta(base_label).get("folded_through", 0)),
-    )
-    return range(folded + 1, _seg_top(meta) + 1)
-
-
-def _base_seq(store, base_label: str, meta: dict) -> int:
-    """The segment-id watermark a base table covers (for tombstone
-    scoping): everything it has folded through past compactions."""
-    return max(
-        int(meta.get("seg_base", 0)),
-        int(store.commit_meta(base_label).get("folded_through", 0)),
-    )
-
-
-def _read_sigs(spark: SparkSession, store, name: str, meta: dict) -> DataFrame:
-    from scalligraph_spark.operators.tombstones import anti_tombstone, read_tombstones
-
-    tombs = read_tombstones(spark, store, name)
-    out = anti_tombstone(store.read(spark, name), _base_seq(store, name, meta), tombs, "id")
-    for i in _live_seg_ids(store, name, meta):
-        if store.version(f"{name}__seg{i}") == 0:
-            continue  # id consumed by a tombstone batch, not a segment
-        out = out.unionByName(anti_tombstone(store.read(spark, f"{name}__seg{i}"), i, tombs, "id"))
-    return out
-
-
-def _read_bands(spark: SparkSession, store, name: str, meta: dict) -> DataFrame:
-    from scalligraph_spark.operators.tombstones import anti_tombstone, read_tombstones
-
-    lbl = f"{name}__bands"
-    tombs = read_tombstones(spark, store, name)
-    out = anti_tombstone(store.read(spark, lbl), _base_seq(store, lbl, meta), tombs, "id")
-    for i in _live_seg_ids(store, lbl, meta):
-        if store.version(f"{name}__bands_seg{i}") == 0:
-            continue  # id consumed by a tombstone batch, not a segment
-        out = out.unionByName(
-            anti_tombstone(store.read(spark, f"{name}__bands_seg{i}"), i, tombs, "id")
-        )
-    return out
-
-
-def _read_bucket_stats(spark: SparkSession, store, name: str, meta: dict) -> DataFrame:
-    out = store.read(spark, f"{name}__bucket_stats")
-    for i in _live_seg_ids(store, f"{name}__bucket_stats", meta):
-        if store.version(f"{name}__bucket_stats_seg{i}") == 0:
-            continue  # id consumed by a tombstone batch, not a segment
-        out = out.unionByName(store.read(spark, f"{name}__bucket_stats_seg{i}"))
-    return out
+    return segments.build(spark, store, FAMILY, name, meta, corpus_store, corpus_label, bases)
 
 
 def incremental_near_dups(
@@ -209,53 +96,35 @@ def incremental_near_dups(
     max_bucket_rows: int | None = 8192,
 ) -> DataFrame:
     """Near-duplicates of a NEW batch against the indexed corpus, for the
-    cost of the batch: sign the batch (map-only), equi-join its band keys
-    against the stored buckets (batch side broadcast-sized — Catalyst/AQE
-    pick the broadcast; the corpus is never re-signed), then estimate
-    Jaccard from the full signatures over the candidate pairs only.
-
-    Returns ``(batch_id, corpus_id, est_jaccard)`` with estimate ≥
-    ``threshold``.  Identical to what ``minhash_lsh_pairs`` over
-    corpus ∪ batch would report for cross (batch, corpus) pairs — same
-    hash family, same band keys — minus nothing: the pytest differential
-    pins exact equality.  Intra-batch duplicates are a batch-local
-    question: run ``minhash_lsh_pairs(batch)`` beside this (batch-sized,
-    cheap).
+    cost of the batch.  Returns ``(batch_id, corpus_id, est_jaccard)``
+    with estimate ≥ ``threshold`` — exactly the cross (batch, corpus)
+    pairs ``minhash_lsh_pairs`` over corpus ∪ batch reports (same hash
+    family, same band keys).  Intra-batch duplicates are a batch-local
+    question: run ``minhash_lsh_pairs(batch)`` beside this.
 
     ``max_bucket_rows`` skips corpus buckets holding more members than
-    the cap (a degenerate corpus — millions of identical docs — lands in
-    ONE bucket, and batch × hot-bucket candidate volume melts the probe
-    at 100 TB).  The decision uses the per-bucket counts recorded at
-    build/extend time (``name__bucket_stats`` — a broadcast-sized
-    skip-list, no corpus scan at probe time); matches through a skipped
-    bucket usually survive via the other ``bands−1`` band keys, the same
-    graceful degradation as ``minhash_lsh_pairs``'s salted-bucket cap.
-    ``None`` disables the cap (the exact-differential mode)."""
-    meta = _meta(store, name)
+    the cap (a degenerate corpus lands in ONE bucket, and batch ×
+    hot-bucket candidates melt the probe), decided from the recorded
+    per-bucket counts; matches through a skipped bucket usually survive
+    via the other ``bands−1`` band keys.  ``None`` disables the cap."""
+    meta = segments.read_meta(store, name)
     if meta.get("kind") != "minhash_lsh":
         raise ValueError(f"label {name!r} is not a minhash index (meta={meta})")
     nh, bands = int(meta["num_hashes"]), int(meta["bands"])
-    # NO persist (r10 verdict finding #1: a CacheManager entry per probe
-    # call that nothing releases — crawl loops probe thousands of times
-    # per session).  The batch signature feeds BOTH the banded key side
-    # and the estimate join-back, so it computes twice inside the one
-    # probe job — cost ∝ batch, paid twice, nothing to unpersist.  The
-    # raw batch is repartitioned BELOW the signature UDF so the Arrow
-    # shingling runs across the session's full parallelism in both
-    # branches instead of the batch's few input splits (a crawl batch is
-    # typically one small file).  Measured at sf0.1: within noise of the
-    # old persist+count variant (which paid an extra eager job and cache
-    # writes to save one map pass) and ~10% faster than no repartition —
-    # leak-free at cache speed.
+    # NO persist: a cache entry per probe call that nothing releases
+    # leaks in crawl loops; the batch signature computes twice inside the
+    # probe job instead (cost ∝ batch).  Repartitioning BELOW the UDF
+    # spreads the shingling over the session's parallelism (a crawl
+    # batch is typically one small file).
     id_col = str(meta.get("id_col", "doc_id"))
     bsigs = minhash_signature(
         batch.repartition(F.col(id_col)), str(meta.get("text_col", "text")), id_col, nh
     )
     bband = _banded(bsigs, nh, bands)
-    cband = _read_bands(spark, store, name, meta)
+    cband = segments.read_part(spark, store, FAMILY, name, meta, "bands")
     if max_bucket_rows is not None:
         oversized = (
-            _read_bucket_stats(spark, store, name, meta)
+            segments.read_part(spark, store, FAMILY, name, meta, "bucket_stats")
             .groupBy("band", "bh")  # per-segment counts sum to the global size
             .agg(F.sum("n").alias("n"))
             .where(F.col("n") > int(max_bucket_rows))
@@ -268,14 +137,16 @@ def incremental_near_dups(
         .where(F.col("batch_id") != F.col("corpus_id"))
         .dropDuplicates(["batch_id", "corpus_id"])
     )
-    csigs = _read_sigs(spark, store, name, meta)
+    csigs = segments.read_part(spark, store, FAMILY, name, meta)
     est = (
         F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
         / F.lit(float(nh))
     ).cast("double")
+    sig_a = bsigs.select(F.col("id").alias("batch_id"), F.col("signature").alias("sig_a"))
+    sig_b = csigs.select(F.col("id").alias("corpus_id"), F.col("signature").alias("sig_b"))
     return (
-        cands.join(bsigs.select(F.col("id").alias("batch_id"), F.col("signature").alias("sig_a")), "batch_id")
-        .join(csigs.select(F.col("id").alias("corpus_id"), F.col("signature").alias("sig_b")), "corpus_id")
+        cands.join(sig_a, "batch_id")
+        .join(sig_b, "corpus_id")
         .select("batch_id", "corpus_id", est.alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
     )
@@ -290,87 +161,52 @@ def extend_minhash_index(
     extra_meta: dict | None = None,
     as_of_version: int | None = None,
 ) -> int:
-    """Fold an accepted batch into the index for the cost of the batch:
-    its signatures and band keys land as immutable delta segments; the
-    base tables are never rewritten.  The crawl loop is probe → decide →
-    extend: `incremental_near_dups` flags the batch against everything
-    seen, the keeper rows come back through here, and the next batch
-    probes base ∪ segments.  Returns the new segment count."""
-    meta = _meta(store, name)
-    nh, bands = int(meta["num_hashes"]), int(meta["bands"])
-    # monotonic naming: ids are minted from seg_top (segments AND
-    # tombstone batches both consume numbers) — folded labels are never
-    # reused, so the crash-safe reader can trust the base's
-    # folded_through marker
-    k = _seg_top(meta) + 1
-    sigs = minhash_signature(
-        new_docs, str(meta.get("text_col", "text")), str(meta.get("id_col", "doc_id")), nh
+    """Fold an accepted batch in for the cost of the batch: its
+    signatures, band keys and bucket counts land as segments.  The crawl
+    loop is probe (`incremental_near_dups`) → decide → extend.
+    ``extra_meta`` merges into the index record.  Returns the new
+    segment count."""
+    meta = dict(segments.index_meta(store, FAMILY, name), **(extra_meta or {}))
+    return segments.extend(
+        spark, store, FAMILY, name, new_docs, corpus_store, as_of_version, meta=meta
     )
-    store.write(f"{name}__seg{k}", sigs)
-    store.write(
-        f"{name}__bands_seg{k}",
-        _banded(store.read(spark, f"{name}__seg{k}"), nh, bands),
-        sort_by=(max(1, int(meta.get("band_files", 16)) // 4), ["bh"]),
-    )
-    store.write(
-        f"{name}__bucket_stats_seg{k}",
-        store.read(spark, f"{name}__bands_seg{k}").groupBy("band", "bh").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        ),
-    )
-    live = int(meta.get("segments", 0)) + 1
-    meta = dict(meta, segments=live, seg_top=k, **(extra_meta or {}))
-    if as_of_version is not None and "corpus_label" in meta:
-        # CDC catch-up stamps the version whose delta it actually folded
-        meta["corpus_version"] = int(as_of_version)
-    elif corpus_store is not None and "corpus_label" in meta:
-        meta["corpus_version"] = int(corpus_store.version(meta["corpus_label"]))
-    _write_meta(spark, store, name, meta)
-    return live
+
+
+def _extend(spark: SparkSession, store, name: str, meta: dict, new_docs: DataFrame, write) -> dict:
+    nh = int(meta["num_hashes"])
+    sigs = write("", minhash_signature(new_docs, meta["text_col"], meta["id_col"], nh))
+    write("bands", _banded(store.read(spark, sigs), nh, int(meta["bands"])))
+    return {}
 
 
 def compact_minhash_index(spark: SparkSession, store, name: str) -> int:
     """Merge every delta segment back into the base tables (one rewrite
     of existing rows — no re-signing): probes go back to two base scans.
-    Old segment labels stay for pinned readers (``store.drop`` under
-    retention).  Returns the new base signature version.
+    Returns the new base signature version."""
+    return segments.compact(spark, store, FAMILY, name)
 
-    Crash-safe: each rewritten base table's commit meta records the
-    segment-id watermark it folded (``folded_through``); the meta carrier
-    (``segments=0``, ``seg_base`` advanced) commits LAST.  A crash between
-    any of the four commits leaves every table individually consistent —
-    rewritten bases skip their folded segments, untouched bases keep
-    unioning theirs — so probes never see a signature/band row twice and
-    never miss one (ADVICE r8: the old ordering double-counted on a crash
-    between the base and meta writes)."""
-    from scalligraph_spark.operators.tombstones import read_tombstones
 
-    meta = _meta(store, name)
-    top = _seg_top(meta)
-    # the merged reads below are tombstone-filtered, so tombstones at or
-    # below `top` are physically applied by this rewrite; the strict
-    # reader comparison then ignores them against these bases
-    base_meta = {"folded_through": top}
-    tombstoned = read_tombstones(spark, store, name) is not None
-    v = store.write(name, _read_sigs(spark, store, name, meta), meta=base_meta)
-    store.write(
-        f"{name}__bands",
-        _read_bands(spark, store, name, meta),
-        sort_by=(int(meta.get("band_files", 16)), ["bh"]),
-        meta=base_meta,
+def _reindex(spark: SparkSession, store, name: str, corpus_store) -> int:
+    meta = segments.index_meta(store, FAMILY, name)
+    return build_minhash_index(
+        spark, store, name, corpus_store.read(spark, meta["corpus_label"]),
+        text_col=str(meta["text_col"]),
+        id_col=str(meta["id_col"]),
+        num_hashes=int(meta["num_hashes"]),
+        bands=int(meta["bands"]),
+        band_files=int(meta["band_files"]),
+        corpus_store=corpus_store,
+        corpus_label=meta["corpus_label"],
     )
-    stats = (
-        # with tombstones live the recorded per-bucket counts include dead
-        # docs — recompute EXACT stats from the (tombstone-filtered) bands
-        # being rewritten anyway; otherwise the cheap sum of segment stats
-        store.read(spark, f"{name}__bands").groupBy("band", "bh").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
-        if tombstoned
-        else _read_bucket_stats(spark, store, name, meta)
-        .groupBy("band", "bh")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-    store.write(f"{name}__bucket_stats", stats, meta=base_meta)
-    _write_meta(spark, store, name, dict(meta, segments=0, seg_base=top, seg_top=top))
-    return v
+
+
+FAMILY = segments.Family(
+    what="minhash index",
+    record="minhash_lsh",
+    # per-bucket membership counts: the probe skips hot buckets from them
+    parts={"": "id", "bands": "id", "bucket_stats": ("bands", "band", "bh")},
+    sort={"bands": "bh"},
+    files=("band_files", 16),
+    extend=_extend,
+    reindex=_reindex,
+)

@@ -3,553 +3,57 @@ current corpus version for the cost of the CHURN, not the corpus.
 
 The reference keeps its mixed/composite indexes transactionally fresh —
 every vertex write updates the index in the same transaction
-(database/janusgraph/.../JanusDatabase.scala:304-434 ``addIndex`` and the
-write paths that maintain it), so "stale index" is not a state it can be
-in.  A batch engine decouples the two: corpus commits advance the
-versioned store, the index artifact records the corpus version it was
-built from, and readers get a staleness WARNING (``load_value_index`` /
-``load_text_index`` / ``load_ann_index``).  Until now the only cure was
-``reindex_*`` — a full rebuild, corpus-sized.
-
-This module closes the loop with the change-data feed (cdf.py): the
-delta between the index's recorded corpus version and the current one is
-read as ROWS via :func:`~scalligraph_spark.cdf.table_changes` (captured
-feeds where they exist, hash-diff fallback where not), and
-
-* a pure-APPEND delta (only ``insert`` change rows) feeds the family's
-  ``extend_*`` — a delta-segment commit, cost ∝ churn.  This is the
-  append-mostly 100 TB corpus case: a day's crawl lands, four indexes
-  catch up for the cost of the day, never the archive;
-* UPDATE / DELETE churn can't fold into immutable segments directly, so
-  the policy knob decides: ``on_mutation="error"`` (default) raises
-  :class:`IndexCatchupError` with the churn breakdown;
-  ``"tombstone"`` applies the Lucene deleted-docs discipline
-  (tombstones.py) — every MUTATED key is tombstoned at a freshly
-  consumed sequence number (pure inserts never enter the sidecar, so
-  it stays mutation-sized), surviving row images re-insert as the next
-  segment, and the whole mutation bill stays churn-sized (a PII
-  takedown costs the takedown, never the archive — the round-9 scale
-  cliff closed); ``"reindex"`` falls back to the family's full rebuild.
-  Silent wrong answers are never on the menu.
-
-Every function returns a small report dict (``action`` ∈ noop /
-extended / reindexed, version range, churn counts) so operational
-callers — the streaming index-maintenance sinks, a migration
-``db_operation``, a cron — can log what happened.
-
-Scale shape: the decision runs ONE groupBy over the churn-sized feed
-(never the corpus); the extend paths inherit each family's delta-segment
-discipline (term/value-sorted batch-sized segments, monotonic names,
-crash-safe compaction).
+(database/janusgraph/.../JanusDatabase.scala:304-434).  A batch engine
+decouples the two: corpus commits advance the versioned store, the index
+records the corpus version it was built from, and readers get a
+staleness warning.  The catch-up reads the delta between the two as rows
+from the change-data feed (cdf.py) and folds it in through the
+segmented-index core (segments.py): appends become one delta segment,
+updates/deletes follow the ``on_mutation`` policy (``error`` /
+``tombstone`` / ``reindex``).  Every function returns a small report
+dict (``action`` ∈ noop / restamped / extended / tombstoned /
+reindexed, version range, churn counts) for operational callers to
+log.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, table_changes
-
-
-class IndexCatchupError(RuntimeError):
-    """The change range contains updates/deletes, which the append-only
-    delta-segment families cannot fold in; run with
-    ``on_mutation="reindex"`` or call the family's ``reindex_*``.
-    Carries the per-change-type counts in ``.churn``."""
-
-    def __init__(self, msg: str, churn: dict):
-        super().__init__(msg)
-        self.churn = churn
-
-
-def _changes_report(spark, corpus_store, label: str, v_from: int, v_to: int, key_cols):
-    """(full change frame, insert rows as corpus-shaped DataFrame,
-    per-type churn counts) for the v_from→v_to range — one churn-sized
-    aggregate decides the path."""
-    # persist for the catch-up's lifetime (_catchup unpersists): the
-    # frame feeds the churn aggregate AND the extend/tombstone consumers,
-    # and an uncaptured step's fallback is a full two-version hash-diff —
-    # recomputing THAT per consumer dwarfs the churn-sized cache.  The
-    # churn collect below doubles as the cache's materialising action.
-    ch = table_changes(spark, corpus_store, label, v_from, v_to, key_cols=key_cols).persist()
-    churn = {
-        r[CHANGE_TYPE]: int(r["n"])
-        for r in ch.groupBy(CHANGE_TYPE).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    inserts = ch.where(F.col(CHANGE_TYPE) == "insert").drop(CHANGE_TYPE, COMMIT_VERSION)
-    return ch, inserts, churn
-
-
-def _net_effects(ch, key_cols):
-    """Collapse a multi-step change feed to its NET effect per key (the
-    ``apply_changes`` rule: last effective action wins, preimages are
-    informational): returns ``(mutated_keys, upsert_rows)``.
-
-    Only keys with a DELETE or UPDATE event in the range are tombstoned —
-    a pure-insert key provably has no entries at or below the watermark
-    (per-step diff semantics: ``insert`` means absent at the step's
-    start, so a key that existed before the range carries an update or
-    delete event first, and a deleted-then-reinserted key still carries
-    its delete).  This keeps the tombstone sidecar MUTATION-sized: a
-    one-row PII takedown landing in the same range as a 10M-row crawl
-    day tombstones one key, not the crawl (the sidecar is broadcast at
-    read time, so its size is a memory bound, not a bookkeeping detail).
-
-    ``upsert_rows`` is the current image of every touched key that still
-    exists — pure inserts AND update postimages — re-inserted into the
-    next segment, which outlives any tombstone by construction."""
-    from pyspark.sql import Window
-
-    eff = ch.where(F.col(CHANGE_TYPE) != F.lit("update_preimage"))
-    mutated = (
-        eff.where(F.col(CHANGE_TYPE) != F.lit("insert")).select(*key_cols).distinct()
-    )
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(F.col(COMMIT_VERSION).desc())
-    latest = (
-        eff.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
-    )
-    upserts = latest.where(F.col(CHANGE_TYPE) != F.lit("delete")).drop(CHANGE_TYPE, COMMIT_VERSION)
-    return mutated, upserts
-
-
-def _catchup(
-    spark: SparkSession,
-    store,
-    name: str,
-    corpus_store,
-    *,
-    meta: dict,
-    version_key: str,
-    key_cols: list[str],
-    extend,
-    reindex,
-    restamp,
-    on_mutation: str,
-    tombstone=None,
-) -> dict:
-    if on_mutation not in ("error", "reindex", "tombstone"):
-        raise ValueError(
-            f"on_mutation must be 'error', 'reindex' or 'tombstone', got {on_mutation!r}"
-        )
-    label = meta.get("corpus_label")
-    if label is None:
-        raise ValueError(
-            f"index {name!r} records no source corpus; build it with "
-            "corpus_store=/corpus_label= to enable catch-up"
-        )
-    v_from = int(meta[version_key])
-    v_to = int(corpus_store.version(label))
-    report = {"index": name, "corpus_label": label, "from_version": v_from, "to_version": v_to}
-    if v_to == v_from:
-        return dict(report, action="noop", churn={})
-    if v_to < v_from:
-        # the corpus was rolled back UNDER the index — nothing incremental
-        # is meaningful (tombstones included: the delta the index folded no
-        # longer exists to diff against); only a rebuild restores the
-        # invariant
-        if on_mutation == "reindex":
-            reindex()
-            return dict(report, action="reindexed", churn={"rollback": v_from - v_to})
-        raise IndexCatchupError(
-            f"corpus {label!r} rolled back v{v_from}→v{v_to} under index {name!r}; "
-            "reindex required",
-            {"rollback": v_from - v_to},
-        )
-    ch, inserts, churn = _changes_report(spark, corpus_store, label, v_from, v_to, key_cols)
-    mutations = {t: n for t, n in churn.items() if t not in ("insert",)}
-    try:
-        return _route(
-            ch, inserts, churn, mutations, report, v_to,
-            on_mutation, extend, reindex, restamp, tombstone, key_cols, label, name,
-        )
-    finally:
-        # _changes_report persisted the change frame (the churn aggregate
-        # already materialised it); every routing branch is done with it
-        # by the time this runs
-        ch.unpersist()
-
-
-def _route(
-    ch, inserts, churn, mutations, report, v_to,
-    on_mutation, extend, reindex, restamp, tombstone, key_cols, label, name,
-):
-    """Branch arm of :func:`_catchup` (split out so the caller can scope
-    the change-frame cache with one try/finally around every return)."""
-    if mutations:
-        if on_mutation == "reindex":
-            reindex()
-            return dict(report, action="reindexed", churn=churn)
-        if on_mutation == "tombstone" and tombstone is not None:
-            # the Lucene deleted-docs path — mutation churn costs churn:
-            # every MUTATED key is tombstoned at the CURRENT segment
-            # watermark (hiding its entries in base + existing segments;
-            # pure-insert keys have nothing there, so they stay out of
-            # the broadcast sidecar), surviving row images re-insert as
-            # the NEXT segment (above the watermark, so they outlive
-            # their own tombstone).  The tombstone commits FIRST: a crash
-            # before the extend leaves deletes applied and the index
-            # visibly stale (meta version unmoved) — the re-run converges
-            # (tombstone writes dedupe by key), never resurrects.
-            mutated_keys, upserts = _net_effects(ch, key_cols)
-            tombstone(mutated_keys)
-            if upserts.take(1):
-                extend(upserts, v_to)
-            else:
-                restamp(v_to)
-            return dict(report, action="tombstoned", churn=churn)
-        raise IndexCatchupError(
-            f"corpus {label!r} changed non-append-only under index {name!r} "
-            f"(churn: {churn}); segments are immutable — pass "
-            "on_mutation='tombstone' (churn-cost delete/update fold), "
-            "on_mutation='reindex', or run the family's reindex_*",
-            churn,
-        )
-    if not churn:
-        # version advanced but rows identical (e.g. a re-layout commit):
-        # the index IS complete — refresh only the recorded version (a
-        # meta-carrier rewrite), never commit an empty delta segment
-        restamp(v_to)
-        return dict(report, action="restamped", churn={})
-    # extend stamps EXACTLY v_to: a concurrent corpus commit between the
-    # change read and the segment commit must stay visibly un-indexed
-    # (the next catch-up picks it up), not be marked caught-up
-    extend(inserts, v_to)
-    return dict(report, action="extended", churn=churn)
-
-
-def vacuum_index_segments(
-    spark: SparkSession, store, name: str, kind: str, retention_seconds: float = 0.0
-) -> list[str]:
-    """Reclaim delta-segment labels a compaction has already folded into
-    the base — the retention sweep that completes the segment lifecycle
-    (extend → compact → vacuum).  ``kind`` ∈ ``value`` / ``text`` /
-    ``minhash`` / ``ann``.
-
-    Segment names are monotonic (``seg_seq``/``seg_base`` never reset),
-    so the rule is uniform and covers EVERY past compaction cycle: any
-    existing segment with an id at or below the naming watermark that the
-    meta carrier no longer lists live has been folded into some base —
-    reclaim it.  The carrier commits LAST in every compaction, so a torn
-    compaction reclaims nothing early (its segments are still listed
-    live, and readers skip-but-keep them).
-
-    ``retention_seconds`` makes the pinned-reader caveat structural
-    (Delta VACUUM's retention contract, the window the reference's
-    transactional maintenance never needs — JanusDatabase.scala:304-434
-    mutates indexes in place): a segment only becomes reclaimable once
-    the compaction that DE-LISTED it is older than the window.  The
-    de-list time is PER VICTIM — the earliest retained meta-carrier
-    version whose live record excludes the segment (the carrier is
-    rewritten by every mutation, so its history is the fold ledger;
-    metadata-only to read).  Gating every victim on the newest family
-    commit would mean a compaction cadence shorter than the window never
-    reclaims anything — an unbounded segment-label leak under exactly
-    the nightly-cron shape this sweep exists for.  A victim whose
-    de-listing carrier version was itself vacuumed falls back to the
-    earliest RETAINED excluding version's stamp (an upper bound on the
-    real de-list time — delays reclaim, never endangers a reader).
-    Tombstone reclaim below stays on the conservative newest-base gate:
-    a pinned pre-compaction plan reads old segments THROUGH the
-    tombstone filter, so tombstones must outlive the window of the
-    newest rewrite that subsumed them.  0 (the default) preserves
-    immediate reclaim, which remains safe only under the
-    no-pinned-readers operator discipline.  Must still not run
-    concurrently with extend writers.  Returns the dropped label names."""
-    import time
-
-    from scalligraph_spark.store import check_retention
-
-    retention_seconds = check_retention(retention_seconds)
-
-    def _seg_folded_at() -> dict:
-        """victim label -> de-list time: the commit time of the earliest
-        retained BASE version whose own fold record covers the victim —
-        the base rewrite IS what subsumes a segment (the carrier merely
-        publishes), and every compaction stamps what it folded into the
-        base's commit meta (``folded_segments`` for value/text/ann,
-        ``folded_through`` watermarks for minhash's per-table bases).
-        Victims with no retained covering record stay blocked."""
-        out: dict = {}
-        if kind in ("value", "text", "ann"):
-            base_lbl = f"{name}__cells" if kind == "ann" else name
-            seg_prefix = f"{name}__cells_seg" if kind == "ann" else f"{name}__seg"
-            history = store.history(base_lbl)
-            for v in history:
-                mv = store.commit_meta(base_lbl, v)
-                ts = store.commit_time(base_lbl, v)
-                for seg in mv.get("folded_segments", []):
-                    out.setdefault(seg, ts)
-            # fallback for victims whose de-listing compaction's base
-            # version was itself vacuumed (its folded_segments record is
-            # gone): any RETAINED base whose naming watermark covers the
-            # segment id proves the fold happened at or before that
-            # base's commit — the oldest such stamp is an upper bound on
-            # the real de-list time (delays reclaim, never endangers a
-            # reader).  Without this, base-history vacuum turned folded
-            # segments into permanent label leaks under retention>0
-            # (the documented watermark fallback existed only for the
-            # minhash and vacuum_mor paths).
-            for v in history:
-                mv = store.commit_meta(base_lbl, v)
-                ts = store.commit_time(base_lbl, v)
-                for i in range(1, int(mv.get("base_seq", 0)) + 1):
-                    out.setdefault(f"{seg_prefix}{i}", ts)
-        else:  # minhash: sigs + bands watermarks must BOTH cover a seg id
-            # before any of its three per-id tables reclaims (a torn
-            # compaction that rewrote only sigs still needs the bands seg)
-            covers: dict = {}
-            for base_lbl in (name, f"{name}__bands"):
-                per: dict = {}
-                for v in store.history(base_lbl):
-                    mv = store.commit_meta(base_lbl, v)
-                    ts = store.commit_time(base_lbl, v)
-                    for i in range(1, int(mv.get("folded_through", 0)) + 1):
-                        per.setdefault(i, ts)
-                covers[base_lbl] = per
-            both = set(covers[name]) & set(covers[f"{name}__bands"])
-            for i in both:
-                ts = max(covers[name][i], covers[f"{name}__bands"][i])
-                for fam in ("", "bands_", "bucket_stats_"):
-                    out.setdefault(f"{name}__{fam}seg{i}", ts)
-        return out
-
-    if kind in ("value", "text"):
-        if kind == "value":
-            from scalligraph_spark.operators.value_index import _index_meta
-        else:
-            from scalligraph_spark.operators.text_index import _index_meta
-
-        meta = _index_meta(store, name)
-        live = set(meta.get("segments", []))
-        seq = int(meta.get("seg_seq", len(live)))
-        candidates = [f"{name}__seg{i}" for i in range(1, seq + 1)]
-    elif kind == "ann":
-        from scalligraph_spark.operators.ann_index import load_ann_index
-
-        meta = load_ann_index(spark, store, name).meta
-        live = set(meta.get("cells_segments", []))
-        seq = int(meta.get("cells_seg_seq", len(live)))
-        candidates = [f"{name}__cells_seg{i}" for i in range(1, seq + 1)]
-    elif kind == "minhash":
-        from scalligraph_spark.operators.dedup_index import _meta
-
-        meta = _meta(store, name)
-        live = set()  # live ids are (seg_base, seg_top]; all three
-        # per-id tables below seg_base are folded into ALL bases
-        top = int(meta.get("seg_top", int(meta.get("seg_base", 0)) + int(meta.get("segments", 0))))
-        for i in range(int(meta.get("seg_base", 0)) + 1, top + 1):
-            live.update({f"{name}__seg{i}", f"{name}__bands_seg{i}", f"{name}__bucket_stats_seg{i}"})
-        candidates = []
-        for i in range(1, top + 1):
-            candidates += [f"{name}__seg{i}", f"{name}__bands_seg{i}", f"{name}__bucket_stats_seg{i}"]
-    else:
-        raise ValueError(f"kind must be value/text/minhash/ann, got {kind!r}")
-    victims = sorted(lbl for lbl in candidates if lbl not in live and store.version(lbl) > 0)
-    if retention_seconds > 0 and victims:
-        folded_at = _seg_folded_at()
-        now = time.time()
-        # unknown de-list time (carrier history gone entirely) → blocked,
-        # never reclaimed early
-        victims = [v for v in victims if now - folded_at.get(v, now) > retention_seconds]
-    for lbl in victims:
-        store.drop(lbl)
-    # tombstones at or below EVERY base's sequence watermark are no-ops
-    # (each base was rewritten from the tombstone-filtered read at that
-    # watermark; the strict reader comparison already ignores them) —
-    # reclaim them under the same retention rule.  The MIN across the
-    # family's base tables holds the sweep back through torn compactions:
-    # a bands base that crashed before its rewrite still needs the
-    # tombstones the sigs base folded.
-    from scalligraph_spark.operators.tombstones import tombstone_label, vacuum_tombstones
-
-    if retention_seconds > 0 and store.version(tombstone_label(name)) > 0:
-        # conservative newest-base gate for tombstones: a pinned
-        # pre-compaction plan reads its old segments THROUGH the
-        # tombstone filter, so the sidecar must outlive the window of
-        # the newest rewrite that subsumed its rows
-        base_labels = {
-            "value": [name],
-            "text": [name],
-            "ann": [f"{name}__cells"],
-            "minhash": [name, f"{name}__bands", f"{name}__bucket_stats"],
-        }[kind]
-        newest_base = max(
-            (store.commit_time(lbl) for lbl in base_labels if store.version(lbl) > 0),
-            default=0.0,
-        )
-        if time.time() - newest_base <= retention_seconds:
-            return victims
-    if store.version(tombstone_label(name)) > 0:
-        if kind == "minhash":
-            folded_t = min(
-                int(store.commit_meta(lbl).get("folded_through", 0))
-                for lbl in (name, f"{name}__bands")
-            )
-        else:
-            base_label = f"{name}__cells" if kind == "ann" else name
-            folded_t = int(store.commit_meta(base_label).get("base_seq", 0))
-        if vacuum_tombstones(spark, store, name, folded_t) and store.version(
-            tombstone_label(name)
-        ) == 0:
-            # listed only when the LABEL is gone — a partial reclaim that
-            # leaves live rows must not report the sidecar as dropped
-            victims.append(tombstone_label(name))
-    return victims
+from scalligraph_spark.operators.ann_index import _require_cells
+from scalligraph_spark.operators.segments import (  # noqa: F401 (re-exported)
+    IndexCatchupError,
+    catchup,
+    family,
+    maintain_indexes,
+    vacuum_index_segments,
+)
 
 
 def catchup_value_index(
     spark: SparkSession, store, name: str, corpus_store, on_mutation: str = "error"
 ) -> dict:
     """Catch a composite value index (value_index.py) up to its corpus's
-    current version: append-only churn → one value-sorted delta segment;
-    mutating churn → policy (``on_mutation="tombstone"`` folds
-    updates/deletes at churn cost via the seq-scoped tombstone sidecar —
-    tombstones.py).  Unique-hint violations in the appended rows surface
+    current version.  Unique-hint violations in the appended rows surface
     as ``UniqueIndexViolation`` exactly like a manual extend."""
-    from scalligraph_spark.operators.tombstones import write_tombstones
-    from scalligraph_spark.operators.value_index import (
-        _index_meta,
-        _write_meta,
-        extend_value_index,
-        reindex_values,
-    )
-
-    meta = _index_meta(store, name)
-
-    def _tombstone(keys):
-        # the batch CONSUMES the next sequence number (write sidecar, then
-        # bump the carrier's watermark) so no part can ever share its seq —
-        # the strict reader comparison stays unambiguous; the follow-up
-        # extend re-reads the bumped meta and mints seq+1
-        m = _index_meta(store, name)
-        seq = max(int(m.get("seg_seq", 0)), len(m.get("segments", []))) + 1
-        write_tombstones(spark, store, name, keys, "id", seq)
-        _write_meta(spark, store, name, dict(m, seg_seq=seq))
-
-    return _catchup(
-        spark, store, name, corpus_store,
-        meta=meta,
-        version_key="corpus_version",
-        key_cols=[str(meta["id_col"])],
-        extend=lambda df, v: extend_value_index(
-            spark, store, name, df, corpus_store=corpus_store, as_of_version=v
-        ),
-        reindex=lambda: reindex_values(spark, store, name, corpus_store),
-        # restamp re-reads the meta: a tombstone bump in the same catch-up
-        # must not be reverted by a stale captured copy
-        restamp=lambda v: _write_meta(
-            spark, store, name, dict(_index_meta(store, name), corpus_version=int(v))
-        ),
-        tombstone=_tombstone,
-        on_mutation=on_mutation,
-    )
+    return catchup(spark, store, family("value"), name, corpus_store, on_mutation)
 
 
 def catchup_text_index(
     spark: SparkSession, store, name: str, corpus_store, on_mutation: str = "error"
 ) -> dict:
     """Catch a BM25 inverted index (text_index.py) up to its corpus's
-    current version: appended documents land as one term-sorted postings
-    segment + a vocabulary-sized terms re-aggregate.
-    ``on_mutation="tombstone"`` hides updated/deleted docs at churn cost;
-    df/n_docs stats drift Lucene-style until the next compaction restores
-    them exactly."""
-    from scalligraph_spark.operators.text_index import (
-        _index_meta,
-        extend_text_index,
-        reindex_text,
-    )
-    from scalligraph_spark.operators.tombstones import write_tombstones
-
-    meta = _index_meta(store, name)
-
-    def _restamp(v):  # the terms table is the text index's meta carrier;
-        # re-read the meta so a tombstone bump in this catch-up survives
-        m = _index_meta(store, name)
-        store.write(
-            f"{name}__terms",
-            store.read(spark, f"{name}__terms"),
-            meta=dict(m, corpus_version=int(v), table_role="bm25_terms"),
-        )
-
-    def _tombstone(keys):
-        # consume the next sequence number (see catchup_value_index)
-        m = _index_meta(store, name)
-        seq = max(int(m.get("seg_seq", 0)), len(m.get("segments", []))) + 1
-        write_tombstones(spark, store, name, keys, "doc_id", seq)
-        store.write(
-            f"{name}__terms",
-            store.read(spark, f"{name}__terms"),
-            meta=dict(m, seg_seq=seq, table_role="bm25_terms"),
-        )
-
-    return _catchup(
-        spark, store, name, corpus_store,
-        meta=meta,
-        version_key="corpus_version",
-        key_cols=[str(meta.get("id_col", "doc_id"))],
-        extend=lambda df, v: extend_text_index(
-            spark, store, name, df, corpus_store=corpus_store, as_of_version=v
-        ),
-        reindex=lambda: reindex_text(spark, store, name, corpus_store),
-        restamp=_restamp,
-        tombstone=_tombstone,
-        on_mutation=on_mutation,
-    )
+    current version; under ``on_mutation="tombstone"`` df/n_docs drift
+    Lucene-style until the next compaction restores them exactly."""
+    return catchup(spark, store, family("text"), name, corpus_store, on_mutation)
 
 
 def catchup_minhash_index(
     spark: SparkSession, store, name: str, corpus_store, on_mutation: str = "error"
 ) -> dict:
     """Catch a MinHash near-dup index (dedup_index.py) up to its corpus's
-    current version: appended documents are signed once (map-only) and
-    land as signature/band/bucket-stat segments."""
-    from scalligraph_spark.operators.dedup_index import (
-        _meta,
-        _write_meta,
-        build_minhash_index,
-        extend_minhash_index,
-    )
-    from scalligraph_spark.operators.tombstones import write_tombstones
-
-    meta = _meta(store, name)
-
-    def _tombstone(keys):
-        # consume the next segment id (seg_top advances without minting
-        # labels — readers skip the gap); see catchup_value_index
-        m = _meta(store, name)
-        seq = int(m.get("seg_top", int(m.get("seg_base", 0)) + int(m.get("segments", 0)))) + 1
-        write_tombstones(spark, store, name, keys, "id", seq)
-        _write_meta(spark, store, name, dict(m, seg_top=seq))
-
-    def _rebuild():
-        docs = corpus_store.read(spark, meta["corpus_label"])
-        build_minhash_index(
-            spark, store, name, docs,
-            text_col=str(meta.get("text_col", "text")),
-            id_col=str(meta.get("id_col", "doc_id")),
-            num_hashes=int(meta["num_hashes"]),
-            bands=int(meta["bands"]),
-            band_files=int(meta.get("band_files", 16)),
-            corpus_store=corpus_store,
-            corpus_label=meta["corpus_label"],
-        )
-
-    return _catchup(
-        spark, store, name, corpus_store,
-        meta=meta,
-        version_key="corpus_version",
-        key_cols=[str(meta.get("id_col", "doc_id"))],
-        extend=lambda df, v: extend_minhash_index(
-            spark, store, name, df, corpus_store=corpus_store, as_of_version=v
-        ),
-        reindex=_rebuild,
-        restamp=lambda v: _write_meta(
-            spark, store, name, dict(_meta(store, name), corpus_version=int(v))
-        ),
-        tombstone=_tombstone,
-        on_mutation=on_mutation,
-    )
+    current version: appended documents are signed once (map-only)."""
+    return catchup(spark, store, family("minhash"), name, corpus_store, on_mutation)
 
 
 def catchup_ann_cells(
@@ -557,196 +61,8 @@ def catchup_ann_cells(
 ) -> dict:
     """Catch an IVF index's inverted lists (ann_index.py) up to the
     corpus's current version: appended vectors are assigned against the
-    EXISTING centroids (no retraining) and land as a cell-sorted segment.
-    Freshness is measured from ``cells_corpus_version`` (the lists' own
-    anchor) — the quantizer's ``corpus_version`` deliberately stays at
+    EXISTING centroids.  Freshness is measured from
+    ``cells_corpus_version``; the quantizer's ``corpus_version`` stays at
     the last training run, so recall-drift detection keeps working."""
-    from scalligraph_spark.operators.ann_index import (
-        extend_ann_cells,
-        load_ann_index,
-        reindex_ann,
-    )
-    from scalligraph_spark.operators.tombstones import write_tombstones
-
-    meta = dict(load_ann_index(spark, store, name).meta)
-    if not meta.get("cells"):
-        raise ValueError(
-            f"index {name!r} has no stored inverted lists; build it with "
-            "build_ivf_index(..., store_cells=True)"
-        )
-    version_key = "cells_corpus_version" if "cells_corpus_version" in meta else "corpus_version"
-
-    def _restamp(v):  # the centroids table is the ANN artifact's meta carrier;
-        # re-read so a tombstone bump in this catch-up survives
-        m = dict(load_ann_index(spark, store, name).meta)
-        store.write(name, store.read(spark, name), meta=dict(m, cells_corpus_version=int(v)))
-
-    def _tombstone(keys):
-        # consume the next sequence number (see catchup_value_index)
-        m = dict(load_ann_index(spark, store, name).meta)
-        seq = max(int(m.get("cells_seg_seq", 0)), len(m.get("cells_segments", []))) + 1
-        write_tombstones(spark, store, name, keys, "id", seq)
-        store.write(name, store.read(spark, name), meta=dict(m, cells_seg_seq=seq))
-
-    return _catchup(
-        spark, store, name, corpus_store,
-        meta=meta,
-        version_key=version_key,
-        key_cols=[str(meta.get("id_col", "vec_id"))],
-        extend=lambda df, v: extend_ann_cells(
-            spark, store, name, df, corpus_store=corpus_store, as_of_version=v
-        ),
-        reindex=lambda: reindex_ann(spark, store, name, corpus_store),
-        restamp=_restamp,
-        tombstone=_tombstone,
-        on_mutation=on_mutation,
-    )
-
-
-def maintain_indexes(
-    spark: SparkSession,
-    store,
-    indexes: list[tuple[str, str]],
-    corpus_store=None,
-    *,
-    compact_over: int = 8,
-    vacuum: bool = False,
-    vacuum_retention_seconds: float = 0.0,
-    on_mutation: str = "error",
-    max_concurrent: int | None = None,
-) -> list[dict]:
-    """One-call index fleet maintenance — the nightly-cron shape at
-    100 TB: for every declared ``(name, kind)`` (kind ∈ value / text /
-    minhash / ann), CATCH UP from the corpus's change feed (churn cost),
-    COMPACT when the live segment count exceeds ``compact_over`` (the
-    Lucene merge policy: many tiny segments re-introduce the small-files
-    cost), then optionally VACUUM folded segment labels.  Returns one
-    report dict per index (the catch-up report plus ``live_segments`` /
-    ``compacted`` / ``vacuumed``) so the caller can log exactly what
-    moved.  A failing index (e.g. mutating churn under
-    ``on_mutation="error"``) reports ``action="failed"`` with the error
-    and the sweep CONTINUES — one corrupt index must not block the
-    fleet's freshness.
-
-    ``vacuum`` defaults to **False** (ADVICE r9): dropping just-folded
-    labels in the same sweep as the compaction violates
-    :func:`vacuum_index_segments`'s own retention caveat — readers pinned
-    to PRE-compaction base versions still union the old segments.  Opt in
-    with ``vacuum_retention_seconds`` set to the fleet's longest query
-    lifetime: the sweep then only reclaims segments whose de-listing
-    compaction is older than the window (structurally safe — a sweep
-    that runs right after its own compaction reclaims nothing and the
-    NEXT sweep does, once the window has elapsed).  0 keeps the legacy
-    immediate reclaim, safe only under the no-pinned-readers operator
-    discipline.
-
-    ``max_concurrent``: indexes maintained CONCURRENTLY (default
-    ``min(3, len(indexes))``).  Per-index maintenance chains are
-    independent — every index owns its own store labels and atomic
-    version pointer, and they share only READ access to the corpus
-    change feed — so overlapping them lets the next index's stages
-    back-fill executors idled by the current index's straggler tail
-    (2-3 in flight fills the tail without fighting for executors);
-    commit ordering WITHIN an index is unchanged, so each index's
-    crash-consistency story is untouched.  Reports keep input order.
-    Pass ``1`` for a strictly serial sweep when cross-index commit/event
-    ORDER must be deterministic for a downstream consumer."""
-    if on_mutation not in ("error", "reindex", "tombstone"):
-        # validate ONCE up front: a typo'd policy knob must be a loud
-        # error, not a sweep that reports every index as 'failed'
-        raise ValueError(
-            f"on_mutation must be 'error', 'reindex' or 'tombstone', got {on_mutation!r}"
-        )
-    from scalligraph_spark.store import check_retention
-
-    try:
-        vacuum_retention_seconds = check_retention(vacuum_retention_seconds)
-    except ValueError:
-        # keep the knob's own name in the message (fleet-level API)
-        raise ValueError(
-            f"vacuum_retention_seconds must be a number >= 0, got {vacuum_retention_seconds!r}"
-        ) from None
-    compact_over = int(compact_over)
-    corpus_store = corpus_store if corpus_store is not None else store
-
-    def _live_count(name: str, kind: str) -> int:
-        if kind == "value":
-            from scalligraph_spark.operators.value_index import _index_meta
-
-            return len(_index_meta(store, name).get("segments", []))
-        if kind == "text":
-            from scalligraph_spark.operators.text_index import _index_meta
-
-            return len(_index_meta(store, name).get("segments", []))
-        if kind == "minhash":
-            from scalligraph_spark.operators.dedup_index import _meta
-
-            return int(_meta(store, name).get("segments", 0))
-        from scalligraph_spark.operators.ann_index import load_ann_index
-
-        return len(load_ann_index(spark, store, name).meta.get("cells_segments", []))
-
-    catchups = {
-        "value": catchup_value_index,
-        "text": catchup_text_index,
-        "minhash": catchup_minhash_index,
-        "ann": catchup_ann_cells,
-    }
-
-    def _compact(name: str, kind: str) -> None:
-        if kind == "value":
-            from scalligraph_spark.operators.value_index import compact_value_index
-
-            compact_value_index(spark, store, name)
-        elif kind == "text":
-            from scalligraph_spark.operators.text_index import compact_text_index
-
-            compact_text_index(spark, store, name)
-        elif kind == "minhash":
-            from scalligraph_spark.operators.dedup_index import compact_minhash_index
-
-            compact_minhash_index(spark, store, name)
-        else:
-            from scalligraph_spark.operators.ann_index import compact_ann_cells
-
-            compact_ann_cells(spark, store, name)
-
-    for name, kind in indexes:
-        # validate the WHOLE fleet up front: a typo'd kind must fail the
-        # call, not surface mid-sweep after other indexes already moved
-        if kind not in catchups:
-            raise ValueError(f"kind must be value/text/minhash/ann, got {kind!r}")
-
-    def _maintain_one(name: str, kind: str) -> dict:
-        try:
-            rep = catchups[kind](spark, store, name, corpus_store, on_mutation=on_mutation)
-        except Exception as e:  # one corrupt index must not block the fleet
-            return {"index": name, "kind": kind, "action": "failed", "error": str(e)}
-        rep = dict(rep, kind=kind)
-        live = _live_count(name, kind)
-        rep["live_segments"] = live
-        rep["compacted"] = live > int(compact_over)
-        if rep["compacted"]:
-            _compact(name, kind)
-            rep["live_segments"] = 0
-        rep["vacuumed"] = (
-            vacuum_index_segments(
-                spark, store, name, kind, retention_seconds=vacuum_retention_seconds
-            )
-            if vacuum
-            else []
-        )
-        return rep
-
-    workers = min(3, len(indexes)) if max_concurrent is None else max(1, int(max_concurrent))
-    if workers <= 1 or len(indexes) <= 1:
-        return [_maintain_one(name, kind) for name, kind in indexes]
-    # guide-§2.6 overlap: per-index chains are independent Spark jobs, so a
-    # small pool lets index k+1's stages back-fill the executors index k's
-    # straggler tail leaves idle.  map() preserves input order; per-index
-    # failure isolation lives INSIDE _maintain_one, so one corrupt index
-    # still reports "failed" without aborting the sweep.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        return list(pool.map(lambda nk: _maintain_one(*nk), indexes))
+    _require_cells(store, name)
+    return catchup(spark, store, family("ann"), name, corpus_store, on_mutation)

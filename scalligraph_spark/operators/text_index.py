@@ -1,46 +1,38 @@
 """Persisted inverted-index artifacts: build the text index once, search
 many times.
 
-The reference's ENTIRE fulltext read path is index-backed: every model
-declares fulltext/standard index hints (core/.../models/Model.scala:16-19),
-the database materialises them as Lucene-backed mixed indexes
-(database/janusgraph/.../JanusDatabase.scala:304-434 ``addIndex`` /
-``reindex``), and ``TextP`` predicates then CONSULT the index instead of
-scanning vertices.  The engine's :func:`~scalligraph_spark.operators.text.bm25_rank`
-reproduces the scoring but recomputes tokenisation + corpus statistics on
-EVERY query — a full corpus scan per search, which is the one thing an
-index exists to avoid at 100 TB.  This module closes that gap with the
-same lifecycle discipline as the ANN tier (ann_index.py):
+The reference's fulltext read path is index-backed: models declare
+fulltext index hints (core/.../models/Model.scala:16-19), the database
+materialises Lucene mixed indexes (JanusDatabase.scala:304-434
+``addIndex`` / ``reindex``), and ``TextP`` predicates CONSULT them.
+:func:`~scalligraph_spark.operators.text.bm25_rank` recomputes
+tokenisation and corpus statistics on every query; this module pays
+them once:
 
-* :func:`build_text_index` tokenises once and commits TWO versioned store
-  tables — postings ``(term, doc_id, tf, dl)`` and per-term document
-  frequencies ``(term, df)`` — plus corpus stats (n_docs, sum_dl) in the
-  commit meta.  The postings commit is term-sorted (range-partitioned + sorted), so parquet
-  footer min/max stats prune the scan down to the row groups containing
-  the query's terms: search cost scales with POSTING-LIST length, not
-  corpus size (the inverted-index contract).
-* :func:`load_text_index` reads the artifact back (lazily — postings stay
-  a DataFrame; only meta is driver-side) and warns via
-  :class:`StaleTextIndexWarning` when the corpus version has advanced past
-  the indexed one.
-* :func:`indexed_bm25_topk` answers a query from the index with NO corpus
-  scan and NO tokenisation: filter postings to the query terms (pushed to
-  the scan), rebuild the per-doc tf row, and score through the SAME
-  expression tree as ``bm25_rank`` (``_bm25_score_and_rank``) — results
-  are bit-identical to the full-scan path by construction.
+* :func:`build_text_index` commits the postings ``(term, doc_id, tf,
+  dl)`` term-sorted, so footer min/max stats prune a search to the row
+  groups of its terms (cost ∝ posting-list length), and the vocabulary
+  ``name__terms`` ``(term, df)``, with n_docs / sum_dl in the index
+  record.  Extend, compaction and tombstone catch-up run the
+  segmented-index lifecycle (segments.py); each rewrites the
+  (vocabulary-sized) ``name__terms`` whole, published by the record.
+* :func:`load_text_index` reads the artifact back lazily and warns via
+  :class:`StaleTextIndexWarning` when the corpus has advanced.
+* :func:`indexed_bm25_topk` answers from the index with no corpus scan
+  and no tokenisation, scoring through the SAME expression tree as
+  ``bm25_rank`` — bit-identical results by construction.
 * :func:`reindex_text` rebuilds against the current corpus version with
-  the parameters recorded in the artifact's own meta (the ``ReindexData``
-  / ``JanusDatabase.reindex`` discipline) — a new version; readers pinned
-  to the old one are undisturbed.
+  the parameters recorded in the index's own meta.
 """
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from scalligraph_spark.operators import segments
 
 
 class StaleTextIndexWarning(UserWarning):
@@ -51,18 +43,15 @@ class StaleTextIndexWarning(UserWarning):
 
 class MissingTextIndexWarning(UserWarning):
     """A text index was DECLARED for a query surface but no committed
-    artifact exists — the query falls back to a full corpus scan.  The
-    reference never scans when a mixed index is declared
-    (JanusDatabase.scala:476-485 routes every TextP through the index);
-    the batch analog degrades gracefully but loudly, because at 100 TB
-    the scan path is the difference between posting-length and
-    corpus-length cost."""
+    artifact exists — the query falls back to a full corpus scan (the
+    reference routes every TextP through a declared index,
+    JanusDatabase.scala:476-485; the batch analog degrades loudly)."""
 
 
 @dataclass
 class TextIndex:
     """A loaded text-index artifact: lazy postings/terms DataFrames plus
-    the driver-side corpus stats from the commit meta."""
+    the driver-side corpus stats from the index record."""
 
     version: int
     meta: dict = field(default_factory=dict)
@@ -85,12 +74,26 @@ def _postings(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.size(toks).cast("long").alias("dl"),
         F.explode(toks).alias("term"),
     )
-    # ONE shuffle on (term, doc_id) — the canonical index-build cost, paid
-    # at build time instead of per query.  dl rides along via first()
-    # (constant within a doc).
+    # ONE shuffle on (term, doc_id), paid at build time instead of per
+    # query; dl is constant within a doc
     return exploded.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("tf"), F.first("dl").alias("dl")
     )
+
+
+def _df(postings: DataFrame) -> DataFrame:
+    return postings.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+
+
+def _write_terms(store, name: str, meta: dict, terms: DataFrame) -> dict:
+    """Commit the vocabulary; the carrier publishes the new version."""
+    store.write(f"{name}__terms", terms)
+    return segments.publish_version(store, meta, f"{name}__terms")
+
+
+def _terms(spark: SparkSession, store, name: str, meta: dict) -> DataFrame:
+    lbl = f"{name}__terms"
+    return store.read(spark, lbl, segments.published(meta, lbl))
 
 
 def build_text_index(
@@ -103,58 +106,31 @@ def build_text_index(
     corpus_store=None,
     corpus_label: str | None = None,
 ) -> int:
-    """Tokenise the corpus once and commit postings + term frequencies as
-    versioned store tables ``name`` / ``name__terms`` → returns the
-    postings version.  The postings table is range-partitioned + sorted on ``term`` so query-term filters prune to the relevant row
-    groups — the on-disk analog of a posting list."""
-    # persist for the build's lifetime: the postings relation (tokenize +
-    # the (term, doc_id) shuffle) feeds the corpus stats, the terms
-    # aggregate AND the term-sorted store commit; without it each consumer
-    # re-tokenises and re-shuffles the corpus.  Unpersisted before return —
-    # no cache outlives the build.
+    """Tokenise the corpus once and commit the term-sorted postings
+    ``name`` and the vocabulary ``name__terms`` → returns the postings
+    version."""
+    # persisted for the build: the postings feed sum_dl (Σ tf), the
+    # vocabulary AND the term-sorted commit
     post = _postings(docs, text_col, id_col).persist()
-    # sum_dl = Σ_docs size(tokens) = Σ tf over the postings — read it from
-    # the cache instead of a SECOND full tokenize pass over the corpus
-    # (the old dedicated stats scan re-split every document; the value is
-    # an integer count, bit-identical by construction: explode emits one
-    # row per token and null-text docs contribute no rows to either form).
-    # n_docs never needed tokenisation at all — a column-pruned count.
-    sumdl = int(post.agg(F.sum("tf").cast("long").alias("sumdl")).first()[0] or 0)
-    n = docs.count()
-    dfreq = post.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    meta = {
-        "kind": "bm25_inverted",
-        "n_docs": int(n),
-        "sum_dl": int(sumdl),
-        "text_col": str(text_col),
-        "id_col": str(id_col),
-        "sort_files": int(sort_files),
-    }
-    if corpus_store is not None and corpus_label is not None:
-        meta["corpus_label"] = str(corpus_label)
-        meta["corpus_version"] = int(corpus_store.version(corpus_label))
-    meta["segments"] = []  # delta segments appended by extend_text_index
-    meta["base_n_docs"] = int(n)  # docs in the BASE postings (compaction anchor)
-    # a REBUILD over an existing artifact (reindex_text) carries the
-    # segment-naming watermark forward — resetting it would let the next
-    # extend reuse a folded label and strand old labels below the vacuum
-    # sweep's range (ADVICE r9)
     try:
-        prior = _index_meta(store, name)
-        meta["seg_seq"] = max(int(prior.get("seg_seq", 0)), len(prior.get("segments", [])))
-    except (KeyError, FileNotFoundError):
-        meta["seg_seq"] = 0
-    # the full meta rides on BOTH commits: the terms table is rewritten by
-    # every index mutation (build/extend/compact — it is vocabulary-sized,
-    # cheap), so its commit meta is the authoritative, always-fresh copy;
-    # the postings copy keeps old artifacts loadable.  The fresh base
-    # subsumes every existing tombstone (base_seq = carried watermark).
-    try:
-        store.write(f"{name}__terms", dfreq, meta=dict(meta, table_role="bm25_terms"))
-        return store.write(
-            name, post, sort_by=(sort_files, ["term"]),
-            meta=dict(meta, base_seq=int(meta["seg_seq"])),
-        )
+        sumdl = int(post.agg(F.sum("tf").cast("long").alias("sumdl")).first()[0] or 0)
+        n = docs.count()
+        meta = {
+            "kind": "bm25_inverted",
+            "n_docs": int(n),
+            "sum_dl": int(sumdl),
+            "text_col": str(text_col),
+            "id_col": str(id_col),
+            "sort_files": int(sort_files),
+            "base_n_docs": int(n),  # docs in the BASE postings (compaction anchor)
+        }
+
+        def bases(m: dict, write) -> int:
+            m.update(_write_terms(store, name, m, _df(post)))
+            return write("", post)
+
+        spark = docs.sparkSession
+        return segments.build(spark, store, FAMILY, name, meta, corpus_store, corpus_label, bases)
     finally:
         post.unpersist()
 
@@ -167,134 +143,63 @@ def extend_text_index(
     corpus_store=None,
     as_of_version: int | None = None,
 ) -> int:
-    """Incremental (append-only) index maintenance: fold a batch of NEW
-    documents into the index for the cost of the BATCH, not the corpus —
-    the Lucene segment discipline applied to the versioned store, and the
-    text-index face of ``refresh_aggregate``'s churn-sized IVM rule.
-
-    * the batch's postings land as a fresh SEGMENT label
-      (``name__seg<k>``, term-sorted like the base, so query-term
-      pushdown prunes each segment the same way) — the base postings are
-      never rewritten;
-    * the terms table re-aggregates old df + the batch's df (vocabulary-
-      sized — tiny relative to postings);
-    * n_docs / sum_dl / the segment list / the corpus version update in
-      the terms commit meta, so staleness clears and ``load_text_index``
-      reads base ∪ segments transparently.
-
-    Append-only contract: ``new_docs`` must be documents the index has
-    NOT seen (updates/deletes need :func:`reindex_text` — same rule as
-    Lucene: segments are immutable, mutation is rewrite).  Run
-    :func:`compact_text_index` when the segment count grows — many tiny
-    segments re-introduce the small-files cost the sorted base avoids.
-
+    """Fold a batch of NEW documents in for the cost of the batch: its
+    postings land as a term-sorted segment ``name__seg<k>``, the
+    vocabulary re-aggregates old df + the batch's df, and n_docs /
+    sum_dl / the corpus version update in the index record.  Documents
+    the index has seen need tombstone catch-up or :func:`reindex_text`.
     Returns the new segment count."""
-    meta = _index_meta(store, name)
-    text_col = str(meta.get("text_col", "text"))
-    id_col = str(meta.get("id_col", "doc_id"))
-    segments = list(meta.get("segments", []))
-    # monotonic naming (seg_seq never resets across compactions): a label
-    # recorded as folded on the base's commit meta must never be reused,
-    # or the crash-safe reader in load_text_index would skip the fresh one
-    seq = int(meta.get("seg_seq", len(segments))) + 1
-    seg_label = f"{name}__seg{seq}"
+    return segments.extend(spark, store, FAMILY, name, new_docs, corpus_store, as_of_version)
 
+
+def _extend(spark: SparkSession, store, name: str, meta: dict, new_docs: DataFrame, write) -> dict:
+    text_col, id_col = str(meta["text_col"]), str(meta["id_col"])
     n, sumdl = new_docs.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.size(F.split(F.trim(F.col(text_col)), r"\s+"))).cast("long").alias("sumdl"),
     ).first()
-    post = _postings(new_docs, text_col, id_col)
-    n_files = max(1, int(meta.get("sort_files", 16)) // 4)  # batch ≪ corpus
-    store.write(seg_label, post, sort_by=(n_files, ["term"]), meta={"kind": "bm25_segment"})
-
-    # df re-aggregate: old vocabulary ∪ batch vocabulary, summed — the
-    # only non-delta-sized piece, and it is vocabulary-sized by design
-    delta_df = store.read(spark, seg_label).groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
-    )
+    seg = write("", _postings(new_docs, text_col, id_col))
     merged = (
-        store.read(spark, f"{name}__terms")
-        .unionByName(delta_df)
+        _terms(spark, store, name, meta)
+        .unionByName(_df(store.read(spark, seg)))
         .groupBy("term")
         .agg(F.sum("df").cast("long").alias("df"))
     )
-    segments.append(seg_label)
-    meta = dict(
-        meta,
+    return dict(
+        _write_terms(store, name, meta, merged),
         n_docs=int(meta["n_docs"]) + int(n),
         sum_dl=int(meta["sum_dl"]) + int(sumdl or 0),
-        segments=segments,
-        seg_seq=seq,
     )
-    if as_of_version is not None and "corpus_label" in meta:
-        # CDC catch-up stamps the version whose delta it actually folded
-        meta["corpus_version"] = int(as_of_version)
-    elif corpus_store is not None and "corpus_label" in meta:
-        meta["corpus_version"] = int(corpus_store.version(meta["corpus_label"]))
-    store.write(f"{name}__terms", merged, meta=dict(meta, table_role="bm25_terms"))
-    return len(segments)
 
 
 def compact_text_index(spark: SparkSession, store, name: str) -> int:
     """Merge every delta segment back into the base postings table (one
     term-sorted rewrite of existing postings — NO retokenisation, the
-    Lucene segment-merge): queries go back to one pruned scan.  The old
-    segment labels stay on disk for pinned readers — drop them with
-    ``store.drop(seg)`` once retention allows.  Returns the new base
-    version.
+    Lucene segment merge): queries go back to one pruned scan.  Returns
+    the new base version."""
+    return segments.compact(spark, store, FAMILY, name)
 
-    Crash-safe ordering: the merged POSTINGS base commits first, its own
-    commit meta recording the segments it folded; the terms/meta carrier
-    (segment list emptied) commits second.  The old ordering (carrier
-    first) had a silent-LOSS window: a crash after the carrier wrote
-    ``segments=[]`` but before the postings rewrite made every folded
-    segment's documents unsearchable.  Now a crash between the two
-    leaves the carrier still listing the folded segments and
-    :func:`load_text_index` skips the ones the current base already
-    holds — searches stay exact through any torn compaction."""
-    from scalligraph_spark.operators.tombstones import read_tombstones
 
-    ix = load_text_index(spark, store, name)
-    folded = list(ix.meta.get("segments", []))
-    # stamp the naming watermark even for PRE-seg_seq metas (see
-    # compact_value_index): a folded label must never be reused
-    meta = dict(ix.meta, segments=[], base_n_docs=int(ix.meta["n_docs"]),
-                seg_seq=int(ix.meta.get("seg_seq", len(folded))))
-    terms = ix.terms
-    if read_tombstones(spark, store, name) is not None:
-        # tombstoned docs were dropped from the merged postings above —
-        # the merge must also RESTORE exact corpus stats (df / n_docs /
-        # sum_dl drifted Lucene-style while tombstones were live): one
-        # re-aggregate over the postings being rewritten anyway
-        terms = ix.postings.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-        n, sumdl = (
-            ix.postings.groupBy("doc_id")
-            .agg(F.first("dl").alias("dl"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").cast("long").alias("sumdl"))
-            .first()
-        )
-        meta["n_docs"] = int(n)
-        meta["sum_dl"] = int(sumdl or 0)
-        meta["base_n_docs"] = int(n)
-    v = store.write(
-        name,
-        ix.postings,
-        sort_by=(int(meta.get("sort_files", 16)), ["term"]),
-        # base_seq: tombstones at or below this sequence watermark are
-        # physically applied by the rewrite; the strict reader comparison
-        # then ignores them against this base (tombstones.py)
-        meta=dict(meta, folded_segments=folded, base_seq=int(meta["seg_seq"])),
+def _compact(spark, store, name: str, meta: dict, data: dict, tombstoned: bool) -> dict:
+    if not tombstoned:
+        return {"base_n_docs": int(meta["n_docs"])}
+    # df / n_docs / sum_dl drifted Lucene-style while tombstones hid
+    # docs: restore them exactly from the postings being rewritten anyway
+    post = data[""]
+    n, sumdl = (
+        post.groupBy("doc_id")
+        .agg(F.first("dl").alias("dl"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").cast("long").alias("sumdl"))
+        .first()
     )
-    store.write(f"{name}__terms", terms, meta=dict(meta, table_role="bm25_terms"))
-    return v
+    return dict(
+        _write_terms(store, name, meta, _df(post)),
+        n_docs=int(n), sum_dl=int(sumdl or 0), base_n_docs=int(n),
+    )
 
 
 def _index_meta(store, name: str) -> dict:
-    """Authoritative index meta: the terms commit if it carries the full
-    record (anything built/extended since segments exist), else the
-    postings commit (pre-segment artifacts)."""
-    tmeta = store.commit_meta(f"{name}__terms")
-    return tmeta if "n_docs" in tmeta else store.commit_meta(name)
+    return segments.index_meta(store, FAMILY, name)
 
 
 def load_text_index(
@@ -304,51 +209,23 @@ def load_text_index(
     corpus_store=None,
 ) -> TextIndex:
     """Read the artifact back (postings/terms stay lazy DataFrames);
-    postings are the base table ∪ any delta segments appended by
-    :func:`extend_text_index` — query code never sees the segmentation.
-    Pass ``corpus_store`` to check freshness: if the corpus label the
-    index was built from has advanced, a :class:`StaleTextIndexWarning`
+    postings are the base ∪ live segments with tombstoned documents
+    hidden — query code never sees the segmentation.  df / n_docs /
+    sum_dl keep counting tombstoned documents until compaction restores
+    exact stats (the Lucene deleted-docs drift rule).  Pass
+    ``corpus_store`` to check freshness: if the corpus label the index
+    was built from has advanced, a :class:`StaleTextIndexWarning`
     fires."""
     meta = _index_meta(store, name)
-    if (
-        corpus_store is not None
-        and "corpus_label" in meta
-        and int(corpus_store.version(meta["corpus_label"])) != int(meta["corpus_version"])
-    ):
-        warnings.warn(
-            f"text index {name!r} was built on {meta['corpus_label']!r} "
-            f"v{meta['corpus_version']}, but the corpus is now "
-            f"v{corpus_store.version(meta['corpus_label'])} — search misses newer "
-            "documents; rebuild via reindex_text",
-            StaleTextIndexWarning,
-            stacklevel=2,
-        )
-    # skip segments the CURRENT postings base already folded (recorded on
-    # its commit at compaction time) — a crash between compaction's two
-    # commits never double-counts or drops a posting.  Tombstoned
-    # documents (mutation catch-up — tombstones.py) go dark in every part
-    # at or below their watermark: searches never return them, while
-    # df/n_docs/sum_dl keep counting them until compaction restores exact
-    # stats (the Lucene deleted-docs drift rule)
-    from scalligraph_spark.operators.tombstones import anti_tombstone, read_tombstones, seg_no
-
-    base_meta = store.commit_meta(name)
-    folded = set(base_meta.get("folded_segments", []))
-    tombs = read_tombstones(spark, store, name)
-    postings = anti_tombstone(
-        store.read(spark, name), int(base_meta.get("base_seq", 0)), tombs, "doc_id"
+    segments.warn_if_stale(
+        FAMILY, name, meta, corpus_store, StaleTextIndexWarning,
+        "search misses newer documents; rebuild via reindex_text",
     )
-    for seg in meta.get("segments", []):
-        if seg in folded:
-            continue
-        postings = postings.unionByName(
-            anti_tombstone(store.read(spark, seg), seg_no(seg), tombs, "doc_id")
-        )
     return TextIndex(
         version=int(store.version(name)),
         meta=dict(meta),
-        postings=postings,
-        terms=store.read(spark, f"{name}__terms"),
+        postings=segments.read_part(spark, store, FAMILY, name, meta),
+        terms=_terms(spark, store, name, meta),
     )
 
 
@@ -360,13 +237,11 @@ def indexed_bm25_topk(
     round_to: int = 6,
 ) -> DataFrame:
     """BM25 search THROUGH the persisted index: no corpus scan, no
-    tokenisation, no stats job.  The postings filter (``term IN
-    query_terms``) is pushed into the term-sorted parquet scan, so cost is
-    the matched posting lists; df/n/avgdl come from the terms table (a
-    broadcastable handful of rows) and the commit meta.  The scoring tail
-    is the SAME expression tree as :func:`bm25_rank`
-    (``_bm25_score_and_rank``), so output is bit-identical to the
-    full-scan path on the indexed corpus version.
+    tokenisation, no stats job.  ``term IN query_terms`` is pushed into
+    the term-sorted scans (cost ∝ matched posting lists); df / n / avgdl
+    come from the vocabulary and the index record; the scoring tail is
+    the SAME expression tree as :func:`bm25_rank`, so output is
+    bit-identical to the full-scan path on the indexed corpus version.
 
     Output ``(doc_id, dl, bm25, rank)`` — ``bm25_rank`` column contract.
     """
@@ -374,7 +249,7 @@ def indexed_bm25_topk(
 
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    id_col = str(index.meta.get("id_col", "doc_id"))
+    id_col = str(index.meta["id_col"])
     p = index.postings.where(F.col("term").isin(list(query_terms)))
     # per-doc tf vector reconstructed from the matched postings (docs with
     # no matching term never enter — same visible set as the scan path)
@@ -411,19 +286,11 @@ def matching_terms(index: TextIndex, mode: str, pattern: str) -> DataFrame:
     ``regex`` (Java regex via ``rlike``).
     """
     t = F.col("term")
-    if mode == "term":
-        cond = t == pattern
-    elif mode == "prefix":
-        cond = t.startswith(pattern)
-    elif mode == "suffix":
-        cond = t.endswith(pattern)
-    elif mode == "contains":
-        cond = t.contains(pattern)
-    elif mode == "regex":
-        cond = t.rlike(pattern)
-    else:
+    conds = {"term": t.__eq__, "prefix": t.startswith, "suffix": t.endswith,
+             "contains": t.contains, "regex": t.rlike}
+    if mode not in conds:
         raise ValueError(f"mode must be term/prefix/suffix/contains/regex, got {mode!r}")
-    return index.terms.where(cond)
+    return index.terms.where(conds[mode](pattern))
 
 
 def docs_with_matching_term(index: TextIndex, mode: str, pattern: str) -> DataFrame:
@@ -466,27 +333,31 @@ def reindex_text(
     text_col: str | None = None,
     id_col: str | None = None,
 ) -> int:
-    """Rebuild a persisted text index against the CURRENT corpus version
-    with the parameters recorded in its own meta — a new artifact version
-    (readers pinned to the old one are undisturbed); the freshness warning
-    clears because the new meta records the current corpus version.  Also
-    resets the segment list — a rebuild subsumes every delta segment."""
+    """Rebuild against the CURRENT corpus version with the parameters
+    recorded in the index's own meta: a new version, pinned readers
+    undisturbed, every segment and tombstone subsumed."""
     meta = _index_meta(store, name)
     if "corpus_label" not in meta:
         raise ValueError(
             f"text index {name!r} records no training corpus; rebuild it with "
             "build_text_index(..., corpus_store=, corpus_label=) instead"
         )
-    text_col = text_col if text_col is not None else meta.get("text_col", "text")
-    id_col = id_col if id_col is not None else meta.get("id_col", "doc_id")
-    docs = corpus_store.read(spark, meta["corpus_label"])
     return build_text_index(
-        store,
-        name,
-        docs,
-        text_col=text_col,
-        id_col=id_col,
-        sort_files=int(meta.get("sort_files", 16)),
-        corpus_store=corpus_store,
-        corpus_label=meta["corpus_label"],
+        store, name, corpus_store.read(spark, meta["corpus_label"]),
+        text_col=text_col if text_col is not None else meta["text_col"],
+        id_col=id_col if id_col is not None else meta["id_col"],
+        sort_files=int(meta["sort_files"]),
+        corpus_store=corpus_store, corpus_label=meta["corpus_label"],
     )
+
+
+FAMILY = segments.Family(
+    what="text index",
+    record="bm25_inverted",
+    parts={"": "doc_id"},
+    sort={"": "term"},
+    files=("sort_files", 16),
+    extend=_extend,
+    compact=_compact,
+    reindex=reindex_text,
+)

@@ -1,47 +1,7 @@
-"""Seq-scoped tombstones: mutation (UPDATE/DELETE) maintenance for the
-append-only index families at CHURN cost instead of corpus-cost rebuild.
-
-The reference keeps indexes transactionally fresh — a vertex update
-rewrites its index entries in the same transaction
-(database/janusgraph/.../JanusDatabase.scala:304-434).  The batch
-families here (value_index / text_index / dedup_index / ann_index) use
-immutable delta segments (the Lucene discipline), which makes APPEND
-churn cheap but left UPDATE/DELETE churn with only the corpus-cost
-``reindex_*`` cliff (round-9 verdict's one remaining scale gap).  This
-module is the Lucene deleted-docs answer, applied store-side:
-
-* each index ``name`` may carry a sidecar label ``name__tombstones`` of
-  ``(key, __tomb_seq)`` rows — MUTATION-sized (pure inserts never enter
-  it), broadcastable;
-* every tombstone batch CONSUMES a number from the family's monotonic
-  segment sequence (``seg_seq`` / ``seg_top`` / ``cells_seg_seq``
-  advances without minting a segment label), so a part's seq and a
-  tombstone's seq are never equal and every comparison is STRICT: a
-  tombstone hides the key's entries in every part whose seq is
-  ``< __tomb_seq``; parts minted after it are exempt, so an UPDATE is
-  tombstone-the-key + re-insert the postimage into the NEXT segment —
-  the re-insert outlives its own tombstone by construction.  (A shared
-  seq value was genuinely ambiguous: a tombstone written AFTER a
-  compaction at watermark W would carry W and be indistinguishable from
-  one the compaction folded — a silent delete-resurrection.)
-* the read paths anti-join each part against the (broadcast) tombstone
-  keys that apply to it — zero cost when no tombstones exist (one
-  ``store.version`` probe), churn-sized cost otherwise;
-* compaction FOLDS tombstones physically: the merged base is built from
-  the tombstone-filtered read and records ``base_seq`` (the sequence
-  watermark it covers — every tombstone with seq <= base_seq is applied
-  inside it, and the strict reader comparison makes them no-ops
-  automatically); ``vacuum_index_segments`` reclaims tombstones at or
-  below the MINIMUM base watermark across the family's base tables
-  (torn compactions hold the sweep back) under the same retention
-  policy as folded segments, dropping the label entirely when emptied.
-
-Crash-safety mirrors the segment discipline: tombstones commit as a
-full-label rewrite deduped by key (max seq wins), so a torn catch-up
-re-run converges to the same set; each base's own commit meta — not the
-tombstone table — scopes what applies to it, so a crash between
-compaction commits never resurrects or double-deletes a key.
-"""
+"""The tombstone sidecar of an index: ``name__tombstones`` rows
+``(key, __tomb_seq)`` recording which keys UPDATE/DELETE churn hid, and
+at which sequence number.  Which sidecar version a reader applies, and
+to which parts, is the segmented-index core's business (segments.py)."""
 
 from __future__ import annotations
 
@@ -55,108 +15,30 @@ def tombstone_label(name: str) -> str:
     return f"{name}__tombstones"
 
 
-def _normalized(spark: SparkSession, store, name: str, version: int | None = None) -> DataFrame:
-    """Sidecar rows under the CONSUMED-seq scheme.  Sidecars written by
-    the earlier shared-watermark scheme (commit meta lacks
-    ``seq_scheme``) carry ``tomb_seq == W`` meaning 'hide parts <= W';
-    the strict-scheme equivalent is ``W + 1`` ('hide parts < W+1', and
-    no part can carry W+1 because the old scheme never consumed
-    numbers) — one additive bump migrates them losslessly."""
-    lbl = tombstone_label(name)
-    t = store.read(spark, lbl, version)
-    if store.commit_meta(lbl, version).get("seq_scheme") != "consumed":
-        t = t.withColumn(TOMB_SEQ, (F.col(TOMB_SEQ) + 1).cast("int"))
-    return t
-
-
 def read_tombstones(
     spark: SparkSession, store, name: str, version: int | None = None
 ) -> DataFrame | None:
-    """The index's live tombstone sidecar ``(key, __tomb_seq)`` — or
-    ``None`` when no label exists, the zero-overhead common case.  No
-    fold filtering happens here: each part scopes the set with its own
-    sequence number (:func:`anti_tombstone`'s strict comparison), which
-    is what makes torn multi-base compactions safe.  ``version`` pins
-    the sidecar to a specific committed version (0 = 'no sidecar
-    existed' → ``None``) so loaded-index probes can replay the exact
-    tombstone set they were loaded against."""
-    if version is not None:
-        if int(version) == 0:
-            return None
-        return _normalized(spark, store, name, int(version))
-    if store.version(tombstone_label(name)) == 0:
-        return None
-    return _normalized(spark, store, name)
-
-
-def anti_tombstone(
-    part: DataFrame, part_seq: int, tombs: DataFrame | None, key_col: str
-) -> DataFrame:
-    """Hide tombstoned keys from one part (base or segment) of an index
-    read: a tombstone applies iff its seq is STRICTLY greater than the
-    part's (the part existed when the tombstone was written; seqs are
-    never equal because tombstone batches consume their own number).
-    The tombstone side is churn-sized — broadcast anti-join, the part
-    never shuffles."""
-    if tombs is None:
-        return part
-    keys = tombs.where(F.col(TOMB_SEQ) > F.lit(int(part_seq))).select(
-        F.col(tombs.columns[0]).alias(key_col)
-    )
-    # a USING-column join floats the key to the front — restore the
-    # part's own column order so unionByName-free callers stay aligned
-    return part.join(F.broadcast(keys), key_col, "left_anti").select(*part.columns)
+    """The sidecar ``(key, __tomb_seq)`` at ``version`` (default: head),
+    or ``None`` when there is none (version 0 / no label)."""
+    lbl = tombstone_label(name)
+    v = store.version(lbl) if version is None else int(version)
+    return store.read(spark, lbl, v) if v else None
 
 
 def write_tombstones(
     spark: SparkSession, store, name: str, keys: DataFrame, key_col: str, tomb_seq: int
 ) -> str:
-    """Record ``keys`` (one column) as tombstoned at segment watermark
-    ``tomb_seq``.  The label is rewritten as old ∪ new deduped by key
-    keeping the MAX seq — idempotent under catch-up re-runs after a
-    crash (the same keys at the same watermark converge to one row).
-    Returns the sidecar label name (one commit job — no extra scans)."""
+    """Record ``keys`` (one column) as tombstoned at ``tomb_seq``.  The
+    label is rewritten as old ∪ new deduped by key keeping the MAX seq,
+    so a crashed catch-up's re-run converges to the same rows.  Returns
+    the sidecar label."""
     lbl = tombstone_label(name)
     fresh = keys.select(
         F.col(keys.columns[0]).alias(key_col),
         F.lit(int(tomb_seq)).cast("int").alias(TOMB_SEQ),
     )
     if store.version(lbl) > 0:
-        fresh = _normalized(spark, store, name).unionByName(fresh)
+        fresh = store.read(spark, lbl).unionByName(fresh)
     merged = fresh.groupBy(key_col).agg(F.max(TOMB_SEQ).cast("int").alias(TOMB_SEQ))
-    store.write(
-        lbl, merged,
-        meta={"kind": "index_tombstones", "key_col": str(key_col), "seq_scheme": "consumed"},
-    )
+    store.write(lbl, merged, meta={"kind": "index_tombstones", "key_col": str(key_col)})
     return lbl
-
-
-def vacuum_tombstones(spark: SparkSession, store, name: str, folded_through: int) -> int:
-    """Physically drop tombstones a compaction has folded (seq <=
-    ``folded_through``) — the retention sweep twin of segment vacuum;
-    readers already treat them as no-ops via the strict per-part seq rule.
-    When nothing would remain the LABEL is dropped, restoring the
-    zero-overhead no-tombstones fast path (one version probe) for every
-    future read — an emptied-but-present label would keep all four
-    families on the anti-join path forever.  Returns the number of rows
-    reclaimed (0 = nothing to do)."""
-    lbl = tombstone_label(name)
-    if store.version(lbl) == 0:
-        return 0
-    t = _normalized(spark, store, name)
-    dead = int(t.where(F.col(TOMB_SEQ) <= F.lit(int(folded_through))).count())
-    if dead:
-        live = t.where(F.col(TOMB_SEQ) > F.lit(int(folded_through)))
-        if live.take(1):
-            store.write(lbl, live, meta=dict(store.commit_meta(lbl), seq_scheme="consumed"))
-        else:
-            # vacuum already runs under the no-pinned-readers retention
-            # rule (same as folded-segment drops), so the label can go
-            store.drop(lbl)
-    return dead
-
-
-def seg_no(label: str) -> int:
-    """Parse the monotonic sequence number out of a segment label
-    (``…__seg<k>`` / ``…__cells_seg<k>`` / ``…__bands_seg<k>``)."""
-    return int(label.rsplit("seg", 1)[1])

@@ -2,46 +2,35 @@
 lookups at posting-list cost instead of corpus-scan cost.
 
 The reference's standard lookup path is the COMPOSITE index: models
-declare per-property index hints (core/.../models/Model.scala:16-19
-``indexes``/``unique``), the database materialises them
-(database/janusgraph/.../JanusDatabase.scala:304-434 ``addIndex`` — a
-JanusGraph composite index for basic/unique hints, a Lucene mixed index
-for fulltext), and every ``has(key, eq)`` / ``getByName`` then CONSULTS
-the index instead of iterating vertices.  The text tier of that story is
-``text_index.py``; this module is the exact-value tier:
+declare per-property index hints (core/.../models/Model.scala:16-19),
+the database materialises them (JanusDatabase.scala:304-434
+``addIndex``), and every ``has(key, eq)`` CONSULTS the index instead of
+iterating vertices.  This module is that exact-value tier (the text tier
+is ``text_index.py``):
 
-* :func:`build_value_index` commits ``(value, id)`` entries as ONE
-  versioned store table, range-partitioned + sorted on ``value`` — the
-  on-disk analog of the composite index's sorted key-column family.
-  Parquet footer min/max stats then prune an ``In(value, …)`` or
-  range filter down to the row groups that can contain the probed
-  values: lookup cost scales with MATCHED entries, not corpus size.
+* :func:`build_value_index` commits ``(value, id)`` entries
+  range-partitioned + sorted on ``value``, with per-file value ranges,
+  so an ``In(value, …)`` or range probe reads only the files and row
+  groups that can match: lookup cost scales with MATCHED entries.
 * ``unique=True`` enforces the reference's ``unique`` hint at build and
-  extend time (at most one id per value) — the index-backed face of
-  ``writes.enforce_unique``'s write-time check.
-* :func:`extend_value_index` folds an append batch in as a value-sorted
-  delta SEGMENT label for the cost of the batch (the Lucene segment
-  discipline shared with ``extend_text_index``);
-  :func:`compact_value_index` merges segments back into one base table
-  without touching the corpus.
+  extend time (at most one id per value).
+* extend / compact / tombstone catch-up run the segmented-index
+  lifecycle (segments.py) with value-sorted segments.
 * :func:`lookup_ids` / :func:`lookup_range` / :func:`index_value_filter`
-  are the read path: filter the entries (pushed into every base/segment
-  scan) → semi-join ids back into the element table — ``has(key, eq)``
-  answered with the element table's non-key columns never read for
-  non-matching rows.
+  filter the entries, then semi-join the ids back into the element
+  table.
 
-Nulls are not indexed (the composite-index contract: a null property is
-the absence of an entry, so ``has(key, eq null)`` can never come from an
-index).
+Nulls are not indexed (a null property is the absence of an entry).
 """
 
 from __future__ import annotations
 
-import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from scalligraph_spark.operators import segments
 
 
 class StaleValueIndexWarning(UserWarning):
@@ -73,18 +62,13 @@ class UniqueIndexViolation(ValueError):
 @dataclass
 class ValueIndex:
     """A loaded value-index artifact: lazy ``(value, id)`` entries (base
-    table ∪ delta segments) plus the driver-side meta.  When the loader
-    attaches its provenance (``spark``/``store``/``name``), lookups
-    rebuild a MANIFEST-PRUNED plan per probe instead of filtering the
-    all-parts union — at 100 TB a point lookup touches the files whose
-    value ranges can match, never the index's full file listing.
-
-    ``pins`` is the load-time SNAPSHOT (base/segment/tombstone versions,
-    resolved once by :func:`load_value_index`): probes rebuild their
-    pruned plan against exactly these versions, so a loaded index is a
-    pinned artifact — tombstones, compactions or vacuum sweeps landing
-    AFTER load never change (or duplicate) probe results, and a probe is
-    always ≡ ``entries.where(pred)``."""
+    ∪ segments) plus the index record.  When the loader attaches its
+    provenance (``spark``/``store``/``name``), each probe builds a
+    MANIFEST-PRUNED plan that touches only the files whose value ranges
+    can match.  ``pins`` holds the load-time versions of every base and
+    segment (the record pins the tombstones): probes read exactly them,
+    so mutations after load never change a probe, and a probe is always
+    ≡ ``entries.where(pred)``."""
 
     version: int
     meta: dict = field(default_factory=dict)
@@ -116,41 +100,22 @@ def _entries(df: DataFrame, value_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _assert_unique(entries: DataFrame, name: str, context: str) -> None:
-    dups = (
-        entries.groupBy("value")
-        .agg(F.countDistinct("id").alias("__n"))
-        .where(F.col("__n") > 1)
-        .select("value")
-        .limit(3)
-        .collect()
-    )
-    if dups:
-        samples = [r["value"] for r in dups]
+def _reject(values: DataFrame, name: str, what: str) -> None:
+    """Raise :class:`UniqueIndexViolation` naming up to three ``values``."""
+    samples = [r["value"] for r in values.select("value").limit(3).collect()]
+    if samples:
         raise UniqueIndexViolation(
-            f"value index {name!r} is unique but {context} carries multiple "
-            f"ids for value(s) {samples!r}",
-            samples,
+            f"value index {name!r} is unique but {what} {samples!r}", samples
         )
 
 
-def _meta_label(name: str) -> str:
-    return f"{name}__meta"
-
-
-def _write_meta(spark: SparkSession, store, name: str, meta: dict) -> None:
-    # the meta label is rewritten by EVERY index mutation (1 row — free),
-    # so its newest commit is the authoritative record: segment list,
-    # row counts, and corpus provenance all live here (the text index
-    # plays the same trick with its vocabulary-sized __terms table)
-    store.write(_meta_label(name), spark.range(1), meta=dict(meta, table_role="value_index_meta"))
+def _assert_unique(entries: DataFrame, name: str, context: str) -> None:
+    dups = entries.groupBy("value").agg(F.countDistinct("id").alias("__n")).where("__n > 1")
+    _reject(dups, name, f"{context} carries multiple ids for value(s)")
 
 
 def _index_meta(store, name: str) -> dict:
-    meta = store.commit_meta(_meta_label(name))
-    if "value_col" not in meta:
-        raise FileNotFoundError(f"no committed value index named {name!r}")
-    return meta
+    return segments.index_meta(store, FAMILY, name)
 
 
 def build_value_index(
@@ -172,44 +137,18 @@ def build_value_index(
     entries = _entries(df, value_col, id_col)
     if unique:
         _assert_unique(entries, name, "the corpus")
-    n = entries.count()
-    # a REBUILD over an existing artifact (reindex_values) must carry the
-    # segment-naming watermark forward: resetting it would let the next
-    # extend reuse a folded label (readers pinned to pre-reindex versions
-    # would union the NEW contents) and strand old labels below the
-    # vacuum sweep's candidate range
-    try:
-        prior = _index_meta(store, name)
-        seg_seq = max(int(prior.get("seg_seq", 0)), len(prior.get("segments", [])))
-    except FileNotFoundError:
-        seg_seq = 0
     meta = {
         "kind": "composite_value",
         "value_col": str(value_col),
         "id_col": str(id_col),
         "unique": bool(unique),
-        "n_rows": int(n),
+        "n_rows": int(entries.count()),
         "sort_files": int(sort_files),
-        "segments": [],
-        "seg_seq": int(seg_seq),
     }
-    if corpus_store is not None and corpus_label is not None:
-        meta["corpus_label"] = str(corpus_label)
-        meta["corpus_version"] = int(corpus_store.version(corpus_label))
-    # the fresh base reflects the corpus NOW — every existing tombstone
-    # is subsumed (base_seq = the carried watermark makes them no-ops)
-    v = store.write(
-        name,
-        entries,
-        sort_by=(int(sort_files), ["value"]),
-        # per-file value ranges → lookups prune FILES driver-side
-        # (read_skipping), on top of the row-group pruning the sorted
-        # layout already buys
-        stats_cols=["value"],
-        meta=dict(meta, base_seq=int(seg_seq)),
+    return segments.build(
+        spark, store, FAMILY, name, meta, corpus_store, corpus_label,
+        lambda meta, write: write("", entries),
     )
-    _write_meta(spark, store, name, meta)
-    return v
 
 
 def extend_value_index(
@@ -220,171 +159,34 @@ def extend_value_index(
     corpus_store=None,
     as_of_version: int | None = None,
 ) -> int:
-    """Incremental (append-only) maintenance: the batch's entries land as
-    a value-sorted delta SEGMENT label (``name__seg<k>``) — cost ∝ batch,
-    base never rewritten.  A unique index checks the batch against ITSELF
-    and against the existing entries (one broadcast semi-join of the
-    batch's values into the pruned index scan) before committing.
+    """Fold an append batch in as a value-sorted segment ``name__seg<k>``
+    (cost ∝ batch).  A unique index first checks the batch against itself
+    and against the existing entries.  Rows the index has seen need
+    tombstone catch-up or :func:`reindex_values`.  Returns the new
+    segment count."""
+    return segments.extend(spark, store, FAMILY, name, new_df, corpus_store, as_of_version)
 
-    Append-only contract: rows the index has already seen need
-    :func:`reindex_values` (segments are immutable — the Lucene rule
-    shared with ``extend_text_index``).  Returns the new segment count.
-    """
-    meta = _index_meta(store, name)
+
+def _extend(spark: SparkSession, store, name: str, meta: dict, new_df: DataFrame, write) -> dict:
     batch = _entries(new_df, meta["value_col"], meta["id_col"])
     if meta.get("unique"):
         _assert_unique(batch, name, "the batch")
-        existing = _load_entries(spark, store, name, meta)
-        clash = (
-            existing.join(F.broadcast(batch.select("value").distinct()), "value", "left_semi")
-            .select("value")
-            .limit(3)
-            .collect()
-        )
-        if clash:
-            samples = [r["value"] for r in clash]
-            raise UniqueIndexViolation(
-                f"value index {name!r} is unique but the batch re-uses already-"
-                f"indexed value(s) {samples!r}",
-                samples,
-            )
-    segments = list(meta.get("segments", []))
-    # segment names are MONOTONIC (seg_seq never resets, even across
-    # compactions): a folded label recorded on the base's commit meta
-    # must never be reused by a later extend, or the crash-safe reader
-    # below would skip the fresh segment
-    seq = int(meta.get("seg_seq", len(segments))) + 1
-    seg_label = f"{name}__seg{seq}"
-    n_files = max(1, int(meta.get("sort_files", 8)) // 4)  # batch ≪ corpus
-    store.write(
-        seg_label,
-        batch,
-        sort_by=(n_files, ["value"]),
-        stats_cols=["value"],
-        meta={"kind": "value_segment"},
-    )
-    n_batch = store.read(spark, seg_label).count()
-    segments.append(seg_label)
-    meta = dict(meta, n_rows=int(meta["n_rows"]) + int(n_batch), segments=segments, seg_seq=seq)
-    if as_of_version is not None and "corpus_label" in meta:
-        # the caller (CDC catch-up) folded EXACTLY the delta up to this
-        # version — stamping a fresh head read would mark concurrent
-        # commits as indexed without their rows
-        meta["corpus_version"] = int(as_of_version)
-    elif corpus_store is not None and "corpus_label" in meta:
-        meta["corpus_version"] = int(corpus_store.version(meta["corpus_label"]))
-    _write_meta(spark, store, name, meta)
-    return len(segments)
+        existing = segments.read_part(spark, store, FAMILY, name, meta)
+        clash = existing.join(F.broadcast(batch.select("value").distinct()), "value", "left_semi")
+        _reject(clash, name, "the batch re-uses already-indexed value(s)")
+    return {"n_rows": int(meta["n_rows"]) + store.read(spark, write("", batch)).count()}
 
 
 def compact_value_index(spark: SparkSession, store, name: str) -> int:
     """Merge every delta segment back into one value-sorted base table (a
     rewrite of existing entries — the corpus is never touched); lookups go
-    back to one pruned scan.  Old segment labels stay on disk for pinned
-    readers — ``store.drop(seg)`` once retention allows.  Returns the new
-    base version.
-
-    Crash-safe: the merged base commits FIRST, carrying the list of
-    segments it folded in its own commit meta; the meta carrier (segment
-    list emptied) commits second.  A crash between the two leaves the old
-    meta still listing the folded segments, but :func:`_load_entries`
-    cross-checks every listed segment against the CURRENT base's
-    ``folded_segments`` and skips the ones already merged — readers never
-    see a (value, id) entry twice, and the next extend/compact proceeds
-    from a consistent view (segment names are monotonic, so a folded
-    label is never reused)."""
-    from scalligraph_spark.operators.tombstones import read_tombstones
-
-    meta = _index_meta(store, name)
-    folded = list(meta.get("segments", []))
-    entries = _load_entries(spark, store, name, meta)
-    # stamp the naming watermark even for PRE-seg_seq metas: without it a
-    # post-compaction extend would default to len([])+1 and reuse a label
-    # the base just recorded as folded — which the reader would then skip
-    meta = dict(meta, segments=[], seg_seq=int(meta.get("seg_seq", len(folded))))
-    if read_tombstones(spark, store, name) is not None:
-        # tombstoned entries were dropped from the merged read above —
-        # the recorded row count must track the physical fold
-        meta["n_rows"] = int(entries.count())
-    v = store.write(
-        name,
-        entries,
-        sort_by=(int(meta.get("sort_files", 8)), ["value"]),
-        stats_cols=["value"],
-        # base_seq: the sequence watermark this base covers — every
-        # tombstone at or below it is physically applied inside, and the
-        # strict reader comparison makes them no-ops against it
-        meta=dict(meta, folded_segments=folded, base_seq=int(meta["seg_seq"])),
-    )
-    _write_meta(spark, store, name, meta)
-    return v
+    back to one pruned scan.  Returns the new base version."""
+    return segments.compact(spark, store, FAMILY, name)
 
 
-def _pin_snapshot(store, name: str, meta: dict) -> dict:
-    """Resolve the versions a loaded index is a snapshot OF — the base,
-    every live segment, and the tombstone sidecar (0 = none existed).
-    Metadata-only (pointer-file reads).  Probes thread this back through
-    :func:`_load_entries` so later mutations never shift a loaded
-    index's results."""
-    from scalligraph_spark.operators.tombstones import tombstone_label
-
-    return {
-        "base_version": int(store.version(name)),
-        "seg_versions": {
-            seg: int(store.version(seg)) for seg in meta.get("segments", [])
-        },
-        "tomb_version": int(store.version(tombstone_label(name))),
-    }
-
-
-def _load_entries(
-    spark: SparkSession, store, name: str, meta: dict, predicates=None, pins: dict | None = None
-) -> DataFrame:
-    # segments already folded into the base (recorded on its commit at
-    # compaction time) are skipped: the authority for "which segments
-    # exist" is the meta carrier, the authority for "which are already
-    # inside the base" is the base itself — so a crash between the two
-    # compaction commits never double-counts an entry
-    #
-    # `predicates` (read_skipping triples on the `value` column) prune
-    # each part's FILES through its footer-stats manifest before the
-    # tombstone anti-join — filtering by value and hiding ids both only
-    # DROP rows, so the order commutes and a pruned probe is exactly
-    # `entries.where(pred)`
-    #
-    # `pins` (a _pin_snapshot dict) pins every read — base version, base
-    # commit meta, segment versions, tombstone sidecar — to the versions
-    # resolved at load time: without it a probe would re-resolve CURRENT
-    # state, so a tombstone written after load would silently drop rows
-    # from probe results, and a compaction racing the probe's
-    # commit_meta/read pair could union a freshly-folded segment into the
-    # new base's copy — duplicated entries.  None = current state (the
-    # extend/compact maintenance paths, which WANT the live view).
-    from scalligraph_spark.operators.tombstones import anti_tombstone, read_tombstones, seg_no
-
-    def _ver(label: str) -> int | None:
-        if pins is None:
-            return None
-        if label == name:
-            return int(pins["base_version"])
-        return pins["seg_versions"].get(label)
-
-    def _part(label: str) -> DataFrame:
-        if predicates is None:
-            return store.read(spark, label, _ver(label))
-        return store.read_skipping(spark, label, predicates, version=_ver(label))
-
-    base_meta = store.commit_meta(name, _ver(name))
-    folded = set(base_meta.get("folded_segments", []))
-    tombs = read_tombstones(
-        spark, store, name, version=None if pins is None else int(pins["tomb_version"])
-    )
-    entries = anti_tombstone(_part(name), int(base_meta.get("base_seq", 0)), tombs, "id")
-    for seg in meta.get("segments", []):
-        if seg in folded:
-            continue
-        entries = entries.unionByName(anti_tombstone(_part(seg), seg_no(seg), tombs, "id"))
-    return entries
+def _compact(spark, store, name: str, meta: dict, data: dict, tombstoned: bool) -> dict:
+    # tombstoned entries drop out of the merged read: recount
+    return {"n_rows": int(data[""].count())} if tombstoned else {}
 
 
 def load_value_index(
@@ -398,24 +200,15 @@ def load_value_index(
     label has advanced past the indexed version, a
     :class:`StaleValueIndexWarning` fires."""
     meta = _index_meta(store, name)
-    if (
-        corpus_store is not None
-        and "corpus_label" in meta
-        and int(corpus_store.version(meta["corpus_label"])) != int(meta["corpus_version"])
-    ):
-        warnings.warn(
-            f"value index {name!r} was built on {meta['corpus_label']!r} "
-            f"v{meta['corpus_version']}, but the corpus is now "
-            f"v{corpus_store.version(meta['corpus_label'])} — lookups miss newer "
-            "rows; extend_value_index or reindex_values",
-            StaleValueIndexWarning,
-            stacklevel=2,
-        )
-    pins = _pin_snapshot(store, name, meta)
+    segments.warn_if_stale(
+        FAMILY, name, meta, corpus_store, StaleValueIndexWarning,
+        "lookups miss newer rows; extend_value_index or reindex_values",
+    )
+    pins = segments.pin(store, FAMILY, name, meta)
     return ValueIndex(
         version=int(store.version(name)),
         meta=dict(meta),
-        entries=_load_entries(spark, store, name, meta, pins=pins),
+        entries=segments.read_part(spark, store, FAMILY, name, meta, pins=pins),
         spark=spark,
         store=store,
         name=name,
@@ -424,19 +217,15 @@ def load_value_index(
 
 
 def _probe(index: ValueIndex, predicates: list) -> DataFrame:
-    """A probe plan for the index: manifest-pruned per part when the
-    loader attached provenance (lookup cost ∝ matched FILES), else the
-    identical filter over the already-built entries union (hand-built
-    ValueIndex instances, older artifacts) — results equal either way,
-    the residual predicate always re-applies inside read_skipping, and
-    the pruned plan reads the PINNED load-time versions (``index.pins``)
-    so post-load tombstones/compactions never shift probe results."""
+    """A probe plan: manifest-pruned over the pinned versions when the
+    loader attached provenance, else the same filter over the entries
+    (hand-built ValueIndex instances) — equal results either way."""
     if index.spark is None or index.store is None or index.name is None:
         from scalligraph_spark.store import _predicates_column
 
         return index.entries.where(_predicates_column(predicates))
-    return _load_entries(
-        index.spark, index.store, index.name, index.meta,
+    return segments.read_part(
+        index.spark, index.store, FAMILY, index.name, index.meta,
         predicates=predicates, pins=index.pins,
     )
 
@@ -496,26 +285,32 @@ def reindex_values(
     corpus_store,
 ) -> int:
     """Rebuild against the CURRENT corpus version with the parameters
-    recorded in the artifact's own meta (the ``ReindexData`` /
-    ``JanusDatabase.reindex`` discipline) — a new version; pinned readers
-    are undisturbed; the staleness warning clears; every delta segment is
-    subsumed."""
+    recorded in the index's own meta (the ``JanusDatabase.reindex``
+    discipline): a new version, pinned readers undisturbed, every
+    segment and tombstone subsumed."""
     meta = _index_meta(store, name)
     if "corpus_label" not in meta:
         raise ValueError(
             f"value index {name!r} records no source corpus; rebuild it with "
             "build_value_index(..., corpus_store=, corpus_label=) instead"
         )
-    df = corpus_store.read(spark, meta["corpus_label"])
     return build_value_index(
-        spark,
-        store,
-        name,
-        df,
-        value_col=meta["value_col"],
-        id_col=meta["id_col"],
-        sort_files=int(meta.get("sort_files", 8)),
-        unique=bool(meta.get("unique", False)),
-        corpus_store=corpus_store,
-        corpus_label=meta["corpus_label"],
+        spark, store, name, corpus_store.read(spark, meta["corpus_label"]),
+        value_col=meta["value_col"], id_col=meta["id_col"],
+        sort_files=int(meta["sort_files"]), unique=bool(meta["unique"]),
+        corpus_store=corpus_store, corpus_label=meta["corpus_label"],
     )
+
+
+FAMILY = segments.Family(
+    what="value index",
+    record="composite_value",
+    parts={"": "id"},
+    sort={"": "value"},
+    files=("sort_files", 8),
+    # per-file value ranges: lookups prune FILES driver-side
+    stats_cols={"": ["value"]},
+    extend=_extend,
+    compact=_compact,
+    reindex=reindex_values,
+)

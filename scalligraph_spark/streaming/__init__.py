@@ -455,11 +455,11 @@ def start_neardup_sink(
     Returns the started StreamingQuery (caller awaits/stops)."""
     from scalligraph_spark.operators.dedup import minhash_lsh_pairs
     from scalligraph_spark.operators.dedup_index import (
-        _meta,
         build_minhash_index,
         extend_minhash_index,
         incremental_near_dups,
     )
+    from scalligraph_spark.operators.segments import read_meta
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -468,7 +468,7 @@ def start_neardup_sink(
             cur_v > 0 and store.commit_meta(corpus_label, cur_v).get("batch_id", -1) >= batch_id
         )
         have_index = store.version(index_name) > 0
-        index_done = have_index and _meta(store, index_name).get("batch_id", -1) >= batch_id
+        index_done = have_index and read_meta(store, index_name).get("batch_id", -1) >= batch_id
         if corpus_done and index_done:
             return  # replayed batch — both artifacts already committed
         batch = batch_df
@@ -738,7 +738,7 @@ def start_index_maintenance_sink(
     (JanusDatabase.scala:304-434): declared indexes stay fresh without an
     operator watching ``StaleAnnIndexWarning`` by hand.
 
-    Maintenance is kind-aware (read from the artifact's own commit meta):
+    Maintenance is kind-aware (read from the index record):
 
     * ``bm25_inverted`` text indexes EXTEND incrementally — every batch
       folds in as a delta segment (:func:`extend_text_index`, cost ∝
@@ -775,11 +775,14 @@ def start_index_maintenance_sink(
         catchup_ann_cells,
         catchup_text_index,
     )
-    from scalligraph_spark.operators.text_index import (
-        _index_meta,
-        compact_text_index,
-        extend_text_index,
-    )
+    from scalligraph_spark.operators.segments import read_meta
+    from scalligraph_spark.operators.text_index import compact_text_index, extend_text_index
+
+    def _index_meta() -> dict:
+        # text indexes and IVF indexes with stored lists keep their record
+        # on the segmented-index carrier; other ANN artifacts on their
+        # own commit
+        return read_meta(store, index_name) or store.commit_meta(index_name)
 
     def _heal(spark) -> None:
         """Replayed batch after a crash between corpus commit and
@@ -793,7 +796,7 @@ def start_index_maintenance_sink(
         than raise inside foreachBatch and crash-loop the query."""
         from scalligraph_spark.operators.index_catchup import IndexCatchupError
 
-        ix_meta = _index_meta(store, index_name)
+        ix_meta = _index_meta()
         if ix_meta.get("corpus_version") is None:
             return
         catchup = (
@@ -831,7 +834,7 @@ def start_index_maintenance_sink(
         # (the heal then passes the index meta's key to the diff fallback).
         from scalligraph_spark.cdf import capture_append
 
-        ix_meta = _index_meta(store, index_name)
+        ix_meta = _index_meta()
         key = id_col or str(ix_meta.get("id_col") or "") or next(
             (c for c in ("doc_id", "vec_id") if c in batch_df.columns), None
         )
@@ -856,8 +859,8 @@ def start_index_maintenance_sink(
         if ix_meta.get("kind") == "bm25_inverted":
             # incremental: the batch is exactly the appended documents
             extend_text_index(spark, store, index_name, batch_df, corpus_store=store)
-            m = _index_meta(store, index_name)
-            base = int(m.get("base_n_docs", m["n_docs"]) or 0)
+            m = _index_meta()
+            base = int(m["base_n_docs"] or 0)
             if base and (int(m["n_docs"]) - base) / base >= rebuild_growth:
                 compact_text_index(spark, store, index_name)
             return

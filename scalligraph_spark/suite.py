@@ -2703,7 +2703,7 @@ def _export_replay_df(df, dest: str) -> None:
 
 def _export_replay_centroids(C, dest: str) -> None:
     """Write a (k, dim) centroid matrix as a replay parquet (cell,
-    centroid) — the same rows _centroids_to_df commits, driver-side.
+    centroid) — the same rows build_ivf_index commits, driver-side.
     No-op outside the oracle sf."""
     import os as _os
     import shutil as _shutil
@@ -6388,7 +6388,7 @@ def maintain_indexes_fleet_q(spark, sf):
         load_value_index,
         maintain_indexes,
     )
-    from scalligraph_spark.operators.dedup_index import _meta as _mh_meta
+    from scalligraph_spark.operators.segments import read_meta
 
     # timed subject: ONE fleet sweep catching three stale indexes up at
     # churn cost (the claim with a number attached).  The corpus commits +
@@ -6405,7 +6405,7 @@ def maintain_indexes_fleet_q(spark, sf):
     assert all(reps[n]["action"] == "extended" for n in ("docs_by_source", "docs_text", "docs_mix")), reps
     head = store.version("documents")
     assert int(load_text_index(spark, store, "docs_text").meta["corpus_version"]) == head
-    assert int(_mh_meta(store, "docs_mix")["corpus_version"]) == head
+    assert int(read_meta(store, "docs_mix")["corpus_version"]) == head
     return load_value_index(spark, store, "docs_by_source").entries
 
 

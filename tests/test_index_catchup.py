@@ -194,7 +194,7 @@ def test_ann_catchup_appends_into_cells(spark, store):
         ivf_search,
         load_ann_index,
     )
-    from scalligraph_spark.operators.ann_index import _read_cells
+    from scalligraph_spark.operators import segments
 
     rng = np.random.RandomState(3)
     dim = 8
@@ -216,12 +216,13 @@ def test_ann_catchup_appends_into_cells(spark, store):
     assert rep["action"] == "extended" and rep["churn"] == {"insert": 3}
     meta = load_ann_index(spark, store, "aix").meta
     assert meta["cells_corpus_version"] == store.version("emb")
-    assert meta["cells_segments"] == ["aix__cells_seg1"]
+    assert meta["segments"] == ["aix__cells_seg1"]
     # appended near-dups are searchable with no retraining
     ids = [r["vec_id"] for r in ivf_search(spark, store, "aix", q, k=4, n_probe=4).collect()]
     assert ids[0] == 5 and set(ids[1:]) == {1000, 1001, 1002}
     # segment rows = 3 vectors × n_list cells
-    assert _read_cells(spark, store, "aix", meta).count() == 64 * 2 + 3 * 2
+    cells = segments.read_part(spark, store, segments.family("ann"), "aix", meta, "cells")
+    assert cells.count() == 64 * 2 + 3 * 2
     assert catchup_ann_cells(spark, store, "aix", store)["action"] == "noop"
 
 
@@ -262,7 +263,6 @@ def test_vacuum_torn_compaction_reclaims_nothing_early(spark, store, monkeypatch
     """A torn compaction's segments are still carrier-listed (the carrier
     commits last) — the sweep must keep them; after the retried
     compaction they become victims."""
-    import scalligraph_spark.operators.value_index as vi
     from scalligraph_spark.operators import (
         compact_value_index,
         extend_value_index,
@@ -274,11 +274,18 @@ def test_vacuum_torn_compaction_reclaims_nothing_early(spark, store, monkeypatch
     build_value_index(spark, store, "by_name", base, "uname", "uid")
     extend_value_index(spark, store, "by_name", _people(spark, [(1, "bob", 20)]))
 
-    real = vi._write_meta
-    monkeypatch.setattr(vi, "_write_meta", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom")))
+    # crash between the merged-base commit and the carrier commit
+    real = store.write
+
+    def crashing(label, df, **kw):
+        if label == "by_name__meta":
+            raise RuntimeError("boom")
+        return real(label, df, **kw)
+
+    monkeypatch.setattr(store, "write", crashing)
     with pytest.raises(RuntimeError):
         compact_value_index(spark, store, "by_name")
-    monkeypatch.setattr(vi, "_write_meta", real)
+    monkeypatch.setattr(store, "write", real)
 
     assert vacuum_index_segments(spark, store, "by_name", kind="value") == []
     assert store.version("by_name__seg1") > 0
@@ -362,31 +369,6 @@ def test_extend_as_of_version_pins_not_head(spark, store):
     rep = catchup_value_index(spark, store, "by_name", store)
     assert rep["action"] == "extended" and rep["churn"] == {"insert": 1}
     got = sorted(tuple(r) for r in load_value_index(spark, store, "by_name").entries.collect())
-    assert got == [("alice", 0), ("bob", 1), ("carol", 2)]
-
-
-def test_legacy_meta_compaction_does_not_reuse_folded_labels(spark, store):
-    """Migration hole regression: an index whose meta PREDATES seg_seq
-    (simulated by stripping the key) that is compacted by the new code
-    must still hand the next extend a FRESH segment name — otherwise the
-    folded marker makes the reader skip the new batch forever."""
-    import scalligraph_spark.operators.value_index as vi
-    from scalligraph_spark.operators import compact_value_index, extend_value_index
-
-    base = _people(spark, [(0, "alice", 10)])
-    store.write("people", base)
-    build_value_index(spark, store, "by_name", base, "uname", "uid")
-    extend_value_index(spark, store, "by_name", _people(spark, [(1, "bob", 20)]))
-    # simulate a pre-upgrade artifact: meta without the seg_seq watermark
-    meta = vi._index_meta(store, "by_name")
-    meta.pop("seg_seq", None)
-    vi._write_meta(spark, store, "by_name", meta)
-
-    compact_value_index(spark, store, "by_name")
-    extend_value_index(spark, store, "by_name", _people(spark, [(2, "carol", 30)]))
-    ix = load_value_index(spark, store, "by_name")
-    assert ix.meta["segments"] == ["by_name__seg2"], "must not reuse folded by_name__seg1"
-    got = sorted(tuple(r) for r in ix.entries.collect())
     assert got == [("alice", 0), ("bob", 1), ("carol", 2)]
 
 

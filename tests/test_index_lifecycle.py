@@ -1,0 +1,174 @@
+"""Crash windows of the segmented-index lifecycle, for every family.
+
+For each ``store.write`` that an extend, a tombstone catch-up or a
+compaction issues, the i-th write raises.  Then:
+
+* readers see exactly the state before the operation or after it —
+  nothing duplicated, nothing lost, no half-applied delete;
+* re-running the operation converges to the no-crash state;
+* the next extend mints a sequence number above every one a published
+  record or a base has used, onto a label nothing has written — both
+  right after the crash and after the re-run.
+"""
+
+from __future__ import annotations
+
+import shutil
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+import pytest
+from index_families import CATCHUP, COMPACT, EXTEND, KEY, KINDS, build, rows, state
+
+from scalligraph_spark.cdf import write_with_cdf
+from scalligraph_spark.operators import segments
+from scalligraph_spark.store import LabelStore
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _ops(spark, kind):
+    return {
+        "extend": lambda st: EXTEND[kind](spark, st, "ix", rows(spark, kind, [20, 21])),
+        "catchup": lambda st: CATCHUP[kind](spark, st, "ix", st, on_mutation="tombstone"),
+        "compact": lambda st: COMPACT[kind](spark, st, "ix"),
+    }
+
+
+def _stages(spark, root, kind) -> list:
+    """Setup steps, each returning (operation, store copy taken right
+    before it): v1 = ids 0-5; v2 updates id 1, deletes id 2 and inserts
+    id 6; the compaction folds the catch-up's segment with its tombstones
+    live."""
+    key = KEY[kind]
+    st = LabelStore(f"{root}/base")
+
+    def snap(op):
+        return op, shutil.copytree(st.root, f"{root}/{op}")
+
+    def v1():
+        st.write("corpus", rows(spark, kind, range(6)))
+        build(spark, st, kind, "ix", "corpus")
+        return snap("extend")
+
+    def v2():
+        v2 = (st.read(spark, "corpus").where(f"{key} not in (1, 2)")
+              .unionByName(rows(spark, kind, [1], variant=1)).unionByName(rows(spark, kind, [6])))
+        write_with_cdf(st, "corpus", v2, [key])
+        return snap("catchup")
+
+    def caught_up():
+        _ops(spark, kind)["catchup"](st)
+        return snap("compact")
+
+    return [v1, v2, caught_up]
+
+
+def _used_seqs(store, kind):
+    """Highest sequence number any published record or base has used."""
+    fam = segments.family(kind)
+    seqs = [store.commit_meta("ix__meta", v).get("seq", 0) for v in store.history("ix__meta")]
+    for part in fam.parts:
+        lbl = segments.label("ix", part)
+        seqs += [store.commit_meta(lbl, v).get("base_seq", 0) for v in store.history(lbl)]
+    return max(seqs)
+
+
+def _assert_next_seq_unused(store, kind, settled=True):
+    """The seq the next extend mints (published counter + 1) is above
+    every seq a published record or a base used; once the operation has
+    completed, no label for it was ever written either (a crashed extend
+    leaves its unpublished segment for the re-run to overwrite)."""
+    seq = int(segments.read_meta(store, "ix")["seq"]) + 1
+    assert seq > _used_seqs(store, kind), f"next extend would reuse seq {seq}"
+    fam = segments.family(kind)
+    assert not settled or not any(store.history(segments.label("ix", p, seq)) for p in fam.parts), (
+        f"next extend would overwrite an earlier write at seq {seq}")
+
+
+def _clean(spark, kind, op_name, snapshot) -> dict:
+    """The no-crash run: the labels it writes and the states to compare.
+    Whatever it mints (an extend's segment, a catch-up's tombstone and
+    re-insert) must lie above every seq used before it."""
+    st = LabelStore(shutil.copytree(snapshot, f"{snapshot}_clean"))
+    pre, used = state(spark, st, kind, "ix"), _used_seqs(st, kind)
+    calls = []
+    real = st.write
+    st.write = lambda *a, **k: (calls.append(a[0]), real(*a, **k))[1]
+    _ops(spark, kind)[op_name](st)
+    st.write = real
+    assert calls, "the operation wrote nothing"
+    meta = segments.read_meta(st, "ix")
+    assert all(k > used for k in segments.live_seqs(meta)) and (
+        meta["seq"] > used or op_name == "compact"), "the operation reused a sequence number"
+    _assert_next_seq_unused(st, kind)
+    return {"calls": calls, "pre": pre, "post": state(spark, st, kind, "ix")}
+
+
+def _crash_at(spark, kind, op_name, snapshot, clean, i) -> None:
+    st = LabelStore(shutil.copytree(snapshot, f"{snapshot}_crash{i}"))
+    op = _ops(spark, kind)[op_name]
+    real = st.write
+    n = [0]
+
+    def crashing(*a, **k):
+        n[0] += 1
+        if n[0] == i + 1:
+            raise Crash(f"crash at write {i} ({a[0]})")
+        return real(*a, **k)
+
+    st.write = crashing
+    with pytest.raises(Crash):
+        op(st)
+    st.write = real
+    assert state(spark, st, kind, "ix") in (clean["pre"], clean["post"]), "torn state visible"
+    _assert_next_seq_unused(st, kind, settled=False)
+    op(st)
+    assert state(spark, st, kind, "ix") == clean["post"], "re-run diverged"
+    _assert_next_seq_unused(st, kind)
+
+
+@pytest.fixture(scope="module")
+def failures(spark, tmp_path_factory):
+    """Every crash point of every family, run once.  Setup steps, no-crash
+    runs and crash points are independent store copies, so each starts as
+    soon as what it needs exists and their small Spark jobs overlap."""
+    root = tmp_path_factory.mktemp("lifecycle")
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # a handful of rows per table
+    stages = {k: _stages(spark, root / k, k) for k in KINDS}
+    out = {k: [] for k in KINDS}
+
+    def point(k, op, snapshot, clean, i):
+        try:
+            _crash_at(spark, k, op, snapshot, clean, i)
+        except Exception as e:
+            out[k].append(f"{op}: crash at write {i} ({clean['calls'][i]}): {e}")
+
+    try:
+        with ThreadPoolExecutor(max_workers=12) as pool:
+            todo = {pool.submit(stages[k][0]): ("stage", k, 0) for k in KINDS}
+            while todo:
+                done, _ = wait(todo, return_when=FIRST_COMPLETED)
+                for f in done:
+                    tag, result = todo.pop(f), f.result()
+                    if tag[0] == "stage":
+                        _, k, n = tag
+                        op, snapshot = result
+                        todo[pool.submit(_clean, spark, k, op, snapshot)] = ("clean", k, op, snapshot)
+                        if n + 1 < len(stages[k]):
+                            todo[pool.submit(stages[k][n + 1])] = ("stage", k, n + 1)
+                    elif tag[0] == "clean":
+                        _, k, op, snapshot = tag
+                        clean = result
+                        for i in range(len(clean["calls"])):
+                            todo[pool.submit(point, k, op, snapshot, clean, i)] = ("point",)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
+    return out
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_crash_windows(failures, kind):
+    assert failures[kind] == []

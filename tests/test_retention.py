@@ -16,22 +16,16 @@ import time
 
 import pytest
 
+from index_families import COMPACT, EXTEND, KEY, KINDS, build, query, rows
+
 from scalligraph_spark.cdf import write_with_cdf
 from scalligraph_spark.operators import (
-    build_minhash_index,
-    build_text_index,
     build_value_index,
-    compact_minhash_index,
-    compact_text_index,
     compact_value_index,
-    extend_minhash_index,
-    extend_text_index,
     extend_value_index,
-    incremental_near_dups,
-    indexed_bm25_topk,
-    load_text_index,
     load_value_index,
     maintain_indexes,
+    segments,
     vacuum_index_segments,
 )
 from scalligraph_spark.store import LabelStore
@@ -121,102 +115,34 @@ def test_vacuum_mor_retention(spark, store):
 
 
 def _age_family(store, name, kind, seconds):
-    bases = {
-        "value": [name],
-        "text": [name],
-        "ann": [f"{name}__cells"],
-        "minhash": [name, f"{name}__bands", f"{name}__bucket_stats"],
-    }[kind]
-    for lbl in bases:
-        if store.version(lbl) > 0:
-            _age(store, lbl, seconds)
+    for part in segments.family(kind).parts:
+        _age(store, segments.label(name, part), seconds)
 
 
-def test_value_index_retention_pinned_reader_survives(spark, store):
-    base = _people(spark, [(0, "alice", 10), (1, "bob", 20)])
-    store.write("people", base)
-    build_value_index(spark, store, "by_name", base, "uname", "uid")
-    extend_value_index(spark, store, "by_name", _people(spark, [(2, "carol", 30)]))
-    pinned = load_value_index(spark, store, "by_name").entries  # unions base + seg1
-    want = sorted(tuple(r) for r in pinned.collect())
-    compact_value_index(spark, store, "by_name")
+@pytest.mark.parametrize("kind", KINDS)
+def test_index_retention(spark, store, kind):
+    """A plan pinned before compaction keeps answering through an
+    in-window sweep; once the folding base commit ages past the window
+    the segment of every part reclaims, answers unchanged."""
+    fam = segments.family(kind)
+    write_with_cdf(store, "corpus", rows(spark, kind, range(6)), [KEY[kind]])
+    build(spark, store, kind, "ix", "corpus")
+    EXTEND[kind](spark, store, "ix", rows(spark, kind, [10]))
+    meta = segments.read_meta(store, "ix")
+    primary = next(iter(fam.parts))
+    pinned = segments.read_part(spark, store, fam, "ix", meta, primary)  # unions base + seg1
+    want_rows = sorted(repr(tuple(r)) for r in pinned.collect())
+    want = query(spark, store, kind, "ix")
+    COMPACT[kind](spark, store, "ix")
 
-    assert vacuum_index_segments(spark, store, "by_name", "value", retention_seconds=3600) == []
-    assert store.version("by_name__seg1") > 0
-    assert sorted(tuple(r) for r in pinned.collect()) == want, "pinned plan must still answer"
+    assert vacuum_index_segments(spark, store, "ix", kind, retention_seconds=3600) == []
+    assert store.version(segments.label("ix", primary, 1)) > 0
+    assert sorted(repr(tuple(r)) for r in pinned.collect()) == want_rows, "pinned plan must still answer"
 
-    _age_family(store, "by_name", "value", 7200)
-    assert vacuum_index_segments(
-        spark, store, "by_name", "value", retention_seconds=3600
-    ) == ["by_name__seg1"]
-    got = sorted(tuple(r) for r in load_value_index(spark, store, "by_name").entries.collect())
-    assert got == want
-
-
-def test_text_index_retention(spark, store):
-    docs = _docs(spark, [(1, "quick brown fox"), (2, "lazy dog")])
-    store.write("docs", docs)
-    build_text_index(store, "tix", docs)
-    extend_text_index(spark, store, "tix", _docs(spark, [(3, "spark spark spark")]))
-    compact_text_index(spark, store, "tix")
-    want = sorted(tuple(r) for r in indexed_bm25_topk(load_text_index(spark, store, "tix"), ["spark"]).collect())
-
-    assert vacuum_index_segments(spark, store, "tix", "text", retention_seconds=3600) == []
-    assert store.version("tix__seg1") > 0
-    _age_family(store, "tix", "text", 7200)
-    assert vacuum_index_segments(spark, store, "tix", "text", retention_seconds=3600) == ["tix__seg1"]
-    got = sorted(tuple(r) for r in indexed_bm25_topk(load_text_index(spark, store, "tix"), ["spark"]).collect())
-    assert got == want
-
-
-def test_minhash_index_retention(spark, store):
-    docs = _docs(spark, [(1, "the quick brown fox jumps over the lazy dog again"),
-                         (2, "different words entirely here")])
-    store.write("docs", docs)
-    build_minhash_index(spark, store, "mix", docs)
-    extend_minhash_index(spark, store, "mix", _docs(spark, [(3, "totally fresh sentence about segments")]))
-    compact_minhash_index(spark, store, "mix")
-    probe = _docs(spark, [(300, "totally fresh sentence about a segment")])
-    want = sorted(tuple(r) for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.4).collect())
-
-    assert vacuum_index_segments(spark, store, "mix", "minhash", retention_seconds=3600) == []
-    assert store.version("mix__seg1") > 0
-    _age_family(store, "mix", "minhash", 7200)
-    victims = vacuum_index_segments(spark, store, "mix", "minhash", retention_seconds=3600)
-    assert set(victims) == {"mix__seg1", "mix__bands_seg1", "mix__bucket_stats_seg1"}
-    got = sorted(tuple(r) for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.4).collect())
-    assert got == want
-
-
-def test_ann_index_retention(spark, store):
-    import numpy as np
-
-    from scalligraph_spark.operators import build_ivf_index, ivf_search
-    from scalligraph_spark.operators.ann_index import compact_ann_cells, extend_ann_cells
-
-    rng = np.random.RandomState(7)
-    dim = 8
-    base = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(dim)]) for i in range(64)],
-        "vec_id long, embedding array<double>")
-    store.write("emb", base)
-    build_ivf_index(store, "aix", base, n_centroids=4, store_cells=True, cells_n_list=2)
-    more = spark.createDataFrame(
-        [(100 + i, [float(x) for x in rng.randn(dim)]) for i in range(4)],
-        "vec_id long, embedding array<double>")
-    extend_ann_cells(spark, store, "aix", more)
-    compact_ann_cells(spark, store, "aix")
-    q = np.asarray(base.where("vec_id = 5").first()["embedding"], dtype=np.float64)
-    want = [r["vec_id"] for r in ivf_search(spark, store, "aix", q, k=4, n_probe=4).collect()]
-
-    assert vacuum_index_segments(spark, store, "aix", "ann", retention_seconds=3600) == []
-    assert store.version("aix__cells_seg1") > 0
-    _age_family(store, "aix", "ann", 7200)
-    assert vacuum_index_segments(
-        spark, store, "aix", "ann", retention_seconds=3600
-    ) == ["aix__cells_seg1"]
-    got = [r["vec_id"] for r in ivf_search(spark, store, "aix", q, k=4, n_probe=4).collect()]
-    assert got == want
+    _age_family(store, "ix", kind, 7200)
+    victims = vacuum_index_segments(spark, store, "ix", kind, retention_seconds=3600)
+    assert victims == sorted(segments.label("ix", p, 1) for p in fam.parts)
+    assert query(spark, store, kind, "ix") == want
 
 
 # --- fleet + transport threading ------------------------------------------------
@@ -319,18 +245,18 @@ def test_retention_rejects_nan_and_negative(spark, store):
 
 def test_segment_vacuum_watermark_fallback_after_base_history_vacuum(spark, store):
     """ADVICE r11: once store.vacuum trims base history past the version
-    whose folded_segments record covered a victim, the victim must NOT
-    leak forever — any retained base whose base_seq watermark covers the
-    segment id proves it was de-listed at or before that base's commit,
-    so the oldest such stamp gates it (upper bound: delays reclaim,
-    never endangers a reader)."""
+    that first folded a victim, the victim must NOT leak forever — any
+    retained base whose base_seq watermark covers the segment id proves
+    it was folded at or before that base's commit, so the oldest such
+    stamp gates it (upper bound: delays reclaim, never endangers a
+    reader)."""
     base = _people(spark, [(0, "alice", 10), (1, "bob", 20)])
     build_value_index(spark, store, "by_name", base, "uname", "uid")
     extend_value_index(spark, store, "by_name", _people(spark, [(2, "carol", 30)]))
     compact_value_index(spark, store, "by_name")  # by_name v2: folded seg1
     extend_value_index(spark, store, "by_name", _people(spark, [(3, "dave", 40)]))
     compact_value_index(spark, store, "by_name")  # by_name v3: folded seg2
-    # base-history vacuum drops v1+v2 — seg1's folded_segments record gone
+    # base-history vacuum drops v1+v2 — the commit that folded seg1 is gone
     store.vacuum("by_name", keep=1)
     assert store.history("by_name") == [3]
     for v in store.history("by_name"):
@@ -346,9 +272,9 @@ def test_segment_vacuum_watermark_fallback_after_base_history_vacuum(spark, stor
 
 
 def test_segment_vacuum_reindex_subsumption_reclaims(spark, store):
-    """A reindex rebuild subsumes every live segment WITHOUT a
-    folded_segments record (build commits segments=[]); the base_seq
-    watermark fallback must still reclaim them once the rebuild ages."""
+    """A reindex rebuild subsumes every live segment (build commits
+    segments=[]); its base_seq watermark must reclaim them once the
+    rebuild ages."""
     corpus = LabelStore(store.root + "_corpus")
     base = _people(spark, [(0, "alice", 10), (1, "bob", 20)])
     corpus.write("people", base)

@@ -772,7 +772,7 @@ def test_index_maintenance_sink_extends_ivf_cells(spark, tmp_path):
     )
     q.awaitTermination()
     meta = load_ann_index(spark, store, "emb_ix").meta
-    assert meta["cells_segments"] == ["emb_ix__cells_seg1"]  # no retrain
+    assert meta["segments"] == ["emb_ix__cells_seg1"]  # no retrain
     got = ivf_search(spark, store, "emb_ix", [float(104 % 7), float(104 % 5), 1.0],
                      k=3, n_probe=4).collect()
     assert 104 in {r["vec_id"] for r in got}  # streamed vector found
@@ -784,7 +784,7 @@ def test_neardup_sink_gates_batches_and_extends_index(spark, tmp_path):
     2 (stream restart, same checkpoint) is probed against the INDEX —
     near-dups of held docs rejected, novel docs kept and folded in as a
     delta segment."""
-    from scalligraph_spark.operators.dedup_index import _meta
+    from scalligraph_spark.operators.segments import read_meta
     from scalligraph_spark.store import LabelStore
     from scalligraph_spark.streaming import start_neardup_sink
 
@@ -807,8 +807,8 @@ def test_neardup_sink_gates_batches_and_extends_index(spark, tmp_path):
     )
     q.awaitTermination()
     assert {r["doc_id"] for r in store.read(spark, "corpus").collect()} == {1, 3}
-    m = _meta(store, "corpus_mh")
-    assert m["segments"] == 0 and m["batch_id"] == 0  # bootstrapped from survivors
+    m = read_meta(store, "corpus_mh")
+    assert m["segments"] == [] and m["batch_id"] == 0  # bootstrapped from survivors
 
     b2 = spark.createDataFrame(
         [
@@ -825,8 +825,8 @@ def test_neardup_sink_gates_batches_and_extends_index(spark, tmp_path):
     )
     q2.awaitTermination()
     assert {r["doc_id"] for r in store.read(spark, "corpus").collect()} == {1, 3, 11}
-    m = _meta(store, "corpus_mh")
-    assert m["segments"] == 1 and m["batch_id"] == 1  # survivors folded in
+    m = read_meta(store, "corpus_mh")
+    assert len(m["segments"]) == 1 and m["batch_id"] == 1  # survivors folded in
 
     # the survivor from batch 2 is now probeable: a third near-dup of 11
     # would be rejected — verify via a direct probe

@@ -268,61 +268,3 @@ def test_extend_clears_staleness_and_term_pushdown_survives_segments(spark, tmp_
     plan = buf.getvalue()
     # both the base scan and the segment scan carry the pushed In filter
     assert plan.count("In(term, [appended,spark])") >= 2
-
-
-def test_text_compaction_crash_window_loses_and_duplicates_nothing(spark, store, monkeypatch):
-    """Torn text-index compaction: the merged postings base now commits
-    FIRST (recording the segments it folded), the terms/meta carrier
-    second.  The old carrier-first ordering had a silent-LOSS window — a
-    crash after ``segments=[]`` committed but before the postings rewrite
-    made every folded segment's documents unsearchable.  After a crash
-    between the two commits, searches must stay bit-identical, a fresh
-    extend must mint a never-used segment name, and a retried compaction
-    must converge."""
-    import scalligraph_spark.operators.text_index as ti
-    from scalligraph_spark.operators import compact_text_index, extend_text_index
-
-    docs0 = _corpus(spark)
-    batch = spark.createDataFrame(
-        [(10, "spark window inside a window"), (11, "brand new table merge")],
-        "doc_id long, text string",
-    )
-    build_text_index(store, "ix", docs0)
-    extend_text_index(spark, store, "ix", batch)
-    want_post = sorted(tuple(r) for r in load_text_index(spark, store, "ix").postings.collect())
-    want_hits = sorted(
-        tuple(r) for r in indexed_bm25_topk(load_text_index(spark, store, "ix"), ["spark", "window"]).collect()
-    )
-
-    # crash between the postings-base commit and the terms-carrier commit
-    real_write = store.write
-    def crashing(label, df, **kw):
-        if label == "ix__terms":
-            raise RuntimeError("simulated crash")
-        return real_write(label, df, **kw)
-    monkeypatch.setattr(store, "write", crashing)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_text_index(spark, store, "ix")
-    monkeypatch.setattr(store, "write", real_write)
-
-    ix = load_text_index(spark, store, "ix")
-    assert ix.meta["segments"] == ["ix__seg1"]  # carrier never updated
-    got_post = sorted(tuple(r) for r in ix.postings.collect())
-    assert got_post == want_post, "torn compaction must neither lose nor duplicate postings"
-    got_hits = sorted(tuple(r) for r in indexed_bm25_topk(ix, ["spark", "window"]).collect())
-    assert got_hits == want_hits
-
-    # post-crash extend mints seg2 (never reuses the folded seg1)
-    extend_text_index(spark, store, "ix", spark.createDataFrame(
-        [(20, "fox jumps over spark")], "doc_id long, text string"))
-    ix = load_text_index(spark, store, "ix")
-    assert ix.meta["segments"] == ["ix__seg1", "ix__seg2"]
-    rows = [tuple(r) for r in ix.postings.collect()]
-    assert sorted(rows) == sorted(set(rows)) and ix.n_docs == 9
-
-    # retried compaction converges to one base, answers preserved
-    compact_text_index(spark, store, "ix")
-    ix = load_text_index(spark, store, "ix")
-    assert ix.meta["segments"] == [] and ix.n_docs == 9
-    final = [tuple(r) for r in ix.postings.collect()]
-    assert sorted(final) == sorted(set(final)) and len(final) == len(rows)

@@ -9,22 +9,20 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from index_families import CATCHUP, COMPACT, KEY, KINDS, build, content, query, rows
+
 from scalligraph_spark.cdf import write_with_cdf
 from scalligraph_spark.operators import (
     build_minhash_index,
-    build_text_index,
     build_value_index,
     catchup_minhash_index,
-    catchup_text_index,
     catchup_value_index,
-    compact_text_index,
     compact_value_index,
     incremental_near_dups,
-    indexed_bm25_topk,
-    load_text_index,
     load_value_index,
     vacuum_index_segments,
 )
+from scalligraph_spark.operators import segments
 from scalligraph_spark.operators.tombstones import (
     TOMB_SEQ,
     read_tombstones,
@@ -70,26 +68,42 @@ def _entries(spark, store, name):
 WANT_AFTER_CHURN = [("alice", 0), ("dave", 3), ("erin", 4), ("fred", 5), ("robert", 1)]
 
 
-def test_value_tombstone_catchup_equals_rebuild(spark, store):
-    _mixed_churn(spark, store)
-    rep = catchup_value_index(spark, store, "by_name", store, on_mutation="tombstone")
+@pytest.mark.parametrize("kind", KINDS)
+def test_tombstone_catchup_matches_rebuild(spark, store, kind):
+    """Update id 1, delete id 2, insert id 6, then catch up with
+    on_mutation='tombstone': every family answers like a rebuild on the
+    new corpus, before compaction (indexed rows) and after it (stats and
+    query answers too), and the retention sweep reclaims the folded
+    segment and the tombstones."""
+    key = KEY[kind]
+    write_with_cdf(store, "corpus", rows(spark, kind, range(6)), [key])
+    build(spark, store, kind, "ix", "corpus")
+    v2 = (store.read(spark, "corpus").where(f"{key} not in (1, 2)")
+          .unionByName(rows(spark, kind, [1], variant=1)).unionByName(rows(spark, kind, [6])))
+    write_with_cdf(store, "corpus", v2, [key])
+    rep = CATCHUP[kind](spark, store, "ix", store, on_mutation="tombstone")
     assert rep["action"] == "tombstoned"
-    assert rep["churn"] == {"insert": 1, "delete": 1,
-                            "update_preimage": 1, "update_postimage": 1}
-    assert _entries(spark, store, "by_name") == WANT_AFTER_CHURN
-    ix = load_value_index(spark, store, "by_name")
-    assert int(ix.meta["corpus_version"]) == store.version("people")
-    # the churn landed as ONE delta segment + a MUTATION-sized tombstone
-    # set: the pure insert (uid=5) never had entries below the tombstone's
-    # seq, so it must NOT bloat the broadcast sidecar (a one-row takedown
-    # beside a 10M-row crawl day tombstones one key).  The tombstone batch
-    # CONSUMED seq 1, so the re-insert segment minted seq 2 — strictly
-    # above its own tombstone.
-    assert ix.meta["segments"] == ["by_name__seg2"]
-    tombs = store.read(spark, tombstone_label("by_name"))
-    assert sorted((r["id"], r[TOMB_SEQ]) for r in tombs.collect()) == [(1, 1), (2, 1)]
-    # a second catch-up is a noop
-    assert catchup_value_index(spark, store, "by_name", store)["action"] == "noop"
+    assert rep["churn"] == {"insert": 1, "delete": 1, "update_preimage": 1, "update_postimage": 1}
+    # a MUTATION-sized sidecar: the pure insert (id 6) had no entries to
+    # hide.  The tombstone batch consumed seq 1, so the re-insert segment
+    # is seq 2 — strictly above its own tombstone.
+    tombs = store.read(spark, tombstone_label("ix"))
+    assert sorted((r[0], r[TOMB_SEQ]) for r in tombs.collect()) == [(1, 1), (2, 1)]
+    fam = segments.family(kind)
+    assert segments.read_meta(store, "ix")["segments"] == [segments.label("ix", next(iter(fam.parts)), 2)]
+    assert CATCHUP[kind](spark, store, "ix", store)["action"] == "noop"
+
+    full = LabelStore(store.root + "_full")
+    full.write("corpus", v2)
+    build(spark, full, kind, "ix", "corpus")
+    assert content(spark, store, kind, "ix") == content(spark, full, kind, "ix")
+    COMPACT[kind](spark, store, "ix")
+    assert content(spark, store, kind, "ix") == content(spark, full, kind, "ix")
+    want = query(spark, full, kind, "ix")
+    assert query(spark, store, kind, "ix") == want
+    victims = vacuum_index_segments(spark, store, "ix", kind)
+    assert {segments.label("ix", p, 2) for p in fam.parts} | {tombstone_label("ix")} <= set(victims)
+    assert query(spark, store, kind, "ix") == want
 
 
 def test_value_tombstone_delete_only_restamps(spark, store):
@@ -221,161 +235,13 @@ def test_reindex_carries_watermark_forward(spark, store):
                    ["uid"])
     reindex_values(spark, store, "by_name", store)
     ix = load_value_index(spark, store, "by_name")
-    assert int(ix.meta["seg_seq"]) == 1, "rebuild must carry the watermark"
+    assert int(ix.meta["seq"]) == 1, "rebuild must carry the watermark"
     extend_value_index(spark, store, "by_name", _people(spark, [(2, "carol", 30)]))
     ix = load_value_index(spark, store, "by_name")
     assert ix.meta["segments"] == ["by_name__seg2"], "must not reuse folded by_name__seg1"
     assert _entries(spark, store, "by_name") == [("alice", 0), ("bob", 1), ("carol", 2)]
     # and the stranded pre-reindex label is still vacuumable
     assert vacuum_index_segments(spark, store, "by_name", kind="value") == ["by_name__seg1"]
-
-
-# --- text index ----------------------------------------------------------------
-
-
-def _text_fixture(spark, store):
-    """v1: 4 docs; v2: update doc 1, delete doc 2, insert doc 10."""
-    docs0 = _docs(spark, [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "spark window functions over parquet tables"),
-        (2, "completely different words about engines"),
-        (3, "bm25 ranks terms by inverse document frequency"),
-    ])
-    write_with_cdf(store, "docs", docs0, ["doc_id"])
-    build_text_index(store, "tix", store.read(spark, "docs"),
-                     corpus_store=store, corpus_label="docs")
-    mutated = (
-        store.read(spark, "docs")
-        .where(F.col("doc_id") != 2)
-        .withColumn("text", F.when(F.col("doc_id") == 1,
-                                   F.lit("rewritten spark text about windows")).otherwise(F.col("text")))
-        .unionByName(_docs(spark, [(10, "a brand new spark document")]))
-    )
-    write_with_cdf(store, "docs", mutated, ["doc_id"])
-
-
-def test_text_tombstone_catchup_matches_rebuild_docsets(spark, store):
-    _text_fixture(spark, store)
-    rep = catchup_text_index(spark, store, "tix", store, on_mutation="tombstone")
-    assert rep["action"] == "tombstoned"
-    full = LabelStore(store.root + "_full")
-    build_text_index(full, "tix", store.read(spark, "docs"))
-    ix, ixf = load_text_index(spark, store, "tix"), load_text_index(spark, full, "tix")
-    # postings are EXACT (tombstones hide the stale doc rows; the update's
-    # new tokens live in the delta segment)
-    assert sorted(tuple(r) for r in ix.postings.collect()) == sorted(
-        tuple(r) for r in ixf.postings.collect())
-    # df/n_docs drift Lucene-style until compaction: search returns the
-    # same DOCUMENTS (scores may differ pre-compaction)
-    got = {r["doc_id"] for r in indexed_bm25_topk(ix, ["spark"]).collect()}
-    want = {r["doc_id"] for r in indexed_bm25_topk(ixf, ["spark"]).collect()}
-    assert got == want and 2 not in got
-    # compaction restores EXACT stats → scores equal too
-    compact_text_index(spark, store, "tix")
-    ix2 = load_text_index(spark, store, "tix")
-    assert (ix2.n_docs, ix2.sum_dl) == (ixf.n_docs, ixf.sum_dl)
-    assert sorted(tuple(r) for r in ix2.terms.collect()) == sorted(
-        tuple(r) for r in ixf.terms.collect())
-    assert sorted(tuple(r) for r in indexed_bm25_topk(ix2, ["spark"]).collect()) == sorted(
-        tuple(r) for r in indexed_bm25_topk(ixf, ["spark"]).collect())
-    # the retention sweep reclaims folded segment + tombstones
-    victims = vacuum_index_segments(spark, store, "tix", kind="text")
-    assert "tix__seg2" in victims and tombstone_label("tix") in victims
-
-
-# --- minhash index ---------------------------------------------------------------
-
-
-def test_minhash_tombstone_catchup_matches_rebuild(spark, store):
-    from scalligraph_spark.operators import compact_minhash_index
-
-    base_txt = "the quick brown fox jumps over the lazy dog again and again today"
-    docs0 = _docs(spark, [(1, base_txt), (2, base_txt.replace("lazy", "sleepy")),
-                          (3, "completely different words about spark engines")])
-    write_with_cdf(store, "docs", docs0, ["doc_id"])
-    build_minhash_index(spark, store, "mix", store.read(spark, "docs"),
-                        corpus_store=store, corpus_label="docs")
-    # delete doc 2 (the near-dup), update doc 3, insert doc 4
-    mutated = (
-        store.read(spark, "docs")
-        .where(F.col("doc_id") != 2)
-        .withColumn("text", F.when(F.col("doc_id") == 3,
-                                   F.lit("changed words about flink engines")).otherwise(F.col("text")))
-        .unionByName(_docs(spark, [(4, base_txt.replace("lazy", "noisy"))]))
-    )
-    write_with_cdf(store, "docs", mutated, ["doc_id"])
-    rep = catchup_minhash_index(spark, store, "mix", store, on_mutation="tombstone")
-    assert rep["action"] == "tombstoned"
-
-    probe = _docs(spark, [(300, base_txt)])
-    full = LabelStore(store.root + "_full")
-    build_minhash_index(spark, full, "mix", store.read(spark, "docs"))
-    got = sorted(tuple(r) for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.5).collect())
-    want = sorted(tuple(r) for r in incremental_near_dups(spark, full, "mix", probe, threshold=0.5).collect())
-    assert got == want
-    ids = {r[1] for r in got}
-    assert 2 not in ids and 4 in ids, "deleted doc dark, re-signed/fresh docs live"
-    # compaction folds; probe still identical; vacuum reclaims everything folded
-    compact_minhash_index(spark, store, "mix")
-    got2 = sorted(tuple(r) for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.5).collect())
-    assert got2 == want
-    victims = vacuum_index_segments(spark, store, "mix", kind="minhash")
-    assert tombstone_label("mix") in victims
-    got3 = sorted(tuple(r) for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.5).collect())
-    assert got3 == want
-
-
-# --- ann cells -------------------------------------------------------------------
-
-
-def test_ann_tombstone_catchup_matches_rebuild(spark, store):
-    import numpy as np
-
-    from scalligraph_spark.operators import (
-        build_ivf_index,
-        catchup_ann_cells,
-        compact_ann_cells,
-        ivf_search,
-    )
-
-    rng = np.random.RandomState(7)
-    dim = 8
-    base = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(dim)]) for i in range(48)],
-        "vec_id long, embedding array<double>")
-    write_with_cdf(store, "emb", base, ["vec_id"])
-    build_ivf_index(store, "aix", store.read(spark, "emb"), n_centroids=4,
-                    store_cells=True, cells_n_list=2,
-                    corpus_store=store, corpus_label="emb")
-    q = np.asarray(base.where("vec_id = 5").first()["embedding"], dtype=np.float64)
-    # delete vec 5's nearest twin-to-be, update vec 7 to BE a twin of q,
-    # insert a fresh twin 1000
-    twin = [float(x) for x in (q + rng.randn(dim) * 0.01)]
-    mutated = (
-        store.read(spark, "emb")
-        .where(F.col("vec_id") != 6)
-        .withColumn("embedding", F.when(F.col("vec_id") == 7,
-                                        F.array(*[F.lit(v) for v in twin])).otherwise(F.col("embedding")))
-        .unionByName(spark.createDataFrame(
-            [(1000, [float(x) for x in (q + rng.randn(dim) * 0.01)])],
-            "vec_id long, embedding array<double>"))
-    )
-    write_with_cdf(store, "emb", mutated, ["vec_id"])
-    rep = catchup_ann_cells(spark, store, "aix", store, on_mutation="tombstone")
-    assert rep["action"] == "tombstoned"
-
-    got = [(r["vec_id"], r["cosine"]) for r in ivf_search(spark, store, "aix", q, k=4, n_probe=4).collect()]
-    ids = [g[0] for g in got]
-    assert ids[0] == 5 and set(ids[1:]) <= {7, 1000, *range(48)} and 6 not in ids
-    assert {7, 1000} <= set(ids), "updated + inserted twins must rank"
-    # compaction folds tombstones; search identical; vacuum reclaims
-    compact_ann_cells(spark, store, "aix")
-    got2 = [(r["vec_id"], r["cosine"]) for r in ivf_search(spark, store, "aix", q, k=4, n_probe=4).collect()]
-    assert got2 == got
-    victims = vacuum_index_segments(spark, store, "aix", kind="ann")
-    assert tombstone_label("aix") in victims
-    got3 = [(r["vec_id"], r["cosine"]) for r in ivf_search(spark, store, "aix", q, k=4, n_probe=4).collect()]
-    assert got3 == got
 
 
 # --- fleet sweep / HTTP knobs ------------------------------------------------------
@@ -554,30 +420,6 @@ def test_delete_after_compaction_not_resurrected(spark, store):
     vacuum_index_segments(spark, store, "by_name", kind="value")
     assert store.version(tombstone_label("by_name")) == 0
     assert _entries(spark, store, "by_name") == [("alice", 0), ("carol", 2)]
-
-
-def test_old_scheme_sidecar_migrates_losslessly(spark, store):
-    """A sidecar written by the shared-watermark scheme (commit meta
-    lacks seq_scheme; tomb_seq == W meant 'hide parts <= W') must read
-    as W+1 under the strict scheme — the delete keeps applying to the
-    segment it targeted instead of silently resurrecting."""
-    from scalligraph_spark.operators import extend_value_index
-
-    base = _people(spark, [(0, "alice", 10)])
-    store.write("people", base)
-    build_value_index(spark, store, "by_name", base, "uname", "uid")
-    extend_value_index(spark, store, "by_name", _people(spark, [(1, "bob", 20)]))  # seg1
-    # hand-write an OLD-scheme sidecar: delete uid=1 recorded at W=1
-    old = spark.createDataFrame([(1, 1)], f"id long, {TOMB_SEQ} int")
-    store.write(tombstone_label("by_name"), old, meta={"kind": "index_tombstones", "key_col": "id"})
-    assert _entries(spark, store, "by_name") == [("alice", 0)], "old-scheme delete must apply"
-    # a NEW-scheme write unions the migrated rows and stamps the marker
-    write_tombstones(spark, store, "by_name",
-                     spark.createDataFrame([(1,)], "id long"), "id", 2)
-    assert store.commit_meta(tombstone_label("by_name")).get("seq_scheme") == "consumed"
-    assert _entries(spark, store, "by_name") == [("alice", 0)]
-    t = store.read(spark, tombstone_label("by_name"))
-    assert [(r["id"], r[TOMB_SEQ]) for r in t.collect()] == [(1, 2)], "max-seq dedupe after bump"
 
 
 def test_partial_vacuum_does_not_report_live_sidecar_dropped(spark, store):

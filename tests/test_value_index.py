@@ -159,51 +159,6 @@ def test_compaction_answer_identical(spark, store):
     assert before == after
 
 
-def test_compaction_crash_window_never_duplicates(spark, store, monkeypatch):
-    """ADVICE r8: compaction writes the merged base first and the meta
-    carrier second — a crash between the two used to leave the old meta
-    still listing segments whose rows are ALSO in the new base, so reads
-    returned duplicated (value, id) entries until recompaction.  Now the
-    base's commit meta records what it folded and readers skip those
-    segments; later extends get fresh (never-reused) segment names; a
-    retried compaction converges."""
-    import scalligraph_spark.operators.value_index as vi
-
-    df = _corpus(spark)
-    build_value_index(spark, store, "by_name", df, "uname", "uid")
-    extend_value_index(spark, store, "by_name", spark.createDataFrame([(10, "zoe", 1)], "uid long, uname string, score int"))
-    extend_value_index(spark, store, "by_name", spark.createDataFrame([(11, "yann", 2)], "uid long, uname string, score int"))
-    want = sorted(tuple(r) for r in load_value_index(spark, store, "by_name").entries.collect())
-
-    # crash EXACTLY between the base commit and the meta-carrier commit
-    real_write_meta = vi._write_meta
-    monkeypatch.setattr(vi, "_write_meta", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("simulated crash")))
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_value_index(spark, store, "by_name")
-    monkeypatch.setattr(vi, "_write_meta", real_write_meta)
-
-    # torn state: meta still lists both segments, base already folded them
-    ix = load_value_index(spark, store, "by_name")
-    assert ix.meta["segments"] == ["by_name__seg1", "by_name__seg2"]
-    got = sorted(tuple(r) for r in ix.entries.collect())
-    assert got == want, "crash window must not double-count folded segments"
-
-    # a post-crash extend must NOT reuse a folded segment name
-    extend_value_index(spark, store, "by_name", spark.createDataFrame([(12, "walt", 3)], "uid long, uname string, score int"))
-    ix = load_value_index(spark, store, "by_name")
-    assert ix.meta["segments"] == ["by_name__seg1", "by_name__seg2", "by_name__seg3"]
-    rows = [tuple(r) for r in ix.entries.collect()]
-    assert sorted(rows) == sorted(set(rows)) and ("walt", 12) in rows
-
-    # the retried compaction converges to a clean single-base state
-    compact_value_index(spark, store, "by_name")
-    ix = load_value_index(spark, store, "by_name")
-    assert ix.meta["segments"] == []
-    final = [tuple(r) for r in ix.entries.collect()]
-    assert sorted(final) == sorted(set(final))
-    assert sorted(final) == sorted(want + [("walt", 12)])
-
-
 def test_staleness_warns_then_clears_on_extend_and_reindex(spark, store):
     corpus = LabelStore(store.root + "_corpus")
     df = _corpus(spark)
@@ -239,7 +194,8 @@ def test_pruned_probe_equals_entries_filter_under_tombstones(spark, store):
     pruning and tombstone id-hiding both only drop rows, so the order
     commutes — pinned here with a deleted id, an updated value, a range
     probe, and the provenance-less fallback path."""
-    from scalligraph_spark.operators.tombstones import write_tombstones
+    from scalligraph_spark.operators import segments
+    from scalligraph_spark.operators.value_index import FAMILY
 
     df = _corpus(spark)
     build_value_index(spark, store, "by_name", df, "uname", "uid")
@@ -250,9 +206,7 @@ def test_pruned_probe_equals_entries_filter_under_tombstones(spark, store):
         spark.createDataFrame([(10, "zoe", 1)], "uid long, uname string, score int"),
     )
     # tombstone one base id (delete) — the probe must not resurrect it
-    write_tombstones(
-        spark, store, "by_name", spark.createDataFrame([(1,)], "id long"), "id", 1
-    )
+    segments.tombstone(spark, store, FAMILY, "by_name", spark.createDataFrame([(1,)], "id long"))
 
     ix = load_value_index(spark, store, "by_name")
     ent = sorted(tuple(r) for r in ix.entries.collect())
@@ -299,8 +253,8 @@ def test_loaded_index_is_pinned_snapshot(spark, store):
     the per-probe plan rebuild used to re-resolve CURRENT state, so a
     post-load tombstone silently dropped rows and a racing compaction
     could duplicate (value, id) entries)."""
-    from scalligraph_spark.operators.tombstones import write_tombstones
-    from scalligraph_spark.operators.value_index import _index_meta, _write_meta
+    from scalligraph_spark.operators import segments
+    from scalligraph_spark.operators.value_index import FAMILY
 
     df = _corpus(spark)
     build_value_index(spark, store, "by_name", df, "uname", "uid")
@@ -315,12 +269,7 @@ def test_loaded_index_is_pinned_snapshot(spark, store):
 
     # post-load mutations: tombstone bob (consuming the next seq, the
     # catchup discipline), then compact everything into a new base
-    m = _index_meta(store, "by_name")
-    seq = max(int(m.get("seg_seq", 0)), len(m.get("segments", []))) + 1
-    write_tombstones(
-        spark, store, "by_name", spark.createDataFrame([(1,)], "id long"), "id", seq
-    )
-    _write_meta(spark, store, "by_name", dict(m, seg_seq=seq))
+    segments.tombstone(spark, store, FAMILY, "by_name", spark.createDataFrame([(1,)], "id long"))
     compact_value_index(spark, store, "by_name")
 
     # the pinned probe still sees bob AND never duplicates zoe (whose

@@ -14,26 +14,32 @@ versions:
 * every change row carries ``_change_type`` (``insert`` /
   ``update_preimage`` / ``update_postimage`` / ``delete``) and
   ``_commit_version`` alongside the table's own columns;
-* :func:`write_with_cdf` captures the feed AT WRITE TIME (the cheap
-  moment: both versions are committed and the diff runs once, not per
-  consumer) into a ``<label>__cdf_v<N>`` side label;
-* :func:`table_changes` reads captured feeds where they exist and falls
-  back to the hash-diff for uncaptured steps — consumers never see the
-  difference;
+* :func:`write_with_cdf` captures the feed AT WRITE TIME (the diff runs
+  once, not per consumer) into a ``<label>__cdf_v<N>`` side label;
+* :func:`table_changes` reads captured feeds and diffs uncaptured steps;
 * :func:`apply_changes` replays a feed onto a base snapshot:
-  ``apply_changes(read(v_a), table_changes(v_a→v_b)) ≡ read(v_b)``
-  exactly (the replay property pytest pins).
+  ``apply_changes(read(v_a), table_changes(v_a→v_b)) ≡ read(v_b)``.
 
-Scale shape: the diff ships ``(key, xxhash64)`` per row — never the
-payload — through one full-outer equi-join (``dataframe_diff``'s
-discipline, store.py); row images are then recovered by semi-joins that
-only materialise CHANGED rows.  Replay anti-joins the base against the
-churn-sized touched-key set (broadcast), so the base table never
-shuffles — the merge-on-read read path's join shape (store.py
-``read_merged``).
+This module is the only code that diffs two versions or folds keyed
+changes, with three primitives:
+
+* :func:`change_status` — the one ``(key, xxhash64)`` full-outer join:
+  per row it ships the key and an 8-byte hash, never the payload.
+  ``store.version_diff`` is a projection of it.
+* :func:`change_images` — each side's changed rows by ONE join against
+  that churn-sized status frame: ``(gone, came)``.  :func:`pair_changes`
+  tags them; ``store.refresh_aggregate`` and ``store.refresh_join`` take
+  their retract and add rows straight from them.
+* :func:`latest_changes` — the one last-change-per-key window, folded
+  onto a base by :func:`apply_changes` (whose broadcast anti-join never
+  shuffles the base), the merge-on-read read (``store.read_merged``: a
+  delta slot is its ``_commit_version``) and index catch-up
+  (``operators.segments``).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -49,14 +55,53 @@ def _cdf_label(label: str, version: int) -> str:
     return f"{label}__cdf_v{version}"
 
 
-def _value_hash(df: DataFrame, key_cols: list[str], alias: str) -> DataFrame:
-    value_cols = [c for c in df.columns if c not in key_cols]
+def _value_hash(df: DataFrame, key_cols: list[str], value_cols: list[str], alias: str) -> DataFrame:
+    # null-safe, with a separator so ("a", null) never collides with
+    # ("an", "ull"); a column this side lacks hashes as null
     parts = []
     for c in value_cols:
-        parts.append(F.coalesce(F.col(c).cast("string"), F.lit("\x00null")))
-        parts.append(F.lit("\x01"))
+        v = F.col(c).cast("string") if c in df.columns else F.lit(None).cast("string")
+        parts += [F.coalesce(v, F.lit("\x00null")), F.lit("\x01")]
     h = F.xxhash64(*parts) if parts else F.lit(0)
     return df.select(*key_cols, h.alias(alias))
+
+
+def change_status(old: DataFrame, new: DataFrame, key_cols: list[str]) -> DataFrame:
+    """``(*key_cols, status)`` for every key whose row differs between two
+    snapshots — ``added`` / ``removed`` / ``changed``; value-identical
+    rows are excluded.  Both sides hash the union of their non-key
+    columns, so a column one version lacks reads as null there and a
+    schema change alone changes no row."""
+    value_cols = [c for c in dict.fromkeys(new.columns + old.columns) if c not in key_cols]
+    joined = _value_hash(old, key_cols, value_cols, "__h_old").join(
+        _value_hash(new, key_cols, value_cols, "__h_new"), key_cols, "full_outer"
+    )
+    status = (
+        F.when(F.col("__h_old").isNull(), "added")
+        .when(F.col("__h_new").isNull(), "removed")
+        .when(F.col("__h_old") != F.col("__h_new"), "changed")
+    )
+    return joined.select(*key_cols, status.alias("status")).where(F.col("status").isNotNull())
+
+
+def change_images(old: DataFrame, new: DataFrame, key_cols: list[str]) -> tuple[DataFrame, DataFrame]:
+    """``(gone, came)``: the old rows a step removed or changed and the
+    new rows it added or changed, each side's own columns plus its
+    ``_change_type`` (``delete`` / ``update_preimage``, ``insert`` /
+    ``update_postimage``).  Each side takes its rows with ONE join
+    against the churn-sized :func:`change_status` frame, so unchanged
+    rows are never materialised past the scan."""
+    st = change_status(old, new, key_cols).select(*key_cols, F.col("status").alias("__st"))
+
+    def side(df: DataFrame, other_only: str, alone: str, paired: str) -> DataFrame:
+        rows = df.join(st.where(F.col("__st") != other_only), key_cols)
+        tag = F.when(F.col("__st") == "changed", paired).otherwise(alone)
+        return rows.select(*df.columns, tag.alias(CHANGE_TYPE))
+
+    return (
+        side(old, "added", "delete", "update_preimage"),
+        side(new, "removed", "insert", "update_postimage"),
+    )
 
 
 def pair_changes(
@@ -66,42 +111,25 @@ def pair_changes(
     commit_version: int,
 ) -> DataFrame:
     """Full change rows between two snapshots of one table (one commit
-    step).  ``old=None`` means the version-0 empty table: everything is
-    an insert.
-
-    The change-detection join ships only ``(key, hash)``; the four
-    outcome classes then pull their row images with semi-joins keyed on
-    the (churn-sized) status frame, so unchanged rows are never
-    materialised past the scan."""
+    step): the :func:`change_images` stamped with ``_commit_version``.
+    ``old=None`` means the version-0 empty table: everything is an
+    insert."""
     if old is None:
-        return new.select(
-            "*", F.lit("insert").alias(CHANGE_TYPE), F.lit(commit_version).cast("int").alias(COMMIT_VERSION)
-        )
-    status = (
-        _value_hash(old, key_cols, "__h_old")
-        .join(_value_hash(new, key_cols, "__h_new"), key_cols, "full_outer")
-        .select(
-            *key_cols,
-            F.when(F.col("__h_old").isNull(), "insert")
-            .when(F.col("__h_new").isNull(), "delete")
-            .when(F.col("__h_old") != F.col("__h_new"), "update")
-            .alias("__st"),
-        )
-        .where(F.col("__st").isNotNull())
-    )
+        rows = new.withColumn(CHANGE_TYPE, F.lit("insert"))
+    else:
+        gone, came = change_images(old, new, key_cols)
+        rows = came.unionByName(gone, allowMissingColumns=True)
+    return rows.withColumn(COMMIT_VERSION, F.lit(commit_version).cast("int"))
 
-    def _images(src: DataFrame, st: str, change_type: str) -> DataFrame:
-        keys = status.where(F.col("__st") == st).select(*key_cols)
-        return src.join(keys, key_cols, "left_semi").select(
-            "*", F.lit(change_type).alias(CHANGE_TYPE), F.lit(commit_version).cast("int").alias(COMMIT_VERSION)
-        )
 
-    return (
-        _images(new, "insert", "insert")
-        .unionByName(_images(old, "delete", "delete"))
-        .unionByName(_images(old, "update", "update_preimage"))
-        .unionByName(_images(new, "update", "update_postimage"))
-    )
+def _write_feed(store, label: str, version: int, key_cols: list[str], rows) -> str:
+    """Commit ``rows()`` as step ``version``'s ``<label>__cdf_v<version>``
+    feed; idempotent — an already-captured step is left as it is."""
+    cdf = _cdf_label(label, version)
+    if store.version(cdf) == 0:
+        meta = {"base_label": label, "commit_version": int(version), "key_cols": list(key_cols)}
+        store.write(cdf, rows(), meta=meta)
+    return cdf
 
 
 def capture_changes(
@@ -116,33 +144,22 @@ def capture_changes(
     Delta performs in its commit — paid once, amortised over every
     consumer).  Idempotent: re-capturing an already-captured step is a
     no-op."""
-    cdf = _cdf_label(label, version)
-    if store.version(cdf) > 0:
-        return cdf
-    old = store.read(spark, label, version - 1) if version > 1 else None
-    new = store.read(spark, label, version)
-    rows = pair_changes(old, new, key_cols, version)
-    store.write(cdf, rows, meta={"base_label": label, "commit_version": version, "key_cols": key_cols})
-    return cdf
+
+    def rows() -> DataFrame:
+        old = store.read(spark, label, version - 1) if version > 1 else None
+        return pair_changes(old, store.read(spark, label, version), key_cols, version)
+
+    return _write_feed(store, label, version, key_cols, rows)
 
 
 def capture_append(store, label: str, version: int, batch: DataFrame, key_cols: list[str]) -> str:
     """Capture a PURE-APPEND step's feed directly from the appended rows —
     zero diff jobs (the batch IS the delta), for writers that know their
-    commit only added rows (the streaming ingest sinks).  Stamps the same
-    column and meta contract as :func:`pair_changes`/:func:`capture_changes`
-    so ``table_changes`` unions captured and diffed steps transparently.
-    Idempotent like :func:`capture_changes`."""
-    cdf = _cdf_label(label, version)
-    if store.version(cdf) > 0:
-        return cdf
-    rows = batch.select(
-        "*",
-        F.lit("insert").alias(CHANGE_TYPE),
-        F.lit(int(version)).cast("int").alias(COMMIT_VERSION),
+    commit only added rows (the streaming ingest sinks).  Idempotent like
+    :func:`capture_changes`."""
+    return _write_feed(
+        store, label, version, key_cols, lambda: pair_changes(None, batch, key_cols, version)
     )
-    store.write(cdf, rows, meta={"base_label": label, "commit_version": int(version), "key_cols": list(key_cols)})
-    return cdf
 
 
 def write_with_cdf(
@@ -190,30 +207,32 @@ def table_changes(
             )
         old = store.read(spark, label, v - 1) if v > 1 else None
         parts.append(pair_changes(old, store.read(spark, label, v), key_cols, v))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # a step may add columns (an update stamping the audit fields):
+    # earlier steps read them as null
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
+def latest_changes(changes: DataFrame, key_cols: list[str]) -> DataFrame:
+    """The last effective change per key of a multi-step feed: preimages
+    are informational and dropped, then the highest ``_commit_version``
+    wins (one churn-sized window; a step holds one change per key)."""
+    eff = changes.where(F.col(CHANGE_TYPE) != F.lit("update_preimage"))
+    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(F.col(COMMIT_VERSION).desc())
+    return eff.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
 def apply_changes(base: DataFrame, changes: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Replay a change feed onto a base snapshot: the LAST effective
-    action per key wins (later ``_commit_version`` beats earlier;
-    preimages are informational and never applied), deletes remove,
-    inserts/postimages upsert.  ``apply_changes(read(v_a),
-    table_changes(v_a, v_b))`` reproduces ``read(v_b)`` exactly — the
-    replay property that makes the feed a faithful replication stream.
+    """Replay a change feed onto a base snapshot: per key the
+    :func:`latest_changes` row wins, deletes remove, inserts/postimages
+    upsert.  ``apply_changes(read(v_a), table_changes(v_a, v_b))``
+    reproduces ``read(v_b)`` exactly — the replay property that makes the
+    feed a faithful replication stream.  Columns the base lacks arrive
+    with the upserts and read as null on untouched rows.
 
     The base never shuffles: it anti-joins the churn-sized touched-key
-    set (broadcast), and the surviving upserts append — read_merged's
-    merge shape, applied transactionally."""
-    eff = changes.where(F.col(CHANGE_TYPE) != F.lit("update_preimage"))
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(F.col(COMMIT_VERSION).desc())
-    latest = (
-        eff.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    touched = latest.select(*key_cols).distinct()
+    set (broadcast), and the surviving upserts append."""
+    latest = latest_changes(changes, key_cols)
     upserts = latest.where(F.col(CHANGE_TYPE) != F.lit("delete")).drop(CHANGE_TYPE, COMMIT_VERSION)
-    return base.join(F.broadcast(touched), key_cols, "left_anti").unionByName(upserts)
+    return base.join(F.broadcast(latest.select(*key_cols)), key_cols, "left_anti").unionByName(
+        upserts, allowMissingColumns=True
+    )

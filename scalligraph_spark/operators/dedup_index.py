@@ -166,9 +166,8 @@ def extend_minhash_index(
     loop is probe (`incremental_near_dups`) → decide → extend.
     ``extra_meta`` merges into the index record.  Returns the new
     segment count."""
-    meta = dict(segments.index_meta(store, FAMILY, name), **(extra_meta or {}))
     return segments.extend(
-        spark, store, FAMILY, name, new_docs, corpus_store, as_of_version, meta=meta
+        spark, store, FAMILY, name, new_docs, corpus_store, as_of_version, meta=extra_meta
     )
 
 

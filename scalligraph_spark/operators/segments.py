@@ -31,6 +31,11 @@ delete churn costs the mutation, never the corpus:
 * **Vacuum** drops segment labels the carrier no longer lists and the
   tombstones every base folded, optionally once the folding commit is
   older than a retention window (pinned readers still read them).
+* **Concurrency.**  Extends may race (see :func:`extend`).  Tombstone
+  batches, compaction and vacuum still need exclusive access: every
+  mutation first drops or rolls back each sidecar head the carrier does
+  not publish, which is also the head an in-flight mutation has written
+  and not yet published.
 """
 
 from __future__ import annotations
@@ -45,7 +50,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, table_changes
+from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, latest_changes, table_changes
 from scalligraph_spark.operators.tombstones import (
     TOMB_SEQ,
     read_tombstones,
@@ -120,15 +125,23 @@ def read_meta(store, name: str) -> dict:
     return store.commit_meta(f"{name}__meta")
 
 
-def index_meta(store, fam: Family, name: str) -> dict:
-    meta = read_meta(store, name)
-    if meta.get("kind") != fam.record:
+def _record(store, name: str, fam: Family | None = None) -> tuple[dict, int]:
+    """The index record (of family ``fam``) and the carrier version read."""
+    v = store.version(f"{name}__meta")
+    meta = store.commit_meta(f"{name}__meta", v)
+    if fam is not None and meta.get("kind") != fam.record:
         raise FileNotFoundError(f"no committed {fam.what} named {name!r}")
-    return meta
+    return meta, v
 
 
-def write_meta(spark: SparkSession, store, name: str, meta: dict) -> None:
-    store.write(f"{name}__meta", spark.range(0, 1, 1, 1), meta=meta)
+def index_meta(store, fam: Family, name: str) -> dict:
+    return _record(store, name, fam)[0]
+
+
+def write_meta(spark: SparkSession, store, name: str, meta: dict, read_v: int) -> None:
+    """Commit the carrier over the version the mutation read; never
+    retried, since a retried catch-up would fold the same churn twice."""
+    store.write(f"{name}__meta", spark.range(0, 1, 1, 1), meta=meta, expected_version=read_v)
 
 
 def published(meta: dict, lbl: str) -> int:
@@ -260,7 +273,7 @@ def build(
     commits every part's base through ``write(part, rows) -> version``,
     may add carrier fields, and returns the version to report; the
     carrier commits last."""
-    prior = read_meta(store, name)
+    prior, read_v = _record(store, name)
     meta = dict(meta, segments=[], seq=int(prior.get("seq", 0)))
     meta["versions"] = dict(prior.get("versions", {}))
     if corpus_store is not None and corpus_label is not None:
@@ -270,7 +283,7 @@ def build(
     for part, (src, group) in _counts(fam).items():
         rows = _count(store.read(spark, label(name, src)), group)
         _write_base(store, fam, name, meta, part, rows)
-    write_meta(spark, store, name, meta)
+    write_meta(spark, store, name, meta, read_v)
     return v
 
 
@@ -278,16 +291,31 @@ def extend(
     spark: SparkSession, store, fam: Family, name: str, batch: DataFrame,
     corpus_store=None, as_of_version: int | None = None, meta: dict | None = None,
 ) -> int:
-    """Fold an append batch in as segment ``seq + 1`` of every part (cost
-    ∝ batch; bases are never rewritten).  Returns the live segment
-    count.  ``meta`` carries carrier changes not yet published (a
-    tombstone batch), so both land in one carrier commit."""
-    meta = dict(meta if meta is not None else index_meta(store, fam, name))
+    """Fold an append batch in as the next segment of every part (cost ∝
+    batch; bases are never rewritten).  Returns the live segment count.
+    ``meta`` adds fields to the index record in the same carrier commit.
+    Extends may race: each claims unwritten segment labels and commits
+    the carrier over the version it read, so one of two racing extends
+    raises ``VersionConflictError`` and no batch is lost silently."""
+    rec, read_v = _record(store, name, fam)
+    return _extend(spark, store, fam, name, batch, dict(rec, **(meta or {})), read_v,
+                   corpus_store, as_of_version)
+
+
+def _extend(
+    spark: SparkSession, store, fam: Family, name: str, batch: DataFrame, meta: dict,
+    read_v: int, corpus_store=None, as_of_version: int | None = None,
+) -> int:
+    meta = dict(meta)
     _settle(store, name, meta)
     seq = int(meta["seq"]) + 1
+    # a racing extend, or one that crashed before its carrier commit, may
+    # hold this seq's labels already
+    while any(store.history(label(name, p, seq)) for p in fam.parts):
+        seq += 1
 
     def write(part: str, df: DataFrame) -> str:
-        store.write(label(name, part, seq), df, **_layout(fam, meta, part, True))
+        store.write(label(name, part, seq), df, expected_version=0, **_layout(fam, meta, part, True))
         return label(name, part, seq)
 
     meta.update(fam.extend(spark, store, name, meta, batch, write))
@@ -296,7 +324,7 @@ def extend(
     meta["segments"] = [*meta["segments"], label(name, next(iter(fam.parts)), seq)]
     meta["seq"] = seq
     _stamp(meta, fam, corpus_store, as_of_version)
-    write_meta(spark, store, name, meta)
+    write_meta(spark, store, name, meta, read_v)
     return len(meta["segments"])
 
 
@@ -307,16 +335,22 @@ def tombstone(
     """Hide ``keys`` (one column) in every existing part at a freshly
     consumed seq and re-insert ``upserts`` as the next segment, both
     published by one carrier commit."""
-    meta = index_meta(store, fam, name)
+    _tombstone(spark, store, fam, name, *_record(store, name, fam), keys, upserts, as_of_version)
+
+
+def _tombstone(
+    spark: SparkSession, store, fam: Family, name: str, meta: dict, read_v: int,
+    keys: DataFrame, upserts: DataFrame | None, as_of_version: int | None,
+) -> None:
     _settle(store, name, meta)
     seq = int(meta["seq"]) + 1
     lbl = write_tombstones(spark, store, name, keys, next(iter(fam.parts.values())), seq)
     meta = dict(meta, seq=seq, **publish_version(store, meta, lbl))
     if upserts is not None and upserts.take(1):
-        extend(spark, store, fam, name, upserts, as_of_version=as_of_version, meta=meta)
+        _extend(spark, store, fam, name, upserts, meta, read_v, as_of_version=as_of_version)
         return
     _stamp(meta, fam, None, as_of_version)
-    write_meta(spark, store, name, meta)
+    write_meta(spark, store, name, meta, read_v)
 
 
 def compact(spark: SparkSession, store, fam: Family, name: str) -> int:
@@ -324,7 +358,7 @@ def compact(spark: SparkSession, store, fam: Family, name: str) -> int:
     applied physically), then commit the carrier with no live segments.
     Old segment labels stay for pinned readers until vacuumed.  Returns
     the first part's new base version."""
-    meta = index_meta(store, fam, name)
+    meta, read_v = _record(store, name, fam)
     _settle(store, name, meta)
     counts = _counts(fam)
     data = {p: read_part(spark, store, fam, name, meta, p) for p in fam.parts if p not in counts}
@@ -340,7 +374,7 @@ def compact(spark: SparkSession, store, fam: Family, name: str) -> int:
             .groupBy(*group).agg(F.sum("n").cast("long").alias("n"))
         )
         _write_base(store, fam, name, meta, part, rows)
-    write_meta(spark, store, name, dict(meta, segments=[]))
+    write_meta(spark, store, name, dict(meta, segments=[]), read_v)
     return versions[0]
 
 
@@ -359,14 +393,10 @@ def _net_effects(ch: DataFrame, key_cols: list[str]):
     ``(mutated_keys, upsert_rows)``.  Only keys with a DELETE or UPDATE
     event are tombstoned (a pure insert has no entries yet), so the
     broadcast sidecar stays mutation-sized."""
-    from pyspark.sql import Window
-
-    eff = ch.where(F.col(CHANGE_TYPE) != F.lit("update_preimage"))
-    mutated = eff.where(F.col(CHANGE_TYPE) != F.lit("insert")).select(*key_cols).distinct()
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(F.col(COMMIT_VERSION).desc())
-    latest = eff.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
+    mutated = ch.where(~F.col(CHANGE_TYPE).isin("insert", "update_preimage"))
+    latest = latest_changes(ch, key_cols)
     upserts = latest.where(F.col(CHANGE_TYPE) != F.lit("delete")).drop(CHANGE_TYPE, COMMIT_VERSION)
-    return mutated, upserts
+    return mutated.select(*key_cols).distinct(), upserts
 
 
 def catchup(
@@ -378,7 +408,7 @@ def catchup(
     :class:`IndexCatchupError`, ``tombstone`` folds them, ``reindex``
     rebuilds); a rolled-back corpus always needs a rebuild."""
     _check_policy(on_mutation)
-    meta = index_meta(store, fam, name)
+    meta, read_v = _record(store, name, fam)
     corpus = meta.get("corpus_label")
     if corpus is None:
         raise ValueError(
@@ -420,16 +450,16 @@ def catchup(
                     churn,
                 )
             mutated, upserts = _net_effects(ch, key_cols)
-            tombstone(spark, store, fam, name, mutated, upserts, as_of_version=v_to)
+            _tombstone(spark, store, fam, name, meta, read_v, mutated, upserts, v_to)
             return dict(report, action="tombstoned", churn=churn)
         if not churn:
             # same rows under a new version (a re-layout commit): restamp,
             # never commit an empty segment
             _stamp(meta, fam, None, v_to)
-            write_meta(spark, store, name, meta)
+            write_meta(spark, store, name, meta, read_v)
             return dict(report, action="restamped", churn={})
         inserts = ch.where(F.col(CHANGE_TYPE) == "insert").drop(CHANGE_TYPE, COMMIT_VERSION)
-        extend(spark, store, fam, name, inserts, as_of_version=v_to, meta=meta)
+        _extend(spark, store, fam, name, inserts, meta, read_v, as_of_version=v_to)
         return dict(report, action="extended", churn=churn)
     finally:
         ch.unpersist()
@@ -450,7 +480,7 @@ def reclaim(
     from scalligraph_spark.store import check_retention
 
     retention_seconds = check_retention(retention_seconds)
-    meta = index_meta(store, fam, name)
+    meta, read_v = _record(store, name, fam)
     live = set(live_seqs(meta))
     victims = sorted(
         lbl
@@ -489,11 +519,11 @@ def reclaim(
     rest = t.where(F.col(TOMB_SEQ) > F.lit(watermark))
     if rest.take(1):
         store.write(tlbl, rest, meta=store.commit_meta(tlbl, tv))
-        write_meta(spark, store, name, dict(meta, **publish_version(store, meta, tlbl)))
+        write_meta(spark, store, name, dict(meta, **publish_version(store, meta, tlbl)), read_v)
         return victims
     # unpublish first: a crash before the drop leaves an unread label
     versions = {k: v for k, v in meta["versions"].items() if k != tlbl}
-    write_meta(spark, store, name, dict(meta, versions=versions))
+    write_meta(spark, store, name, dict(meta, versions=versions), read_v)
     store.drop(tlbl)
     return victims + [tlbl]
 

@@ -22,9 +22,12 @@ import json
 import os
 import tempfile
 import threading
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, apply_changes, change_images, change_status
 
 
 def zorder_value(df: DataFrame, cols: list[str], bits: int = 16) -> Column:
@@ -1674,9 +1677,10 @@ class LabelStore:
         ``read_merged().where(pred)`` because filtering the base commutes
         with the anti-join (both only drop base rows), while delta
         resolution still sees EVERY delta row per key — latest-batch-wins
-        must be decided before filtering, and only the resolved upserts
-        are filtered.  At 100 TB a selective read over a MOR table prunes
-        the base's files and pays churn-sized work for the deltas."""
+        must be decided before filtering, so the predicates apply after
+        the merge (``cdf.apply_changes``).  At 100 TB a selective read
+        over a MOR table prunes the base's files and pays churn-sized
+        work for the deltas."""
         mor = f"{label}__mor"
         m = self.commit_meta(mor) if self.version(mor) > 0 else {}
         if predicates is not None:
@@ -1687,26 +1691,19 @@ class LabelStore:
         slots = self._delta_slots(label, m)
         if not slots:
             return base
-        key_cols, op_col = list(m["key_cols"]), str(m.get("op_col", "_op"))
-        from pyspark.sql import Window
-
-        deltas = None
-        for i in slots:
-            d = self.read(spark, f"{label}__delta{i}").withColumn("__batch", F.lit(i))
-            deltas = d if deltas is None else deltas.unionByName(d)
-        # churn-sized window: latest batch wins per key (ties cannot occur
-        # across batches; within a batch the contract is one row per key)
-        w = Window.partitionBy(*key_cols).orderBy(F.col("__batch").desc())
-        latest = (
-            deltas.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        touched = latest.select(*key_cols)
-        upserts = latest.where(F.col(op_col) == "upsert").drop(op_col, "__batch")
-        if predicates is not None:
-            upserts = upserts.where(_predicates_column(preds))
-        return base.join(F.broadcast(touched), key_cols, "left_anti").unionByName(upserts)
+        # each delta batch is one step of a change feed, its slot the
+        # commit version: a later batch supersedes an earlier one per key
+        op = str(m.get("op_col", "_op"))
+        changes = [
+            self.read(spark, f"{label}__delta{i}").select(
+                "*",
+                F.when(F.col(op) == "delete", "delete").otherwise("insert").alias(CHANGE_TYPE),
+                F.lit(i).alias(COMMIT_VERSION),
+            ).drop(op)
+            for i in slots
+        ]
+        merged = apply_changes(base, reduce(DataFrame.unionByName, changes), list(m["key_cols"]))
+        return merged if predicates is None else merged.where(_predicates_column(preds))
 
     def _delta_slots(self, label: str, meta: dict) -> list[int]:
         """Outstanding delta slot numbers: probe upward from the meta's
@@ -2033,37 +2030,6 @@ def store_report(spark: SparkSession, store: "LabelStore") -> DataFrame:
     )
 
 
-def dataframe_diff(old: DataFrame, new: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Row-level diff between two DataFrames sharing a schema — (keys,
-    status) with status ``added`` / ``removed`` / ``changed``
-    (value-identical rows are excluded).  The raw form of
-    :func:`version_diff` for un-stored inputs: crawl increments, corpus
-    snapshots, reconciliation between pipelines.
-
-    Change detection hashes the non-key columns per side (null-safe, with a
-    column-separator so ("a", null) never collides with ("an", "ull")) so
-    the full-outer join ships (keys, 8-byte hash) per row, never the
-    payload — at 100 TB the diff costs two narrow scans + one equi join.
-    """
-    value_cols = [c for c in new.columns if c not in key_cols]
-
-    def _vh(df: DataFrame, alias: str) -> DataFrame:
-        parts = []
-        for c in value_cols:
-            parts.append(F.coalesce(F.col(c).cast("string"), F.lit("\x00null")))
-            parts.append(F.lit("\x01"))
-        h = F.xxhash64(*parts) if parts else F.lit(0)
-        return df.select(*key_cols, h.alias(alias))
-
-    joined = _vh(old, "__h_old").join(_vh(new, "__h_new"), key_cols, "full_outer")
-    status = (
-        F.when(F.col("__h_old").isNull(), "added")
-        .when(F.col("__h_new").isNull(), "removed")
-        .when(F.col("__h_old") != F.col("__h_new"), "changed")
-    )
-    return joined.select(*key_cols, status.alias("status")).where(F.col("status").isNotNull())
-
-
 def version_diff(
     spark: SparkSession,
     store: "LabelStore",
@@ -2072,12 +2038,10 @@ def version_diff(
     v_new: int,
     key_cols: list[str],
 ) -> DataFrame:
-    """Row-level diff between two committed versions — the change-data-feed
-    analog over the versioned store; see :func:`dataframe_diff` for the
-    mechanics and scale shape."""
-    return dataframe_diff(
-        store.read(spark, label, v_old), store.read(spark, label, v_new), key_cols
-    )
+    """Row-level diff between two committed versions — ``(keys, status)``
+    with status ``added`` / ``removed`` / ``changed``:
+    :func:`~scalligraph_spark.cdf.change_status` over the two snapshots."""
+    return change_status(store.read(spark, label, v_old), store.read(spark, label, v_new), key_cols)
 
 
 def aggregate_snapshot(
@@ -2094,6 +2058,17 @@ def aggregate_snapshot(
             aggs.append(F.min(m).alias(f"min_{m}"))
             aggs.append(F.max(m).alias(f"max_{m}"))
     return df.groupBy(*group_cols).agg(*aggs)
+
+
+def merge_aggregate(
+    mv: DataFrame, delta: DataFrame, group_cols: list[str], measure_cols: list[str]
+) -> DataFrame:
+    """Add a signed delta shaped like :func:`aggregate_snapshot` into
+    ``mv`` by group and drop groups whose count reaches zero — the
+    counting-algorithm merge of :func:`refresh_aggregate` (delta) and the
+    streaming MV sink."""
+    sums = [F.sum(c).alias(c) for c in ["n_rows", *[f"sum_{m}" for m in measure_cols]]]
+    return mv.unionByName(delta).groupBy(*group_cols).agg(*sums).where(F.col("n_rows") > 0)
 
 
 def refresh_aggregate(
@@ -2118,14 +2093,14 @@ def refresh_aggregate(
 
     * ``delta`` — classic counting-algorithm IVM (Gupta & Mumick,
       "Maintenance of Materialized Views: Problems, Techniques, and
-      Applications", IEEE DE Bulletin 1995): the version diff's
-      added/changed/removed rows become ±1-weighted delta rows, one
-      aggregate over the delta merges into the MV by full-outer join, and
-      groups whose count reaches zero drop out.  Cost scales with CHURN,
+      Applications", IEEE DE Bulletin 1995): the step's change images
+      (``cdf.change_images``) become ±1-weighted delta rows and
+      :func:`merge_aggregate` adds them into the MV by group, dropping
+      groups whose count reaches zero.  Cost scales with CHURN,
       not table size — the 100 TB path for count/sum/avg.  min/max are
       NOT delta-maintainable under deletes (a removed row may have held
       the extremum); requesting ``minmax`` here raises.
-    * ``group_rescan`` — recompute only the groups the diff touched (one
+    * ``group_rescan`` — recompute only the groups the change touched (one
       semi-join-pruned scan of the new version), keep every untouched MV
       row as-is (anti-join).  Supports any aggregate including min/max;
       cost scales with the data volume of AFFECTED groups.  The right
@@ -2136,56 +2111,25 @@ def refresh_aggregate(
     route doubles through DECIMAL first (see functions.dsum) to keep
     refresh bit-identical to recompute.
     """
-    diff = version_diff(spark, store, label, v_old, v_new, key_cols)
+    new = store.read(spark, label, v_new)
+    gone, came = change_images(store.read(spark, label, v_old), new, key_cols)
     if strategy == "delta":
         if minmax:
             raise ValueError(
                 "min/max cannot be maintained from deltas under deletes; "
                 "use strategy='group_rescan'"
             )
-        old = store.read(spark, label, v_old)
-        new = store.read(spark, label, v_new)
-        gone = diff.where(F.col("status").isin("removed", "changed")).select(key_cols)
-        came = diff.where(F.col("status").isin("added", "changed")).select(key_cols)
-        minus = old.join(gone, key_cols, "left_semi").select(
-            *group_cols, *measure_cols, F.lit(-1).alias("__w")
-        )
-        plus = new.join(came, key_cols, "left_semi").select(
-            *group_cols, *measure_cols, F.lit(1).alias("__w")
-        )
-        delta = plus.unionByName(minus)
-        daggs = [F.sum("__w").alias("__d_rows")]
-        for m in measure_cols:
-            daggs.append(
-                F.sum(F.coalesce(F.col(m), F.lit(0)) * F.col("__w")).alias(f"__d_{m}")
-            )
-        dagg = delta.groupBy(*group_cols).agg(*daggs)
-        merged = mv.join(dagg, group_cols, "full_outer")
-        out_cols = [
-            (F.coalesce(F.col("n_rows"), F.lit(0)) + F.coalesce(F.col("__d_rows"), F.lit(0))).alias(
-                "n_rows"
-            )
-        ]
-        for m in measure_cols:
-            out_cols.append(
-                (
-                    F.coalesce(F.col(f"sum_{m}"), F.lit(0))
-                    + F.coalesce(F.col(f"__d_{m}"), F.lit(0))
-                ).alias(f"sum_{m}")
-            )
-        return merged.select(*group_cols, *out_cols).where(F.col("n_rows") > 0)
+
+        def weighted(rows: DataFrame, w: int) -> DataFrame:
+            sums = [(F.coalesce(F.col(m), F.lit(0)) * w).alias(f"sum_{m}") for m in measure_cols]
+            return rows.select(*group_cols, F.lit(w).cast("long").alias("n_rows"), *sums)
+
+        delta = weighted(came, 1).unionByName(weighted(gone, -1))
+        return merge_aggregate(mv, delta, group_cols, measure_cols)
     elif strategy == "group_rescan":
-        old = store.read(spark, label, v_old)
-        new = store.read(spark, label, v_new)
-        touched_keys = diff.select(key_cols)
-        # groups named by the diff on EITHER side: a changed row may have
+        # groups named by the change on EITHER side: a changed row may have
         # MOVED between groups, so both its old and new group are stale.
-        touched = (
-            old.join(touched_keys, key_cols, "left_semi")
-            .select(*group_cols)
-            .unionByName(new.join(touched_keys, key_cols, "left_semi").select(*group_cols))
-            .distinct()
-        )
+        touched = came.select(*group_cols).unionByName(gone.select(*group_cols)).distinct()
         recomputed = aggregate_snapshot(
             new.join(touched, group_cols, "left_semi"), group_cols, measure_cols, minmax
         )
@@ -2235,13 +2179,9 @@ def refresh_join(
     b_old = store.read(spark, right_label, ro)
     b_new = store.read(spark, right_label, rn)
 
-    # the delta terms select view.columns straight off left ⋈ right, which
-    # silently requires every non-key VIEW column to name a column of
-    # exactly ONE side — a name living in both tables would be an
-    # ambiguous-column analysis error at best and wrong retraction
-    # matching at worst, and a name in neither can't be rebuilt at all.
-    # Fail loud up front naming the offenders (the view may PROJECT the
-    # join — carrying a subset of the payloads is fine).
+    # the delta terms select view.columns straight off left ⋈ right, so
+    # every non-key VIEW column must name a column of exactly ONE side
+    # (the view may project a subset): fail loud naming the offenders
     l_payload = set(a_new.columns) - set(on)
     r_payload = set(b_new.columns) - set(on)
     view_payload = set(view.columns) - set(on)
@@ -2260,28 +2200,8 @@ def refresh_join(
             "keys + stored payload columns only)"
         )
 
-    da = version_diff(spark, store, left_label, lo, ln, left_keys)
-    db = version_diff(spark, store, right_label, ro, rn, right_keys)
-    a_gone = a_old.join(
-        da.where(F.col("status").isin("removed", "changed")).select(left_keys),
-        left_keys,
-        "left_semi",
-    )
-    a_came = a_new.join(
-        da.where(F.col("status").isin("added", "changed")).select(left_keys),
-        left_keys,
-        "left_semi",
-    )
-    b_gone = b_old.join(
-        db.where(F.col("status").isin("removed", "changed")).select(right_keys),
-        right_keys,
-        "left_semi",
-    )
-    b_came = b_new.join(
-        db.where(F.col("status").isin("added", "changed")).select(right_keys),
-        right_keys,
-        "left_semi",
-    )
+    a_gone, a_came = change_images(a_old, a_new, left_keys)
+    b_gone, b_came = change_images(b_old, b_new, right_keys)
 
     cols = view.columns
     # ΔA ⋈ B_new (weight from ΔA side) ∪ A_old ⋈ ΔB (weight from ΔB side)

@@ -12,6 +12,8 @@ incremental sink.
 Scale shape: the windowed aggregate is a streaming hash aggregate with
 state eviction at the watermark; ``available_now`` triggers process a
 backlog with bounded batches (the batch/stream unification point).
+Every ``start_*`` sink returns its started StreamingQuery (the caller
+awaits or stops it).
 """
 
 from __future__ import annotations
@@ -131,6 +133,49 @@ def run_available_now(
     return stream_df.sparkSession.table(query_name)
 
 
+def _start(writer, checkpoint_dir: str, query_name: str):
+    """Start a sink: checkpointed, append mode, named, and draining the
+    available backlog (``availableNow``).  Returns the StreamingQuery."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _committed(store, label: str, batch_id: int) -> bool:
+    """Does ``label``'s head commit already record micro-batch ``batch_id``?"""
+    v = store.version(label)
+    return v > 0 and store.commit_meta(label, v).get("batch_id", -1) >= batch_id
+
+
+def _fold(
+    store, label: str, batch_id: int, batch: DataFrame,
+    merge=DataFrame.unionByName, first: DataFrame | None = None, meta=None, **write_opts,
+) -> int:
+    """Commit ``merge(head, batch)`` as the next version of ``label``,
+    stamped with ``batch_id`` in the commit meta; returns the version.
+    ``first`` stands in for the head of a label with no version yet
+    (without it the batch alone is committed).  ``meta`` adds commit
+    fields — a dict, or a function of the merged rows.
+
+    Batch-id idempotence: ``foreachBatch`` is at-least-once, so after a
+    crash-restart Spark replays the last micro-batch.  Every sink asks
+    :func:`_committed` first and skips a batch its target's head already
+    records, which makes each versioned commit exactly-once per batch
+    (the rescue Delta's txn log performs).  A sink that commits several
+    labels asks for each one and catches up only the ones that lag.  The
+    head read pins its version while the write lands in a fresh one, so
+    there is no read-own-write hazard."""
+    v = store.version(label)
+    head = store.read(batch.sparkSession, label, v) if v > 0 else first
+    rows = batch if head is None else merge(head, batch)
+    extra = meta(rows) if callable(meta) else meta or {}
+    return store.write(label, rows, meta={"batch_id": batch_id, **extra}, **write_opts)
+
+
 def start_parquet_sink(
     stream_df: DataFrame,
     path: str,
@@ -143,17 +188,9 @@ def start_parquet_sink(
     the first unprocessed source file and never re-emits rows (exactly-once
     for file sources → file sink).  This is the firehose path at 100 TB:
     per-batch appends, no rewrite of existing data (compact later with
-    ``LabelStore.compact``-style OPTIMIZE).
-
-    Returns the started StreamingQuery (caller awaits/stops)."""
-    return (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    ``LabelStore.compact``-style OPTIMIZE)."""
+    return _start(
+        stream_df.writeStream.format("parquet").option("path", path), checkpoint_dir, query_name
     )
 
 
@@ -169,9 +206,8 @@ def start_store_sink(
     """Stream → versioned :class:`~scalligraph_spark.store.LabelStore`
     commits via ``foreachBatch``: each micro-batch lands as a NEW table
     version (current ∪ batch) with the batch id recorded in the commit
-    metadata, so a replayed batch after a crash-restart is detected and
-    skipped — foreachBatch is at-least-once, the batch-id check makes the
-    versioned commit idempotent (the same rescue Delta's txn log performs).
+    metadata, so a replayed batch after a crash-restart is skipped
+    (:func:`_fold`).
 
     Scope: rollup/dimension tables whose current version is rewrite-sized
     (windowed aggregates, session summaries).  A raw firehose should use
@@ -182,34 +218,13 @@ def start_store_sink(
     commit (store.write contract), so an incrementally-maintained table
     stays prunable by ``read_skipping`` without a separate backfill pass;
     ``bloom_cols`` does the same for per-file Bloom filters (point
-    lookups on unclustered columns — the Delta bloom-index analog).
-
-    Returns the started StreamingQuery (caller awaits/stops)."""
+    lookups on unclustered columns — the Delta bloom-index analog)."""
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        cur_v = store.version(label)
-        if cur_v > 0:
-            last = store.commit_meta(label, cur_v).get("batch_id", -1)
-            if batch_id <= last:
-                return  # replayed batch after restart — already committed
-            # reads pin to cur_v while the write lands in a fresh v-dir —
-            # no read-own-write hazard
-            merged = store.read(batch_df.sparkSession, label, cur_v).unionByName(batch_df)
-        else:
-            merged = batch_df
-        store.write(
-            label, merged, meta={"batch_id": batch_id},
-            stats_cols=stats_cols, bloom_cols=bloom_cols,
-        )
+        if not _committed(store, label, batch_id):
+            _fold(store, label, batch_id, batch_df, stats_cols=stats_cols, bloom_cols=bloom_cols)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
@@ -358,31 +373,22 @@ def start_dedup_sink(
     distinct 32-hex md5 per committed document (appended by this sink as
     it commits, i.e. the hash column IS maintained incrementally), with
     the broadcast Bloom pre-filter pruning the semi-join on mostly-novel
-    batches.  Batch-id idempotence as in :func:`start_store_sink`, but
-    tracked PER TABLE: the sink commits two tables (the corpus, then its
-    ``__hashes`` sidecar), and a crash between the two leaves the sidecar
-    one batch behind.  A replayed batch therefore skips only the table(s)
-    whose OWN commit meta already records it and catches up the lagging
-    one — checking just the corpus table would return early and leave the
-    batch's hashes missing forever, silently re-admitting future
-    duplicates.  Classification replays identically because it reads the
-    sidecar at its pre-batch version in both runs.
-
-    Returns the started StreamingQuery (caller awaits/stops)."""
+    batches.  Batch-id idempotence (:func:`_fold`) is tracked PER TABLE:
+    the sink commits the corpus, then its ``__hashes`` sidecar, and a
+    crash between the two leaves the sidecar one batch behind — checking
+    just the corpus would leave the batch's hashes missing forever,
+    silently re-admitting future duplicates.  Classification replays
+    identically because it reads the sidecar at its pre-batch version in
+    both runs."""
     hashes_label = f"{label}__hashes"
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         from scalligraph_spark.operators.dedup import incremental_dedup
 
         spark = batch_df.sparkSession
-        cur_v = store.version(label)
         hv = store.version(hashes_label)
-        label_done = (
-            cur_v > 0 and store.commit_meta(label, cur_v).get("batch_id", -1) >= batch_id
-        )
-        hashes_done = (
-            hv > 0 and store.commit_meta(hashes_label, hv).get("batch_id", -1) >= batch_id
-        )
+        label_done = _committed(store, label, batch_id)
+        hashes_done = _committed(store, hashes_label, batch_id)
         if label_done and hashes_done:
             return  # replayed batch — both tables already committed
         corpus_hashes = (
@@ -399,25 +405,13 @@ def start_dedup_sink(
             new_keys = classified.where(F.col("status") == "new").select(id_col, "h")
             if not label_done:
                 batch_new = batch_df.join(new_keys.select(id_col), id_col, "left_semi")
-                merged = (
-                    store.read(spark, label, cur_v).unionByName(batch_new) if cur_v > 0 else batch_new
-                )
-                store.write(label, merged, meta={"batch_id": batch_id})
+                _fold(store, label, batch_id, batch_new)
             if not hashes_done:
-                new_h = new_keys.select("h").distinct()
-                merged_h = corpus_hashes.unionByName(new_h) if hv > 0 else new_h
-                store.write(hashes_label, merged_h, meta={"batch_id": batch_id})
+                _fold(store, hashes_label, batch_id, new_keys.select("h").distinct())
         finally:
             classified.unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def start_neardup_sink(
@@ -445,14 +439,12 @@ def start_neardup_sink(
        so the NEXT batch probes base ∪ segments with no rebuild).
 
     The first batch bootstraps the index from its own survivors.
-    Batch-id idempotence is tracked per artifact (corpus commit meta AND
-    index meta): a crash between the corpus append and the index extend
-    replays into catching up ONLY the index — classification replays
-    identically because it reads the index at its pre-batch state either
-    way.  Run `compact_minhash_index` under maintenance when the segment
-    count grows.
-
-    Returns the started StreamingQuery (caller awaits/stops)."""
+    Batch-id idempotence (:func:`_fold`) is tracked per artifact (corpus
+    commit meta AND index meta): a crash between the corpus append and
+    the index extend replays into catching up ONLY the index —
+    classification replays identically because it reads the index at its
+    pre-batch state either way.  Run `compact_minhash_index` under maintenance when the segment
+    count grows."""
     from scalligraph_spark.operators.dedup import minhash_lsh_pairs
     from scalligraph_spark.operators.dedup_index import (
         build_minhash_index,
@@ -463,10 +455,7 @@ def start_neardup_sink(
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        cur_v = store.version(corpus_label)
-        corpus_done = (
-            cur_v > 0 and store.commit_meta(corpus_label, cur_v).get("batch_id", -1) >= batch_id
-        )
+        corpus_done = _committed(store, corpus_label, batch_id)
         have_index = store.version(index_name) > 0
         index_done = have_index and read_meta(store, index_name).get("batch_id", -1) >= batch_id
         if corpus_done and index_done:
@@ -486,12 +475,7 @@ def start_neardup_sink(
         try:  # finally: a failed commit must not strand the batch cache
             survivors.count()
             if not corpus_done:
-                merged = (
-                    store.read(spark, corpus_label, cur_v).unionByName(survivors)
-                    if cur_v > 0
-                    else survivors
-                )
-                store.write(corpus_label, merged, meta={"batch_id": batch_id})
+                _fold(store, corpus_label, batch_id, survivors)
             if not index_done:
                 if have_index:
                     extend_minhash_index(
@@ -508,14 +492,7 @@ def start_neardup_sink(
         finally:
             survivors.unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def start_quality_gate_sink(
@@ -542,40 +519,20 @@ def start_quality_gate_sink(
     into ingestion — row-level quarantine is
     :func:`~scalligraph_spark.writes.validate_rows`; near-dup gating is
     :func:`start_neardup_sink`; the three stack.  Batch-id idempotence
-    per target label, as in :func:`start_store_sink`."""
+    (:func:`_fold`) is checked on both target labels."""
     from scalligraph_spark.operators.quality import run_quality_checks
 
     qlabel = quarantine_label or f"{label}__quarantine"
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        for target in (label, qlabel):
-            v = store.version(target)
-            if v > 0 and store.commit_meta(target, v).get("batch_id", -1) >= batch_id:
-                return  # replayed batch already routed
+        if _committed(store, label, batch_id) or _committed(store, qlabel, batch_id):
+            return  # replayed batch already routed
         report = [r.asDict() for r in run_quality_checks(batch_df, checks).collect()]
         ok = all(r["passed"] for r in report)
-        target = label if ok else qlabel
-        v = store.version(target)
-        merged = store.read(spark, target, v).unionByName(batch_df) if v > 0 else batch_df
-        store.write(
-            target,
-            merged,
-            meta={
-                "batch_id": batch_id,
-                "quality_report": report,
-                "gate": "passed" if ok else "quarantined",
-            },
-        )
+        gate = {"quality_report": report, "gate": "passed" if ok else "quarantined"}
+        _fold(store, label if ok else qlabel, batch_id, batch_df, meta=gate)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def start_stats_sink(
@@ -591,34 +548,19 @@ def start_stats_sink(
     into the stored sketch table as a new version — the incremental-stats
     loop (`stats.merge_sketches`) running continuously, so planners and
     auto-sized operators read near-real-time metadata while NEVER
-    rescanning history.  Batch-id idempotence matches `start_store_sink`:
-    a replayed batch after crash-restart is skipped, keeping the merge
-    exactly-once per batch.
+    rescanning history.  A replayed batch after crash-restart is skipped
+    (:func:`_fold`), keeping the merge exactly-once per batch.
 
     Read back with ``stats.sketch_estimates(store.read(spark, label))``.
     """
     from scalligraph_spark.stats import column_sketches, merge_sketches
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sk = column_sketches(batch_df, columns=columns)
-        cur_v = store.version(label)
-        if cur_v > 0:
-            last = store.commit_meta(label, cur_v).get("batch_id", -1)
-            if batch_id <= last:
-                return
-            merged = merge_sketches(store.read(batch_df.sparkSession, label, cur_v), batch_sk)
-        else:
-            merged = batch_sk
-        store.write(label, merged, meta={"batch_id": batch_id})
+        if not _committed(store, label, batch_id):
+            sketch = column_sketches(batch_df, columns=columns)
+            _fold(store, label, batch_id, sketch, merge=merge_sketches)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def start_mv_sink(
@@ -633,43 +575,27 @@ def start_mv_sink(
     """Continuously-maintained materialized view on a live stream: each
     micro-batch is aggregated once (`store.aggregate_snapshot` over the
     batch only — churn-sized, never history) and merged into the stored MV
-    as a new version by group-wise addition — the append-only case of the
-    counting-algorithm IVM in `store.refresh_aggregate`, running forever.
-    Readers get a near-real-time grouped count/sum table with the store's
-    snapshot isolation; batch-id idempotence matches `start_store_sink`
-    (a crash-replayed batch is skipped, keeping the merge exactly-once).
+    as a new version by group-wise addition (`store.merge_aggregate`) —
+    the append-only case of the counting-algorithm IVM in
+    `store.refresh_aggregate`, running forever.  Readers get a
+    near-real-time grouped count/sum table with the store's snapshot
+    isolation; a crash-replayed batch is skipped (:func:`_fold`), keeping
+    the merge exactly-once.
 
     Read back with ``store.read(spark, label)`` — columns are
     ``group_cols + n_rows + sum_<m>``.
     """
-    from pyspark.sql import functions as F
+    from scalligraph_spark.store import aggregate_snapshot, merge_aggregate
 
-    from scalligraph_spark.store import aggregate_snapshot
+    def merge(mv: DataFrame, delta: DataFrame) -> DataFrame:
+        return merge_aggregate(mv, delta, group_cols, measure_cols)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_mv = aggregate_snapshot(batch_df, group_cols, measure_cols)
-        cur_v = store.version(label)
-        if cur_v > 0:
-            last = store.commit_meta(label, cur_v).get("batch_id", -1)
-            if batch_id <= last:
-                return
-            prev = store.read(batch_df.sparkSession, label, cur_v)
-            merged = prev.unionByName(batch_mv).groupBy(*group_cols).agg(
-                F.sum("n_rows").alias("n_rows"),
-                *[F.sum(f"sum_{m}").alias(f"sum_{m}") for m in measure_cols],
-            )
-        else:
-            merged = batch_mv
-        store.write(label, merged, meta={"batch_id": batch_id})
+        if not _committed(store, label, batch_id):
+            delta = aggregate_snapshot(batch_df, group_cols, measure_cols)
+            _fold(store, label, batch_id, delta, merge=merge)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def enrich_with_scd2(
@@ -732,8 +658,8 @@ def start_index_maintenance_sink(
     text_col: str | None = None,
 ):
     """Streaming ingest + index freshness automation: each micro-batch
-    appends to the corpus label (batch-id idempotent, like
-    :func:`start_store_sink`) and then keeps the persisted index fresh —
+    appends to the corpus label (batch-id idempotent, :func:`_fold`) and
+    then keeps the persisted index fresh —
     the automated form of the reference's ``ReindexData`` maintenance
     (JanusDatabase.scala:304-434): declared indexes stay fresh without an
     operator watching ``StaleAnnIndexWarning`` by hand.
@@ -786,14 +712,11 @@ def start_index_maintenance_sink(
 
     def _heal(spark) -> None:
         """Replayed batch after a crash between corpus commit and
-        maintenance: the corpus is ahead of the index — fold the CDC
-        delta in (noop when already fresh).  ``on_mutation="tombstone"``:
-        an at-least-once redelivery can land a key twice with different
-        payloads, which the hash-diff reports as an update; the
-        tombstone fold keeps that heal CHURN-sized (the round-9 heal
-        paid a full rebuild here).  A rollback (inexpressible as
-        tombstones) still falls back to the bounded, rare rebuild rather
-        than raise inside foreachBatch and crash-loop the query."""
+        maintenance: fold the CDC delta in (noop when already fresh).  A
+        redelivery can land a key twice with different payloads — an
+        update to the diff — so the fold tombstones, churn-sized; a
+        rollback falls back to a rebuild rather than crash-loop the
+        query."""
         from scalligraph_spark.operators.index_catchup import IndexCatchupError
 
         ix_meta = _index_meta()
@@ -813,25 +736,15 @@ def start_index_maintenance_sink(
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        cur_v = store.version(corpus_label)
-        if cur_v > 0:
-            meta = store.commit_meta(corpus_label, cur_v)
-            if batch_id <= meta.get("batch_id", -1):
-                _heal(spark)  # corpus has this batch; the index may not
-                return
-            merged = store.read(spark, corpus_label, cur_v).unionByName(batch_df)
-            prev_rows = int(meta.get("n_rows", 0))
-        else:
-            merged = batch_df
-            prev_rows = 0
-        n_rows = merged.count()
-        v = store.write(corpus_label, merged, meta={"batch_id": batch_id, "n_rows": n_rows})
-        # capture the step's change feed DIRECTLY from the batch — under
-        # the sink's append-only contract the batch IS the delta, so the
-        # capture is churn-sized (zero diff jobs) and the crash-heal's
-        # table_changes reads it instead of falling back to a corpus-sized
-        # two-snapshot hash diff.  Skipped when no key column is known
-        # (the heal then passes the index meta's key to the diff fallback).
+        if _committed(store, corpus_label, batch_id):
+            _heal(spark)  # corpus has this batch; the index may not
+            return
+        prev_rows = int(store.commit_meta(corpus_label).get("n_rows", 0))
+        v = _fold(store, corpus_label, batch_id, batch_df, meta=lambda rows: {"n_rows": rows.count()})
+        n_rows = int(store.commit_meta(corpus_label, v)["n_rows"])
+        # the append-only batch IS the step's change feed: capturing it
+        # costs no diff, and the crash-heal's table_changes reads it instead
+        # of a corpus-sized two-snapshot hash diff
         from scalligraph_spark.cdf import capture_append
 
         ix_meta = _index_meta()
@@ -841,9 +754,7 @@ def start_index_maintenance_sink(
         if key and key in batch_df.columns:
             capture_append(store, corpus_label, v, batch_df, [key])
         else:
-            # a corpus with an unrecognised id column gets NO captured feed:
-            # every crash-heal on a replayed batch then pays the corpus-sized
-            # two-snapshot hash diff — make the downgrade visible (ADVICE r9)
+            # without a key no feed is captured: make the costlier heal visible
             import warnings
 
             warnings.warn(
@@ -875,14 +786,7 @@ def start_index_maintenance_sink(
         if trained_rows == 0 or (n_rows - trained_rows) / trained_rows >= rebuild_growth:
             reindex_ann(spark, store, index_name, corpus_store=store, id_col=id_col, vec_col=vec_col)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)
 
 
 def start_cdc_replay_sink(
@@ -901,30 +805,21 @@ def start_cdc_replay_sink(
     exactly (the replay property the cdf pytest pins, now at streaming
     cadence — the downstream half of a CDC replication pipeline).
 
-    Batch-id idempotence as in :func:`start_store_sink`: a replayed batch
-    after a crash-restart is detected in the commit meta and skipped.
+    A replayed batch after a crash-restart is skipped (:func:`_fold`).
     Scale shape: the replica base never shuffles — apply_changes
     anti-joins the broadcast churn-sized touched keys."""
-    from scalligraph_spark.cdf import apply_changes
+    from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, apply_changes
+
+    def merge(base: DataFrame, changes: DataFrame) -> DataFrame:
+        return apply_changes(base, changes, key_cols)
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        cur_v = store.version(label)
-        if cur_v > 0 and store.commit_meta(label, cur_v).get("batch_id", -1) >= batch_id:
-            return  # replayed batch after restart — already committed
-        if cur_v > 0:
-            base = store.read(batch_df.sparkSession, label, cur_v)
-        else:
-            # bootstrap: the replica's schema is the feed minus its meta
-            base = batch_df.sparkSession.createDataFrame(
-                [], batch_df.drop("_change_type", "_commit_version").schema
-            )
-        store.write(label, apply_changes(base, batch_df, key_cols), meta={"batch_id": batch_id})
+        if _committed(store, label, batch_id):
+            return
+        # bootstrap: the replica's schema is the feed minus its meta
+        empty = batch_df.sparkSession.createDataFrame(
+            [], batch_df.drop(CHANGE_TYPE, COMMIT_VERSION).schema
+        )
+        _fold(store, label, batch_id, batch_df, merge=merge, first=empty)
 
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df.writeStream.foreachBatch(_commit), checkpoint_dir, query_name)

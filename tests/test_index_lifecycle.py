@@ -79,7 +79,8 @@ def _assert_next_seq_unused(store, kind, settled=True):
     """The seq the next extend mints (published counter + 1) is above
     every seq a published record or a base used; once the operation has
     completed, no label for it was ever written either (a crashed extend
-    leaves its unpublished segment for the re-run to overwrite)."""
+    leaves its unpublished segment behind, and the re-run skips its
+    seq)."""
     seq = int(segments.read_meta(store, "ix")["seq"]) + 1
     assert seq > _used_seqs(store, kind), f"next extend would reuse seq {seq}"
     fam = segments.family(kind)
@@ -172,3 +173,55 @@ def failures(spark, tmp_path_factory):
 @pytest.mark.parametrize("kind", KINDS)
 def test_crash_windows(failures, kind):
     assert failures[kind] == []
+
+
+def test_concurrent_extends_lose_no_batch(spark, tmp_path):
+    """Two threads extend one value index at once, both past reading the
+    record before either writes a segment.  Afterwards a batch is
+    readable unless its thread raised ``VersionConflictError``, and every
+    segment the carrier lists was written once."""
+    import threading
+
+    from scalligraph_spark.operators import load_value_index, lookup_ids
+    from scalligraph_spark.store import VersionConflictError
+
+    st = LabelStore(str(tmp_path / "race"))
+    st.write("corpus", rows(spark, "value", range(10)))
+    build(spark, st, "value", "ix", "corpus")
+    ids = {t: list(range(10 + 5 * t, 15 + 5 * t)) for t in (0, 1)}
+    gate = threading.Barrier(2, timeout=60)
+    real = st.write
+
+    def write(lbl, *a, **k):
+        if lbl.startswith("ix__") and "seg" in lbl:
+            try:
+                gate.wait()
+            except threading.BrokenBarrierError:
+                pass  # the other thread already failed
+        return real(lbl, *a, **k)
+
+    st.write = write
+
+    def run(t):
+        try:
+            EXTEND["value"](spark, st, "ix", rows(spark, "value", ids[t]))
+        except VersionConflictError as e:
+            gate.abort()
+            return e
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        errors = dict(zip((0, 1), pool.map(run, (0, 1), timeout=300)))
+    st.write = real
+
+    assert any(e is None for e in errors.values())
+    names = [f"name{i}" for i in range(20)]
+    found = {r[1] for r in lookup_ids(load_value_index(spark, st, "ix"), names).collect()}
+    for t, err in errors.items():
+        if err is None:
+            assert set(ids[t]) <= found, f"thread {t} returned but its batch is lost"
+        else:
+            assert not set(ids[t]) & found, f"thread {t} raised but its batch is visible"
+    assert set(range(10)) <= found
+    listed = segments.read_meta(st, "ix")["segments"]
+    assert len(listed) == len(set(listed))
+    assert all(len(st.history(lbl)) == 1 for lbl in listed)

@@ -554,3 +554,18 @@ def test_strict_hot_funnel_single_user_exchange(spark):
     assert "hashpartitioning(user_id" in p
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
     assert "explode" in p and "WindowGroupLimit" in p
+
+
+@pytest.mark.parametrize(
+    "entry, scans, exchanges", [("store_join_refresh", 18, 9), ("store_mv_refresh", 7, 6)]
+)
+def test_incremental_refresh_plan_size(spark, entry, scans, exchanges):
+    """Refreshing a view from the change images may not plan more parquet
+    scans or shuffle exchanges than the semi-join image recovery it
+    replaced (the bounds are that plan's counts at this scale factor):
+    filtering one tagged feed per image re-runs both sides of the diff."""
+    import re
+
+    tree = _plan(spark, entry).split("\n\n(1)")[0]
+    assert 0 < tree.count("Scan parquet") <= scans
+    assert 0 < len(re.findall(r"\bExchange\b", tree)) <= exchanges

@@ -265,10 +265,11 @@ def main() -> int:
     # (PERF_r14: n_common=0, geomean null, scaling block empty — VERDICT r14
     # #1), so the cap is now DETERMINISTIC: the PINNED_SUMMARY core (the 26
     # r3-baseline keys + the 20 most expensive keys of the r14 close run,
-    # values rounded to 2 decimals) prints on EVERY run — same set at every
-    # core count and every round, so PERF/scaling comparisons always overlap
-    # — and only the remaining tail keys rotate (offset persisted in
-    # BENCH_LOCAL.json) to keep round-over-round coverage of the rest.
+    # values rounded to 3 decimals below 1 s, else 2) prints on EVERY run
+    # — same set at every core count and every round, so PERF/scaling
+    # comparisons always overlap — and only the remaining tail keys rotate
+    # (offset persisted in BENCH_LOCAL.json) to keep round-over-round
+    # coverage of the rest.
     local_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
     tail_offset = 0
     try:
@@ -277,18 +278,26 @@ def main() -> int:
     except (OSError, ValueError):
         pass
     # full result for local PERF tracking (never truncated)
+    def sec(v: float) -> float:
+        # 2 decimals would quantize the sub-second keys by up to ~5%
+        return round(v, 3 if v < 1 else 2)
+
     tail_keys = [k for k in times if k not in PINNED_SUMMARY]
-    capped = {k: round(times[k], 2) for k in PINNED_SUMMARY if k in times}
+    capped = {k: sec(times[k]) for k in PINNED_SUMMARY if k in times}
     budget = 1900  # total summary-line budget inside the driver's 2000-char tail
     wrapper_len = len(json.dumps(dict(out, queries=capped, n_queries=999,
                                       queries_omitted=999, tail_offset=999),
                                  separators=(",", ":"))) - len(
         json.dumps(capped, separators=(",", ":")))
+    # last resort: a pinned core past the budget loses its newest keys
+    # rather than overflowing the tail (the loop below then adds none)
+    while capped and wrapper_len + len(json.dumps(capped, separators=(",", ":"))) > budget:
+        capped.popitem()
     n_tail = 0
     for i in range(len(tail_keys)):
         k = tail_keys[(tail_offset + i) % len(tail_keys)]
         trial = dict(capped)
-        trial[k] = round(times[k], 2)
+        trial[k] = sec(times[k])
         if wrapper_len + len(json.dumps(trial, separators=(",", ":"))) > budget:
             break
         capped = trial

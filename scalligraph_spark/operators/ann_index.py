@@ -72,11 +72,21 @@ def _corpus_meta(corpus_store, corpus_label: str | None) -> dict:
     }
 
 
-def _centroids(spark: SparkSession, store, name: str, version: int | None = None):
+def _artifact(store, name: str, version: int | None = None) -> dict:
+    """An artifact table's columns as Python lists, read in-process with
+    pyarrow: artifacts are broadcast-sized (≤4096 centroids, m·2^nbits
+    codewords, one config row) and the store is local files, so loading
+    one launches no Spark job."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(store.path(name, version)).to_pydict()
+
+
+def _centroids(store, name: str, version: int | None = None):
     import numpy as np
 
-    rows = store.read(spark, name, version).orderBy("cell").collect()
-    return np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
+    t = _artifact(store, name, version)
+    return np.array(t["centroid"], dtype=np.float64)[np.argsort(t["cell"], kind="stable")]
 
 
 def build_ivf_index(
@@ -199,7 +209,7 @@ def extend_ann_cells(
 
 
 def _extend(spark: SparkSession, store, name: str, meta: dict, batch: DataFrame, write) -> dict:
-    C = _centroids(spark, store, name)
+    C = _centroids(store, name)
     n_list = int(meta["cells_n_list"])
     write("cells", _assign_cells(batch, C, n_list, meta["id_col"], meta["vec_col"]))
     return {}
@@ -322,14 +332,16 @@ def load_ann_index(
     version: int | None = None,
     corpus_store=None,
 ) -> AnnIndex:
-    """Load a persisted index artifact into its queryable numpy form (a
-    bounded collect: artifacts are broadcast-sized).  With
+    """Load a persisted index artifact into its queryable numpy form (an
+    in-process read, no Spark job: artifacts are broadcast-sized).  With
     ``corpus_store``, a corpus that advanced past the trained version
     raises :class:`StaleAnnIndexWarning` — recall degrades silently
     otherwise; refresh with :func:`reindex_ann`."""
     import numpy as np
 
     v = store.version(name) if version is None else version
+    if v == 0:
+        raise FileNotFoundError(f"label {name!r} has no committed version in {store.root}")
     meta = store.commit_meta(name, v)
     if version is None and meta.get("cells"):
         meta = dict(meta, **segments.read_meta(store, name))  # the lists' record
@@ -337,21 +349,19 @@ def load_ann_index(
         FAMILY, name, meta, corpus_store, StaleAnnIndexWarning, "rebuild with reindex_ann()"
     )
     kind = meta.get("kind")
-    df = store.read(spark, name, v)
     if kind == "ivf":
-        C = _centroids(spark, store, name, v)
-        return AnnIndex(kind="ivf", version=v, meta=meta, centroids=C)
+        return AnnIndex(kind="ivf", version=v, meta=meta, centroids=_centroids(store, name, v))
     if kind == "pq":
         m, nbits, dsub = meta["m"], meta["nbits"], meta["dsub"]
-        k = 1 << nbits
-        books = np.empty((m, k, dsub), dtype=np.float64)
-        for r in df.collect():
-            books[r["subspace"], r["code"]] = list(r["centroid"])
+        books = np.empty((m, 1 << nbits, dsub), dtype=np.float64)
+        t = _artifact(store, name, v)
+        for sub, code, cen in zip(t["subspace"], t["code"], t["centroid"]):
+            books[sub, code] = cen
         return AnnIndex(kind="pq", version=v, meta=meta, codebooks=books)
     if kind == "lsh":
-        row = df.collect()[0]
+        t = _artifact(store, name, v)
         return AnnIndex(kind="lsh", version=v, meta=meta,
-                        num_planes=int(row["num_planes"]), num_tables=int(row["num_tables"]))
+                        num_planes=int(t["num_planes"][0]), num_tables=int(t["num_tables"][0]))
     raise ValueError(f"label {name!r} v{v} is not an ANN index artifact (meta={meta})")
 
 

@@ -333,8 +333,8 @@ def tombstone(
     upserts: DataFrame | None = None, as_of_version: int | None = None,
 ) -> None:
     """Hide ``keys`` (one column) in every existing part at a freshly
-    consumed seq and re-insert ``upserts`` as the next segment, both
-    published by one carrier commit."""
+    consumed seq and re-insert ``upserts`` (when not ``None``) as the
+    next segment, both published by one carrier commit."""
     _tombstone(spark, store, fam, name, *_record(store, name, fam), keys, upserts, as_of_version)
 
 
@@ -346,7 +346,7 @@ def _tombstone(
     seq = int(meta["seq"]) + 1
     lbl = write_tombstones(spark, store, name, keys, next(iter(fam.parts.values())), seq)
     meta = dict(meta, seq=seq, **publish_version(store, meta, lbl))
-    if upserts is not None and upserts.take(1):
+    if upserts is not None:
         _extend(spark, store, fam, name, upserts, meta, read_v, as_of_version=as_of_version)
         return
     _stamp(meta, fam, None, as_of_version)
@@ -450,6 +450,11 @@ def catchup(
                     churn,
                 )
             mutated, upserts = _net_effects(ch, key_cols)
+            # the churn counts say whether any row came in, so no job
+            # probes the upserts; only a key inserted and deleted again
+            # within the range leaves an empty segment
+            if not set(churn) & {"insert", "update_postimage"}:
+                upserts = None
             _tombstone(spark, store, fam, name, meta, read_v, mutated, upserts, v_to)
             return dict(report, action="tombstoned", churn=churn)
         if not churn:

@@ -68,21 +68,31 @@ class TextIndex:
 
 
 def _postings(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(term, doc_id, tf, dl)``.  A document with no tokens (null text)
+    gets one sentinel posting ``(null, doc_id, 0, 0)``: no query term
+    matches it and the vocabulary skips it, but it keeps the document
+    countable, and hideable by a tombstone, when compaction restores
+    n_docs from the postings."""
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     exploded = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(toks).cast("long").alias("dl"),
-        F.explode(toks).alias("term"),
+        F.col(id_col).alias("doc_id"), _dl(toks).alias("dl"), F.explode_outer(toks).alias("term")
     )
     # ONE shuffle on (term, doc_id), paid at build time instead of per
     # query; dl is constant within a doc
     return exploded.groupBy("term", "doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("tf"), F.first("dl").alias("dl")
+        F.count("term").cast("long").alias("tf"), F.first("dl").alias("dl")
     )
 
 
+def _dl(toks):
+    return F.when(toks.isNull(), 0).otherwise(F.size(toks)).cast("long")
+
+
 def _df(postings: DataFrame) -> DataFrame:
-    return postings.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    return (
+        postings.where(F.col("term").isNotNull())
+        .groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    )
 
 
 def _write_terms(store, name: str, meta: dict, terms: DataFrame) -> dict:
@@ -156,7 +166,7 @@ def _extend(spark: SparkSession, store, name: str, meta: dict, new_docs: DataFra
     text_col, id_col = str(meta["text_col"]), str(meta["id_col"])
     n, sumdl = new_docs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(F.split(F.trim(F.col(text_col)), r"\s+"))).cast("long").alias("sumdl"),
+        F.sum(_dl(F.split(F.trim(F.col(text_col)), r"\s+"))).alias("sumdl"),
     ).first()
     seg = write("", _postings(new_docs, text_col, id_col))
     merged = (

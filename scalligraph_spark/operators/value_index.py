@@ -174,7 +174,18 @@ def _extend(spark: SparkSession, store, name: str, meta: dict, new_df: DataFrame
         existing = segments.read_part(spark, store, FAMILY, name, meta)
         clash = existing.join(F.broadcast(batch.select("value").distinct()), "value", "left_semi")
         _reject(clash, name, "the batch re-uses already-indexed value(s)")
-    return {"n_rows": int(meta["n_rows"]) + store.read(spark, write("", batch)).count()}
+    return {"n_rows": int(meta["n_rows"]) + _rows(spark, store, write("", batch))}
+
+
+def _rows(spark: SparkSession, store, lbl: str) -> int:
+    """Rows of a segment, summed from the footer row counts its write
+    recorded in the manifest (``stats_cols``), so counting costs no job;
+    a sidecar-tier manifest or an unreadable footer falls back to a
+    count."""
+    files = store.file_manifest(lbl).get("files")
+    if files is None or any(e["rows"] is None for e in files):
+        return store.read(spark, lbl).count()
+    return sum(e["rows"] for e in files)
 
 
 def compact_value_index(spark: SparkSession, store, name: str) -> int:

@@ -26,6 +26,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, apply_changes, change_images, change_status
 
@@ -152,6 +153,11 @@ _KEPT_FRACTION_FALLBACK = 0.5
 _MANIFEST_CACHE: dict = {}
 _MANIFEST_CACHE_MAX = 64
 _MANIFEST_CACHE_MU = threading.Lock()
+
+
+# _commit.json keys only the store writes: the wall-clock commit stamp
+# and the recorded schema
+_RESERVED_META = ("_committed_at", "_schema")
 
 
 class MissingFileStatsWarning(UserWarning):
@@ -1115,6 +1121,12 @@ def _publish_manifest(data_dir: str, man: dict) -> None:
     os.replace(tmp, os.path.join(data_dir, "_file_stats.json"))
 
 
+def _reader(spark: SparkSession, schema: StructType | None):
+    """A parquet reader that plans from ``schema`` (no footer-inference
+    job) or, when it is ``None``, infers."""
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
 class VersionConflictError(RuntimeError):
     """``store.write(..., expected_version=N)`` found v(N+1) already
     claimed — another writer committed over the same base.  The physical
@@ -1225,6 +1237,21 @@ class LabelStore:
         Costs a column-pruned data read at write time; false positives
         only keep files, the residual filter stays exact.
 
+        Either left ``None`` (the default) re-collects the columns the
+        head version's manifest tracks, so a commit onto a
+        skipping-enabled label stays skipping-enabled; ``[]`` collects
+        none.
+
+        Every unpartitioned commit records the written frame's schema,
+        made nullable (what reading the files back yields), under the
+        reserved ``_schema`` key of ``_commit.json``: :meth:`read` and
+        :meth:`read_skipping` hand it to Spark, so planning a read of the
+        version launches no footer-inference job.  It costs nothing at
+        write time (the analysed plan already knows it).  A
+        ``partition_by`` commit records none (partition column types come
+        from the directory names), and neither do legacy or foreign
+        versions: those reads keep inferring.
+
         ``partition_by`` → hive-style directory partitioning (partition
         pruning on those columns); ``bucket_hint`` = (n, cols) →
         pre-repartition by the bucket columns so same-key rows co-locate
@@ -1272,6 +1299,10 @@ class LabelStore:
 
         label_dir = os.path.join(self.root, label)
         os.makedirs(label_dir, exist_ok=True)
+        if stats_cols is None:
+            stats_cols = self._inherited_stats_cols(label)
+        if bloom_cols is None:
+            bloom_cols = self._inherited_bloom_cols(label)
         if expected_version is not None:
             new_v = expected_version + 1
             if os.path.exists(self.path(label, new_v)):
@@ -1325,11 +1356,17 @@ class LabelStore:
             # (reserved key, stripped by commit_meta) — the clock that
             # makes vacuum's retention window structural (Delta VACUUM's
             # "removed from state longer than N" contract needs to know
-            # WHEN a version was superseded, not just that it was).
+            # WHEN a version was superseded, not just that it was) — and,
+            # unpartitioned, the schema readers plan from (reserved too:
+            # a caller's ``_schema`` is never written through).
             import time as _time
 
+            record = {k: v for k, v in (meta or {}).items() if k not in _RESERVED_META}
+            record["_committed_at"] = _time.time()
+            if not partition_by:
+                record["_schema"] = json.loads(df._jdf.schema().asNullable().json())
             with open(os.path.join(staging, "_commit.json"), "w") as f:
-                json.dump(dict(meta or {}, _committed_at=_time.time()), f)
+                json.dump(record, f)
             while True:
                 try:
                     os.rename(staging, self.path(label, new_v))
@@ -1357,16 +1394,27 @@ class LabelStore:
         """Commit metadata recorded by ``write(..., meta=...)`` for a
         version ({} when none was recorded) — e.g. the streaming sink's
         batch id for replay idempotence.  Reserved bookkeeping keys
-        (``_committed_at``) are stripped: callers that round-trip meta
-        through ``dict(commit_meta(...), k=v)`` must not carry a stale
-        stamp forward (write re-stamps every commit)."""
+        (``_committed_at``, ``_schema``) are stripped: callers that
+        round-trip meta through ``dict(commit_meta(...), k=v)`` must not
+        carry a stale stamp or schema forward (write re-records both)."""
+        m = self._commit_record(label, version)
+        for k in _RESERVED_META:
+            m.pop(k, None)
+        return m
+
+    def _commit_record(self, label: str, version: int | None = None) -> dict:
+        """A version's whole ``_commit.json`` ({} when absent)."""
         p = os.path.join(self.path(label, version), "_commit.json")
         if not os.path.exists(p):
             return {}
         with open(p) as f:
-            m = json.load(f)
-        m.pop("_committed_at", None)
-        return m
+            return json.load(f)
+
+    def _schema(self, label: str, version: int) -> StructType | None:
+        """The schema a version's commit recorded (``None`` for legacy,
+        partitioned and foreign versions: readers infer it)."""
+        schema = self._commit_record(label, version).get("_schema")
+        return None if schema is None else StructType.fromJson(schema)
 
     def commit_time(self, label: str, version: int | None = None) -> float:
         """Wall-clock commit time of a version (epoch seconds) — the
@@ -1377,12 +1425,9 @@ class LabelStore:
         write-time-accurate).  Returns 0.0 for a version that doesn't
         exist — callers treat that as 'infinitely old'."""
         d = self.path(label, version)
-        p = os.path.join(d, "_commit.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                ts = json.load(f).get("_committed_at")
-            if ts is not None:
-                return float(ts)
+        ts = self._commit_record(label, version).get("_committed_at")
+        if ts is not None:
+            return float(ts)
         for marker in (os.path.join(d, "_SUCCESS"), d):
             if os.path.exists(marker):
                 return os.path.getmtime(marker)
@@ -1390,11 +1435,14 @@ class LabelStore:
 
     def read(self, spark: SparkSession, label: str, version: int | None = None) -> DataFrame:
         """Snapshot read — pinned to the pointed-at (or requested) version;
-        concurrent writes cannot change what this DataFrame scans."""
+        concurrent writes cannot change what this DataFrame scans.  A
+        version whose commit recorded its schema plans with no Spark job;
+        a legacy, partitioned or foreign one pays the footer-inference
+        job."""
         v = self.version(label) if version is None else version
         if v == 0:
             raise FileNotFoundError(f"label {label!r} has no committed version in {self.root}")
-        return spark.read.parquet(self.path(label, v))
+        return _reader(spark, self._schema(label, v)).parquet(self.path(label, v))
 
     # -- file-level data skipping -------------------------------------------
     def file_manifest(self, label: str, version: int | None = None) -> dict | None:
@@ -1489,17 +1537,22 @@ class LabelStore:
             kept = [e["path"] for e in man["files"] if _preds_may_match(e, preds, tz)]
             sample = man["files"][0]["path"] if man["files"] else None
             n_total = len(man["files"])
+        schema = self._schema(label, v)
         if not kept:
-            # provably empty — answer from METADATA: one footer read of a
-            # manifest-named file supplies the schema, so the empty
-            # result never pays the version's directory listing (at the
+            # provably empty — answer from METADATA, so the empty result
+            # never pays the version's directory listing (at the
             # million-file scale this tier targets, the listing IS the
-            # cost being avoided).  Restricted to unpartitioned layouts
-            # (hive partition-column TYPES are inferred from the full set
-            # of directory names, which a single file cannot reproduce)
-            # and to manifests that PROVED every file shares one schema
-            # (n_schemas == 1) — foreign/backfilled files may diverge,
-            # and the empty frame's columns must match read().where(F).
+            # cost being avoided): the recorded schema is read()'s own.
+            # A version that records none falls back to one footer read
+            # of a manifest-named file, restricted to unpartitioned
+            # layouts (hive partition-column TYPES are inferred from the
+            # full set of directory names, which a single file cannot
+            # reproduce) and to manifests that PROVED every file shares
+            # one schema (n_schemas == 1) — foreign/backfilled files may
+            # diverge, and the empty frame's columns must match
+            # read().where(F).
+            if schema is not None:
+                return spark.createDataFrame([], schema).where(F.lit(False))
             if (
                 sample is not None
                 and "=" not in os.path.dirname(sample)
@@ -1522,7 +1575,7 @@ class LabelStore:
             # driver wall.  Same rows either way: plain scan + exact
             # residual filter.
             return self.read(spark, label, v).where(cond)
-        df = spark.read.option("basePath", vdir).parquet(*[os.path.join(vdir, p) for p in kept])
+        df = _reader(spark, schema).option("basePath", vdir).parquet(*[os.path.join(vdir, p) for p in kept])
         return df.where(cond)
 
     def _prune_distributed(
@@ -1634,6 +1687,9 @@ class LabelStore:
         meta carrier is written once (first delta; also CAS-claimed) and
         thereafter only by :meth:`compact_mor`, which like vacuum must
         not run concurrently with writers.  Returns the claimed slot."""
+        # eager on purpose: a batch with a bad op must fail before it
+        # claims a slot, since every read_merged would trip over it; the
+        # job scans only the churn-sized batch
         ops = [r[0] for r in changes.select(op_col).distinct().collect()]
         bad = [o for o in ops if o not in ("upsert", "delete")]
         if bad:
@@ -1731,12 +1787,9 @@ class LabelStore:
         mor = f"{label}__mor"
         m = self.commit_meta(mor) if self.version(mor) > 0 else {}
         slots = self._delta_slots(label, m)
-        merged = self.read_merged(spark, label)
         # a manifest on the current base carries forward across the fold
-        # (same rule as compact/optimize), unless the caller overrides
-        write_opts.setdefault("stats_cols", self._inherited_stats_cols(label))
-        write_opts.setdefault("bloom_cols", self._inherited_bloom_cols(label))
-        v = self.write(label, merged, **write_opts)
+        # (write's default), unless the caller overrides
+        v = self.write(label, self.read_merged(spark, label), **write_opts)
         if slots:
             self.write(
                 mor,
@@ -1841,10 +1894,11 @@ class LabelStore:
         No-op (returns the current version) when the table already meets
         the target file count.
 
-        A file-stats manifest on the current version CARRIES FORWARD: the
-        rewrite re-collects stats for the same columns (the old per-file
-        ranges describe files that no longer exist) — otherwise nightly
-        compaction would silently disable data skipping.
+        A file-stats manifest on the current version CARRIES FORWARD
+        (:meth:`write`'s default): the rewrite re-collects stats for the
+        same columns (the old per-file ranges describe files that no
+        longer exist) — otherwise nightly compaction would silently
+        disable data skipping.
         """
         import math
 
@@ -1853,13 +1907,7 @@ class LabelStore:
         target = max(1, math.ceil(total / target_file_bytes))
         if target >= n_files:
             return v
-        return self.write(
-            label,
-            self.read(spark, label, v).coalesce(target),
-            partition_by=partition_by,
-            stats_cols=self._inherited_stats_cols(label, v),
-            bloom_cols=self._inherited_bloom_cols(label, v),
-        )
+        return self.write(label, self.read(spark, label, v).coalesce(target), partition_by=partition_by)
 
     def optimize(
         self,
@@ -1886,14 +1934,13 @@ class LabelStore:
         inherited = self._inherited_stats_cols(label, v) or []
         stats_cols = list(dict.fromkeys(inherited + list(zorder_by)))
         return self.write(
-            label, self.read(spark, label, v), zorder_by=(n_files, zorder_by),
-            stats_cols=stats_cols, bloom_cols=self._inherited_bloom_cols(label, v),
+            label, self.read(spark, label, v), zorder_by=(n_files, zorder_by), stats_cols=stats_cols
         )
 
     def _inherited_stats_cols(self, label: str, version: int | None = None) -> list[str] | None:
-        """The manifest columns a rewrite of this version should re-collect
-        (``None`` when the version has no manifest) — compaction and
-        OPTIMIZE must not silently drop data skipping."""
+        """The manifest columns a commit over this version re-collects
+        (``None`` when the version has no manifest) — commits, compaction
+        and OPTIMIZE must not silently drop data skipping."""
         man = self.file_manifest(label, version)
         return list(man["columns"]) if man else None
 

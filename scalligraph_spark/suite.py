@@ -5957,8 +5957,8 @@ def text_index_term_filter_q(spark, sf):
     "text_index_build",
     # the committed postings ARE a relation — DuckDB reproduces the whole
     # tokenize→count build (regexp_split_to_array ≡ F.split on \s+ after
-    # trim; NULL text yields no rows on both engines); flipped from
-    # rows-only in r10
+    # trim; a NULL text is one (NULL, doc_id, 0, 0) sentinel posting);
+    # flipped from rows-only in r10
     """
 WITH toks AS (
   SELECT doc_id,
@@ -5968,6 +5968,8 @@ WITH toks AS (
 )
 SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf, dl
 FROM toks GROUP BY term, doc_id, dl
+UNION ALL
+SELECT NULL, doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM documents WHERE text IS NULL
 """,
     "the BUILD phase of the persisted text-index lifecycle, benched "
     "separately from the query phase: one (term, doc_id) shuffle + "
@@ -6005,7 +6007,8 @@ _TEXT_INDEX_EXT_BUILT: set = set()
     "text_index_extend",
     # the delta SEGMENT is the batch's postings relation — DuckDB replays
     # the same 200-doc batch (ORDER BY doc_id LIMIT 200, ids offset) and
-    # the same tokenize→count; flipped from rows-only in r10
+    # the same tokenize→count, NULL-text sentinels included; flipped from
+    # rows-only in r10
     """
 WITH batch AS (
   SELECT doc_id + 10000000 AS doc_id, text
@@ -6018,6 +6021,8 @@ WITH batch AS (
 )
 SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf, dl
 FROM toks GROUP BY term, doc_id, dl
+UNION ALL
+SELECT NULL, doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM batch WHERE text IS NULL
 """,
     "INCREMENTAL index maintenance (the 100 TB answer to reindex_text's "
     "full rebuild): a 200-doc append folds in as a term-sorted delta "

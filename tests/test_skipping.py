@@ -14,6 +14,7 @@ import datetime
 import json
 import os
 import time
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -378,6 +379,35 @@ def test_from_store_warns_without_manifest(spark, store):
             [{"_name": "fromStore", "label": "t", "where": [["id", "<", 100]]}]
         )
     _same(t.df, df.where(F.col("id") < 100))
+
+
+def test_commit_keeps_the_file_stats_manifest(spark, store):
+    """A ``WriteSession`` commit onto a label with a manifest re-collects
+    the head's stats and bloom columns: reads still prune, and
+    ``fromStore`` keeps its skipping path."""
+    from scalligraph_spark.store import MissingFileStatsWarning
+    from scalligraph_spark.suite import executor_for
+    from scalligraph_spark.writes import WriteSession
+
+    df = _frame(spark, 3000)
+    store.write("t", df, sort_by=(6, ["id"]), stats_cols=["id", "d"], bloom_cols=["name"])
+    ws = WriteSession(spark, store, "t", id_col="id")
+    ws.remove(F.col("id") % 10 == 0)
+    v = ws.commit()
+    man = store.file_manifest("t", v)
+    assert man is not None
+    assert man["columns"] == ["id", "d"] and man["bloom_columns"] == ["name"]
+    pruned = store.read_skipping(spark, "t", [("id", "<", 200)])
+    assert len(pruned.inputFiles()) < len(man["files"])
+    _same(pruned, df.where((F.col("id") < 200) & (F.col("id") % 10 != 0)))
+    ex = executor_for(spark, SF, store_root=store.root)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", MissingFileStatsWarning)
+        t = ex.execute([{"_name": "fromStore", "label": "t", "where": [["d", "<", "2020-01-11"]]}])
+    _same(t.df, df.where((F.col("id") < 100) & (F.col("id") % 10 != 0)))
+    # an explicit empty list still opts out
+    store.write("t", df, stats_cols=[], bloom_cols=[])
+    assert store.file_manifest("t") is None
 
 
 def test_from_store_rows_are_policy_gated(spark, store):

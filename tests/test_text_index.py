@@ -268,3 +268,40 @@ def test_extend_clears_staleness_and_term_pushdown_survives_segments(spark, tmp_
     plan = buf.getvalue()
     # both the base scan and the segment scan carry the pushed In filter
     assert plan.count("In(term, [appended,spark])") >= 2
+
+
+def test_zero_token_document_stays_counted(spark, store):
+    """A null-text document has no terms but counts in n_docs (as in
+    ``bm25_rank``).  A tombstone catch-up plus compaction keeps it, so
+    BM25 scores equal the build's and a rebuild's; deleting it drops
+    it."""
+    from pyspark.sql import functions as F
+
+    from scalligraph_spark.operators import catchup_text_index, compact_text_index
+
+    docs = spark.createDataFrame(
+        [(0, "spark merge window", "a"), (1, None, "a"), (2, "window table", "a")],
+        "doc_id long, text string, tag string",
+    )
+    store.write("docs", docs)
+    build_text_index(store, "ix", store.read(spark, "docs"), corpus_store=store, corpus_label="docs")
+
+    def scores():
+        ix = load_text_index(spark, store, "ix")
+        return ix.n_docs, sorted(tuple(r) for r in indexed_bm25_topk(ix, ["window", "spark"]).collect())
+
+    built = scores()
+    assert built[0] == 3
+    assert built[1] == sorted(tuple(r) for r in bm25_rank(docs, ["window", "spark"]).collect())
+    # an update that keeps every text: doc 2 is tombstoned and re-inserted
+    store.write("docs", store.read(spark, "docs").withColumn(
+        "tag", F.when(F.col("doc_id") == 2, "b").otherwise(F.col("tag"))))
+    assert catchup_text_index(spark, store, "ix", store, on_mutation="tombstone")["action"] == "tombstoned"
+    compact_text_index(spark, store, "ix")
+    assert scores() == built
+    reindex_text(spark, store, "ix", store)
+    assert scores() == built
+    store.write("docs", store.read(spark, "docs").where("doc_id != 1"))
+    catchup_text_index(spark, store, "ix", store, on_mutation="tombstone")
+    compact_text_index(spark, store, "ix")
+    assert scores()[0] == 2

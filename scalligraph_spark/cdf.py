@@ -1,24 +1,50 @@
 """Change-data-feed over the versioned store: row-level change capture,
 multi-version change reads, and deterministic replay.
 
-The reference's change surface is the audit/event stream — every mutation
-publishes an event (``EventSrv.scala``; audit stamping in
-``writes.py``) — which tells subscribers THAT something changed.  A
-100 TB pipeline needs the data-plane face of that: WHICH rows changed
-between two committed versions, as rows, so downstream consumers
-(incremental MVs, search indexes, replicas, feature stores) update for
-the cost of the churn instead of re-reading the corpus.  This module
-implements the Delta-Lake-CDF-shaped contract over :class:`LabelStore`
-versions:
+The reference's change surface is the audit/event stream — a
+transaction announces its own changes when it commits
+(``tryTransaction``, models/Database.scala:23-109, and ``EventSrv``,
+services/EventSrv.scala:14-31).  A 100 TB pipeline needs the data-plane
+face of that: WHICH rows changed between two committed versions, as
+rows, so downstream consumers (incremental MVs, search indexes,
+replicas, feature stores) update for the cost of the churn instead of
+re-reading the corpus.  This module implements the Delta-Lake-CDF-shaped
+contract over :class:`LabelStore` versions:
 
 * every change row carries ``_change_type`` (``insert`` /
   ``update_preimage`` / ``update_postimage`` / ``delete``) and
   ``_commit_version`` alongside the table's own columns;
-* :func:`write_with_cdf` captures the feed AT WRITE TIME (the diff runs
-  once, not per consumer) into a ``<label>__cdf_v<N>`` side label;
+* a step's feed lives in a ``<label>__cdf_v<N>`` side label, published
+  after the data version, so a crash between the two leaves an
+  uncaptured step and never a feed for an unpublished version;
 * :func:`table_changes` reads captured feeds and diffs uncaptured steps;
 * :func:`apply_changes` replays a feed onto a base snapshot:
   ``apply_changes(read(v_a), table_changes(v_a→v_b)) ≡ read(v_b)``.
+
+Feeds are captured three ways:
+
+* **By the commit job of a ``WriteSession``** (``writes.py``).  The
+  session tags its pinned snapshot (:func:`tag_snapshot`): ``__pre``
+  keeps each snapshot row's image, ``__alive`` says whether the row
+  survives (a remove clears it instead of filtering; a create carries a
+  null ``__pre``).  :func:`observe_changes` classifies every row from
+  those two columns — an update whose row is value-identical to its
+  ``__pre`` is no change, decided on the cast-to-string values as
+  :func:`change_status` decides it — and the data write observes the
+  change rows and their per-type counts with ``DataFrame.observe``: the
+  same single Spark job.  :func:`publish_feed` builds the feed rows on
+  the driver, writes them with pyarrow and records the counts
+  (``churn``) and ``_schema`` in the feed's commit, through the store's
+  one publish routine (``LabelStore.publish``).  The driver only ever
+  receives rows it already held, so a session captures only when every
+  create comes from a driver-local collection and every update/remove
+  condition is a key list or an equality on ``_id``; any other session
+  (``transform``, a create from a scan, a non-key predicate, a layout
+  option on the commit) writes no feed and its step keeps the diff.
+* **From a diff after the commit**: :func:`capture_changes` and
+  :func:`write_with_cdf` (one more Spark job per step).
+* **From a pure append**: :func:`capture_append` (the batch is the
+  delta).
 
 This module is the only code that diffs two versions or folds keyed
 changes, with three primitives:
@@ -34,18 +60,24 @@ changes, with three primitives:
   onto a base by :func:`apply_changes` (whose broadcast anti-join never
   shuffles the base), the merge-on-read read (``store.read_merged``: a
   delta slot is its ``_commit_version``) and index catch-up
-  (``operators.segments``).
+  (``operators.segments``) over a multi-step range.
 """
 
 from __future__ import annotations
 
+import json
+import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 CHANGE_TYPE = "_change_type"
 COMMIT_VERSION = "_commit_version"
+CHANGE_TYPES = ("insert", "update_preimage", "update_postimage", "delete")
+# a WriteSession's capture columns (see the module docstring)
+PRE, ALIVE, NEW = "__pre", "__alive", "__new"
 
 
 def _cdf_label(label: str, version: int) -> str:
@@ -179,6 +211,166 @@ def write_with_cdf(
     return v
 
 
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _s(text: str) -> str:
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def tag_snapshot(df: DataFrame) -> DataFrame:
+    """A session's pinned snapshot with its capture columns: ``__pre``
+    (a null struct of the snapshot's columns until a mutation touches
+    the row), ``__alive`` set and ``__new`` clear."""
+    pre = F.lit(None).cast(StructType(df.schema.fields))
+    return df.select("*", pre.alias(PRE), F.lit(True).alias(ALIVE), F.lit(False).alias(NEW))
+
+
+def tag_created(rows: DataFrame) -> DataFrame:
+    """Created rows: alive and new (``__pre`` stays null)."""
+    return rows.select("*", F.lit(True).alias(ALIVE), F.lit(True).alias(NEW))
+
+
+def touch(df: DataFrame, hit: Column) -> DataFrame:
+    """Keep the pre-image of every snapshot row ``hit`` matches for the
+    first time — before the mutation that matched it rewrites the row."""
+    first = F.col(PRE).isNull() & ~F.col(NEW) & F.coalesce(hit, F.lit(False))
+    image = F.struct(*df.schema[PRE].dataType.names)
+    return df.withColumn(PRE, F.when(first, image).otherwise(F.col(PRE)))
+
+
+def live_rows(df: DataFrame) -> DataFrame:
+    """The rows of a tagged session frame that survive, untagged."""
+    return df.where(F.col(ALIVE)).drop(PRE, ALIVE, NEW)
+
+
+def observe_changes(df: DataFrame, assigned) -> tuple[DataFrame, tuple | None]:
+    """``(rows to write, capture)`` for a tagged session frame:
+    ``capture`` is ``(observation, feed schema)``, whose observation the
+    write job fills with the change rows (``came``: inserts and
+    post-images, ``gone``: deletes and pre-images) and the per-type
+    counts.  ``assigned`` names the columns the session's updates wrote;
+    no other column of a touched row can differ from its pre-image.  A
+    column type pyarrow cannot take gives ``capture`` ``None`` (no feed)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cols = [c for c in df.columns if c not in (PRE, ALIVE, NEW)]
+    types = {f.name: f.dataType for f in df.schema.fields}
+    schema = StructType(
+        [StructField(c, types[c]) for c in cols]
+        + [StructField(CHANGE_TYPE, StringType()), StructField(COMMIT_VERSION, IntegerType())]
+    )
+    try:
+        for f in schema.fields:
+            to_arrow_type(f.dataType)
+    except Exception:
+        return live_rows(df), None
+    # SQL text, not Column calls: each Column node costs a JVM round trip
+    pre, alive, new = _q(PRE), _q(ALIVE), _q(NEW)
+    had = set(types[PRE].names)
+
+    def was(c: str) -> str:
+        return f"{pre}.{_q(c)}" if c in had else "NULL"
+
+    same = " AND ".join(
+        f"CAST({was(c)} AS STRING) <=> CAST({_q(c)} AS STRING)" for c in cols if c in assigned
+    ) or "TRUE"
+    # one change code per row, in the codegen'd projection under the
+    # observation: 0 none, 1 insert, 2 delete, 3 update; only touched
+    # rows compare their values
+    kind = (f"CASE WHEN {new} THEN IF({alive}, 1, 0) WHEN NOT {alive} THEN 2 "
+            f"WHEN {pre} IS NULL OR ({same}) THEN 0 ELSE 3 END")
+
+    def image(code: int, values, alone: str, paired: str) -> str:
+        fields = ", ".join(f"{_s(c)}, {v}" for c, v in zip(cols, values))
+        return (f"collect_list(CASE WHEN __kind IN ({code}, 3) THEN named_struct({fields}, "
+                f"{_s(CHANGE_TYPE)}, IF(__kind = 3, {_s(paired)}, {_s(alone)})) END)")
+
+    obs = Observation()
+    counts = {"insert": 1, "update_preimage": 3, "update_postimage": 3, "delete": 2}
+    observed = df.withColumn("__kind", F.expr(kind)).observe(
+        obs,
+        F.expr(image(1, [_q(c) for c in cols], "insert", "update_postimage")).alias("came"),
+        F.expr(image(2, [was(c) for c in cols], "delete", "update_preimage")).alias("gone"),
+        *[F.expr(f"count_if(__kind = {k})").alias(n) for n, k in counts.items()],
+    )
+    return live_rows(observed.drop("__kind")), (obs, schema)
+
+
+def publish_feed(store, label: str, version: int, key_cols: list[str], capture: tuple) -> str | None:
+    """Publish step ``version``'s feed from a finished write's
+    :func:`observe_changes` capture: the rows are built on the driver and
+    written with pyarrow, with no Spark job, through the store's publish
+    routine; the commit records the per-type counts (``churn``) and the
+    ``_schema`` readers plan from.  Idempotent like :func:`capture_changes`.
+    A step that holds two changes of one key (removed and created again)
+    publishes nothing: only the diff pairs its images (``None``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    obs, schema = capture
+    m = obs.get
+    cdf = _cdf_label(label, version)
+    if store.version(cdf) > 0:
+        return cdf
+    at = [schema.names.index(k) for k in key_cols]
+
+    def keys(images, kind):
+        return [tuple(r[i] for i in at) for r in images if r[CHANGE_TYPE] == kind]
+
+    inserted, deleted = keys(m["came"], "insert"), keys(m["gone"], "delete")
+    updated = keys(m["came"], "update_postimage")
+    touched = inserted + deleted + updated
+    if len(set(touched)) < len(touched):
+        return None  # a key removed and created again, or twice: the diff pairs it
+    rows = [schema.toInternal(tuple(r) + (int(version),)) for r in m["came"] + m["gone"]]
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=to_arrow_type(f.dataType))
+         for i, f in enumerate(schema.fields)],
+        names=schema.names,
+    )
+
+    def fill(staging: str) -> None:
+        os.makedirs(staging)
+        pq.write_table(table, os.path.join(staging, "part-00000.parquet"))
+
+    meta = {
+        "base_label": label, "commit_version": int(version), "key_cols": list(key_cols),
+        "churn": {k: int(m[k]) for k in CHANGE_TYPES if m[k]},
+    }
+    store.publish(cdf, fill, meta=meta, expected_version=0, schema=json.loads(schema.json()))
+    return cdf
+
+
+def _feed_meta(store, label: str, version: int, key_cols: list[str] | None) -> dict | None:
+    """Commit meta of step ``version``'s captured feed, or ``None`` when
+    the step has none or pairs its images by other keys than
+    ``key_cols``."""
+    cdf = _cdf_label(label, version)
+    if store.version(cdf) == 0:
+        return None
+    meta = store.commit_meta(cdf)
+    if key_cols is not None and meta.get("key_cols", list(key_cols)) != list(key_cols):
+        return None
+    return meta
+
+
+def recorded_churn(store, label: str, v_from: int, v_to: int, key_cols: list[str]) -> dict | None:
+    """Per-type change counts of steps ``v_from→v_to`` summed from their
+    feeds' commits, or ``None`` when a step's feed is missing or records
+    no counts (a caller must then count the feed)."""
+    total: dict = {}
+    for v in range(v_from + 1, v_to + 1):
+        churn = (_feed_meta(store, label, v, key_cols) or {}).get("churn")
+        if churn is None:
+            return None
+        for k, n in churn.items():
+            total[k] = total.get(k, 0) + int(n)
+    return total
+
+
 def table_changes(
     spark: SparkSession,
     store,
@@ -190,15 +382,15 @@ def table_changes(
     """All change rows for steps ``v_from→v_from+1 … v_to-1→v_to`` (the
     ``table_changes(from, to)`` read contract).  Captured feed labels are
     read directly (no recomputation); uncaptured steps fall back to the
-    hash-diff.  ``key_cols`` may be omitted when every step in range was
-    captured (the keys ride the feed's commit meta)."""
+    hash-diff, and so do feeds that pair their images by other keys
+    than ``key_cols``.  ``key_cols`` may be omitted when every step in
+    range was captured (the keys ride the feed's commit meta)."""
     if not v_from < v_to:
         raise ValueError(f"need v_from < v_to, got {v_from} >= {v_to}")
     parts: list[DataFrame] = []
     for v in range(v_from + 1, v_to + 1):
-        cdf = _cdf_label(label, v)
-        if store.version(cdf) > 0:
-            parts.append(store.read(spark, cdf))
+        if _feed_meta(store, label, v, key_cols) is not None:
+            parts.append(store.read(spark, _cdf_label(label, v)))
             continue
         if key_cols is None:
             raise ValueError(

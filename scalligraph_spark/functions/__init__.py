@@ -36,6 +36,18 @@ def davg(col: Column) -> Column:
     return (F.sum(col.cast(_DEC)).cast("double") / F.count(col)).cast("double")
 
 
+def round12(col: Column) -> Column:
+    """A double rounded to 12 decimals the way DuckDB's ``round(x, 12)``
+    rounds it: ``round(x * 1e12) / 1e12``, halves away from zero on the
+    product's binary value.  ``F.round(x, 12)`` instead rounds half-up on
+    the shortest decimal string of ``x``, so the two engines disagree on
+    values that sit on a boundary (0.9034579331904999 → 0.90345793319 in
+    Spark, 0.903457933191 in DuckDB).  Below |x·1e12| = 2^52 the string of
+    the product rounds like its binary value, so this matches bit for
+    bit."""
+    return F.round(col * F.lit(1e12), 0) / F.lit(1e12)
+
+
 def dsum_expr(sql_expr: str) -> str:
     """DuckDB-side oracle fragment matching :func:`dsum`."""
     return f"CAST(SUM(CAST(({sql_expr}) AS DECIMAL(27,6))) AS DOUBLE)"

@@ -50,7 +50,13 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, latest_changes, table_changes
+from scalligraph_spark.cdf import (
+    CHANGE_TYPE,
+    COMMIT_VERSION,
+    latest_changes,
+    recorded_churn,
+    table_changes,
+)
 from scalligraph_spark.operators.tombstones import (
     TOMB_SEQ,
     read_tombstones,
@@ -388,11 +394,17 @@ def _check_policy(on_mutation: str) -> None:
         )
 
 
-def _net_effects(ch: DataFrame, key_cols: list[str]):
-    """Net effect per key of a multi-step change feed (last action wins):
+def _net_effects(ch: DataFrame, key_cols: list[str], one_step: bool):
+    """Net effect per key of a change feed (last action wins):
     ``(mutated_keys, upsert_rows)``.  Only keys with a DELETE or UPDATE
     event are tombstoned (a pure insert has no entries yet), so the
-    broadcast sidecar stays mutation-sized."""
+    broadcast sidecar stays mutation-sized.  One step holds at most one
+    pre-image and one post-image per key, so its effects are filters;
+    the tombstone write folds a key's repeats."""
+    came = F.col(CHANGE_TYPE).isin("insert", "update_postimage")
+    if one_step:
+        mutated = ch.where(F.col(CHANGE_TYPE) != F.lit("insert")).select(*key_cols)
+        return mutated, ch.where(came).drop(CHANGE_TYPE, COMMIT_VERSION)
     mutated = ch.where(~F.col(CHANGE_TYPE).isin("insert", "update_preimage"))
     latest = latest_changes(ch, key_cols)
     upserts = latest.where(F.col(CHANGE_TYPE) != F.lit("delete")).drop(CHANGE_TYPE, COMMIT_VERSION)
@@ -406,7 +418,9 @@ def catchup(
     feed (cdf.py) for the cost of the churn: inserts extend; updates and
     deletes follow ``on_mutation`` (``error`` raises
     :class:`IndexCatchupError`, ``tombstone`` folds them, ``reindex``
-    rebuilds); a rolled-back corpus always needs a rebuild."""
+    rebuilds); a rolled-back corpus always needs a rebuild.  When every
+    step in range has a session-captured feed, the churn counts come
+    from the feeds' commits and no job counts them."""
     _check_policy(on_mutation)
     meta, read_v = _record(store, name, fam)
     corpus = meta.get("corpus_label")
@@ -429,14 +443,19 @@ def catchup(
             {"rollback": v_from - v_to},
         )
     key_cols = [str(meta["id_col"])]
-    # the change frame feeds the churn count AND the extend/tombstone
-    # consumers; an uncaptured step's fallback is a two-version hash diff
-    ch = table_changes(spark, corpus_store, corpus, v_from, v_to, key_cols=key_cols).persist()
+    # a session-captured feed records its churn counts; otherwise the
+    # change frame feeds the count AND the extend/tombstone consumers,
+    # and an uncaptured step's fallback is a two-version hash diff
+    ch = table_changes(spark, corpus_store, corpus, v_from, v_to, key_cols=key_cols)
+    churn = recorded_churn(corpus_store, corpus, v_from, v_to, key_cols)
+    if churn is None:
+        ch = ch.persist()
     try:
-        churn = {
-            r[CHANGE_TYPE]: int(r["n"])
-            for r in ch.groupBy(CHANGE_TYPE).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        if churn is None:
+            churn = {
+                r[CHANGE_TYPE]: int(r["n"])
+                for r in ch.groupBy(CHANGE_TYPE).agg(F.count(F.lit(1)).alias("n")).collect()
+            }
         if set(churn) - {"insert"}:
             if on_mutation == "reindex":
                 fam.reindex(spark, store, name, corpus_store)
@@ -449,7 +468,7 @@ def catchup(
                     "on_mutation='reindex', or run the family's reindex_*",
                     churn,
                 )
-            mutated, upserts = _net_effects(ch, key_cols)
+            mutated, upserts = _net_effects(ch, key_cols, one_step=v_to == v_from + 1)
             # the churn counts say whether any row came in, so no job
             # probes the upserts; only a key inserted and deleted again
             # within the range leaves an empty segment

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scalligraph_spark.functions import round12
+
 _PROD_DEC = "decimal(28,18)"
 
 
@@ -76,10 +78,9 @@ def brute_force_cosine_topk(
     # round to 12 decimals: the decimal-summed operands are identical
     # across engines, but sqrt/divide chains can still differ in the last
     # ulp; 1e-12 granularity erases that while keeping full ranking power
-    sim = F.round(
+    sim = round12(
         _decimal_dot(F.col(vec_col), F.col("__q"))
-        / (F.sqrt(F.col("__qn")) * F.sqrt(_decimal_norm2(F.col(vec_col)))),
-        12,
+        / (F.sqrt(F.col("__qn")) * F.sqrt(_decimal_norm2(F.col(vec_col))))
     ).alias("cosine")
     return (
         embeddings.where(F.col(id_col) != query_id)
@@ -112,8 +113,8 @@ def exact_cosine_topk(
     multiply and add each round once per element, exactly like the
     scalar fold's steps; vectorisation is across PAIRS, which shares no
     arithmetic).  The division is one IEEE op inside the kernel; the
-    1e-12 rounding stays a Spark-side ``F.round`` so its HALF_UP
-    BigDecimal semantics are byte-identical to every other scoring path.
+    1e-12 rounding stays a Spark-side ``functions.round12`` (DuckDB's
+    ``round(x, 12)``), byte-identical to every other scoring path.
     Replaces a 512k-pair interpreted-fold evaluation (CodegenFallback —
     the recall audit's dominant stage; the audit key measured 4.0 s →
     2.8 s at sf0.1, the remainder being the IVF approx side).
@@ -183,7 +184,7 @@ def exact_cosine_topk(
     scored = (
         corpus.mapInPandas(score, schema="id_a long, id_b long, cosine double")
         .where(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b", F.round(F.col("cosine"), 12).alias("cosine"))
+        .select("id_a", "id_b", round12(F.col("cosine")).alias("cosine"))
     )
     w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc_nulls_last(), F.col("id_b").asc())
     return scored.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k).drop("__rn")
@@ -212,7 +213,7 @@ def ann_recall_at_k(
         "query",
         "n_exact",
         F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-        F.round(F.coalesce("n_hit", F.lit(0)) / F.col("n_exact"), 12).alias("recall"),
+        round12(F.coalesce("n_hit", F.lit(0)) / F.col("n_exact")).alias("recall"),
     )
 
 
@@ -240,7 +241,7 @@ def _exact_rerank(pairs: DataFrame, embeddings: DataFrame, id_col: str, vec_col:
         .select(
             "id_a",
             "id_b",
-            F.round(_double_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 12).alias("cosine"),
+            round12(_double_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cosine"),
         )
     )
 
@@ -290,7 +291,7 @@ def embedding_cosine_pairs(
     return (
         dots.join(n2.select(F.col("id").alias("id_a"), F.col("n2").alias("na")), "id_a")
         .join(n2.select(F.col("id").alias("id_b"), F.col("n2").alias("nb")), "id_b")
-        .select("id_a", "id_b", F.round(F.col("dot") / (F.sqrt("na") * F.sqrt("nb")), 12).alias("cosine"))
+        .select("id_a", "id_b", round12(F.col("dot") / (F.sqrt("na") * F.sqrt("nb"))).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -525,6 +526,10 @@ def ivf_ann_topk(
     # returned plan — canonical-plan-keyed (identical inputs share one
     # entry); release with spark.catalog.clearCache() in long sessions
     cells = embeddings.select(F.col(id_col).alias("id"), probe_cells(F.col(vec_col)).alias("cells")).persist()
+    # fill the cache now, eagerly: the plan below scans it twice (the
+    # index and the probe side of the self-join), and under AQE each scan
+    # of a cache nobody has filled yet runs as its own query stage and
+    # builds it itself — the Arrow probe UDF would run once per scan
     cells.count()
     # each vector lists in its n_list nearest cells (multi-assignment)
     index = cells.select("id", F.explode(F.slice("cells", 1, n_list)).alias("cell"))
@@ -919,7 +924,7 @@ def normalize_embeddings(
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     n = F.sqrt(_decimal_norm2(F.col(vec_col)))
     unit = F.when(n == 0, v).otherwise(
-        F.transform(v, lambda x: F.round(x / n, 12))
+        F.transform(v, lambda x: round12(x / n))
     )
     return embeddings.select(F.col(id_col), unit.alias("unit"))
 
@@ -943,7 +948,7 @@ def quantize_int8(
         F.transform(v, lambda x: F.floor(x * 127 / s + 0.5).cast("int"))
     )
     return embeddings.select(
-        F.col(id_col), q.alias("q8"), F.round(s, 12).alias("scale")
+        F.col(id_col), q.alias("q8"), round12(s).alias("scale")
     )
 
 
@@ -966,11 +971,8 @@ def label_centroids(
         ),
     )
     per = terms.groupBy("label", "i").agg(
-        F.round(
-            (F.sum(F.col("x").cast(_PROD_DEC)).cast("double") / F.count("x")).cast(
-                "double"
-            ),
-            12,
+        round12(
+            (F.sum(F.col("x").cast(_PROD_DEC)).cast("double") / F.count("x")).cast("double")
         ).alias("m"),
         F.count(F.lit(1)).alias("__n"),
     )
@@ -1012,10 +1014,9 @@ def classify_by_centroid(
     scored = embeddings.select(
         F.col(id_col), F.col(vec_col), _decimal_norm2(F.col(vec_col)).alias("__vn")
     ).crossJoin(c)
-    cos = F.round(
+    cos = round12(
         _decimal_dot(F.col(vec_col), F.col("__c"))
-        / (F.sqrt(F.col("__vn")) * F.sqrt(F.col("__cn"))),
-        12,
+        / (F.sqrt(F.col("__vn")) * F.sqrt(F.col("__cn")))
     )
     return (
         scored.select(F.col(id_col), F.col("__lbl"), cos.alias("__cos"))
@@ -1080,8 +1081,8 @@ def classification_report(
             "support",
             "n_predicted",
             "tp",
-            F.round("__prec", 12).alias("precision"),
-            F.round("__rec", 12).alias("recall"),
-            F.round(f1, 12).alias("f1"),
+            round12(F.col("__prec")).alias("precision"),
+            round12(F.col("__rec")).alias("recall"),
+            round12(f1).alias("f1"),
         )
     )

@@ -1291,29 +1291,25 @@ class LabelStore:
         ``expected_version`` the publish rolls forward: on collision the
         already-written staging dir is simply renamed at the next slot
         (no Spark re-run).  A crashed writer leaves only an orphan
-        staging dir; ``vacuum`` reclaims those after a TTL.
-        """
-        import errno
-        import shutil
-        import uuid
+        staging dir; ``vacuum`` reclaims those after a TTL.  Every commit
+        goes through :meth:`publish`, the one staging + rename +
+        ``_commit.json`` routine.
 
-        label_dir = os.path.join(self.root, label)
-        os.makedirs(label_dir, exist_ok=True)
+        Change feeds: a ``writes.WriteSession`` commit hands this method
+        a frame that observes its own change rows (cdf.py), so the same
+        job that writes the version also captures the step's churn; the
+        session then publishes ``<label>__cdf_v<N>`` from the driver
+        through :meth:`publish`, after this version.  Only a session whose
+        inputs already lived on the driver (local creates, ``_id`` key
+        conditions) and that passes no layout option captures; any other
+        write leaves the step to ``cdf.table_changes``'s diff.
+        """
         if stats_cols is None:
             stats_cols = self._inherited_stats_cols(label)
         if bloom_cols is None:
             bloom_cols = self._inherited_bloom_cols(label)
         if expected_version is not None:
-            new_v = expected_version + 1
-            if os.path.exists(self.path(label, new_v)):
-                raise VersionConflictError(
-                    f"label {label!r}: v{new_v} already claimed — session based "
-                    f"on v{expected_version} lost the commit race; retry over a "
-                    "fresh snapshot"
-                )
-        else:
-            h = self.history(label)
-            new_v = (h[-1] if h else self.version(label)) + 1
+            self._claimable(label, expected_version)  # fail before the Spark job
         if bucket_hint:
             n, cols = bucket_hint
             df = df.repartition(n, *[df[c] for c in cols])
@@ -1334,8 +1330,8 @@ class LabelStore:
             # index's posting-list locality, store-side)
             n, cols = sort_by
             df = df.repartitionByRange(n, *[F.col(c) for c in cols]).sortWithinPartitions(*cols)
-        staging = os.path.join(label_dir, f".staging-{uuid.uuid4().hex}")
-        try:
+
+        def fill(staging: str) -> None:
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
@@ -1351,20 +1347,65 @@ class LabelStore:
                     bloom_max_bytes=bloom_max_bytes,
                 )
                 _publish_manifest(staging, man)
+
+        # the schema readers plan from (unpartitioned only)
+        schema = None if partition_by else json.loads(df._jdf.schema().asNullable().json())
+        return self.publish(label, fill, meta=meta, expected_version=expected_version, schema=schema)
+
+    def _claimable(self, label: str, expected_version: int) -> int:
+        new_v = expected_version + 1
+        if os.path.exists(self.path(label, new_v)):
+            raise VersionConflictError(
+                f"label {label!r}: v{new_v} already claimed — session based "
+                f"on v{expected_version} lost the commit race; retry over a "
+                "fresh snapshot"
+            )
+        return new_v
+
+    def publish(
+        self,
+        label: str,
+        fill,
+        meta: dict | None = None,
+        expected_version: int | None = None,
+        schema: dict | None = None,
+    ) -> int:
+        """The one commit protocol under every version: ``fill(staging)``
+        writes the version's files into a private staging directory (a
+        Spark job in :meth:`write`, an in-process pyarrow write for a
+        session's change feed), the commit record joins them there, and
+        one ``os.rename`` publishes the lot as ``v{N}`` (see
+        :meth:`write`: the rename is the claim, ``expected_version`` makes
+        it a compare-and-swap, otherwise it rolls forward).  ``schema``
+        (a ``StructType`` JSON dict) is recorded as ``_schema`` for
+        readers to plan from.  Returns the published version."""
+        import errno
+        import shutil
+        import time as _time
+        import uuid
+
+        label_dir = os.path.join(self.root, label)
+        os.makedirs(label_dir, exist_ok=True)
+        if expected_version is not None:
+            new_v = self._claimable(label, expected_version)
+        else:
+            h = self.history(label)
+            new_v = (h[-1] if h else self.version(label)) + 1
+        staging = os.path.join(label_dir, f".staging-{uuid.uuid4().hex}")
+        try:
+            fill(staging)
             # meta lands in staging so the rename publishes data+meta as
             # one atomic unit.  Every commit carries a wall-clock stamp
             # (reserved key, stripped by commit_meta) — the clock that
             # makes vacuum's retention window structural (Delta VACUUM's
             # "removed from state longer than N" contract needs to know
             # WHEN a version was superseded, not just that it was) — and,
-            # unpartitioned, the schema readers plan from (reserved too:
-            # a caller's ``_schema`` is never written through).
-            import time as _time
-
+            # when given, the schema readers plan from (reserved too: a
+            # caller's ``_schema`` is never written through).
             record = {k: v for k, v in (meta or {}).items() if k not in _RESERVED_META}
             record["_committed_at"] = _time.time()
-            if not partition_by:
-                record["_schema"] = json.loads(df._jdf.schema().asNullable().json())
+            if schema is not None:
+                record["_schema"] = schema
             with open(os.path.join(staging, "_commit.json"), "w") as f:
                 json.dump(record, f)
             while True:

@@ -19,9 +19,12 @@ Determinism: the clock is an explicit parameter (``at``), never
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import cdf
 from .store import VersionConflictError
 
 
@@ -223,6 +226,53 @@ def immense_term_guard(
     return df
 
 
+# write options that re-lay the rows out: a range layout samples its
+# input in a job of its own, which the change observation would count too
+_LAYOUT_OPTS = ("partition_by", "bucket_hint", "zorder_by", "sort_by")
+
+
+def _driver_resident(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s plan is a local relation or an RDD
+    parallelized from a driver collection: rows the driver already held."""
+
+    def parallelized(rdd) -> bool:
+        deps = rdd.dependencies()
+        if deps.isEmpty():
+            return rdd.getClass().getSimpleName() == "ParallelCollectionRDD"
+        it = deps.iterator()
+        while it.hasNext():
+            if not parallelized(it.next().rdd()):
+                return False
+        return True
+
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        kind = leaf.getClass().getSimpleName()
+        if not (kind == "LocalRelation" or (kind == "LogicalRDD" and parallelized(leaf.rdd()))):
+            return False
+    return True
+
+
+def _key_condition(df: DataFrame, cond: Column) -> bool:
+    """True when ``cond`` is ``_id IN (literals)`` or ``_id = literal``
+    over ``df`` (analysed, no job): it matches at most as many rows as
+    the driver passed keys."""
+    e = df.where(cond)._jdf.queryExecution().analyzed().condition()
+    kind = e.getClass().getSimpleName()
+    if kind == "In":
+        key, values = e.value(), [e.list().apply(i) for i in range(e.list().size())]
+    elif kind == "EqualTo":
+        key, values = e.left(), [e.right()]
+    else:
+        return False
+    return (
+        key.getClass().getSimpleName() == "AttributeReference"
+        and key.name() == "_id"
+        and all(v.foldable() and not v.nullable() for v in values)
+    )
+
+
 class WriteSession:
     """One write transaction over a stored label table — the
     ``db.tryTransaction`` analog (models/Database.scala:23-109, retry loop
@@ -238,6 +288,10 @@ class WriteSession:
     serializes concurrent writers, and its EventSrv hook publishes the
     commit (``store:<label>``), so subscribers see exactly one event per
     transaction regardless of how many mutations it batched.
+
+    While every mutation's input lived on the driver, the session tracks
+    its churn (``cdf.tag_snapshot``) so that :meth:`commit` can publish
+    the step's change feed; the first other mutation drops the tracking.
     """
 
     def __init__(
@@ -257,25 +311,69 @@ class WriteSession:
         self.at = at
         self.unique_keys = unique_keys or []
         self.base_version = store.version(label)  # for conflict detection
-        self.df = store.read(spark, label)  # pinned snapshot
+        self._pin(store.read(spark, label))  # pinned snapshot
+
+    def _pin(self, snapshot: DataFrame) -> None:
+        self.df = cdf.tag_snapshot(snapshot)
+        self._capturing = True
+        self._assigned: set[str] = set()
+
+    def _live(self) -> DataFrame:
+        return cdf.live_rows(self.df) if self._capturing else self.df
+
+    def _stop_capture(self) -> None:
+        self.df = self._live()
+        self._capturing = False
+
+    def _keep_types(self) -> None:
+        # a column whose type changes changes every row's value as the
+        # version diff sees it (cast to string): leave that step to it
+        pre = {f.name: f.dataType for f in self.df.schema[cdf.PRE].dataType.fields}
+        if any(pre[f.name] != f.dataType for f in self.df.schema.fields if f.name in pre):
+            self._stop_capture()
 
     def create(self, new_rows: DataFrame) -> "WriteSession":
-        self.df = create_entities(
-            self.df, new_rows, self.label, self.id_col, self.created_by, self.at, self.unique_keys
-        )
+        if self._capturing and not _driver_resident(new_rows):
+            self._stop_capture()
+        if self.unique_keys:  # against the rows that survive so far
+            new_rows = enforce_unique(self._live(), new_rows, self.unique_keys)
+        rows = with_audit(new_rows, self.label, self.id_col, self.created_by, self.at)
+        if self._capturing:
+            rows = cdf.tag_created(rows)
+        self.df = self.df.unionByName(rows, allowMissingColumns=True)
+        if self._capturing:
+            self._keep_types()
         return self
 
     def update(self, cond: Column, updates: dict[str, Column]) -> "WriteSession":
+        if self._capturing and ("_id" in updates or not _key_condition(self.df, cond)):
+            self._stop_capture()
+        if self._capturing:
+            cond = cond & F.col(cdf.ALIVE)
+            self.df = cdf.touch(self.df, cond)
+            self._assigned |= {*updates, "_updated_by", "_updated_at"}
         self.df = update_where(self.df, cond, updates, self.created_by, self.at)
+        if self._capturing:
+            self._keep_types()
         return self
 
     def remove(self, cond: Column) -> "WriteSession":
-        self.df = remove_where(self.df, cond)
+        if self._capturing and not _key_condition(self.df, cond):
+            self._stop_capture()
+        if self._capturing:
+            # the rows where(~cond) drops, a null condition included
+            kept = F.coalesce(~cond, F.lit(False))
+            self.df = cdf.touch(self.df, F.col(cdf.ALIVE) & ~kept)
+            self.df = self.df.withColumn(cdf.ALIVE, F.col(cdf.ALIVE) & kept)
+        else:
+            self.df = remove_where(self.df, cond)
         return self
 
     def transform(self, fn) -> "WriteSession":
         """Escape hatch for any df→df mutation (add_value, enum checks,
-        immense-term guards…) inside the same transaction."""
+        immense-term guards…) inside the same transaction; the commit
+        then captures no change feed."""
+        self._stop_capture()
         self.df = fn(self.df)
         return self
 
@@ -299,7 +397,28 @@ class WriteSession:
         retry through :func:`try_transaction`, which re-runs the mutation
         over the fresh snapshot.  ``force=True`` opts out (bulk loads
         that OWN the label) and rolls forward to the next free version.
+
+        Change feed: a session whose creates all came from driver-local
+        collections (``createDataFrame`` over a list or pandas frame) and
+        whose update/remove conditions are all key lists or equalities on
+        ``_id`` publishes the step's ``<label>__cdf_v<N>`` (cdf.py).  The
+        write job itself observes the change rows, the driver writes them
+        with pyarrow after the data version is published, and the feed's
+        commit records the per-type counts, so index catch-up neither
+        diffs the two versions nor counts the churn.  Any other session —
+        ``transform``, a create from a scan, a non-key predicate, an
+        update of ``_id``, a layout option (``partition_by``,
+        ``bucket_hint``, ``zorder_by``, ``sort_by``) or a forced commit
+        that rolled past ``base_version + 1`` — writes no feed, and
+        readers diff that step.  A failed feed publish only warns: the
+        data version is committed, and a retry would apply the session
+        twice.
         """
+        rows = self._live()
+        df, capture = rows, None
+        if self._capturing and not set(write_opts) & set(_LAYOUT_OPTS):
+            df, capture = cdf.observe_changes(self.df, self._assigned)
+        base = self.base_version
         if not force:
             # cheap advisory pre-check: fail before the Spark write job
             # when the label has visibly advanced (the CAS below is what
@@ -313,13 +432,20 @@ class WriteSession:
                 )
             try:
                 v = self.store.write(
-                    self.label, self.df, meta=meta, expected_version=self.base_version, **write_opts
+                    self.label, df, meta=meta, expected_version=self.base_version, **write_opts
                 )
             except VersionConflictError as e:
                 raise WriteConflictError(str(e)) from None
         else:
-            v = self.store.write(self.label, self.df, meta=meta, **write_opts)
+            v = self.store.write(self.label, df, meta=meta, **write_opts)
+        if capture is not None and v == base + 1:
+            try:
+                cdf.publish_feed(self.store, self.label, v, ["_id"], capture)
+            except Exception as e:  # the step stays uncaptured: readers diff it
+                warnings.warn(f"label {self.label!r} v{v}: change feed not published ({e})",
+                              RuntimeWarning, stacklevel=2)
         self.base_version = v  # further commits from this session chain on
+        self._pin(rows)
         return v
 
 

@@ -287,3 +287,186 @@ def test_merge_on_read_matches_change_feed(spark, tmp_path):
     assert _sorted(store.read(spark, "m")) == head
     assert _sorted(store.read_merged(spark, "m")) == head
     assert _sorted(store.read_merged(spark, "m", pred)) == selected
+
+
+# --- feeds a WriteSession captures in its commit job ---------------------------
+
+AT = "2026-01-01 00:00:00"
+BASE = [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0), (4, "d", 4.0)]
+
+
+def _audited(spark, store, stamped=False):
+    """Label ``t`` v1: four audited rows, ``_id`` '1'..'4'; ``stamped``
+    adds the ``_updated_*`` columns a session run by ``bench`` at ``AT``
+    would write."""
+    from pyspark.sql import functions as F
+
+    from scalligraph_spark.writes import with_audit
+
+    df = with_audit(_df(spark, BASE), "t", "id", "bench", AT)
+    if stamped:
+        df = df.withColumn("_updated_by", F.lit("bench")).withColumn(
+            "_updated_at", F.lit(AT).cast("timestamp_ntz"))
+    store.write("t", df)
+
+
+def _session_steps():
+    from pyspark.sql import functions as F
+
+    ids = F.col("_id")
+    return {
+        "create_update_remove": (False, [], lambda s, sp: s.create(_df(sp, [(5, "e", 5.0)]))
+                                 .update(ids.isin(["1", "2"]), {"val": F.col("val") + 1})
+                                 .remove(ids == "3")),
+        "update_then_remove": (False, [], lambda s, sp: s.update(ids.isin(["1", "2"]), {"name": F.lit("z")})
+                               .remove(ids == "1")),
+        "create_then_update": (False, [], lambda s, sp: s.create(_df(sp, [(5, "e", 5.0)]))
+                               .update(ids == "5", {"name": F.lit("e2")})),
+        "create_then_remove": (False, [], lambda s, sp: s.create(_df(sp, [(5, "e", 5.0), (6, "f", 6.0)]))
+                               .remove(ids == "5")),
+        # the stamps equal the stored ones: row 1 keeps every value
+        "value_identical_update": (True, [], lambda s, sp: s.update(ids == "1", {"name": F.lit("a")})
+                                   .update(ids == "2", {"name": F.lit("b2")})),
+        "adds_updated_columns": (False, [], lambda s, sp: s.update(ids == "4", {"val": F.lit(40.0)})),
+        # "c" is free again once row 3 is gone, "a" is still taken
+        "unique_keys": (False, [("name",)], lambda s, sp: s.remove(ids == "3")
+                        .create(_df(sp, [(7, "c", 7.0), (8, "a", 8.0)]))),
+    }
+
+
+@pytest.mark.parametrize("step", [
+    "adds_updated_columns", "create_then_remove", "create_then_update", "create_update_remove",
+    "unique_keys", "update_then_remove", "value_identical_update",
+])
+def test_session_feed_equals_the_diff(spark, tmp_path, step):
+    """A session whose inputs live on the driver publishes its step's
+    feed from the commit job; it equals the two-version diff, records
+    the diff's per-type counts, and replays v1 into v2."""
+    from scalligraph_spark.writes import WriteSession
+
+    stamped, unique, mutate = _session_steps()[step]
+    store = LabelStore(str(tmp_path / "s"))
+    _audited(spark, store, stamped)
+    session = WriteSession(spark, store, "t", id_col="id", created_by="bench", at=AT,
+                           unique_keys=unique)
+    assert mutate(session, spark).commit() == 2
+    assert store.version("t__cdf_v2") == 1
+    feed = store.read(spark, "t__cdf_v2")
+    diff = pair_changes(store.read(spark, "t", 1), store.read(spark, "t", 2), ["_id"], 2)
+    assert _sorted(feed) == _sorted(diff)
+    types = [r[CHANGE_TYPE] for r in diff.collect()]
+    assert store.commit_meta("t__cdf_v2")["churn"] == {t: types.count(t) for t in set(types)}
+    assert _sorted(apply_changes(store.read(spark, "t", 1), table_changes(spark, store, "t", 1, 2),
+                                 ["_id"])) == _sorted(store.read(spark, "t", 2))
+    if step == "value_identical_update":
+        assert {r["_id"] for r in feed.collect()} == {"2"}
+
+
+def _uncaptured_steps():
+    from pyspark.sql import functions as F
+
+    return {
+        "transform": lambda s, sp, st: s.update(F.col("_id") == "1", {"name": F.lit("z")})
+        .transform(lambda df: df.where(F.col("_id") != "2")),
+        "scan_create": lambda s, sp, st: s.create(
+            st.read(sp, "src").select("id", "name", "val")),
+        "non_key_predicate": lambda s, sp, st: s.update(F.col("val") > 2.5, {"name": F.lit("big")})
+        .remove(F.col("name") == "a"),
+        # two changes of key 2 in one step: only the diff pairs them
+        "recreated_key": lambda s, sp, st: s.remove(F.col("_id") == "2")
+        .create(_df(sp, [(2, "b2", 2.0)])),
+    }
+
+
+@pytest.mark.parametrize("step", ["non_key_predicate", "recreated_key", "scan_create", "transform"])
+def test_uncaptured_session_keeps_the_diff(spark, tmp_path, step):
+    """A session the driver cannot bound — a ``transform``, a create from
+    a scan, a non-key predicate — or one that changes a key twice writes
+    no feed; its step is diffed, and a tombstone catch-up over it equals
+    a rebuild."""
+    from index_families import content
+
+    from scalligraph_spark.operators import build_value_index
+    from scalligraph_spark.operators.index_catchup import catchup_value_index
+    from scalligraph_spark.writes import WriteSession
+
+    store = LabelStore(str(tmp_path / "s"))
+    _audited(spark, store)
+    store.write("src", _df(spark, [(9, "i", 9.0), (10, "j", 10.0)]))
+    build_value_index(spark, store, "ix", store.read(spark, "t"), "name", "_id",
+                      corpus_store=store, corpus_label="t")
+    session = WriteSession(spark, store, "t", id_col="id", created_by="bench", at=AT)
+    _uncaptured_steps()[step](session, spark, store).commit()
+    assert store.version("t__cdf_v2") == 0
+    replayed = apply_changes(store.read(spark, "t", 1),
+                             table_changes(spark, store, "t", 1, 2, key_cols=["_id"]), ["_id"])
+    assert _sorted(replayed) == _sorted(store.read(spark, "t", 2))
+    assert catchup_value_index(spark, store, "ix", store, on_mutation="tombstone")["churn"]
+    build_value_index(spark, store, "fresh", store.read(spark, "t"), "name", "_id")
+    assert content(spark, store, "value", "ix") == content(spark, store, "value", "fresh")
+
+
+def _jobs(spark, call):
+    """``(result, jobs, stage names)`` of ``call`` under a job group of
+    its own (as tests/test_graph_supersteps.py counts them)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"cdf-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    stages = [sc.statusTracker().getStageInfo(s) for j in jobs
+              for s in sc.statusTracker().getJobInfo(j).stageIds]
+    return out, len(jobs), [s.name for s in stages if s is not None]
+
+
+# Jobs of a one-step tombstone catch-up of a 4-row value index over a
+# diffed step that creates 1, updates 2 and deletes 1 row (4 shuffle
+# partitions), before the session-captured feed: 14, the churn-counting
+# collect over the two-version diff among them.  Taking a one-step
+# range's effects by filters made it 13.
+_DIFF_CATCHUP_JOBS = 14
+
+
+@pytest.mark.parametrize("captured", [True, False])
+def test_session_commit_and_catchup_jobs(spark, tmp_path, captured):
+    """A session commit is one Spark job either way.  A captured step's
+    catch-up reads the recorded counts (no counting job) in at most 7
+    jobs; an uncaptured step's keeps the diff's count."""
+    from pyspark.sql import functions as F
+
+    from index_families import content
+
+    from scalligraph_spark.operators import build_value_index
+    from scalligraph_spark.operators.index_catchup import catchup_value_index
+    from scalligraph_spark.writes import WriteSession
+
+    store = LabelStore(str(tmp_path / "s"))
+    _audited(spark, store)
+    build_value_index(spark, store, "ix", store.read(spark, "t"), "name", "_id",
+                      corpus_store=store, corpus_label="t")
+    session = WriteSession(spark, store, "t", id_col="id", created_by="bench", at=AT)
+    session.create(_df(spark, [(5, "e", 5.0)]))
+    session.update(F.col("_id").isin(["1", "2"]), {"name": F.concat(F.col("name"), F.lit("2"))})
+    session.remove(F.col("_id") == "3")
+    if not captured:
+        session.transform(lambda df: df)
+    _, commit_jobs, _ = _jobs(spark, session.commit)
+    assert commit_jobs == 1
+    assert store.version("t__cdf_v2") == int(captured)
+    report, jobs, stages = _jobs(
+        spark, lambda: catchup_value_index(spark, store, "ix", store, on_mutation="tombstone"))
+    assert report["churn"] == {"insert": 1, "update_preimage": 2, "update_postimage": 2, "delete": 1}
+    counting = [s for s in stages if s.startswith("collect at") and "segments.py" in s]
+    if captured:
+        assert not counting and jobs <= 7, (jobs, stages)
+    else:
+        assert counting and jobs <= _DIFF_CATCHUP_JOBS, (jobs, stages)
+    build_value_index(spark, store, "fresh", store.read(spark, "t"), "name", "_id")
+    assert content(spark, store, "value", "ix") == content(spark, store, "value", "fresh")

@@ -125,3 +125,54 @@ def test_time_bucket_fuzz_vs_python_replay(spark):
             assert got_ms == want_ms, (s, interval, unit)
 
     run()
+
+
+def test_exact_rerank_rounds_like_the_duckdb_oracle(spark):
+    """The IVF re-rank's cosine is value-identical to the replay oracle's
+    ``round(fold / (na * nb), 12)`` in DuckDB — also for folds that sit
+    on a rounding boundary, where Spark's ``F.round`` (half-up on the
+    shortest decimal string) and DuckDB's ``round`` (half away from zero
+    on ``x * 1e12``) disagree.  Seed 506 of the ``operator_batch``
+    benchmark hit 0.9034579331904999: 0.90345793319 vs 0.903457933191."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from scalligraph_spark.functions import round12
+    from scalligraph_spark.operators.similarity import _exact_rerank
+
+    # three pairs whose cosine fold lands on a boundary, then random ones
+    on_boundary = [
+        [1.3185342936151676, 0.13586419512060322, 0.2366794041123472, -0.9331694633540507],
+        [0.6712650081484924, -0.18140661684122494, 1.4799373880734816, -0.851508886676509],
+        [1.6434518457368035, -0.1268873046265904, 0.10591656480482192, 0.4148928009434549],
+        [-1.3537759226959558, -0.5266594402630714, -0.8848946693498916, 1.7943102179576453],
+        [-1.135360630251931, 0.7772608788354572, 0.10574858495023834, 0.632504197223256],
+        [-0.1551496414634807, -1.6555147839149855, 0.6161378390168144, -1.0082271886926064],
+    ]
+    rng = np.random.default_rng(506)
+    embedding = on_boundary + [list(rng.standard_normal(4)) for _ in range(40)]
+    vecs = pd.DataFrame({"vec_id": np.arange(len(embedding)), "embedding": embedding})
+    pairs = pd.DataFrame([(0, 1), (2, 3), (4, 5)] + [(a, b) for a in range(6, 46) for b in range(a + 1, 46)],
+                         columns=["id_a", "id_b"])
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    got = {(r[0], r[1]): r[2] for r in _exact_rerank(
+        spark.createDataFrame(pairs, "id_a long, id_b long"), emb, "vec_id", "embedding").collect()}
+    con = duckdb.connect()
+    con.register("embeddings", vecs)
+    con.register("pairs", pairs)
+    want = con.execute("""
+        WITH vn AS (SELECT vec_id, sqrt(list_reduce(list_transform(embedding, x -> x * x),
+                                                    (acc, v) -> acc + v)) AS nrm FROM embeddings)
+        SELECT p.id_a, p.id_b,
+               round(list_reduce(list_transform(list_zip(ea.embedding, eb.embedding), s -> s[1] * s[2]),
+                                 (acc, v) -> acc + v) / (na.nrm * nb.nrm), 12)
+        FROM pairs p
+        JOIN embeddings ea ON ea.vec_id = p.id_a JOIN embeddings eb ON eb.vec_id = p.id_b
+        JOIN vn na ON na.vec_id = p.id_a JOIN vn nb ON nb.vec_id = p.id_b""").fetchall()
+    assert len(got) == len(want) == len(pairs)
+    assert {k: v for k, v in got.items() if v != {(a, b): c for a, b, c in want}[k]} == {}
+    boundary = [0.9034579331904999, 0.5091707806235, -0.41397152430649997, 0.25, 1e-13]
+    spark_side = [r[0] for r in spark.createDataFrame([(x,) for x in boundary], "x double")
+                  .select(round12(F.col("x"))).collect()]
+    assert spark_side == [con.execute(f"SELECT round({x!r}::DOUBLE, 12)").fetchone()[0] for x in boundary]

@@ -225,3 +225,72 @@ def test_concurrent_extends_lose_no_batch(spark, tmp_path):
     listed = segments.read_meta(st, "ix")["segments"]
     assert len(listed) == len(set(listed))
     assert all(len(st.history(lbl)) == 1 for lbl in listed)
+
+
+class Killed(BaseException):
+    """The process dies: nothing catches it on the way out."""
+
+
+@pytest.mark.parametrize("at", ["data", "feed"])
+def test_session_commit_crash_leaves_no_stray_feed(spark, tmp_path, at):
+    """A session commit dies while publishing its data version, or after
+    that and before its change feed.  No feed exists for a version the
+    label has not published, and the next catch-up diffs the step and
+    equals a rebuild; a feed publish that merely fails only warns."""
+    from pyspark.sql import functions as F
+
+    from index_families import content
+
+    from scalligraph_spark.operators import build_value_index
+    from scalligraph_spark.writes import WriteSession, with_audit
+
+    def audited(ids):
+        return with_audit(rows(spark, "value", ids), "corpus", "uid", "system", "1970-01-01 00:00:00")
+
+    def build_ix(name):
+        build_value_index(spark, st, name, st.read(spark, "corpus"), "uname", "_id",
+                          corpus_store=st, corpus_label="corpus")
+
+    st = LabelStore(str(tmp_path / "s"))
+    st.write("corpus", audited(range(6)))
+    build_ix("ix")
+    real = st.publish
+
+    def publish(lbl, *a, **k):
+        if lbl == ("corpus" if at == "data" else "corpus__cdf_v2"):
+            raise Killed(lbl)
+        return real(lbl, *a, **k)
+
+    def session():
+        s = WriteSession(spark, st, "corpus", id_col="uid")
+        s.create(rows(spark, "value", [6])).remove(F.col("_id") == "2")
+        return s.update(F.col("_id") == "1", {"uname": F.lit("rename1")})
+
+    st.publish = publish
+    with pytest.raises(Killed):
+        session().commit()
+    st.publish = real
+    assert st.version("corpus") == (1 if at == "data" else 2)
+    published = st.version("corpus")
+    assert [v for v in range(1, 5) if st.version(f"corpus__cdf_v{v}") and v > published] == []
+    assert st.version("corpus__cdf_v2") == 0
+    if at == "data":  # the retried session publishes both
+        session().commit()
+        assert st.version("corpus__cdf_v2") == 1
+    report = CATCHUP["value"](spark, st, "ix", st, on_mutation="tombstone")
+    assert report["churn"] == {"insert": 1, "update_preimage": 1, "update_postimage": 1, "delete": 1}
+    build_ix("fresh")
+    assert content(spark, st, "value", "ix") == content(spark, st, "value", "fresh")
+
+    def failing(*a, **k):
+        raise OSError("disk full")
+
+    from scalligraph_spark import cdf
+
+    real_feed, cdf.publish_feed = cdf.publish_feed, failing
+    try:
+        with pytest.warns(RuntimeWarning, match="change feed not published"):
+            assert session().commit() == 3
+    finally:
+        cdf.publish_feed = real_feed
+    assert st.version("corpus__cdf_v3") == 0

@@ -116,8 +116,9 @@ class GraphCatalog:
 
         ``merged=True`` scans through :meth:`LabelStore.read_merged`:
         outstanding merge-on-read deltas resolve into every traversal
-        (churn-sized broadcast anti-join on top of the base scan) — the
-        read face of the ``write_delta`` update path."""
+        (the delta segments union onto the base scan, which anti-joins
+        the broadcast churn-sized tombstones) — the read face of the
+        ``write_delta`` update path."""
         loader = (
             (lambda: store.read_merged(self.spark, label))
             if merged

@@ -58,9 +58,9 @@ changes, with three primitives:
   their retract and add rows straight from them.
 * :func:`latest_changes` — the one last-change-per-key window, folded
   onto a base by :func:`apply_changes` (whose broadcast anti-join never
-  shuffles the base), the merge-on-read read (``store.read_merged``: a
-  delta slot is its ``_commit_version``) and index catch-up
-  (``operators.segments``) over a multi-step range.
+  shuffles the base) and by index catch-up (``operators.segments``) over
+  a multi-step range.  Merge-on-read deltas (``store.read_merged``) need
+  no window: each batch is a tombstone and a segment on the same core.
 """
 
 from __future__ import annotations

@@ -13,29 +13,36 @@ delete churn costs the mutation, never the corpus:
   ``name__<part>_seg<k>`` (``name__seg<k>`` for the unnamed part).
 * **Carrier.**  ``name__meta`` is a 1-row table whose commit meta is the
   index record: family fields, the live segment labels of the first
-  part (``segments``), the sequence counter (``seq``), corpus provenance
-  and the versions of the whole-table sidecars it publishes
-  (``versions``: tombstones, the text vocabulary).  Every mutation ends
-  with ONE carrier commit, so readers see all of it or none of it and a
-  crashed mutation re-runs to the same state.
+  part (``segments``), the live tombstone labels (``tombstones``), the
+  sequence counter (``seq``), corpus provenance and the versions of the
+  whole-table sidecars it publishes (``versions``: the text
+  vocabulary).  Every mutation ends with ONE carrier commit, so readers
+  see all of it or none of it and a crashed mutation re-runs to the
+  same state.
 * **Sequence.**  An extend mints ``seq + 1``; a tombstone batch consumes
   a number too.  Each base commit records the fold watermark
   ``base_seq``: segments and tombstones with seq <= base_seq are inside
   it, so readers skip them — a torn compaction never double-counts, and
   a rebuild carries the counter forward.
-* **Tombstones** ``(key, __tomb_seq)`` hide the key's entries in every
-  part whose seq is STRICTLY below ``__tomb_seq``.  An UPDATE is
-  tombstone-the-key + re-insert into the next segment.
+* **Tombstones** are segments too (tombstones.py): each batch is one
+  immutable label of ``(key, __tomb_seq)`` rows hiding the key's entries
+  in every part whose seq is STRICTLY below ``__tomb_seq``.  An UPDATE
+  is tombstone-the-key + re-insert into the next segment.
 * **Compaction** rewrites each part's tombstone-filtered base ∪ segments
-  as its base, then commits the carrier with no live segments.
-* **Vacuum** drops segment labels the carrier no longer lists and the
-  tombstones every base folded, optionally once the folding commit is
-  older than a retention window (pinned readers still read them).
-* **Concurrency.**  Extends may race (see :func:`extend`).  Tombstone
-  batches, compaction and vacuum still need exclusive access: every
-  mutation first drops or rolls back each sidecar head the carrier does
-  not publish, which is also the head an in-flight mutation has written
-  and not yet published.
+  as its base, then commits the carrier with no live segments or
+  tombstones.
+* **Vacuum** drops the segment and tombstone labels at or below the
+  counter that the carrier no longer lists, optionally once the base
+  commits that folded them are older than a retention window (pinned
+  readers still read them).
+* **Concurrency.**  Extends and tombstone batches may race (see
+  :func:`extend`): each claims labels nothing has written and commits
+  the carrier over the version it read, so a loser raises
+  ``VersionConflictError`` and leaves only unlisted labels behind.
+  Compaction and vacuum need exclusive access.
+* **Merge-on-read labels** run on the same core (:func:`mor_family`):
+  the base is the data label itself, a delta batch a tombstone of its
+  keys plus a segment of its upserts (``LabelStore.write_delta``).
 """
 
 from __future__ import annotations
@@ -63,6 +70,7 @@ from scalligraph_spark.operators.tombstones import (
     tombstone_label,
     write_tombstones,
 )
+from scalligraph_spark.store import VersionConflictError, check_retention
 
 
 class IndexCatchupError(RuntimeError):
@@ -160,17 +168,29 @@ def publish_version(store, meta: dict, lbl: str) -> dict:
     return {"versions": dict(meta.get("versions", {}), **{lbl: store.version(lbl)})}
 
 
-def _settle(store, name: str, meta: dict) -> None:
-    """Point every sidecar back at its published version before a
-    mutation reads it: a mutation that crashed after a sidecar write but
-    before its carrier commit left a head no reader ever saw."""
-    for lbl in {tombstone_label(name), *meta.get("versions", {})}:
-        v = published(meta, lbl)
+def _settle(store, meta: dict) -> None:
+    """Point every whole-table sidecar (the text vocabulary) back at its
+    published version before a mutation reads it: a mutation that
+    crashed after a sidecar write but before its carrier commit left a
+    head no reader ever saw."""
+    for lbl, v in meta.get("versions", {}).items():
         if store.version(lbl) != v:
-            if v:
-                store.rollback(lbl, v)
-            else:
-                store.drop(lbl)
+            store.rollback(lbl, v)
+
+
+def _labels(fam: Family, name: str, seq: int) -> list[str]:
+    """Every label a mutation at ``seq`` may write."""
+    return [*(label(name, p, seq) for p in fam.parts), tombstone_label(name, seq)]
+
+
+def _claim(store, fam: Family, name: str, meta: dict) -> int:
+    """The first seq above the counter that no label holds: a racing
+    mutation, or one that crashed before its carrier commit, may hold
+    the next ones already."""
+    seq = int(meta["seq"]) + 1
+    while any(store.history(lbl) for lbl in _labels(fam, name, seq)):
+        seq += 1
+    return seq
 
 
 def _stamp(meta: dict, fam: Family, corpus_store, as_of_version) -> None:
@@ -201,6 +221,11 @@ def live_seqs(meta: dict) -> list[int]:
     return [seg_no(s) for s in meta.get("segments", [])]
 
 
+def _union(frames: list) -> DataFrame:
+    # a merge-on-read batch may carry columns its base lacks
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
 def pin(store, fam: Family, name: str, meta: dict) -> dict:
     """Label -> version of every base and live segment (metadata only):
     :func:`read_part` with these pins replays exactly this snapshot."""
@@ -213,7 +238,8 @@ def read_part(
     predicates=None, pins: dict | None = None,
 ) -> DataFrame:
     """A part's rows: base ∪ live segments not yet folded into it, minus
-    the keys a published tombstone postdates (one broadcast anti-join).
+    in each the keys a listed tombstone postdates (one broadcast
+    anti-join of the pieces some tombstone postdates).
     ``predicates`` (read_skipping triples) prune every table's files
     first — both only drop rows, so the result is exactly the unpruned
     read filtered.  ``pins`` (:func:`pin`) replace head versions."""
@@ -230,16 +256,16 @@ def read_part(
         (load(label(name, part, k)), k) for k in live_seqs(meta) if k > folded
     ]
     key = fam.parts[part]
-    tv = published(meta, tombstone_label(name))
-    tombs = read_tombstones(spark, store, name, tv) if isinstance(key, str) else None
-    if tombs is None:
-        return reduce(DataFrame.unionByName, [df for df, _ in pieces])
-    tagged = reduce(
-        DataFrame.unionByName, [df.withColumn("__part_seq", F.lit(k)) for df, k in pieces]
-    )
-    hidden = tombs.select(F.col(tombs.columns[0]).alias("__tomb_key"), F.col(TOMB_SEQ))
-    cond = (tagged[key] == hidden["__tomb_key"]) & (hidden[TOMB_SEQ] > tagged["__part_seq"])
-    return tagged.join(F.broadcast(hidden), cond, "left_anti").select(*pieces[0][0].columns)
+    last = max(map(seg_no, meta.get("tombstones", [])), default=0) if isinstance(key, str) else 0
+    clear = [df for df, k in pieces if k >= last]
+    hidden = [df.withColumn("__part_seq", F.lit(k)) for df, k in pieces if k < last]
+    if hidden:
+        tombs = read_tombstones(spark, store, name, meta, folded)
+        tombs = tombs.select(F.col(tombs.columns[0]).alias("__tomb_key"), F.col(TOMB_SEQ))
+        tagged = _union(hidden)
+        cond = (tagged[key] == tombs["__tomb_key"]) & (tombs[TOMB_SEQ] > tagged["__part_seq"])
+        clear.insert(0, tagged.join(F.broadcast(tombs), cond, "left_anti").drop("__part_seq"))
+    return _union(clear)
 
 
 # --- writes ---------------------------------------------------------------------
@@ -280,7 +306,7 @@ def build(
     may add carrier fields, and returns the version to report; the
     carrier commits last."""
     prior, read_v = _record(store, name)
-    meta = dict(meta, segments=[], seq=int(prior.get("seq", 0)))
+    meta = dict(meta, segments=[], tombstones=[], seq=int(prior.get("seq", 0)))
     meta["versions"] = dict(prior.get("versions", {}))
     if corpus_store is not None and corpus_label is not None:
         meta["corpus_label"] = str(corpus_label)
@@ -300,25 +326,23 @@ def extend(
     """Fold an append batch in as the next segment of every part (cost ∝
     batch; bases are never rewritten).  Returns the live segment count.
     ``meta`` adds fields to the index record in the same carrier commit.
-    Extends may race: each claims unwritten segment labels and commits
-    the carrier over the version it read, so one of two racing extends
-    raises ``VersionConflictError`` and no batch is lost silently."""
+    Extends and tombstone batches may race: each claims unwritten labels
+    and commits the carrier over the version it read, so one of two
+    racing mutations raises ``VersionConflictError`` and no batch is
+    lost silently."""
     rec, read_v = _record(store, name, fam)
-    return _extend(spark, store, fam, name, batch, dict(rec, **(meta or {})), read_v,
+    meta = _extend(spark, store, fam, name, batch, dict(rec, **(meta or {})), read_v,
                    corpus_store, as_of_version)
+    return len(meta["segments"])
 
 
 def _extend(
     spark: SparkSession, store, fam: Family, name: str, batch: DataFrame, meta: dict,
     read_v: int, corpus_store=None, as_of_version: int | None = None,
-) -> int:
+) -> dict:
     meta = dict(meta)
-    _settle(store, name, meta)
-    seq = int(meta["seq"]) + 1
-    # a racing extend, or one that crashed before its carrier commit, may
-    # hold this seq's labels already
-    while any(store.history(label(name, p, seq)) for p in fam.parts):
-        seq += 1
+    _settle(store, meta)
+    seq = _claim(store, fam, name, meta)
 
     def write(part: str, df: DataFrame) -> str:
         store.write(label(name, part, seq), df, expected_version=0, **_layout(fam, meta, part, True))
@@ -331,44 +355,45 @@ def _extend(
     meta["seq"] = seq
     _stamp(meta, fam, corpus_store, as_of_version)
     write_meta(spark, store, name, meta, read_v)
-    return len(meta["segments"])
+    return meta
 
 
 def tombstone(
     spark: SparkSession, store, fam: Family, name: str, keys: DataFrame,
     upserts: DataFrame | None = None, as_of_version: int | None = None,
 ) -> None:
-    """Hide ``keys`` (one column) in every existing part at a freshly
-    consumed seq and re-insert ``upserts`` (when not ``None``) as the
-    next segment, both published by one carrier commit."""
+    """Hide ``keys`` (one column, one row per key) in every existing part
+    at a freshly consumed seq and re-insert ``upserts`` (when not
+    ``None``) as the next segment, both published by one carrier
+    commit."""
     _tombstone(spark, store, fam, name, *_record(store, name, fam), keys, upserts, as_of_version)
 
 
 def _tombstone(
     spark: SparkSession, store, fam: Family, name: str, meta: dict, read_v: int,
     keys: DataFrame, upserts: DataFrame | None, as_of_version: int | None,
-) -> None:
-    _settle(store, name, meta)
-    seq = int(meta["seq"]) + 1
-    lbl = write_tombstones(spark, store, name, keys, next(iter(fam.parts.values())), seq)
-    meta = dict(meta, seq=seq, **publish_version(store, meta, lbl))
+) -> dict:
+    _settle(store, meta)
+    seq = _claim(store, fam, name, meta)
+    tomb = write_tombstones(store, name, keys, next(iter(fam.parts.values())), seq)
+    meta = dict(meta, seq=seq, tombstones=[*meta.get("tombstones", []), tomb])
     if upserts is not None:
-        _extend(spark, store, fam, name, upserts, meta, read_v, as_of_version=as_of_version)
-        return
+        return _extend(spark, store, fam, name, upserts, meta, read_v, as_of_version=as_of_version)
     _stamp(meta, fam, None, as_of_version)
     write_meta(spark, store, name, meta, read_v)
+    return meta
 
 
 def compact(spark: SparkSession, store, fam: Family, name: str) -> int:
     """Merge every part's live segments into a new base (tombstones
-    applied physically), then commit the carrier with no live segments.
-    Old segment labels stay for pinned readers until vacuumed.  Returns
-    the first part's new base version."""
+    applied physically), then commit the carrier with no live segments
+    or tombstones.  Old labels stay for pinned readers until vacuumed.
+    Returns the first part's new base version."""
     meta, read_v = _record(store, name, fam)
-    _settle(store, name, meta)
+    _settle(store, meta)
     counts = _counts(fam)
     data = {p: read_part(spark, store, fam, name, meta, p) for p in fam.parts if p not in counts}
-    tombstoned = published(meta, tombstone_label(name)) > 0
+    tombstoned = bool(meta.get("tombstones"))
     meta = dict(meta, **fam.compact(spark, store, name, meta, data, tombstoned))
     versions = [_write_base(store, fam, name, meta, p, df) for p, df in data.items()]
     for part, (src, group) in counts.items():
@@ -380,7 +405,7 @@ def compact(spark: SparkSession, store, fam: Family, name: str) -> int:
             .groupBy(*group).agg(F.sum("n").cast("long").alias("n"))
         )
         _write_base(store, fam, name, meta, part, rows)
-    write_meta(spark, store, name, dict(meta, segments=[]), read_v)
+    write_meta(spark, store, name, dict(meta, segments=[], tombstones=[]), read_v)
     return versions[0]
 
 
@@ -398,12 +423,12 @@ def _net_effects(ch: DataFrame, key_cols: list[str], one_step: bool):
     """Net effect per key of a change feed (last action wins):
     ``(mutated_keys, upsert_rows)``.  Only keys with a DELETE or UPDATE
     event are tombstoned (a pure insert has no entries yet), so the
-    broadcast sidecar stays mutation-sized.  One step holds at most one
-    pre-image and one post-image per key, so its effects are filters;
-    the tombstone write folds a key's repeats."""
+    broadcast tombstones stay mutation-sized.  One step holds at most one
+    pre-image and one post-image per key, so its effects are filters:
+    each gone row (a delete or a pre-image) names one mutated key."""
     came = F.col(CHANGE_TYPE).isin("insert", "update_postimage")
     if one_step:
-        mutated = ch.where(F.col(CHANGE_TYPE) != F.lit("insert")).select(*key_cols)
+        mutated = ch.where(F.col(CHANGE_TYPE).isin("delete", "update_preimage")).select(*key_cols)
         return mutated, ch.where(came).drop(CHANGE_TYPE, COMMIT_VERSION)
     mutated = ch.where(~F.col(CHANGE_TYPE).isin("insert", "update_preimage"))
     latest = latest_changes(ch, key_cols)
@@ -489,33 +514,82 @@ def catchup(
         ch.unpersist()
 
 
+# --- merge-on-read labels --------------------------------------------------------
+
+
+def _upserts(spark: SparkSession, store, name: str, meta: dict, batch: DataFrame, write) -> dict:
+    write("", batch)
+    return {}
+
+
+def mor_family(key_col: str) -> Family:
+    """A merge-on-read label as one more family: its base is the data
+    label itself and its one part is keyed on ``key_col``."""
+    return Family(what="merge-on-read label", record="mor", parts={"": key_col},
+                  extend=_upserts, reindex=None)  # no corpus: never caught up
+
+
+def mor_record(store, name: str) -> tuple[Family, dict]:
+    """The family and record of merge-on-read label ``name`` (a record
+    of ``{}`` when no delta was ever committed)."""
+    meta = read_meta(store, name)
+    return mor_family(*meta.get("key_cols", [""])), meta
+
+
+def write_delta(
+    spark: SparkSession, store, name: str, changes: DataFrame, key_cols: list[str], op_col: str
+) -> int:
+    """Commit a change batch against label ``name``: a tombstone of every
+    key in it plus a segment of its ``upsert`` rows, published by one
+    carrier commit.  A batch that loses the carrier race to another one
+    runs again over the winner's record; its claimed labels stay
+    unlisted until :func:`reclaim`.  Returns the outstanding batches."""
+    if len(key_cols) != 1:
+        raise ValueError(f"merge-on-read deltas take exactly one key column, got {list(key_cols)}")
+    # eager on purpose: a batch with a bad op must fail before it claims
+    # a label, since every read_merged would trip over it; the job scans
+    # only the churn-sized batch
+    ops = {r[0] for r in changes.select(op_col).distinct().collect()}
+    if ops - {"upsert", "delete"}:
+        raise ValueError(f"{op_col} values must be 'upsert' or 'delete', got {ops}")
+    fam, key = mor_family(key_cols[0]), key_cols[0]
+    upserts = changes.where(F.col(op_col) == "upsert").drop(op_col) if "upsert" in ops else None
+    while True:
+        meta, read_v = _record(store, name)
+        if not meta:
+            meta = {"kind": fam.record, "key_cols": [key], "segments": [], "tombstones": [], "seq": 0}
+        elif meta.get("key_cols") != [key]:
+            raise ValueError(f"label {name!r} deltas are keyed on {meta.get('key_cols')}, got {[key]}")
+        try:
+            meta = _tombstone(spark, store, fam, name, meta, read_v, changes.select(key), upserts, None)
+            return len(meta["tombstones"])
+        except VersionConflictError:
+            continue
+
+
 # --- vacuum and the fleet sweep ---------------------------------------------------
 
 
-def reclaim(
-    spark: SparkSession, store, fam: Family, name: str, retention_seconds: float = 0.0
-) -> list[str]:
-    """Drop every segment label at or below the counter the carrier no
-    longer lists, then the tombstones every base has folded (the sidecar
-    too when none remain).  With ``retention_seconds`` > 0 a segment
-    waits until the first base commits that folded it are older than the
-    window, tombstones until the newest base commit is.  Must not run
-    concurrently with writers of the index.  Returns the dropped labels."""
-    from scalligraph_spark.store import check_retention
-
+def reclaim(store, fam: Family, name: str, retention_seconds: float = 0.0) -> list[str]:
+    """Drop every segment and tombstone label at or below the counter
+    that the carrier does not list: a compaction folded it into every
+    base, or its mutation lost the carrier commit or crashed before it.
+    With ``retention_seconds`` > 0 a label waits until the first base
+    commits that folded its seq are older than the window.  Must not run
+    concurrently with a compaction of the index.  Returns the dropped
+    labels."""
     retention_seconds = check_retention(retention_seconds)
-    meta, read_v = _record(store, name, fam)
-    live = set(live_seqs(meta))
+    meta, _ = _record(store, name, fam)
+    live = {label(name, p, k) for p in fam.parts for k in live_seqs(meta)}
+    live |= set(meta.get("tombstones", []))
     victims = sorted(
         lbl
-        for k in range(1, int(meta["seq"]) + 1) if k not in live
-        for lbl in (label(name, p, k) for p in fam.parts) if store.version(lbl) > 0
+        for k in range(1, int(meta["seq"]) + 1)
+        for lbl in _labels(fam, name, k) if lbl not in live and store.version(lbl) > 0
     )
-    bases = [label(name, p) for p in fam.parts]
-    now = time.time()
     if retention_seconds > 0 and victims:
         folded_at: dict = {}
-        for i, base in enumerate(bases):
+        for i, base in enumerate(label(name, p) for p in fam.parts):
             first: dict = {}
             for v in store.history(base):
                 ts = store.commit_time(base, v)
@@ -525,31 +599,11 @@ def reclaim(
                 k: max(folded_at[k], first[k]) for k in folded_at.keys() & first.keys()
             }
         # no retained record of the fold → blocked, never reclaimed early
+        now = time.time()
         victims = [v for v in victims if now - folded_at.get(seg_no(v), now) > retention_seconds]
     for lbl in victims:
         store.drop(lbl)
-    tlbl = tombstone_label(name)
-    tv = published(meta, tlbl)
-    newest = max(store.commit_time(b) for b in bases)
-    if not tv or (retention_seconds > 0 and now - newest <= retention_seconds):
-        return victims
-    # a pinned pre-compaction plan reads old segments THROUGH the
-    # tombstones, so they wait for the newest base's window; the MIN
-    # watermark holds them while any base has not folded them yet
-    watermark = min(int(store.commit_meta(b).get("base_seq", 0)) for b in bases)
-    t = read_tombstones(spark, store, name, tv)
-    if not t.where(F.col(TOMB_SEQ) <= F.lit(watermark)).take(1):
-        return victims
-    rest = t.where(F.col(TOMB_SEQ) > F.lit(watermark))
-    if rest.take(1):
-        store.write(tlbl, rest, meta=store.commit_meta(tlbl, tv))
-        write_meta(spark, store, name, dict(meta, **publish_version(store, meta, tlbl)), read_v)
-        return victims
-    # unpublish first: a crash before the drop leaves an unread label
-    versions = {k: v for k, v in meta["versions"].items() if k != tlbl}
-    write_meta(spark, store, name, dict(meta, versions=versions), read_v)
-    store.drop(tlbl)
-    return victims + [tlbl]
+    return victims
 
 
 def vacuum_index_segments(
@@ -558,7 +612,7 @@ def vacuum_index_segments(
     """:func:`reclaim` for index ``name`` of ``kind`` ∈ value / text /
     minhash / ann; ``retention_seconds`` = 0 is safe only when no reader
     is pinned to a pre-compaction snapshot."""
-    return reclaim(spark, store, family(kind), name, retention_seconds)
+    return reclaim(store, family(kind), name, retention_seconds)
 
 
 def maintain_indexes(
@@ -584,8 +638,6 @@ def maintain_indexes(
     ``max_concurrent`` indexes (default ``min(3, len(indexes))``) are
     maintained at once; pass 1 for a strictly serial sweep."""
     _check_policy(on_mutation)
-    from scalligraph_spark.store import check_retention
-
     try:
         vacuum_retention_seconds = check_retention(vacuum_retention_seconds)
     except ValueError:
@@ -607,7 +659,7 @@ def maintain_indexes(
             compact(spark, store, fam, name)
             rep["live_segments"] = 0
         rep["vacuumed"] = (
-            reclaim(spark, store, fam, name, vacuum_retention_seconds) if vacuum else []
+            reclaim(store, fam, name, vacuum_retention_seconds) if vacuum else []
         )
         return rep
 

@@ -22,13 +22,12 @@ import json
 import os
 import tempfile
 import threading
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from scalligraph_spark.cdf import CHANGE_TYPE, COMMIT_VERSION, apply_changes, change_images, change_status
+from scalligraph_spark.cdf import change_images, change_status
 
 
 def zorder_value(df: DataFrame, cols: list[str], bits: int = 16) -> Column:
@@ -1695,6 +1694,9 @@ class LabelStore:
         return self.read(spark, label, self.version_at(label, ts))
 
     # -- merge-on-read deltas ----------------------------------------------
+    # A merge-on-read label runs on the segmented-index core
+    # (operators/segments.py): its base is the label itself, each delta
+    # batch a tombstone segment of its keys plus a segment of its upserts.
     def write_delta(
         self,
         spark: SparkSession,
@@ -1708,181 +1710,50 @@ class LabelStore:
         write spectrum (Hudi/Iceberg MOR; copy-on-write is the default
         :meth:`write`).  ``changes`` carries the base schema plus
         ``op_col`` ∈ {'upsert', 'delete'} (delete rows only need the key
-        columns populated).  Each batch lands as its own immutable delta
-        label (``label__delta<k>``) — the index-segment discipline
-        applied to the data plane — and a 1-row meta carrier tracks the
-        delta count and key columns.
+        column populated); ``key_cols`` names exactly one column.  The
+        batch's keys hide every earlier row of them and its upserts land
+        after them, so a later batch supersedes an earlier one per key.
+        Racing writers all land: a batch that loses the carrier commit
+        runs again.  Readers pay a broadcast anti-join at
+        :meth:`read_merged`; :meth:`compact_mor` folds the deltas back
+        into a plain base version.  Returns the outstanding batches."""
+        from scalligraph_spark.operators import segments
 
-        At 100 TB this is the difference between an update costing a
-        full-table rewrite and costing the batch: readers pay a
-        broadcast anti-join at :meth:`read_merged` time (the touched-key
-        set is churn-sized), and :meth:`compact_mor` folds deltas back
-        into a plain base version when the churn accumulates.
-
-        Concurrency: each batch CLAIMS its slot by writing
-        ``label__delta<k>`` with ``expected_version=0`` (the rename-CAS)
-        and bumps ``k`` on collision, so racing delta writers all land —
-        none shadows another.  Readers DISCOVER outstanding deltas by
-        probing slots upward from the meta's ``delta_start`` (gap-free
-        by construction), so no shared counter exists to race on; the
-        meta carrier is written once (first delta; also CAS-claimed) and
-        thereafter only by :meth:`compact_mor`, which like vacuum must
-        not run concurrently with writers.  Returns the claimed slot."""
-        # eager on purpose: a batch with a bad op must fail before it
-        # claims a slot, since every read_merged would trip over it; the
-        # job scans only the churn-sized batch
-        ops = [r[0] for r in changes.select(op_col).distinct().collect()]
-        bad = [o for o in ops if o not in ("upsert", "delete")]
-        if bad:
-            raise ValueError(f"{op_col} values must be 'upsert' or 'delete', got {bad}")
-        mor = f"{label}__mor"
-        if self.version(mor) == 0:
-            try:
-                self.write(
-                    mor,
-                    spark.range(1).select(F.lit(label).alias("label")),
-                    meta={"kind": "mor", "key_cols": list(key_cols), "op_col": op_col, "delta_start": 1},
-                    expected_version=0,
-                )
-            except VersionConflictError:
-                pass  # a racing first writer created it — validate below
-        m = self.commit_meta(mor)
-        if m.get("key_cols") != list(key_cols):
-            raise ValueError(
-                f"label {label!r} deltas are keyed on {m.get('key_cols')}, got {list(key_cols)}"
-            )
-        k = int(m.get("delta_start", 1))
-        while True:
-            while self.version(f"{label}__delta{k}") > 0:
-                k += 1
-            try:
-                self.write(f"{label}__delta{k}", changes, expected_version=0)
-                return k
-            except VersionConflictError:
-                k += 1  # a racing writer claimed this slot — next one
+        return segments.write_delta(spark, self, label, changes, key_cols, op_col)
 
     def read_merged(self, spark: SparkSession, label: str, predicates=None) -> DataFrame:
-        """Base ∪ outstanding deltas, resolved: for every key the LATEST
-        delta wins (later batches supersede earlier ones), deletes drop
-        the key, untouched base rows pass through an anti-join against
-        the broadcast touched-key set — the base is never shuffled, so
-        read overhead is churn-sized, not table-sized.  With no deltas
-        this IS :meth:`read`.
+        """Base ∪ outstanding deltas, resolved: deletes drop the key,
+        upserts supersede every earlier row of it, and the base is never
+        shuffled (one anti-join against the broadcast churn-sized
+        tombstones).  With no deltas this IS :meth:`read`.
+        ``predicates`` (``read_skipping``'s triples) prune the files of
+        the base and of every delta and then filter the merged rows:
+        exactly ``read_merged().where(pred)``, since the tombstones are
+        never pruned."""
+        from scalligraph_spark.operators import segments
 
-        ``predicates`` makes the merged read SELECTIVE with file skipping
-        on the base (``read_skipping``'s triples): equivalent to
-        ``read_merged().where(pred)`` because filtering the base commutes
-        with the anti-join (both only drop base rows), while delta
-        resolution still sees EVERY delta row per key — latest-batch-wins
-        must be decided before filtering, so the predicates apply after
-        the merge (``cdf.apply_changes``).  At 100 TB a selective read
-        over a MOR table prunes the base's files and pays churn-sized
-        work for the deltas."""
-        mor = f"{label}__mor"
-        m = self.commit_meta(mor) if self.version(mor) > 0 else {}
-        if predicates is not None:
-            preds = _normalize_predicates(_validate_predicates(predicates))
-            base = self.read_skipping(spark, label, preds)
-        else:
-            base = self.read(spark, label)
-        slots = self._delta_slots(label, m)
-        if not slots:
-            return base
-        # each delta batch is one step of a change feed, its slot the
-        # commit version: a later batch supersedes an earlier one per key
-        op = str(m.get("op_col", "_op"))
-        changes = [
-            self.read(spark, f"{label}__delta{i}").select(
-                "*",
-                F.when(F.col(op) == "delete", "delete").otherwise("insert").alias(CHANGE_TYPE),
-                F.lit(i).alias(COMMIT_VERSION),
-            ).drop(op)
-            for i in slots
-        ]
-        merged = apply_changes(base, reduce(DataFrame.unionByName, changes), list(m["key_cols"]))
-        return merged if predicates is None else merged.where(_predicates_column(preds))
+        preds = None if predicates is None else _normalize_predicates(_validate_predicates(predicates))
+        fam, meta = segments.mor_record(self, label)
+        merged = segments.read_part(spark, self, fam, label, meta, predicates=preds)
+        return merged if preds is None else merged.where(_predicates_column(preds))
 
-    def _delta_slots(self, label: str, meta: dict) -> list[int]:
-        """Outstanding delta slot numbers: probe upward from the meta's
-        ``delta_start`` until the first unclaimed slot — gap-free by the
-        write_delta CAS, so existence IS the registry (no shared counter
-        for writers to race on)."""
-        if not meta:
-            return []
-        slots, k = [], int(meta.get("delta_start", 1))
-        while self.version(f"{label}__delta{k}") > 0:
-            slots.append(k)
-            k += 1
-        return slots
+    def compact_mor(self, spark: SparkSession, label: str) -> int:
+        """Fold every outstanding delta into a new plain base version;
+        the folded delta labels stay for pinned readers until
+        :meth:`vacuum_mor`.  Must not run concurrently with another
+        compaction or a vacuum.  Returns the new base version."""
+        from scalligraph_spark.operators import segments
 
-    def compact_mor(self, spark: SparkSession, label: str, **write_opts) -> int:
-        """Fold every outstanding delta into a new plain base version
-        (copy-on-write catches up with merge-on-read) and advance
-        ``delta_start`` past the folded slots; retired ``__delta<k>``
-        labels stay for pinned readers until :meth:`vacuum_mor`.
-        ``write_opts`` pass through to :meth:`write` — compaction is the
-        natural moment to re-cluster (``zorder_by``/``sort_by``/
-        ``bucket_hint``), since the rewrite is being paid anyway.
-        Like vacuum, must not run concurrently with delta writers.
-        Returns the new base version."""
-        mor = f"{label}__mor"
-        m = self.commit_meta(mor) if self.version(mor) > 0 else {}
-        slots = self._delta_slots(label, m)
-        # a manifest on the current base carries forward across the fold
-        # (write's default), unless the caller overrides
-        v = self.write(label, self.read_merged(spark, label), **write_opts)
-        if slots:
-            self.write(
-                mor,
-                spark.range(1).select(F.lit(label).alias("label")),
-                meta=dict(m, delta_start=slots[-1] + 1),
-            )
-        return v
+        return segments.compact(spark, self, segments.mor_record(self, label)[0], label)
 
-    def vacuum_mor(self, label: str, retention_seconds: float = 0.0) -> list[int]:
-        """Drop delta labels below the current ``delta_start`` — slots a
-        compaction already folded into the base; no live reader resolves
-        them (read_merged never probes below delta_start).  Returns the
-        reclaimed slot numbers.  Outstanding slots are never touched.
+    def vacuum_mor(self, label: str, retention_seconds: float = 0.0) -> list[str]:
+        """Drop the delta labels a compaction folded (and those of
+        batches that lost a race), once the base commit that folded them
+        is older than ``retention_seconds``; outstanding deltas are never
+        touched.  Returns the dropped labels."""
+        from scalligraph_spark.operators import segments
 
-        ``retention_seconds`` guards readers pinned to PRE-compaction
-        plans (they still union the folded deltas): a slot reclaims only
-        once the compaction that FOLDED it — the earliest retained
-        ``__mor`` carrier version whose ``delta_start`` moved past the
-        slot — is older than the window.  Per-victim, not
-        latest-carrier: gating every slot on the NEWEST carrier commit
-        meant a compaction cadence shorter than the window never
-        reclaimed anything (an unbounded delta-label leak under the
-        nightly-cron shape this exists for).  Slots whose folding
-        carrier version was itself vacuumed fall back to the oldest
-        retained carrier's stamp — an upper bound on their real fold
-        time, so still safe."""
-        import time
-
-        retention_seconds = check_retention(retention_seconds)
-        mor = f"{label}__mor"
-        m = self.commit_meta(mor) if self.version(mor) > 0 else {}
-        start = int(m.get("delta_start", 1))
-        folded_at = None
-        if retention_seconds > 0 and self.version(mor) > 0:
-            # earliest retained carrier version that de-listed each slot
-            # (metadata-only: one commit_meta + commit_time per version)
-            folded_at = {}
-            for v in self.history(mor):
-                ds = int(self.commit_meta(mor, v).get("delta_start", 1))
-                ts = self.commit_time(mor, v)
-                for k in range(1, ds):
-                    folded_at.setdefault(k, ts)
-        now = time.time()
-        victims = []
-        for k in range(1, start):
-            if self.version(f"{label}__delta{k}") == 0:
-                continue
-            if folded_at is not None and now - folded_at.get(k, now) <= retention_seconds:
-                continue  # folded too recently — a pinned reader may remain
-            self.drop(f"{label}__delta{k}")
-            victims.append(k)
-        return victims
+        return segments.reclaim(self, segments.mor_record(self, label)[0], label, retention_seconds)
 
     def drop(self, label: str) -> None:
         """Remove a label entirely — every version and the pointer (DROP
@@ -2067,8 +1938,9 @@ def store_report(spark: SparkSession, store: "LabelStore") -> DataFrame:
     files, directory listings, parquet file sizes; no data scans):
     current version, retained version count, data files + bytes (the
     compaction signal), orphaned staging dirs (crashed writers awaiting
-    vacuum's TTL), the merge-on-read delta backlog (the compact_mor
-    signal), and the current commit's age in seconds (the retention
+    vacuum's TTL), the merge-on-read delta backlog (outstanding
+    batches, read from the label's carrier: the compact_mor signal), and
+    the current commit's age in seconds (the retention
     signal: a sweep with ``retention_seconds`` > the superseding commit's
     age reclaims nothing — this column says when it will).  Derived
     artifact labels (``__``-infixed: index segments, meta carriers,
@@ -2089,9 +1961,8 @@ def store_report(spark: SparkSession, store: "LabelStore") -> DataFrame:
         n_files, n_bytes = store.stats(label)
         label_dir = os.path.join(store.root, label)
         staging = sum(1 for n in os.listdir(label_dir) if n.startswith(".staging-"))
-        mor = f"{label}__mor"
-        m = store.commit_meta(mor) if store.version(mor) > 0 else {}
-        deltas = len(store._delta_slots(label, m))
+        # one tombstone segment per outstanding merge-on-read batch
+        deltas = len(store.commit_meta(f"{label}__meta").get("tombstones", []))
         man = store.file_manifest(label)
         rows.append(
             (

@@ -6252,7 +6252,7 @@ def _vtomb_fixture(spark, sf):
     "cliff closed): the corpus is committed in full and indexed, then one "
     "commit deletes every 7th customer and renames every 11th; "
     "catchup_value_index(on_mutation='tombstone') folds that churn as a "
-    "tombstone sidecar (hides stale entries in base+older segments) plus "
+    "tombstone segment (hides stale entries in base+older segments) plus "
     "ONE delta segment of postimages — never a corpus-cost rebuild.  The "
     "caught-up entries must equal a from-scratch build on the final "
     "corpus state (the oracle re-derives it from the raw table).  "

@@ -106,8 +106,9 @@ def update_where(
 
 
 def remove_where(df: DataFrame, cond: Column) -> DataFrame:
-    """Delete matched elements → keep the complement (anti-filter rewrite)."""
-    return df.where(~cond)
+    """Delete matched elements → keep the complement (anti-filter
+    rewrite); a null condition matches nothing, as in :func:`update_where`."""
+    return df.where(~F.coalesce(cond, F.lit(False)))
 
 
 def upsert(
@@ -361,10 +362,10 @@ class WriteSession:
         if self._capturing and not _key_condition(self.df, cond):
             self._stop_capture()
         if self._capturing:
-            # the rows where(~cond) drops, a null condition included
-            kept = F.coalesce(~cond, F.lit(False))
-            self.df = cdf.touch(self.df, F.col(cdf.ALIVE) & ~kept)
-            self.df = self.df.withColumn(cdf.ALIVE, F.col(cdf.ALIVE) & kept)
+            # the rows remove_where drops: a null condition matches nothing
+            hit = F.coalesce(cond, F.lit(False))
+            self.df = cdf.touch(self.df, F.col(cdf.ALIVE) & hit)
+            self.df = self.df.withColumn(cdf.ALIVE, F.col(cdf.ALIVE) & ~hit)
         else:
             self.df = remove_where(self.df, cond)
         return self

@@ -188,7 +188,7 @@ SLOW_TESTS = {
     "test_retention.py::test_index_retention[ann]",
     "test_retention.py::test_index_retention[minhash]",
     "test_retention.py::test_index_retention[text]",
-    "test_retention.py::test_segment_vacuum_reclaims_old_cycles_under_frequent_compaction",
+    "test_retention.py::test_segment_vacuum_reclaims_old_cycles_under_frequent_compaction[value]",
     "test_retention.py::test_segment_vacuum_reindex_subsumption_reclaims",
     "test_retention.py::test_segment_vacuum_watermark_fallback_after_base_history_vacuum",
     "test_sequence.py::test_funnel_count_gap_split_bounds_groups_not_lifetime",

@@ -1,6 +1,7 @@
-"""The four segmented-index families behind one table, for tests that
-check the shared lifecycle (crash windows, tombstone catch-up, retention)
-once per family instead of once per copy.
+"""The four segmented-index families, and merge-on-read labels (kind
+``mor``: the same core keyed on ``uid``), behind one table, for tests
+that check the shared lifecycle (crash windows, tombstone catch-up,
+retention) once per family instead of once per copy.
 
 Corpus rows are a pure function of their id (``variant`` 1 = the row
 after an update), so a corpus, a batch and an expected answer can be
@@ -11,19 +12,21 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from scalligraph_spark import cdf
 from scalligraph_spark import operators as ops
 from scalligraph_spark.operators import segments
 
 KINDS = ("value", "text", "minhash", "ann")
+LIFECYCLE = (*KINDS, "mor")  # every family on the segment core
 
-KEY = {"value": "uid", "text": "doc_id", "minhash": "doc_id", "ann": "vec_id"}
+KEY = {"value": "uid", "text": "doc_id", "minhash": "doc_id", "ann": "vec_id", "mor": "uid"}
 BASE_TEXT = "the quick brown fox jumps over the lazy dog again and again today"
 
 
 def rows(spark, kind, ids, variant=0):
     """Corpus rows for ``ids`` in one partition (a handful of rows: more
     partitions only add tasks)."""
-    if kind == "value":
+    if kind in ("value", "mor"):
         data = [(int(i), f"{'re' if variant else ''}name{i}", int(i)) for i in ids]
         schema = "uid long, uname string, score int"
     elif kind == "ann":
@@ -43,6 +46,8 @@ def build(spark, store, kind, name, corpus):
     (one file per sorted table: the corpora here are a handful of rows)."""
     df = store.read(spark, corpus)
     prov = dict(corpus_store=store, corpus_label=corpus)
+    if kind == "mor":  # the label itself is the base
+        return store.write(name, df)
     if kind == "value":
         return ops.build_value_index(spark, store, name, df, "uname", "uid", sort_files=1, **prov)
     if kind == "text":
@@ -53,12 +58,37 @@ def build(spark, store, kind, name, corpus):
                                cells_files=1, **prov)
 
 
+def _mor_extend(spark, store, name, batch):
+    return store.write_delta(spark, name, batch.withColumn("_op", F.lit("upsert")), ["uid"])
+
+
+def _mor_catchup(spark, store, name, corpus_store, on_mutation=None):
+    """Mirror the last step of label ``corpus`` into the merge-on-read
+    label ``name`` as one delta batch."""
+    v = corpus_store.version("corpus")
+    ch = cdf.table_changes(spark, corpus_store, "corpus", v - 1, v, key_cols=["uid"])
+    op = F.when(F.col(cdf.CHANGE_TYPE) == "delete", "delete").otherwise("upsert").alias("_op")
+    batch = ch.where(F.col(cdf.CHANGE_TYPE) != "update_preimage")
+    return store.write_delta(spark, name, batch.select(*store.read(spark, name).columns, op), ["uid"])
+
+
 EXTEND = {"value": ops.extend_value_index, "text": ops.extend_text_index,
-          "minhash": ops.extend_minhash_index, "ann": ops.extend_ann_cells}
+          "minhash": ops.extend_minhash_index, "ann": ops.extend_ann_cells, "mor": _mor_extend}
 COMPACT = {"value": ops.compact_value_index, "text": ops.compact_text_index,
-           "minhash": ops.compact_minhash_index, "ann": ops.compact_ann_cells}
+           "minhash": ops.compact_minhash_index, "ann": ops.compact_ann_cells,
+           "mor": lambda spark, store, name: store.compact_mor(spark, name)}
 CATCHUP = {"value": ops.catchup_value_index, "text": ops.catchup_text_index,
-           "minhash": ops.catchup_minhash_index, "ann": ops.catchup_ann_cells}
+           "minhash": ops.catchup_minhash_index, "ann": ops.catchup_ann_cells, "mor": _mor_catchup}
+
+
+def family(kind):
+    return segments.mor_family(KEY["mor"]) if kind == "mor" else segments.family(kind)
+
+
+def vacuum(spark, store, kind, name, retention_seconds=0.0):
+    if kind == "mor":
+        return store.vacuum_mor(name, retention_seconds)
+    return ops.vacuum_index_segments(spark, store, name, kind, retention_seconds)
 
 
 def _sorted(df):
@@ -69,7 +99,7 @@ def state(spark, store, kind, name):
     """Everything a reader of the index can see, in one job: every part's
     rows (count parts summed per bucket), the published vocabulary of a
     text index, and the record's row/doc counts."""
-    fam = segments.family(kind)
+    fam = family(kind)
     meta = segments.read_meta(store, name)
     frames = {}
     for part, key in fam.parts.items():
@@ -97,13 +127,15 @@ def content(spark, store, kind, name):
     """The indexed rows that must equal a rebuild's at any time (a text
     index's df/n_docs drift until compaction; IVF cells depend on the
     trained centroids, so only the assigned vectors are compared)."""
-    fam = segments.family(kind)
+    fam = family(kind)
     df = segments.read_part(spark, store, fam, name, segments.read_meta(store, name), next(iter(fam.parts)))
     return _sorted(df.select("id", "vec").distinct() if kind == "ann" else df)
 
 
 def query(spark, store, kind, name):
     """One answer through the family's query path."""
+    if kind == "mor":
+        return _sorted(store.read_merged(spark, name))
     if kind == "value":
         return _sorted(ops.load_value_index(spark, store, name).entries)
     if kind == "text":

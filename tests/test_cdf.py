@@ -362,6 +362,31 @@ def test_session_feed_equals_the_diff(spark, tmp_path, step):
         assert {r["_id"] for r in feed.collect()} == {"2"}
 
 
+@pytest.mark.parametrize("captured", [True, False])
+def test_remove_keeps_rows_whose_condition_is_null(spark, tmp_path, captured):
+    """A null remove condition matches nothing, as in an update.  On a
+    label stored without ``_id``, a create stamps ``_id`` on its rows
+    only, so ``remove(_id == "2")`` deletes one row and keeps every
+    stored row; a captured session's feed still equals the diff."""
+    from pyspark.sql import functions as F
+
+    from scalligraph_spark.writes import WriteSession, remove_where
+
+    store = LabelStore(str(tmp_path / "s"))
+    store.write("t", _df(spark, [(10, "x", 1.0), (11, "y", 2.0), (12, "z", 3.0)]))
+    session = WriteSession(spark, store, "t", id_col="id", created_by="bench", at=AT)
+    if not captured:
+        session.transform(lambda df: df)
+    session.create(_df(spark, [(1, "a", 1.0), (2, "b", 2.0)])).remove(F.col("_id") == "2")
+    assert session.commit() == 2
+    v1, v2 = store.read(spark, "t", 1), store.read(spark, "t", 2)
+    assert sorted(r["name"] for r in v2.collect()) == ["a", "x", "y", "z"]
+    assert store.version("t__cdf_v2") == int(captured)
+    if captured:  # a create keeps no ``id`` column: the names key the diff
+        assert _sorted(store.read(spark, "t__cdf_v2")) == _sorted(pair_changes(v1, v2, ["name"], 2))
+    assert remove_where(v2, F.col("_id") == "1").count() == 3
+
+
 def _uncaptured_steps():
     from pyspark.sql import functions as F
 

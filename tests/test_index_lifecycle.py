@@ -1,4 +1,6 @@
-"""Crash windows of the segmented-index lifecycle, for every family.
+"""Crash windows of the segmented-index lifecycle, for every family and
+for merge-on-read labels (whose extend and catch-up are ``write_delta``
+batches and whose compaction is ``compact_mor``).
 
 For each ``store.write`` that an extend, a tombstone catch-up or a
 compaction issues, the i-th write raises.  Then:
@@ -17,10 +19,11 @@ import shutil
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 import pytest
-from index_families import CATCHUP, COMPACT, EXTEND, KEY, KINDS, build, rows, state
+from index_families import CATCHUP, COMPACT, EXTEND, KEY, LIFECYCLE, build, family, rows, state
 
 from scalligraph_spark.cdf import write_with_cdf
 from scalligraph_spark.operators import segments
+from scalligraph_spark.operators.tombstones import tombstone_label
 from scalligraph_spark.store import LabelStore
 
 
@@ -67,7 +70,7 @@ def _stages(spark, root, kind) -> list:
 
 def _used_seqs(store, kind):
     """Highest sequence number any published record or base has used."""
-    fam = segments.family(kind)
+    fam = family(kind)
     seqs = [store.commit_meta("ix__meta", v).get("seq", 0) for v in store.history("ix__meta")]
     for part in fam.parts:
         lbl = segments.label("ix", part)
@@ -81,10 +84,10 @@ def _assert_next_seq_unused(store, kind, settled=True):
     completed, no label for it was ever written either (a crashed extend
     leaves its unpublished segment behind, and the re-run skips its
     seq)."""
-    seq = int(segments.read_meta(store, "ix")["seq"]) + 1
+    seq = int(segments.read_meta(store, "ix").get("seq", 0)) + 1
     assert seq > _used_seqs(store, kind), f"next extend would reuse seq {seq}"
-    fam = segments.family(kind)
-    assert not settled or not any(store.history(segments.label("ix", p, seq)) for p in fam.parts), (
+    lbls = [*(segments.label("ix", p, seq) for p in family(kind).parts), tombstone_label("ix", seq)]
+    assert not settled or not any(store.history(lbl) for lbl in lbls), (
         f"next extend would overwrite an earlier write at seq {seq}")
 
 
@@ -138,8 +141,8 @@ def failures(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("lifecycle")
     conf = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "1")  # a handful of rows per table
-    stages = {k: _stages(spark, root / k, k) for k in KINDS}
-    out = {k: [] for k in KINDS}
+    stages = {k: _stages(spark, root / k, k) for k in LIFECYCLE}
+    out = {k: [] for k in LIFECYCLE}
 
     def point(k, op, snapshot, clean, i):
         try:
@@ -149,7 +152,7 @@ def failures(spark, tmp_path_factory):
 
     try:
         with ThreadPoolExecutor(max_workers=12) as pool:
-            todo = {pool.submit(stages[k][0]): ("stage", k, 0) for k in KINDS}
+            todo = {pool.submit(stages[k][0]): ("stage", k, 0) for k in LIFECYCLE}
             while todo:
                 done, _ = wait(todo, return_when=FIRST_COMPLETED)
                 for f in done:
@@ -170,7 +173,7 @@ def failures(spark, tmp_path_factory):
     return out
 
 
-@pytest.mark.parametrize("kind", KINDS)
+@pytest.mark.parametrize("kind", LIFECYCLE)
 def test_crash_windows(failures, kind):
     assert failures[kind] == []
 
@@ -225,6 +228,70 @@ def test_concurrent_extends_lose_no_batch(spark, tmp_path):
     listed = segments.read_meta(st, "ix")["segments"]
     assert len(listed) == len(set(listed))
     assert all(len(st.history(lbl)) == 1 for lbl in listed)
+
+
+def test_tombstone_catchup_racing_an_extend_loses_no_batch(spark, tmp_path):
+    """A tombstone catch-up and an extend of one value index race, both
+    past reading the record before either writes a label.  Afterwards
+    each batch is readable unless its thread raised
+    ``VersionConflictError``; a catch-up that lost folds its step on the
+    next run, and the listed labels were each written once."""
+    import threading
+
+    from scalligraph_spark.operators import load_value_index
+    from scalligraph_spark.store import VersionConflictError
+
+    st = LabelStore(str(tmp_path / "race"))
+    st.write("corpus", rows(spark, "value", range(6)))
+    build(spark, st, "value", "ix", "corpus")
+    v2 = (st.read(spark, "corpus").where("uid not in (1, 2)")  # update 1, delete 2, insert 6
+          .unionByName(rows(spark, "value", [1], variant=1)).unionByName(rows(spark, "value", [6])))
+    write_with_cdf(st, "corpus", v2, ["uid"])
+    gate = threading.Barrier(2, timeout=60)
+    waited = set()
+    real = st.write
+
+    def write(lbl, *a, **k):
+        if lbl.startswith("ix__") and lbl != "ix__meta" and threading.get_ident() not in waited:
+            waited.add(threading.get_ident())  # each thread's first label write
+            try:
+                gate.wait()
+            except threading.BrokenBarrierError:
+                pass  # the other thread already failed
+        return real(lbl, *a, **k)
+
+    st.write = write
+    ops = {
+        "catchup": lambda: CATCHUP["value"](spark, st, "ix", st, on_mutation="tombstone"),
+        "extend": lambda: EXTEND["value"](spark, st, "ix", rows(spark, "value", [20, 21])),
+    }
+
+    def run(op):
+        try:
+            ops[op]()
+        except VersionConflictError as e:
+            gate.abort()
+            return e
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        errors = dict(zip(ops, pool.map(run, ops, timeout=300)))
+    st.write = real
+
+    def entries():
+        return {(r["value"], r["id"]) for r in load_value_index(spark, st, "ix").entries.collect()}
+
+    assert any(e is None for e in errors.values())
+    old = {(f"name{i}", i) for i in range(6)}
+    new = {(f"name{i}", i) for i in (0, 3, 4, 5, 6)} | {("rename1", 1)}
+    extended = {("name20", 20), ("name21", 21)}
+    got = entries()
+    assert got - extended == (old if errors["catchup"] else new), "catch-up half-applied or lost"
+    assert (extended <= got) == (errors["extend"] is None), "extend lost or visible after raising"
+    meta = segments.read_meta(st, "ix")
+    assert all(len(st.history(lbl)) == 1 for lbl in meta["segments"] + meta["tombstones"])
+    if errors["catchup"]:
+        assert CATCHUP["value"](spark, st, "ix", st, on_mutation="tombstone")["action"] == "tombstoned"
+        assert entries() - extended == new
 
 
 class Killed(BaseException):

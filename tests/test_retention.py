@@ -16,7 +16,7 @@ import time
 
 import pytest
 
-from index_families import COMPACT, EXTEND, KEY, KINDS, build, query, rows
+from index_families import COMPACT, EXTEND, KEY, LIFECYCLE, build, family, query, rows, vacuum
 
 from scalligraph_spark.cdf import write_with_cdf
 from scalligraph_spark.operators import (
@@ -98,33 +98,29 @@ def test_store_vacuum_retention_exempts_aborted_claims(spark, store):
     assert store.vacuum("t", keep=2, retention_seconds=10**9) == [2]
 
 
-def test_vacuum_mor_retention(spark, store):
-    store.write("t", _people(spark, [(0, "alice", 10), (1, "bob", 20)]))
-    ch = spark.createDataFrame(
-        [(2, "carol", 30, "upsert")], "uid long, uname string, score int, _op string"
-    )
-    store.write_delta(spark, "t", ch, ["uid"])
-    store.compact_mor(spark, "t")
-    assert store.vacuum_mor("t", retention_seconds=3600) == []
-    assert store.version("t__delta1") > 0
-    _age(store, "t__mor", 7200)
-    assert store.vacuum_mor("t", retention_seconds=3600) == [1]
-
-
 # --- index families: pinned pre-compaction reader survives the window ----------
 
 
 def _age_family(store, name, kind, seconds):
-    for part in segments.family(kind).parts:
+    for part in family(kind).parts:
         _age(store, segments.label(name, part), seconds)
 
 
-@pytest.mark.parametrize("kind", KINDS)
+def _listed(store, kind):
+    """The labels the record of ``ix`` lists: every part's live segments
+    and the tombstones (a merge-on-read batch adds both)."""
+    meta = segments.read_meta(store, "ix")
+    seqs = segments.live_seqs(meta)
+    return sorted([segments.label("ix", p, k) for p in family(kind).parts for k in seqs]
+                  + meta["tombstones"])
+
+
+@pytest.mark.parametrize("kind", LIFECYCLE)
 def test_index_retention(spark, store, kind):
     """A plan pinned before compaction keeps answering through an
     in-window sweep; once the folding base commit ages past the window
-    the segment of every part reclaims, answers unchanged."""
-    fam = segments.family(kind)
+    every label the compaction folded reclaims, answers unchanged."""
+    fam = family(kind)
     write_with_cdf(store, "corpus", rows(spark, kind, range(6)), [KEY[kind]])
     build(spark, store, kind, "ix", "corpus")
     EXTEND[kind](spark, store, "ix", rows(spark, kind, [10]))
@@ -133,15 +129,15 @@ def test_index_retention(spark, store, kind):
     pinned = segments.read_part(spark, store, fam, "ix", meta, primary)  # unions base + seg1
     want_rows = sorted(repr(tuple(r)) for r in pinned.collect())
     want = query(spark, store, kind, "ix")
+    folded = _listed(store, kind)
     COMPACT[kind](spark, store, "ix")
 
-    assert vacuum_index_segments(spark, store, "ix", kind, retention_seconds=3600) == []
-    assert store.version(segments.label("ix", primary, 1)) > 0
+    assert vacuum(spark, store, kind, "ix", retention_seconds=3600) == []
+    assert all(store.version(lbl) > 0 for lbl in folded)
     assert sorted(repr(tuple(r)) for r in pinned.collect()) == want_rows, "pinned plan must still answer"
 
     _age_family(store, "ix", kind, 7200)
-    victims = vacuum_index_segments(spark, store, "ix", kind, retention_seconds=3600)
-    assert victims == sorted(segments.label("ix", p, 1) for p in fam.parts)
+    assert vacuum(spark, store, kind, "ix", retention_seconds=3600) == folded
     assert query(spark, store, kind, "ix") == want
 
 
@@ -171,56 +167,39 @@ def test_maintain_indexes_threads_retention(spark, store):
                          vacuum=True, vacuum_retention_seconds=-1)
 
 
-def test_vacuum_mor_reclaims_old_folds_under_frequent_compaction(spark, store):
-    """The gate is PER VICTIM: a compaction cadence shorter than the
-    window must still reclaim slots folded by long-past compactions —
-    gating on the newest carrier commit leaked delta labels forever."""
-    store.write("t", _people(spark, [(0, "alice", 10)]))
-    ch1 = spark.createDataFrame(
-        [(1, "bob", 20, "upsert")], "uid long, uname string, score int, _op string"
-    )
-    store.write_delta(spark, "t", ch1, ["uid"])
-    store.compact_mor(spark, "t")
-    # everything so far happened "long ago"
-    for v in store.history("t__mor"):
-        _age(store, "t__mor", 7200, version=v)
-    # a fresh churn cycle lands NOW (carrier rewritten within the window)
-    ch2 = spark.createDataFrame(
-        [(2, "carol", 30, "upsert")], "uid long, uname string, score int, _op string"
-    )
-    store.write_delta(spark, "t", ch2, ["uid"])
-    store.compact_mor(spark, "t")
-    assert store.vacuum_mor("t", retention_seconds=3600) == [1], (
-        "the old fold must reclaim even though a newer compaction is in-window"
-    )
-    assert store.version("t__delta2") > 0, "the fresh fold must stay"
-    assert {r["uid"] for r in store.read_merged(spark, "t").collect()} == {0, 1, 2}
+@pytest.mark.parametrize("kind", ["value", "mor"])
+def test_segment_vacuum_reclaims_old_cycles_under_frequent_compaction(spark, store, kind):
+    """The gate is PER VICTIM: the labels an aged compaction folded
+    reclaim while those a compaction within the window folded stay —
+    gating every label on the newest compaction leaked them forever
+    under a compaction cadence shorter than the window."""
+    store.write("corpus", rows(spark, kind, [0, 1]))
+    build(spark, store, kind, "ix", "corpus")
+    base = segments.label("ix", next(iter(family(kind).parts)))
 
+    def cycle(i):
+        EXTEND[kind](spark, store, "ix", rows(spark, kind, [i]))
+        listed = _listed(store, kind)
+        COMPACT[kind](spark, store, "ix")
+        return listed
 
-def test_segment_vacuum_reclaims_old_cycles_under_frequent_compaction(spark, store):
-    """Same per-victim rule for index segments: seg1 (folded by an aged
-    compaction) reclaims while seg2 (folded within the window) stays."""
-    base = _people(spark, [(0, "alice", 10), (1, "bob", 20)])
-    build_value_index(spark, store, "by_name", base, "uname", "uid")
-    extend_value_index(spark, store, "by_name", _people(spark, [(2, "carol", 30)]))
-    compact_value_index(spark, store, "by_name")
-    for v in store.history("by_name"):
-        _age(store, "by_name", 7200, version=v)
-    extend_value_index(spark, store, "by_name", _people(spark, [(3, "dave", 40)]))
-    compact_value_index(spark, store, "by_name")  # fresh rewrite, in-window
-    got = vacuum_index_segments(spark, store, "by_name", "value", retention_seconds=3600)
-    assert got == ["by_name__seg1"], f"old cycle must reclaim, fresh must stay: {got}"
-    assert store.version("by_name__seg2") > 0
-    names = sorted(
-        r["value"] for r in load_value_index(spark, store, "by_name").entries.collect()
-    )
-    assert names == ["alice", "bob", "carol", "dave"]
+    def age_base():
+        for v in store.history(base):
+            _age(store, base, 7200, version=v)
+
+    old = cycle(2)
+    age_base()
+    fresh = cycle(3)  # a fresh fold, in-window
+    got = vacuum(spark, store, kind, "ix", retention_seconds=3600)
+    assert got == old, f"old cycle must reclaim, fresh must stay: {got}"
+    assert all(store.version(lbl) > 0 for lbl in fresh)
+    full = LabelStore(store.root + "_full")
+    full.write("corpus", rows(spark, kind, range(4)))
+    build(spark, full, kind, "ix", "corpus")
+    assert query(spark, store, kind, "ix") == query(spark, full, kind, "ix")
     # once the fresh rewrite ages too, the second cycle reclaims
-    for v in store.history("by_name"):
-        _age(store, "by_name", 7200, version=v)
-    assert vacuum_index_segments(
-        spark, store, "by_name", "value", retention_seconds=3600
-    ) == ["by_name__seg2"]
+    age_base()
+    assert vacuum(spark, store, kind, "ix", retention_seconds=3600) == fresh
 
 
 def test_retention_rejects_nan_and_negative(spark, store):

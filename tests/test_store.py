@@ -771,6 +771,7 @@ def test_merge_on_read_deltas_resolve_and_compact(spark, tmp_path):
     per key, deletes drop keys, untouched rows pass through, and
     compaction folds everything into a plain base version with
     identical content."""
+    from scalligraph_spark.operators import segments
     from scalligraph_spark.store import LabelStore
 
     store = LabelStore(str(tmp_path / "mor"))
@@ -803,8 +804,9 @@ def test_merge_on_read_deltas_resolve_and_compact(spark, tmp_path):
     assert v == 2
     got2 = {r["id"]: (r["v"], r["n"]) for r in store.read(spark, "t").collect()}
     assert got2 == expect
-    # deltas folded: slots retired via delta_start, merged ≡ plain read
-    assert store.commit_meta("t__mor")["delta_start"] == 3
+    # deltas folded: the carrier lists none, merged ≡ plain read
+    meta = segments.read_meta(store, "t")
+    assert meta["segments"] == [] and meta["tombstones"] == []
     got3 = {r["id"]: (r["v"], r["n"]) for r in store.read_merged(spark, "t").collect()}
     assert got3 == expect
 
@@ -830,6 +832,12 @@ def test_merge_on_read_guards(spark, tmp_path):
             spark, "t",
             spark.createDataFrame([(1, "c", "upsert")], "id long, v string, _op string"),
             ["v"],
+        )
+    with pytest.raises(ValueError, match="exactly one key column"):
+        store.write_delta(
+            spark, "t",
+            spark.createDataFrame([(1, "c", "upsert")], "id long, v string, _op string"),
+            ["id", "v"],
         )
 
 
@@ -857,11 +865,12 @@ def test_merge_on_read_plan_broadcasts_touched_keys(spark, tmp_path):
 
 
 def test_merge_on_read_concurrent_delta_writers_all_land(spark, tmp_path):
-    """Racing delta writers must each claim a distinct slot (the
-    rename-CAS on the delta label) — no batch shadows another, the
-    discovered-slot registry has no shared counter to race on."""
+    """Racing delta writers all land: each claims labels nothing has
+    written, and a batch that loses the carrier commit runs again — no
+    batch shadows another, none raises."""
     import threading
 
+    from scalligraph_spark.operators import segments
     from scalligraph_spark.store import LabelStore
 
     store = LabelStore(str(tmp_path / "morc"))
@@ -883,9 +892,10 @@ def test_merge_on_read_concurrent_delta_writers_all_land(spark, tmp_path):
     assert errors == []
     got = {r["id"]: r["v"] for r in store.read_merged(spark, "t").collect()}
     assert got == {0: "base", **{100 + i: f"w{i}" for i in range(6)}}  # all six landed
-    # slots are gap-free 1..6
-    assert [store.version(f"t__delta{k}") for k in range(1, 7)] == [1] * 6
-    assert store.version("t__delta7") == 0
+    # six batches listed, each label written once
+    meta = segments.read_meta(store, "t")
+    assert len(meta["tombstones"]) == len(meta["segments"]) == 6
+    assert all(store.history(lbl) == [1] for lbl in meta["tombstones"] + meta["segments"])
 
 
 def test_merged_store_vertex_sees_deltas_in_traversals(spark, tmp_path):
@@ -919,6 +929,7 @@ def test_merged_store_vertex_sees_deltas_in_traversals(spark, tmp_path):
 
 
 def test_vacuum_mor_reclaims_only_folded_slots(spark, tmp_path):
+    from scalligraph_spark.operators.tombstones import tombstone_label
     from scalligraph_spark.store import LabelStore
 
     store = LabelStore(str(tmp_path / "morvac"))
@@ -935,8 +946,10 @@ def test_vacuum_mor_reclaims_only_folded_slots(spark, tmp_path):
         spark.createDataFrame([(99, "live", "upsert")], "id long, v string, _op string"),
         ["id"],
     )
-    assert store.vacuum_mor("t") == [1, 2, 3]
-    assert store.version("t__delta4") == 1  # outstanding slot untouched
+    # each batch is a tombstone segment (odd seq) plus an upsert segment
+    folded = [f"t__seg{k}" for k in (2, 4, 6)] + [tombstone_label("t", k) for k in (1, 3, 5)]
+    assert store.vacuum_mor("t") == folded
+    assert store.version("t__seg8") == store.version(tombstone_label("t", 7)) == 1  # outstanding
     got = {r["id"] for r in store.read_merged(spark, "t").collect()}
     assert got == {1, 10, 11, 12, 99}
 

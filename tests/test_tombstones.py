@@ -2,7 +2,7 @@
 every persisted-index family at churn cost — catch-up with
 on_mutation='tombstone' must answer identically to a full rebuild, before
 AND after compaction physically applies the tombstones, and the folded
-rows vacuum away under the segment retention sweep."""
+tombstone segments vacuum away under the segment retention sweep."""
 
 from __future__ import annotations
 
@@ -84,13 +84,15 @@ def test_tombstone_catchup_matches_rebuild(spark, store, kind):
     rep = CATCHUP[kind](spark, store, "ix", store, on_mutation="tombstone")
     assert rep["action"] == "tombstoned"
     assert rep["churn"] == {"insert": 1, "delete": 1, "update_preimage": 1, "update_postimage": 1}
-    # a MUTATION-sized sidecar: the pure insert (id 6) had no entries to
-    # hide.  The tombstone batch consumed seq 1, so the re-insert segment
-    # is seq 2 — strictly above its own tombstone.
-    tombs = store.read(spark, tombstone_label("ix"))
+    # a MUTATION-sized tombstone segment, one row per key: the pure
+    # insert (id 6) had no entries to hide.  The tombstone batch consumed
+    # seq 1, so the re-insert segment is seq 2 — strictly above it.
+    tombs = store.read(spark, tombstone_label("ix", 1))
     assert sorted((r[0], r[TOMB_SEQ]) for r in tombs.collect()) == [(1, 1), (2, 1)]
     fam = segments.family(kind)
-    assert segments.read_meta(store, "ix")["segments"] == [segments.label("ix", next(iter(fam.parts)), 2)]
+    meta = segments.read_meta(store, "ix")
+    assert meta["segments"] == [segments.label("ix", next(iter(fam.parts)), 2)]
+    assert meta["tombstones"] == [tombstone_label("ix", 1)]
     assert CATCHUP[kind](spark, store, "ix", store)["action"] == "noop"
 
     full = LabelStore(store.root + "_full")
@@ -102,7 +104,7 @@ def test_tombstone_catchup_matches_rebuild(spark, store, kind):
     want = query(spark, full, kind, "ix")
     assert query(spark, store, kind, "ix") == want
     victims = vacuum_index_segments(spark, store, "ix", kind)
-    assert {segments.label("ix", p, 2) for p in fam.parts} | {tombstone_label("ix")} <= set(victims)
+    assert {segments.label("ix", p, 2) for p in fam.parts} | {tombstone_label("ix", 1)} <= set(victims)
     assert query(spark, store, kind, "ix") == want
 
 
@@ -172,13 +174,13 @@ def test_value_tombstone_then_compact_folds_and_vacuums(spark, store):
     assert _entries(spark, store, "by_name") == WANT_AFTER_CHURN
     ix = load_value_index(spark, store, "by_name")
     assert int(ix.meta["n_rows"]) == 5, "compaction must refresh the row count"
-    # the sidecar ROWS persist until vacuum (pinned pre-compaction readers
-    # still need them) but the strict seq rule makes them no-ops against
-    # the new base — already proven by the entries equality above
+    # the tombstone segment persists until vacuum (pinned pre-compaction
+    # readers still need it) but the strict seq rule makes it a no-op
+    # against the new base — already proven by the entries equality above
     # the retention sweep reclaims both the folded segment and the tombstones
     victims = vacuum_index_segments(spark, store, "by_name", kind="value")
-    assert "by_name__seg2" in victims
-    assert store.version(tombstone_label("by_name")) == 0, "emptied sidecar dropped"
+    assert {"by_name__seg2", tombstone_label("by_name", 1)} <= set(victims)
+    assert store.version(tombstone_label("by_name", 1)) == 0
     assert _entries(spark, store, "by_name") == WANT_AFTER_CHURN
 
 
@@ -208,15 +210,27 @@ def test_value_tombstone_unique_update_same_and_new_value(spark, store):
     assert _entries(spark, store, "by_name") == [("alice", 0), ("robert", 1)]
 
 
-def test_tombstone_write_is_idempotent_and_keeps_max_seq(spark, store):
+def test_tombstone_batches_are_immutable_labels(spark, store):
+    """Each batch claims its own label: a second claim of a seq fails
+    rather than rewrite it, and readers union the labels a record lists
+    above a base's fold watermark."""
+    from scalligraph_spark.store import VersionConflictError
+
     ids = spark.createDataFrame([(1,), (2,)], "id long")
-    write_tombstones(spark, store, "ix", ids, "id", 3)
-    write_tombstones(spark, store, "ix", ids, "id", 3)  # crash re-run
-    t = store.read(spark, tombstone_label("ix"))
-    assert sorted((r["id"], r[TOMB_SEQ]) for r in t.collect()) == [(1, 3), (2, 3)]
-    write_tombstones(spark, store, "ix", spark.createDataFrame([(2,), (9,)], "id long"), "id", 5)
-    t = store.read(spark, tombstone_label("ix"))
-    assert sorted((r["id"], r[TOMB_SEQ]) for r in t.collect()) == [(1, 3), (2, 5), (9, 5)]
+    assert write_tombstones(store, "ix", ids, "id", 3) == tombstone_label("ix", 3)
+    with pytest.raises(VersionConflictError):
+        write_tombstones(store, "ix", ids, "id", 3)  # a racing or re-run claim
+    write_tombstones(store, "ix", spark.createDataFrame([(2,), (9,)], "id long"), "id", 5)
+    meta = {"tombstones": [tombstone_label("ix", 3), tombstone_label("ix", 5)]}
+
+    def live(after):
+        t = read_tombstones(spark, store, "ix", meta, after)
+        return None if t is None else sorted((r["id"], r[TOMB_SEQ]) for r in t.collect())
+
+    assert live(0) == [(1, 3), (2, 3), (2, 5), (9, 5)]
+    assert live(3) == [(2, 5), (9, 5)]
+    assert live(5) is None
+    assert read_tombstones(spark, store, "ix") is None, "no committed record lists any"
 
 
 def test_reindex_carries_watermark_forward(spark, store):
@@ -324,7 +338,7 @@ def test_takedown_beside_crawl_day_stays_mutation_sized(spark, store):
                    ["uid"])
     rep = catchup_value_index(spark, store, "by_name", store, on_mutation="tombstone")
     assert rep["action"] == "tombstoned"
-    tombs = store.read(spark, tombstone_label("by_name"))
+    tombs = store.read(spark, tombstone_label("by_name", 1))
     assert [(r["id"], r[TOMB_SEQ]) for r in tombs.collect()] == [(3, 1)]
     got = load_value_index(spark, store, "by_name").entries
     assert got.count() == 10 - 1 + 500
@@ -339,8 +353,8 @@ def test_vacuum_drops_emptied_sidecar_restoring_fast_path(spark, store):
     catchup_value_index(spark, store, "by_name", store, on_mutation="tombstone")
     compact_value_index(spark, store, "by_name")
     victims = vacuum_index_segments(spark, store, "by_name", kind="value")
-    assert tombstone_label("by_name") in victims
-    assert store.version(tombstone_label("by_name")) == 0, "label dropped"
+    assert tombstone_label("by_name", 1) in victims
+    assert store.version(tombstone_label("by_name", 1)) == 0, "label dropped"
     assert read_tombstones(spark, store, "by_name") is None
     assert _entries(spark, store, "by_name") == WANT_AFTER_CHURN
 
@@ -377,8 +391,8 @@ def test_minhash_vacuum_respects_lagging_bands_base(spark, store, monkeypatch):
 
     # the sweep must HOLD the tombstones (bands base still needs them)...
     vacuum_index_segments(spark, store, "mix", kind="minhash")
-    assert store.version(tombstone_label("mix")) > 0
-    assert store.read(spark, tombstone_label("mix")).count() == 1
+    assert store.version(tombstone_label("mix", 1)) > 0
+    assert store.read(spark, tombstone_label("mix", 1)).count() == 1
     # ...and the deleted doc must stay dark to probes through the torn state
     probe = _docs(spark, [(300, txt)])
     ids = {r[1] for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.5).collect()}
@@ -386,7 +400,7 @@ def test_minhash_vacuum_respects_lagging_bands_base(spark, store, monkeypatch):
     # retried compaction completes; now the sweep may reclaim
     compact_minhash_index(spark, store, "mix")
     vacuum_index_segments(spark, store, "mix", kind="minhash")
-    assert store.version(tombstone_label("mix")) == 0
+    assert store.version(tombstone_label("mix", 1)) == 0
     ids2 = {r[1] for r in incremental_near_dups(spark, store, "mix", probe, threshold=0.5).collect()}
     assert 2 not in ids2 and ids2 == ids
 
@@ -413,12 +427,12 @@ def test_delete_after_compaction_not_resurrected(spark, store):
     assert _entries(spark, store, "by_name") == [("alice", 0), ("carol", 2)]
     # vacuum holds the live tombstone (tomb_seq 2 > base_seq 1)
     vacuum_index_segments(spark, store, "by_name", kind="value")
-    assert store.version(tombstone_label("by_name")) > 0
+    assert store.version(tombstone_label("by_name", 2)) > 0
     assert _entries(spark, store, "by_name") == [("alice", 0), ("carol", 2)]
     # the next compaction folds it; then the sweep reaps the label
     compact_value_index(spark, store, "by_name")
     vacuum_index_segments(spark, store, "by_name", kind="value")
-    assert store.version(tombstone_label("by_name")) == 0
+    assert store.version(tombstone_label("by_name", 2)) == 0
     assert _entries(spark, store, "by_name") == [("alice", 0), ("carol", 2)]
 
 
@@ -434,7 +448,8 @@ def test_partial_vacuum_does_not_report_live_sidecar_dropped(spark, store):
     write_with_cdf(store, "people", store.read(spark, "people").where("uid != 3"), ["uid"])
     catchup_value_index(spark, store, "by_name", store, on_mutation="tombstone")
     victims = vacuum_index_segments(spark, store, "by_name", kind="value")
-    assert tombstone_label("by_name") not in victims, "live sidecar must not be listed"
-    assert store.version(tombstone_label("by_name")) > 0
+    assert tombstone_label("by_name", 1) in victims, "the folded batch reclaims"
+    assert tombstone_label("by_name", 3) not in victims, "live tombstones must not be listed"
+    assert store.version(tombstone_label("by_name", 3)) > 0
     assert _entries(spark, store, "by_name") == [
         ("alice", 0), ("erin", 4), ("fred", 5), ("robert", 1)]

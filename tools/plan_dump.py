@@ -133,7 +133,7 @@ PLAN_QUERIES = [
     "text_indexed_search",  # In(term,…) pushed into the postings scan
     "similarity_ivf_search",  # In(cell,…) pushed into the inverted-list scan
     "dedup_neardup_probe",  # broadcast batch bands vs stored buckets
-    "store_mor_read",  # base anti-join against broadcast touched keys
+    "store_mor_read",  # base ∪ delta segments anti-joined against broadcast tombstones
     "text_index_term_filter",  # StringStartsWith pushed into the terms scan
     "quality_constraint_report",  # one-scan constraint agg + referential join
     "temporal_forward_fill",  # LOCF partitioned window, no global sort
